@@ -78,5 +78,8 @@ def encode(codec_id: int, arr: np.ndarray) -> bytes:
 
 def decode(codec_id: int, buf: bytes, n: int) -> np.ndarray:
     out = _DECODERS[codec_id](buf, n)
-    assert out.dtype == np.int32 and len(out) == n
+    if out.dtype != np.int32 or len(out) != n:  # not an assert: python -O strips those
+        raise ValueError(
+            f"codec {codec_id} decoded {len(out)} {out.dtype} values, expected {n} int32"
+        )
     return out

@@ -1,26 +1,28 @@
 """The encode stage: chunk → stats → pick codec → emit blocks, one fused
-Arrow pass (mapInPandas), the engine analogue of crumble's single fused
+pass per Arrow batch, the engine analogue of crumble's single fused
 transcode loop (snp_score.c:1336-2029): all decisions are local to a
 bounded block, the transform is verified (row_hash), and a verbatim RAW
 fallback bounds the worst case.
 
-Catalyst note: the pipeline stays one narrow stage — scan → (optional
-salted repartition, partitioning.py) → mapInPandas → sink.  No shuffle is
-introduced by encoding itself.
+encode_record_batch is the one batch core under the DataFrame path
+(encode_df, via mapInArrow) and the pyarrow-direct path, so both bound
+kernel memory alike and emit the same bytes.  Encoding adds no shuffle:
+scan → (optional salted repartition, partitioning.py) → mapInArrow → sink.
 """
 
 from __future__ import annotations
 
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, cost, hashing
 from . import codecs as codecs_mod
-from .schema import ENCODED_SCHEMA
+from .schema import ENCODED_SCHEMA, PA_BLOCK, PA_ENCODED
 
 # the fused loop hashes (and stores RAW payloads from) chunk.tobytes() in
 # native byte order, while hashing.block_hash and the decode side pin
@@ -37,8 +39,9 @@ if _sys.byteorder != "little":
 
 BLOCK_OVERHEAD = 9  # block_id/codec_id/n stored as struct fields
 # bounded-memory guard: one kernel slice never holds more than this many
-# tokens, regardless of how many giant rows share an Arrow batch
-# (crumble's MAX_DEPTH bail analogue, snp_score.c:92,1493-1500)
+# tokens, regardless of how many giant rows share an Arrow batch; a lone
+# row above it forms its own slice (crumble's MAX_DEPTH bail analogue,
+# snp_score.c:92,1493-1500)
 MAX_TOKENS_PER_SLICE = 8_000_000
 
 
@@ -429,29 +432,76 @@ def encode_tokens(a: np.ndarray, block_size: int = DEFAULT_BLOCK_SIZE, force_raw
     return blocks[0], int(bytes_out[0]), int(row_hash[0])
 
 
-def encode_pdf(pdf: pd.DataFrame, block_size: int = DEFAULT_BLOCK_SIZE) -> pd.DataFrame:
-    """Pure-pandas kernel (unit-testable without Spark)."""
-    out = {
-        "doc_id": pdf["doc_id"].to_numpy(),
-        "source": pdf["source"].to_numpy(),
-        "n_tok": pdf["n_tok"].to_numpy().astype(np.int32),
-        "split_id": pdf["split_id"].to_numpy().astype(np.int32),
-    }
-    force = (
-        pdf["force_raw"].to_numpy().astype(bool)
-        if "force_raw" in pdf.columns
-        else np.zeros(len(pdf), dtype=bool)
+def _token_buffers(toks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy (int32 values, offsets from 0) of a list<int> column.  A
+    float column would be truncated by the cast (and row_hash would
+    'verify' the corruption), and wider integers must fit int32."""
+    vtype = toks.type.value_type
+    if not pa.types.is_integer(vtype):
+        raise ValueError(f"input contract violation: tokens are {vtype}, expected int32")
+    offs = toks.offsets.to_numpy().astype(np.int64)
+    values = toks.values.slice(offs[0], offs[-1] - offs[0])
+    if values.null_count:  # to_numpy would turn them into NaN, then garbage
+        raise ValueError("input contract violation: null tokens")
+    flat = values.to_numpy(zero_copy_only=False)
+    if vtype != pa.int32() and len(flat) and (flat.min() < -(1 << 31) or flat.max() >= 1 << 31):
+        raise ValueError(f"input contract violation: {vtype} tokens exceed int32 range")
+    return flat.astype(np.int32, copy=False), offs - offs[0]
+
+
+def encode_record_batch(
+    batch: pa.RecordBatch, block_size: int = DEFAULT_BLOCK_SIZE, n_splits: int = 256
+) -> tuple[pa.RecordBatch, dict]:
+    """(doc_id, tokens, source[, split_id][, force_raw]) Arrow batch →
+    (PA_ENCODED batch, lineage counters).  encode_flat sees row slices of
+    at most MAX_TOKENS_PER_SLICE tokens, or one longer row alone.  split_id
+    passes through, else is with_split_id's crc32(doc_id) % n_splits."""
+    names = batch.schema.names
+    flat, offs = _token_buffers(batch.column("tokens"))
+    n = batch.num_rows
+    force = np.zeros(n, bool)
+    if "force_raw" in names:
+        force = batch.column("force_raw").to_numpy(zero_copy_only=False).astype(bool)
+    blocks, bytes_out, row_hash = [], np.zeros(n, np.int64), np.zeros(n, np.int64)
+    lo = 0
+    while lo < n:
+        hi = int(np.searchsorted(offs, offs[lo] + MAX_TOKENS_PER_SLICE, "right")) - 1
+        hi = min(max(hi, lo + 1), n)
+        b, bytes_out[lo:hi], row_hash[lo:hi] = encode_flat(
+            flat, offs[lo : hi + 1], block_size, force[lo:hi]
+        )
+        blocks += b
+        lo = hi
+    n_tok = np.diff(offs)
+    doc_id = batch.column("doc_id")
+    split_id = (
+        batch.column("split_id").cast(pa.int32())
+        if "split_id" in names
+        else pa.array([zlib.crc32(d.encode()) % n_splits for d in doc_id.to_pylist()], pa.int32())
     )
-    arrays = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
-    lens = np.array([len(a) for a in arrays], dtype=np.int64)
-    offsets = np.concatenate(([0], np.cumsum(lens)))
-    flat = np.concatenate(arrays) if arrays else np.zeros(0, np.int32)
-    blocks_col, bout_col, hash_col = encode_flat(flat, offsets, block_size, force)
-    out["blocks"] = blocks_col
-    out["bytes_in"] = (out["n_tok"].astype(np.int64)) * 4
-    out["bytes_out"] = np.asarray(bout_col, dtype=np.int64)
-    out["row_hash"] = np.asarray(hash_col, dtype=np.int64)
-    return pd.DataFrame(out)
+    blocks_arr = pa.array(blocks, pa.list_(PA_BLOCK))
+    out = pa.record_batch(
+        [
+            doc_id.cast(pa.string()),
+            batch.column("source").cast(pa.string()),
+            pa.array(n_tok, pa.int32()),
+            split_id,
+            blocks_arr,
+            pa.array(n_tok * 4, pa.int64()),
+            pa.array(bytes_out, pa.int64()),
+            pa.array(row_hash, pa.int64()),
+        ],
+        schema=PA_ENCODED,
+    )
+    hist = np.bincount(blocks_arr.flatten().field("codec_id").to_numpy()).tolist()
+    return out, {
+        "n_rows": n,
+        "n_tokens": int(offs[-1]),
+        "bytes_in": int(offs[-1]) * 4,
+        "bytes_out": int(bytes_out.sum()),
+        "checksum": int((row_hash % (1 << 31)).sum()),
+        "codec_hist": {cid: k for cid, k in enumerate(hist) if k},
+    }
 
 
 def with_split_id(df: DataFrame, n_splits: int) -> DataFrame:
@@ -472,28 +522,10 @@ def encode_df(
     df: DataFrame, block_size: int = DEFAULT_BLOCK_SIZE, n_splits: int = 256
 ) -> DataFrame:
     """tokens table → encoded table (blocks of codec-tagged payloads)."""
-    if "split_id" not in df.columns:
-        df = with_split_id(df, n_splits)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for sl in bounded_slices(pdf):
-                yield encode_pdf(sl, block_size)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield encode_record_batch(batch, block_size, n_splits)[0]
 
-    return df.mapInPandas(fn, schema=ENCODED_SCHEMA)
+    return df.mapInArrow(fn, schema=ENCODED_SCHEMA)
 
-
-def bounded_slices(pdf: pd.DataFrame, max_tokens: int = MAX_TOKENS_PER_SLICE):
-    """Split an Arrow batch into slices bounded by total token count, so a
-    batch full of pathological long documents cannot blow executor memory."""
-    if len(pdf) == 0:
-        return
-    cum = pdf["n_tok"].to_numpy().astype(np.int64).cumsum()
-    start = 0
-    base = 0
-    for i in range(len(pdf)):
-        if cum[i] - base > max_tokens and i > start:
-            yield pdf.iloc[start:i]
-            start = i
-            base = cum[i - 1]
-    yield pdf.iloc[start:]

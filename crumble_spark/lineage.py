@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sinks import _is_missing_table
+
 # checksum = sum(row_hash mod 2^31): order-insensitive, and bounded so the
 # per-split Spark sum cannot overflow int64 even at 10^12-row scale
 _CHECK_MOD = 1 << 31
@@ -52,11 +54,14 @@ def completed_splits(
     spark: SparkSession, lineage_dir: str, reader=None
 ) -> DataFrame | None:
     """Splits already finished by any prior run (encoding is deterministic,
-    so any done split is valid regardless of which run produced it).
+    so any done split is valid regardless of which run produced it), or
+    None when no lineage exists yet; an unreadable lineage raises.
     `reader` overrides how the lineage table is loaded (Iceberg sinks)."""
     try:
         lin = reader() if reader is not None else spark.read.parquet(lineage_dir)
-    except Exception:
+    except Exception as e:
+        if "PATH_NOT_FOUND" not in str(e) and not _is_missing_table(e):
+            raise
         return None
     return lin.filter(F.col("status") == "done").select("split_id").distinct()
 

@@ -11,9 +11,9 @@ median (FIXTURES.md skew fixture).  Three layers of defense:
    exploded into per-block rows, encoded wherever the shuffle puts them,
    and reassembled by a groupBy(doc_id); row_hash is block-combinable
    (hashing.py) precisely so this path needs no full-row pass anywhere;
-3. bounded Arrow slices inside the kernel (encode.bounded_slices) as the
-   last-resort memory guard, plus AQE skew-join/partition coalescing as
-   the runtime backstop.
+3. token-bounded kernel slices inside encode.encode_record_batch (shared
+   by every encode path) as the last-resort memory guard, plus AQE
+   skew-join/partition coalescing as the runtime backstop.
 
 At 100 TB the same code holds: the threshold is per-task memory-derived,
 the explode is a narrow op, and the one shuffle (reassembly groupBy) moves

@@ -1,8 +1,10 @@
 """Explicit StructTypes — schema is fixed, never inferred (the reference
-carries its schema in the SAM header, sam_hdr_read, snp_score.c:2575)."""
+carries its schema in the SAM header, sam_hdr_read, snp_score.c:2575).
+PA_* are their Arrow twins, which the batch kernels and direct writer emit."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 # input_hint shape (BASELINE.json): pre-tokenized training sequences
@@ -52,3 +54,22 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
     ]
 )
+
+
+_PA_ATOMS = {T.StringType(): pa.string(), T.IntegerType(): pa.int32(),
+             T.LongType(): pa.int64(), T.BinaryType(): pa.binary()}
+
+
+def _arrow(t: T.DataType) -> pa.DataType:
+    """Arrow twin of a Spark type, every field nullable (as the direct
+    writer's parquet files have always declared them)."""
+    if isinstance(t, T.StructType):
+        return pa.struct([(f.name, _arrow(f.dataType)) for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return pa.list_(_arrow(t.elementType))
+    return _PA_ATOMS[t]
+
+
+PA_TOKENS = pa.schema(_arrow(TOKENS_SCHEMA))
+PA_BLOCK = _arrow(BLOCK_SCHEMA)
+PA_ENCODED = pa.schema(_arrow(ENCODED_SCHEMA))

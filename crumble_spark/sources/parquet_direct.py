@@ -1,12 +1,14 @@
 """pyarrow-direct encode/decode jobs over parquet (the 100 TB hot path).
 
 Why this exists: the kernel encodes at ~3 M tokens/s/core, but pushing
-token arrays JVM → Arrow socket → pandas caps each task pair at ~1.4 M
+token arrays JVM → Arrow socket → Python caps each task pair at ~1.4 M
 tokens/s and couples one JVM producer thread to every Python worker
 (2x thread oversubscription).  Reading the parquet column natively with
 pyarrow inside the worker runs at ~11 M tokens/s/core with zero-copy
 list<int32> → numpy slicing, so the end-to-end rate approaches kernel
-speed and scales with cores alone.
+speed and scales with cores alone.  The per-batch work is the same
+encode.encode_record_batch / decode.decode_record_batch the DataFrame
+path runs, so both paths emit identical bytes.
 
 Spark still owns everything distributed-systems-shaped:
   * the task list ((file, row_group) rows — the "input split" of crumble's
@@ -23,45 +25,23 @@ construction (same discipline as the split_id path in job.py).
 from __future__ import annotations
 
 import os
-import zlib
+from collections import Counter
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import DEFAULT_BLOCK_SIZE, codecs, hashing
-from ..encode import encode_flat
+from .. import DEFAULT_BLOCK_SIZE, encode, lineage
+from ..decode import decode_record_batch
+from ..schema import PA_ENCODED
 
 SUMMARY_SCHEMA = (
     "input_split string, n_rows long, n_tokens long, bytes_in long, "
     "bytes_out long, checksum long, codec_hist string, out_file string, status string"
 )
-
-_PA_BLOCK = pa.struct(
-    [
-        ("block_id", pa.int32()),
-        ("codec_id", pa.int32()),
-        ("n", pa.int32()),
-        ("payload", pa.binary()),
-    ]
-)
-_PA_ENCODED = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("source", pa.string()),
-        ("n_tok", pa.int32()),
-        ("split_id", pa.int32()),
-        ("blocks", pa.list_(_PA_BLOCK)),
-        ("bytes_in", pa.int64()),
-        ("bytes_out", pa.int64()),
-        ("row_hash", pa.int64()),
-    ]
-)
-
 
 def list_input_files(in_path: str) -> list[str]:
     """Parquet file NAMES only — a pure directory listing, no footer
@@ -87,11 +67,13 @@ def list_input_splits(in_path: str) -> list[tuple[str, int]]:
     its collect; both paths must return the bit-identical list or
     _task_partitions groups splits differently either side of the
     DISTRIBUTED_LISTING_MIN_FILES crossover (ADVICE r4)."""
-    out = []
-    for f in list_input_files(in_path):
-        for rg in range(pq.ParquetFile(f).metadata.num_row_groups):
-            out.append((f, rg))
-    return sorted(out)
+    return _footer_splits(list_input_files(in_path))
+
+
+def _footer_splits(files: list[str]) -> list[tuple[str, int]]:
+    return sorted(
+        (f, rg) for f in files for rg in range(pq.ParquetFile(f).metadata.num_row_groups)
+    )
 
 
 # Serial-vs-distributed listing crossover (see list_input_splits_distributed).
@@ -112,19 +94,12 @@ def list_input_splits_distributed(
     between seconds and driver-serial hours."""
     files = list_input_files(in_path)
     if len(files) <= DISTRIBUTED_LISTING_MIN_FILES:
-        return sorted(
-            (f, rg)
-            for f in files
-            for rg in range(pq.ParquetFile(f).metadata.num_row_groups)
-        )
+        return _footer_splits(files)
 
     def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _pin_arrow_single_thread()
         for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                for rg in range(pq.ParquetFile(path).metadata.num_row_groups):
-                    rows.append((path, rg))
+            rows = _footer_splits(list(pdf["path"]))
             if rows:
                 yield pd.DataFrame(rows, columns=["path", "rg"])
 
@@ -165,77 +140,38 @@ def _pin_arrow_single_thread() -> None:
         pa.set_io_thread_count(1)
 
 
+def _read_split(path: str, rg: int, columns: list[str]):
+    return pq.ParquetFile(path).iter_batches(
+        batch_size=1024, row_groups=[rg], columns=columns, use_threads=False
+    )
+
+
 def _encode_split(
     path: str, rg: int, out_dir: str, block_size: int, n_splits: int
 ) -> tuple:
     _pin_arrow_single_thread()
-    pf = pq.ParquetFile(path)
-    cols = ["doc_id", "tokens", "n_tok", "source"]
-    n_rows = n_tokens = bytes_in = bytes_out = checksum = 0
-    hist: dict[int, int] = {}
-    out_batches = []
-    for batch in pf.iter_batches(
-        batch_size=1024, row_groups=[rg], columns=cols, use_threads=False
-    ):
-        doc_ids = batch.column("doc_id").to_pylist()
-        sources = batch.column("source").to_pylist()
-        toks = batch.column("tokens")
-        # zero-copy: the Arrow list column IS (values buffer, offsets) —
-        # exactly encode_flat's input shape, no per-row materialization
-        vtype = toks.type.value_type
-        if not pa.types.is_integer(vtype):
-            # float/decimal token columns would be silently truncated by
-            # the cast and row_hash would 'verify' the corruption
-            raise ValueError(
-                f"input contract violation in {path} rg{rg}: tokens are "
-                f"{vtype}, expected an integer type (array<int32>)"
-            )
-        flat = toks.values.to_numpy(zero_copy_only=False)
-        if not pa.types.is_int32(vtype):
-            # wider integer storage is fine IF the values fit; a silent
-            # astype would wrap out-of-range values — fail the split loudly
-            if len(flat) and (flat.min() < -(1 << 31) or flat.max() >= (1 << 31)):
-                raise ValueError(
-                    f"input contract violation in {path} rg{rg}: tokens are "
-                    f"{vtype}, values exceed int32 range"
-                )
-        flat = flat.astype(np.int32, copy=False)
-        offs = toks.offsets.to_numpy().astype(np.int64)
-        rows_blocks, rows_bo, rows_rh = encode_flat(flat, offs, block_size)
-        rows_bi = (np.diff(offs) * 4).astype(np.int64)
-        rows_split, rows_ntok = [], []
-        for i, doc_id in enumerate(doc_ids):
-            for b in rows_blocks[i]:
-                hist[b["codec_id"]] = hist.get(b["codec_id"], 0) + 1
-            rows_split.append(zlib.crc32(doc_id.encode()) % n_splits)
-            rows_ntok.append(int(offs[i + 1] - offs[i]))
-            checksum = (checksum + int(rows_rh[i]) % (1 << 31)) & ((1 << 63) - 1)
-        n_rows += len(doc_ids)
-        n_tokens += int(offs[-1] - offs[0]) if len(offs) else 0
-        bytes_in += int(rows_bi.sum())
-        bytes_out += int(rows_bo.sum())
-        out_batches.append(
-            pa.record_batch(
-                [
-                    pa.array(doc_ids, pa.string()),
-                    pa.array(sources, pa.string()),
-                    pa.array(rows_ntok, pa.int32()),
-                    pa.array(rows_split, pa.int32()),
-                    pa.array(rows_blocks, pa.list_(_PA_BLOCK)),
-                    pa.array(rows_bi, pa.int64()),
-                    pa.array(rows_bo, pa.int64()),
-                    pa.array(rows_rh, pa.int64()),
-                ],
-                schema=_PA_ENCODED,
-            )
-        )
     name = _split_name(path, rg)
+    totals: Counter = Counter()
+    hist: Counter = Counter()
+    out_batches = []
+    for batch in _read_split(path, rg, ["doc_id", "tokens", "source"]):
+        try:
+            out, stats = encode.encode_record_batch(batch, block_size, n_splits)
+        except ValueError as e:
+            raise ValueError(f"{name}: {e}") from e
+        hist.update(stats.pop("codec_hist"))
+        totals.update(stats)
+        out_batches.append(out)
     out_file = os.path.join(out_dir, f"enc-{name.replace(':', '-')}.parquet")
     tmp = out_file + ".tmp"
-    pq.write_table(pa.Table.from_batches(out_batches, schema=_PA_ENCODED), tmp)
+    pq.write_table(pa.Table.from_batches(out_batches, schema=PA_ENCODED), tmp)
     os.replace(tmp, out_file)  # atomic publish → idempotent retries
     hist_str = ",".join(f"{k}:{v}" for k, v in sorted(hist.items()))
-    return (name, n_rows, n_tokens, bytes_in, bytes_out, checksum, hist_str, out_file, "done")
+    return (
+        name, totals["n_rows"], totals["n_tokens"], totals["bytes_in"],
+        totals["bytes_out"], totals["checksum"] & ((1 << 63) - 1), hist_str,
+        out_file, "done",
+    )
 
 
 def encode_job_direct(
@@ -255,17 +191,15 @@ def encode_job_direct(
 
     splits = list_input_splits_distributed(spark, in_path)
     if resume:
-        try:
-            done = {
-                r["input_split"]
-                for r in spark.read.parquet(lin_dir)
-                .filter(F.col("status") == "done")
-                .select("input_split")
-                .collect()
-            }
-            splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in done]
-        except Exception:
-            pass
+        # the direct lineage keys its splits by input_split ("file:rgN")
+        done = lineage.completed_splits(
+            spark,
+            lin_dir,
+            lambda: spark.read.parquet(lin_dir).withColumnRenamed("input_split", "split_id"),
+        )
+        if done is not None:
+            names = {r["split_id"] for r in done.collect()}
+            splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in names]
     if not splits:
         return spark.read.parquet(lin_dir)
 
@@ -303,52 +237,18 @@ def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _pin_arrow_single_thread()
         for pdf in batches:
             rows = []
             for path, rg in zip(pdf["path"], pdf["rg"]):
-                _pin_arrow_single_thread()
-                pf = pq.ParquetFile(path)
                 n_rows = n_tokens = 0
-                for batch in pf.iter_batches(
-                    batch_size=1024,
-                    row_groups=[int(rg)],
-                    columns=["blocks", "row_hash"],
-                    use_threads=False,
-                ):
-                    hashes = batch.column("row_hash").to_numpy()
-                    blocks_col = batch.column("blocks")
-                    bid = blocks_col.values.field("block_id").to_numpy().tolist()
-                    cid = blocks_col.values.field("codec_id").to_numpy().tolist()
-                    ns = blocks_col.values.field("n").to_numpy().tolist()
-                    payloads = blocks_col.values.field("payload")
-                    boffs = blocks_col.offsets.to_numpy()
-                    # zero-copy payload walk, mirror of the encode side:
-                    # a BinaryArray IS (offsets int32, data) — slice the
-                    # data buffer directly instead of per-block .as_py()
-                    # (which builds a Python bytes object via Arrow's
-                    # scalar path for every block)
-                    _, pob, pdb = payloads.buffers()
-                    poffs = (
-                        np.frombuffer(pob, dtype=np.int32)
-                        if pob is not None
-                        else np.zeros(1, np.int32)
-                    )
-                    pbase = payloads.offset
-                    data = memoryview(pdb) if pdb is not None else memoryview(b"")
-                    for i in range(len(hashes)):
-                        hs = 0
-                        ntk = 0
-                        for j in range(boffs[i], boffs[i + 1]):
-                            pj = pbase + j
-                            chunk = codecs.decode(
-                                cid[j], data[poffs[pj] : poffs[pj + 1]], ns[j]
-                            )
-                            hs += hashing.block_hash(bid[j], chunk)
-                            ntk += len(chunk)
-                        if hs & ((1 << 63) - 1) != int(hashes[i]):
-                            raise ValueError(f"hash mismatch in {path} rg{rg} row {i}")
-                        n_tokens += ntk
-                    n_rows += len(hashes)
+                for batch in _read_split(path, int(rg), ["doc_id", "blocks", "row_hash"]):
+                    try:
+                        values, _ = decode_record_batch(batch, verify=True)
+                    except ValueError as e:
+                        raise ValueError(f"{_split_name(path, rg)}: {e}") from e
+                    n_rows += batch.num_rows
+                    n_tokens += len(values)
                 rows.append((n_rows, n_tokens))
             yield pd.DataFrame(rows, columns=["n_rows", "n_tokens"])
 

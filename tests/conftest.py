@@ -32,3 +32,20 @@ def write_docs_fixture(tmp_path, rows):
     pdf["n_chars"] = pdf["text"].str.len().fillna(0).astype("int64")
     pq.write_table(pa.Table.from_pandas(pdf), str(tmp_path / "documents.parquet"))
     return str(tmp_path)
+
+
+def record_kernel_slices(monkeypatch, bound):
+    """Cap encode.MAX_TOKENS_PER_SLICE at `bound` and record (rows, tokens)
+    of every encode_flat call made through the shared batch core."""
+    from crumble_spark import encode
+
+    monkeypatch.setattr(encode, "MAX_TOKENS_PER_SLICE", bound)
+    calls = []
+    real = encode.encode_flat
+
+    def spy(flat, offsets, *a, **kw):
+        calls.append((len(offsets) - 1, int(offsets[-1] - offsets[0])))
+        return real(flat, offsets, *a, **kw)
+
+    monkeypatch.setattr(encode, "encode_flat", spy)
+    return calls

@@ -82,3 +82,10 @@ def test_fsst_adversarial_alternating():
     buf = fsst.encode(a)
     np.testing.assert_array_equal(fsst.decode(buf, len(a)), a)
     assert len(buf) < 300
+
+
+def test_decode_rejects_short_output(monkeypatch):
+    # a hard check, not an assert: it must survive python -O
+    monkeypatch.setitem(codecs._DECODERS, codecs.RLE, lambda buf, n: np.zeros(n - 1, np.int32))
+    with pytest.raises(ValueError, match=r"codec 2 decoded 4 int32 values, expected 5"):
+        codecs.decode(codecs.RLE, b"", 5)

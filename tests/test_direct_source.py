@@ -203,3 +203,118 @@ def test_listing_order_identical_for_nested_dirs(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(direct, "DISTRIBUTED_LISTING_MIN_FILES", 1)
     assert direct.list_input_splits_distributed(spark, str(root)) == serial
+
+
+def test_direct_split_bounds_kernel_slices(tmp_path, monkeypatch):
+    # one row group whose rows together exceed the slice bound: the direct
+    # path must feed encode_flat token-bounded slices (a lone giant row on
+    # its own), and emit exactly what an unbounded encode emits
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from conftest import record_kernel_slices
+
+    rng = np.random.default_rng(5)
+    lens = [900, 1200, 5000, 700, 800, 1100, 50, 0, 1300]
+    toks = [
+        synth.gen_tokens(rng, synth.REGIMES[i % len(synth.REGIMES)], n).astype(np.int32)
+        for i, n in enumerate(lens)
+    ]
+    f = str(tmp_path / "giant.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": [f"g{i}" for i in range(len(lens))],
+                "tokens": pa.array(toks, pa.list_(pa.int32())),
+                "n_tok": pa.array(lens, pa.int32()),
+                "source": ["web"] * len(lens),
+            }
+        ),
+        f,
+    )
+    for d in ("unbounded", "bounded"):
+        (tmp_path / d).mkdir()
+    want = direct._encode_split(f, 0, str(tmp_path / "unbounded"), 256, 16)
+
+    bound = 2000
+    assert sum(lens) > bound
+    calls = record_kernel_slices(monkeypatch, bound)
+    got = direct._encode_split(f, 0, str(tmp_path / "bounded"), 256, 16)
+
+    assert len(calls) > 1 and sum(r for r, _ in calls) == len(lens)
+    for rows, n_tok in calls:
+        assert n_tok <= bound or rows == 1, calls
+    assert (1, 5000) in calls  # the giant row sits alone in its slice
+    assert got[:7] == want[:7]  # summary: all but out_file and status
+
+    def rows_of(summary):
+        cols = ["doc_id", "row_hash", "bytes_out", "blocks"]
+        return pq.read_table(summary[7], columns=cols).to_pylist()
+
+    assert rows_of(got) == rows_of(want)
+
+
+def _tamper(enc_dir, what):
+    """Rewrite the first encoded file with one row's row_hash, or one
+    FOR_BP payload byte, changed; returns (file, doc_id) of that row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crumble_spark import codecs
+    from crumble_spark.schema import PA_ENCODED
+
+    f = sorted(p for p in os.listdir(enc_dir) if p.endswith(".parquet"))[0]
+    path = os.path.join(enc_dir, f)
+    rows = pq.read_table(path).to_pylist()
+    for r in rows:
+        if what == "row_hash":
+            r["row_hash"] += 1
+            break
+        b = next(
+            (b for b in r["blocks"] if b["codec_id"] == codecs.FOR_BP and len(b["payload"]) > 16),
+            None,
+        )
+        if b is not None:
+            p = bytearray(b["payload"])
+            p[12] ^= 0xFF
+            b["payload"] = bytes(p)
+            break
+    else:
+        raise AssertionError("no row to tamper with")
+    pq.write_table(pa.Table.from_pylist(rows, schema=PA_ENCODED), path)
+    return f, r["doc_id"]
+
+
+@pytest.mark.parametrize("what", ["row_hash", "payload"])
+def test_in_job_verification_catches_tampering(spark, tok_dir, tmp_path, what):
+    # the worker raises ValueError naming the row (and on the direct path
+    # the file:rg split); Spark re-raises it on the driver with the
+    # worker's traceback, so the type is asserted through the message
+    import re
+
+    from crumble_spark.decode import decode_df
+
+    out = str(tmp_path / "tamper")
+    direct.encode_job_direct(spark, tok_dir, out, block_size=256, n_splits=16)
+    f, doc_id = _tamper(f"{out}/encoded", what)
+    row = rf"row_hash mismatch at row \d+ \(doc_id='{re.escape(doc_id)}'\)"
+    with pytest.raises(Exception, match=rf"ValueError: {re.escape(f)}:rg0: {row}"):
+        direct.decode_verify_direct(spark, f"{out}/encoded")
+    with pytest.raises(Exception, match=rf"ValueError: {row}"):
+        decode_df(spark.read.parquet(f"{out}/encoded"), verify=True).count()
+
+
+def test_direct_resume_fails_on_unreadable_lineage(spark, tok_dir, tmp_path):
+    # only a missing lineage path means "nothing done yet"; an unreadable
+    # one must fail the job, not silently re-encode every split
+    import os
+
+    out = tmp_path / "badlin"
+    (out / "lineage_direct").mkdir(parents=True)
+    (out / "lineage_direct" / "junk.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        direct.encode_job_direct(spark, tok_dir, str(out), block_size=256, n_splits=16)
+    enc = out / "encoded"
+    assert not enc.exists() or not [p for p in os.listdir(enc) if p.startswith("enc-")]

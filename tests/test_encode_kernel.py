@@ -1,43 +1,99 @@
-"""Pure-pandas kernel tests (no Spark): encode_pdf, bounded_slices,
-hashing — the pieces mapInPandas wraps."""
+"""Kernel tests without Spark: the shared Arrow-batch cores
+(encode_record_batch, decode_record_batch), their token-bounded slicing,
+and hashing — the pieces mapInArrow and the direct source wrap."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pytest
 
+from conftest import record_kernel_slices
 from crumble_spark import hashing
-from crumble_spark.decode import decode_blocks, decode_pdf
-from crumble_spark.encode import bounded_slices, encode_pdf, encode_tokens
+from crumble_spark.decode import decode_blocks, decode_record_batch
+from crumble_spark.encode import encode_record_batch, encode_tokens
 
 
-def _pdf(rows):
-    return pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source", "split_id"])
+def _batch(rows):
+    doc_id, tokens, source, split_id = zip(*rows)
+    return pa.record_batch(
+        [
+            pa.array(doc_id, pa.string()),
+            pa.array([list(t) for t in tokens], pa.list_(pa.int32())),
+            pa.array(source, pa.string()),
+            pa.array(split_id, pa.int32()),
+        ],
+        names=["doc_id", "tokens", "source", "split_id"],
+    )
 
 
-def test_encode_pdf_roundtrip():
+def _row_tokens(values, offsets):
+    return [values[offsets[i] : offsets[i + 1]] for i in range(len(offsets) - 1)]
+
+
+def test_encode_record_batch_roundtrip():
     rows = [
-        ("a", np.arange(100, dtype=np.int32), 100, "web", 0),
-        ("b", np.zeros(0, dtype=np.int32), 0, "web", 1),
-        ("c", np.array([5] * 2000, dtype=np.int32), 2000, "code", 2),
+        ("a", np.arange(100, dtype=np.int32), "web", 0),
+        ("b", np.zeros(0, dtype=np.int32), "web", 1),
+        ("c", np.array([5] * 2000, dtype=np.int32), "code", 2),
     ]
-    enc = encode_pdf(_pdf(rows), block_size=256)
-    dec = decode_pdf(enc, verify=True)
-    for (doc_id, toks, *_), got in zip(rows, dec["tokens"]):
+    enc, stats = encode_record_batch(_batch(rows), block_size=256)
+    values, offsets = decode_record_batch(enc, verify=True)
+    for (_, toks, *_), got in zip(rows, _row_tokens(values, offsets)):
         np.testing.assert_array_equal(got, toks)
-    assert list(enc["bytes_in"]) == [400, 0, 8000]
-    assert all(enc["bytes_out"] <= enc["bytes_in"] + 32)
+    assert enc.column("bytes_in").to_pylist() == [400, 0, 8000]
+    assert enc.column("split_id").to_pylist() == [0, 1, 2]  # passed through
+    bo = enc.column("bytes_out").to_numpy()
+    assert all(bo <= np.array([400, 0, 8000]) + 32)
+    assert stats["n_rows"] == 3 and stats["n_tokens"] == 2100
+    assert stats["bytes_out"] == bo.sum()
+    assert sum(stats["codec_hist"].values()) == sum(
+        len(b) for b in enc.column("blocks").to_pylist()
+    )
 
 
-def test_bounded_slices_caps_token_total():
-    rows = [(f"d{i}", np.zeros(1000, np.int32), 1000, "web", 0) for i in range(10)]
-    slices = list(bounded_slices(_pdf(rows), max_tokens=2500))
-    assert sum(len(s) for s in slices) == 10
-    for s in slices[:-1]:
-        assert s["n_tok"].sum() <= 2500 or len(s) == 1
+def test_encode_record_batch_caps_slice_tokens(monkeypatch):
+    calls = record_kernel_slices(monkeypatch, 2500)
+    rows = [(f"d{i}", np.zeros(1000, np.int32), "web", 0) for i in range(10)]
+    encode_record_batch(_batch(rows))
+    assert sum(r for r, _ in calls) == 10
+    assert len(calls) > 1
+    for r, t in calls:
+        assert t <= 2500 or r == 1
     # a single giant row still forms its own slice rather than being dropped
-    giant = [("g", np.zeros(10_000, np.int32), 10_000, "web", 0)] + rows[:2]
-    slices = list(bounded_slices(_pdf(giant), max_tokens=2500))
-    assert sum(len(s) for s in slices) == 3
-    assert len(slices[0]) == 1  # the giant is alone
+    calls.clear()
+    giant = [("g", np.zeros(10_000, np.int32), "web", 0)] + rows[:2]
+    enc, _ = encode_record_batch(_batch(giant))
+    assert sum(r for r, _ in calls) == 3 and enc.num_rows == 3
+    assert calls[0] == (1, 10_000)  # the giant is alone
+
+
+@pytest.mark.parametrize(
+    "tokens, why",
+    [
+        (pa.array([[1.0, 2.5]], pa.list_(pa.float64())), "expected int32"),
+        (pa.array([[1, 2**40]], pa.list_(pa.int64())), "exceed int32 range"),
+        (pa.array([[1, None, 3]], pa.list_(pa.int32())), "null tokens"),
+    ],
+)
+def test_encode_record_batch_rejects_contract_violations(tokens, why):
+    batch = pa.record_batch(
+        [pa.array(["a"]), tokens, pa.array(["web"])], names=["doc_id", "tokens", "source"]
+    )
+    with pytest.raises(ValueError, match=f"contract violation.*{why}"):
+        encode_record_batch(batch)
+
+
+def test_decode_record_batch_names_the_tampered_row():
+    rows = [(f"d{i}", np.arange(300, dtype=np.int32) * i, "web", 0) for i in range(4)]
+    enc, _ = encode_record_batch(_batch(rows), block_size=128)
+    rh = enc.column("row_hash").to_pylist()
+    rh[2] += 1
+    bad = enc.set_column(
+        enc.schema.get_field_index("row_hash"), "row_hash", pa.array(rh, pa.int64())
+    )
+    with pytest.raises(ValueError, match=r"row 2 \(doc_id='d2'\)"):
+        decode_record_batch(bad, verify=True)
+    values, _ = decode_record_batch(bad, verify=False)  # no check, no raise
+    assert len(values) == 1200
 
 
 def test_block_hash_combinable():

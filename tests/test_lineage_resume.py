@@ -65,3 +65,18 @@ def test_lineage_accounting_exact(spark, tmp_path):
         F.explode("codec_hist").alias("codec", "cnt")
     ).agg(F.sum("cnt")).collect()[0][0]
     assert hist_total == total_blocks
+
+
+def test_completed_splits_forgives_only_missing_lineage():
+    import pytest
+
+    def failing(msg):
+        def reader():
+            raise RuntimeError(msg)
+
+        return reader
+
+    missing = failing("[TABLE_OR_VIEW_NOT_FOUND] The table `lake`.`lin` cannot be found")
+    assert lineage.completed_splits(None, "unused", reader=missing) is None
+    with pytest.raises(RuntimeError, match="quota exceeded"):
+        lineage.completed_splits(None, "unused", reader=failing("quota exceeded"))
