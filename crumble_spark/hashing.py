@@ -2,9 +2,9 @@
 
 row_hash is an order-sensitive *block-combinable* sum:
     row_hash = sum over blocks of (block_id + 1) * crc32(block_token_bytes)
-wrapped to int64.  Combinability matters at scale: a giant document can be
-encoded block-parallel across tasks and its hash assembled by a plain
-Spark sum — no driver-side pass, no crc32_combine.  The lineage checksum
+wrapped to int64.  Combinable: a row's hash is a plain sum over its
+blocks, so encode and decode-verify accumulate it block by block, with
+no full-row pass and no crc32_combine.  The lineage checksum
 is then the (order-insensitive) sum of row_hash per split.
 
 Analogue: crumble verifies conservation with count_in == count_out

@@ -1,6 +1,9 @@
 """spark-submit entry: read tokens table → encode → write encoded +
 lineage, resumable.  (crumble `main`/`transcode` analogue, minus the CLI
-option zoo — config is the EncodeConfig dataclass, presets TBD.)
+option zoo — config is the EncodeConfig dataclass, bundled into the
+PRESETS levels.)  The encode itself is one scan → mapInArrow → sink, with
+no shuffle: giant rows stay single rows (encode.encode_record_batch bounds
+their kernel slices).
 
 Usage:
     spark-submit --py-files crumble_spark.zip -m crumble_spark.job \
@@ -22,15 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, lineage
-from .encode import with_split_id
-from .partitioning import encode_df_skewaware
+from .encode import encode_df, with_split_id
 
 
 @dataclass
 class EncodeConfig:
     block_size: int = DEFAULT_BLOCK_SIZE
     n_splits: int = 256
-    giant_threshold: int = 262_144
 
 
 # preset bundles, the analogue of crumble's -1..-9 macro levels
@@ -85,10 +86,7 @@ def run_encode_job(
     done = lineage.completed_splits(spark, lin_dir, reader=read_lineage) if resume else None
     todo = lineage.filter_resume(df, done)
 
-    enc = encode_df_skewaware(
-        todo, block_size=cfg.block_size, n_splits=cfg.n_splits,
-        giant_threshold=cfg.giant_threshold,
-    )
+    enc = encode_df(todo, block_size=cfg.block_size, n_splits=cfg.n_splits)
 
     def wf(table):
         # sinks take factory(df); bind the table name per call site

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .sinks import _is_missing_table
 
@@ -39,8 +40,12 @@ def lineage_from_encoded(enc: DataFrame, run_id: str) -> DataFrame:
         .groupBy("split_id")
         .agg(F.map_from_entries(F.collect_list(F.struct("codec_id", "cnt"))).alias("codec_hist"))
     )
+    # left join: a split whose rows are all empty has no exploded codec
+    # ids, but it is still done and gets an empty histogram
+    no_blocks = F.create_map().cast(T.MapType(T.IntegerType(), T.LongType(), False))
     return (
-        per_split.join(hist, "split_id")
+        per_split.join(hist, "split_id", "left")
+        .withColumn("codec_hist", F.coalesce("codec_hist", no_blocks))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("status", F.lit("done"))
         .select(

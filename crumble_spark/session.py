@@ -1,8 +1,7 @@
 """SparkSession factory with the configs this engine assumes.
 
 Arrow transfer is mandatory (all kernels are Arrow-batched pandas UDFs);
-AQE stays on as the runtime backstop for skew the explicit salting in
-partitioning.py didn't anticipate.
+AQE stays on as the runtime backstop for skew (see partitioning.py).
 """
 
 from __future__ import annotations
@@ -49,8 +48,8 @@ def get_spark(
         # arrays; a 32 MB default would cap a 350 MB input at ~12 tasks
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        # the block-combinable row_hash relies on int64 sums wrapping
-        # (then masked mod 2^63) — ANSI mode would throw on the wrap
+        # non-ANSI semantics (Spark 4 defaults to ANSI): the registered
+        # queries' oracle parity was established under this setting
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -15,7 +15,7 @@ def _table(spark):
 def test_resume_after_partial_run(spark, tmp_path):
     out_full = str(tmp_path / "full")
     out_resume = str(tmp_path / "resumed")
-    cfg = EncodeConfig(block_size=256, n_splits=16, giant_threshold=100_000)
+    cfg = EncodeConfig(block_size=256, n_splits=16)
 
     df = _table(spark)
     run_encode_job(spark, df, out_full, run_id="full", cfg=cfg, resume=False)
@@ -80,3 +80,29 @@ def test_completed_splits_forgives_only_missing_lineage():
     assert lineage.completed_splits(None, "unused", reader=missing) is None
     with pytest.raises(RuntimeError, match="quota exceeded"):
         lineage.completed_splits(None, "unused", reader=failing("quota exceeded"))
+
+
+def test_lineage_keeps_splits_without_blocks(spark, tmp_path):
+    # an empty row has no blocks, so its split has no codec ids to count;
+    # the split must still get its lineage row (with an empty histogram),
+    # or the summary undercounts and every resume re-encodes the split
+    import zlib
+
+    rows = [("full-a", list(range(150)), 150, "web"), ("empty-b", [], 0, "web")]
+    df = spark.createDataFrame(
+        rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    cfg = EncodeConfig(block_size=64, n_splits=64)
+    out = str(tmp_path / "empty")
+    summary = run_encode_job(spark, df, out, run_id="r1", cfg=cfg, resume=False)
+    assert (summary["rows"], summary["splits"]) == (2, 2)
+    hist = {
+        r["split_id"]: r["codec_hist"]
+        for r in spark.read.parquet(f"{out}/lineage").collect()
+    }
+    assert hist[zlib.crc32(b"empty-b") % 64] == {}
+    assert sum(hist[zlib.crc32(b"full-a") % 64].values()) == 3
+
+    # resume finds both splits done and encodes nothing
+    run_encode_job(spark, df, out, run_id="r2", cfg=cfg, resume=True)
+    assert spark.read.parquet(f"{out}/lineage").filter("run_id = 'r2'").count() == 0

@@ -1,19 +1,13 @@
-"""Skew handling: giant documents take the block-parallel path and still
-round-trip bit-identically with the same row_hash as the fused path."""
+"""Skew handling: giant documents stay single rows through the one encode
+path and round-trip bit-identically; per-source salting spreads a hot
+source."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from crumble_spark import synth
 from crumble_spark.decode import decode_df
-from crumble_spark.encode import encode_df, with_split_id
-from crumble_spark.partitioning import (
-    GIANT_FLOOR_TOKENS,
-    GIANT_ROW_TOKENS,
-    derive_giant_threshold,
-    encode_df_skewaware,
-    salted_repartition,
-)
+from crumble_spark.job import EncodeConfig, run_encode_job
 
 
 def _tokens_row(doc_id, n, seed, source="web"):
@@ -22,7 +16,7 @@ def _tokens_row(doc_id, n, seed, source="web"):
     return (doc_id, toks, len(toks), source)
 
 
-def test_giant_rows_roundtrip(spark):
+def test_giant_rows_roundtrip(spark, tmp_path):
     rows = [
         _tokens_row("web-giant-1", 50_000, 1),
         _tokens_row("web-giant-2", 30_000, 2),
@@ -32,59 +26,15 @@ def test_giant_rows_roundtrip(spark):
     df = spark.createDataFrame(
         rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
     )
-    enc = encode_df_skewaware(df, block_size=1024, n_splits=8, giant_threshold=10_000)
+    out = str(tmp_path / "giant")
+    cfg = EncodeConfig(block_size=1024, n_splits=8)
+    summary = run_encode_job(spark, df, out, cfg=cfg, resume=False)
+    assert summary["rows"] == len(rows)
+    enc = spark.read.parquet(f"{out}/encoded")
     dec = decode_df(enc, verify=True)  # verify raises if any hash is wrong
     got = {r["doc_id"]: r["tokens"] for r in dec.collect()}
     want = {r[0]: r[1] for r in rows}
     assert got == want
-
-
-def test_giant_path_matches_fused_path_exactly(spark):
-    rows = [_tokens_row(f"web-doc-{i}", 20_000 + i, 100 + i) for i in range(4)]
-    df = spark.createDataFrame(
-        rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    df = with_split_id(df, 8)
-    fused = encode_df(df, block_size=1024).select(
-        "doc_id", "row_hash", "bytes_out", F.size("blocks").alias("nb")
-    )
-    giant = encode_df_skewaware(
-        df, block_size=1024, n_splits=8, giant_threshold=1_000
-    ).select("doc_id", "row_hash", "bytes_out", F.size("blocks").alias("nb"))
-    a = {r["doc_id"]: (r["row_hash"], r["bytes_out"], r["nb"]) for r in fused.collect()}
-    b = {r["doc_id"]: (r["row_hash"], r["bytes_out"], r["nb"]) for r in giant.collect()}
-    assert a == b
-
-
-def test_adaptive_threshold_lowers_for_skewed_source(spark):
-    # 300 short docs + a handful of monsters: p99.9*8 lands well under the
-    # static cap, so the skewed source auto-selects a lower threshold and
-    # the monsters route to the block-parallel path
-    rows = [(f"s-{i}", [1, 2, 3] * 100, 300, "web") for i in range(5000)]
-    rows += [_tokens_row(f"m-{i}", 400_000, 50 + i) for i in range(3)]
-    df = spark.createDataFrame(
-        rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    thr = derive_giant_threshold(df)
-    assert thr < GIANT_ROW_TOKENS
-    assert thr >= GIANT_FLOOR_TOKENS
-    # and the auto path still round-trips bit-identically
-    enc = encode_df_skewaware(df, block_size=1024, n_splits=8, giant_threshold="auto")
-    dec = decode_df(enc, verify=True)
-    got = {r["doc_id"]: list(r["tokens"]) for r in dec.collect()}
-    want = {r[0]: list(r[1]) for r in rows}
-    assert got == want
-
-
-def test_adaptive_threshold_keeps_cap_for_uniform_long_docs(spark):
-    # uniformly long docs: p99.9*8 exceeds the cap → stays at the static
-    # maximum (no pointless block-parallel detour for every row)
-    rows = [(f"u-{i}", None, 60_000, "web") for i in range(50)]
-    df = spark.createDataFrame(
-        [(d, [1], n, s) for d, _, n, s in rows],
-        schema="doc_id string, tokens array<int>, n_tok int, source string",
-    )
-    assert derive_giant_threshold(df) == GIANT_ROW_TOKENS
 
 
 def test_split_id_crc32_parity_jvm_python(spark):
@@ -101,33 +51,6 @@ def test_split_id_crc32_parity_jvm_python(spark):
     jvm = {r["doc_id"]: r["split_id"] for r in with_split_id(df, 64).collect()}
     py = {d: zlib.crc32(d.encode("utf-8")) % 64 for d in ids}
     assert jvm == py
-
-
-def test_giant_hash_reassembly_survives_int64_wrap(spark):
-    # block hashes near 2^63 must reassemble to the python-side combine()
-    # (sum mod 2^63) even when the Spark int64 sum wraps negative — the
-    # exact regression the masked aggregate in encode_giant_rows guards
-    from crumble_spark import hashing
-
-    hs = [(1 << 62) + 12345, (1 << 62) + 67890, (1 << 61) + 7]
-    want = hashing.combine(hs)
-    df = spark.createDataFrame([(h,) for h in hs], "block_hash long")
-    got = df.agg(
-        F.sum("block_hash").bitwiseAND(F.lit((1 << 63) - 1)).alias("row_hash")
-    ).collect()[0]["row_hash"]
-    assert got == want
-    assert sum(hs) >= (1 << 63)  # the fixture really does overflow int64's positive range
-
-
-def test_salted_repartition_spreads_hot_source(spark):
-    # all rows share one source; salting must still spread them
-    rows = [(f"web-{i:05d}", [1, 2, 3], 3, "web") for i in range(400)]
-    df = spark.createDataFrame(
-        rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    parts = salted_repartition(df, 8).rdd.glom().map(len).collect()
-    assert len(parts) == 8
-    assert max(parts) < 2 * (400 / 8)  # no partition hogs the hot source
 
 
 def test_salt_plan_gives_hot_source_more_buckets(spark):
@@ -163,62 +86,53 @@ def test_salt_plan_gives_hot_source_more_buckets(spark):
     assert spread["hot"] > spread["cold"]
 
 
-def test_derive_skew_stats_matches_separate_passes(spark):
-    # the combined rollup must reproduce BOTH standalone derivations
-    from crumble_spark.partitioning import (
-        derive_giant_threshold,
-        derive_salt_plan,
-        derive_skew_stats,
-    )
+def test_salted_repartition_spreads_hot_source(spark):
+    # all rows share one source; salting must still spread them: the lone
+    # source gets the full 2x-headroom width, and no partition hogs its rows
+    from crumble_spark.partitioning import derive_salt_plan, salted_repartition_by_source
 
-    rows = [(f"hot-{i:05d}", [1] * 50, 50, "hot") for i in range(380)] + [
-        (f"cold-{i:05d}", [1] * 5, 5, "cold") for i in range(20)
-    ]
+    rows = [(f"web-{i:05d}", [1, 2, 3], 3, "web") for i in range(400)]
     df = spark.createDataFrame(
         rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
     )
-    thr, plan = derive_skew_stats(df, n_parts=64)
-    assert thr == derive_giant_threshold(df)
-    assert plan == derive_salt_plan(df, n_parts=64)
+    plan = derive_salt_plan(df, n_parts=8)
+    assert plan == {"web": 16}
+    parts = salted_repartition_by_source(df, 8, plan).rdd.glom().map(len).collect()
+    assert len(parts) == 8
+    assert max(parts) < 2 * (400 / 8)  # no partition hogs the hot source
 
 
-def test_derive_skew_stats_handles_null_source_group(spark):
-    # ADVICE r3: the grand-total rollup row was selected by `source IS
-    # NULL`, so a genuine NULL-source group could be mistaken for it —
-    # wrong global percentile AND its tokens dropped from the salt total.
-    # grouping() now disambiguates: the threshold must equal the
-    # all-rows percentile-derived value and the null group's tokens must
-    # count toward the total (visible as a smaller hot-source share).
-    from crumble_spark.partitioning import derive_giant_threshold, derive_skew_stats
 
-    rows = (
-        [(f"hot-{i:05d}", [1] * 50, 50, "hot") for i in range(300)]
-        # null-source docs with a much longer length than anything else:
-        # if the total row were confused with this group, the percentile
-        # would jump to ~5000
-        + [(f"null-{i:05d}", [1] * 5000, 5000, None) for i in range(4)]
-    )
+def test_salt_buckets_fill_consecutive_partitions(spark):
+    # the python-side hash matches F.hash, so every salt bucket lands on
+    # its own partition: a source with 4 buckets over 16 partitions fills
+    # exactly 4 of them, and 16 buckets over 8 partitions fill each twice
+    from crumble_spark.partitioning import _spark_hash_int, salted_repartition_by_source
+
+    ks = list(range(-50, 50)) + [2**31 - 1, -(2**31)]
+    hdf = spark.createDataFrame([(k,) for k in ks], "k int")
+    assert {r["k"]: r["h"] for r in hdf.select("k", F.hash("k").alias("h")).collect()} == {
+        k: _spark_hash_int(k) for k in ks
+    }
+
+    rows = [(f"d-{i:05d}", [1], 1, "web") for i in range(400)]
     df = spark.createDataFrame(
         rows, schema="doc_id string, tokens array<int>, n_tok int, source string"
     )
-    thr, plan = derive_skew_stats(df, n_parts=64)
-    assert thr == derive_giant_threshold(df)
-    # the null group holds 20k of 35k tokens; if dropped from the total,
-    # hot's share would be 100% and its bucket count would hit ~2x n_parts
-    assert None not in plan
-    assert plan["hot"] <= 64  # not the whole-corpus share
+    pids = salted_repartition_by_source(df, 16, {"web": 4}).select(
+        F.spark_partition_id().alias("pid")
+    )
+    used = {r["pid"] for r in pids.collect()}
+    assert any(used == {(s + i) % 16 for i in range(4)} for s in range(16))
+    parts = salted_repartition_by_source(df, 8, {"web": 16}).rdd.glom().map(len).collect()
+    assert min(parts) > 0
 
 def test_derive_salt_plan_agrees_with_skew_stats_on_null_sources(spark):
     # ADVICE r4: derive_salt_plan emitted a None key for a genuine NULL
-    # source while derive_skew_stats filtered it, breaking the documented
-    # `plan == derive_salt_plan(df)` invariant and feeding F.lit(None)
-    # into the create_map salt lookup.  Both paths must now agree and
-    # the plan must be null-free (null rows take the coalesce default).
-    from crumble_spark.partitioning import (
-        derive_salt_plan,
-        derive_skew_stats,
-        salted_repartition_by_source,
-    )
+    # source, feeding F.lit(None) into the create_map salt lookup.  The
+    # plan must be null-free (null rows take the coalesce default) while
+    # the null group's tokens still count toward the total.
+    from crumble_spark.partitioning import derive_salt_plan, salted_repartition_by_source
 
     rows = [(f"hot-{i:05d}", [1] * 50, 50, "hot") for i in range(300)] + [
         (f"null-{i:05d}", [1] * 500, 500, None) for i in range(8)
@@ -228,8 +142,9 @@ def test_derive_salt_plan_agrees_with_skew_stats_on_null_sources(spark):
     )
     plan = derive_salt_plan(df, n_parts=64)
     assert None not in plan
-    _, plan2 = derive_skew_stats(df, n_parts=64)
-    assert plan == plan2
+    # the null group holds 4k of 19k tokens; if dropped from the total,
+    # hot's share would be 100% and its bucket count would hit 2x n_parts
+    assert plan["hot"] < 2 * 64
     # the map literal must build and route null-source rows via the default
     out = salted_repartition_by_source(df, 8, plan)
     assert out.count() == len(rows)

@@ -222,6 +222,41 @@ def test_encode_scan_prunes_and_pushes(spark):
     assert "text" in read_schema and "ts" not in read_schema
 
 
+def test_encode_job_is_one_scan_and_no_shuffle(spark, tmp_path, monkeypatch):
+    # the DataFrame encode job is scan → mapInArrow → sink: giant rows
+    # stay single rows, so no Exchange moves raw tokens or encoded blocks,
+    # the input is scanned once, and the sink write is one single-stage job
+    from crumble_spark import job, sinks, synth
+
+    sc = spark.sparkContext
+    real = sinks.write_encoded_parquet
+    plans = []
+
+    def spy(enc, *a, **kw):
+        plans.append(_plan(enc))
+        sc.setJobGroup("encode-sink", "encoded data to the sink")
+        try:
+            real(enc, *a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+
+    monkeypatch.setattr(sinks, "write_encoded_parquet", spy)
+    inp = str(tmp_path / "tokens")
+    synth.synth_table(spark, 64, seed=3, mean_len=300, parts=2).write.parquet(inp)
+    cfg = job.EncodeConfig(block_size=256, n_splits=16)
+    job.run_encode_job(spark, spark.read.parquet(inp), str(tmp_path / "out"), cfg=cfg,
+                       resume=False)
+
+    (plan,) = plans
+    assert "Exchange" not in plan, plan[:2000]
+    assert plan.count("Scan parquet") == 1, plan[:2000]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("encode-sink")
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+
 def test_ann_scaled_recall_floor(spark):
     # both engines compute the SAME multi-probe algorithm, so the oracle
     # match alone can't catch a recall regression (a bug that tanks recall
