@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, lineage
 from .encode import encode_df, with_split_id
+from .schema import ENCODED_SCHEMA, LINEAGE_SCHEMA
 
 
 @dataclass
@@ -80,7 +81,7 @@ def run_encode_job(
     def read_lineage():
         if sink == "iceberg":
             return read_table(lin_dir)
-        return spark.read.parquet(lin_dir)
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
 
     df = with_split_id(df, cfg.n_splits)
     done = lineage.completed_splits(spark, lin_dir, reader=read_lineage) if resume else None
@@ -99,7 +100,7 @@ def run_encode_job(
         enc_written = read_table(out_dir)
     else:
         sinks.write_encoded_parquet(enc, enc_dir, n_splits=cfg.n_splits)
-        enc_written = spark.read.parquet(enc_dir)
+        enc_written = spark.read.schema(ENCODED_SCHEMA).parquet(enc_dir)
     if done is not None:
         enc_written = enc_written.join(F.broadcast(done), "split_id", "left_anti")
     lin = lineage.lineage_from_encoded(enc_written, run_id)

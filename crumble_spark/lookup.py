@@ -2,11 +2,13 @@
 
 The encoded table is partitioned by split_id = crc32(doc_id) % n_splits
 (encode.with_split_id), so a doc_id lookup knows exactly which partitions
-can contain it — the filter is computed OUTSIDE the scan and lands as a
-partition filter, pruning every other split's files without reading them.
-This is the reference's indexed region scan (S2: samtools-style region
-fetch via the BAM index, snp_score.c main loop seeks by region) applied
-to the engine's own output: a compressed store you can point-query.
+can contain it before it reads anything.  decode_docs checks those split
+directories on the filesystem and hands Spark only the ones that exist,
+with the fixed ENCODED_SCHEMA: no Spark job lists the store's other
+directories or infers a footer schema.  This is the reference's indexed
+region scan (S2: samtools-style region fetch via the BAM index,
+snp_score.c main loop seeks by region) applied to the engine's own
+output: a compressed store you can point-query.
 
 At 10^12 rows with n_splits=4096, a k-doc lookup touches at most k
 partitions (~0.025% of the data per doc), then row-group min/max on
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .decode import decode_df
+from .schema import ENCODED_SCHEMA, TOKENS_SCHEMA
 
 
 def split_of(doc_id: str, n_splits: int) -> int:
@@ -35,12 +38,17 @@ def decode_docs(
     n_splits: int | None = None,
     verify: bool = True,
 ) -> DataFrame:
-    """Decode exactly `doc_ids` from a split_id-partitioned encoded dir.
+    """Decode exactly `doc_ids` from an encoded dir.
 
     The split set is computed driver-side from the same crc32 the encoder
-    used, so the IN-filter on the partition column prunes at file-listing
-    time (PartitionFilters in the plan — asserted by test_lookup.py);
-    the doc_id filter then lands as a parquet row-group predicate.
+    used.  On a split_id-partitioned store (run_encode_job's sink) only
+    the routed `split_id=` directories that exist are read, one
+    filesystem `exists` per split; when none exist the result is empty
+    and nothing is scanned.  A flat store (encode_job_direct's
+    enc-*.parquet files) is read whole.  Either read passes
+    ENCODED_SCHEMA, so no job infers it from footers.  The split_id
+    IN-filter stays a PartitionFilter and the doc_id IN-filter a parquet
+    row-group predicate (both asserted by test_lookup.py).
 
     n_splits defaults to the store's own `_crumble_meta.json` sidecar
     (written by the encode job) — a hand-passed mismatch would silently
@@ -58,12 +66,33 @@ def decode_docs(
             )
         n_splits = int(meta["n_splits"])
     splits = sorted({split_of(d, n_splits) for d in doc_ids})
-    enc = (
-        spark.read.parquet(enc_dir)
-        .filter(F.col("split_id").isin(splits))
-        .filter(F.col("doc_id").isin(doc_ids))
-    )
+    reader = spark.read.schema(ENCODED_SCHEMA)
+    dirs = _routed_dirs(enc_dir, splits)
+    if dirs is None:
+        enc = reader.parquet(enc_dir)
+    elif dirs:
+        enc = reader.option("basePath", enc_dir).parquet(*dirs)
+    else:
+        # limit(0) plans as an empty local relation, which collects
+        # without a job
+        return spark.createDataFrame([], TOKENS_SCHEMA).limit(0)
+    enc = enc.filter(F.col("split_id").isin(splits)).filter(F.col("doc_id").isin(doc_ids))
     return decode_df(enc, verify=verify)
+
+
+def _routed_dirs(enc_dir: str, splits: list[int]) -> list[str] | None:
+    """The routed `split_id=` directories of enc_dir that exist, or None
+    when enc_dir has no `split_id=` children at all (a flat store).  Only
+    when no routed directory exists does one driver-side glob of enc_dir
+    tell the two layouts apart."""
+    from .sinks import _hadoop_fs
+
+    fs, path_cls = _hadoop_fs(enc_dir)
+    dirs = [f"{enc_dir}/split_id={s}" for s in splits]
+    present = [d for d in dirs if fs.exists(path_cls(d))]
+    if present or fs.globStatus(path_cls(f"{enc_dir}/split_id=*")):
+        return present
+    return None
 
 
 def decode_docs_table(

@@ -1,6 +1,7 @@
-"""Point lookups into the encoded store: correct rows back, and the
-split filter must prune partitions at scan time (not post-scan)."""
+"""Point lookups into the encoded store: correct rows back, only the
+routed split directories read, and the split filter kept in the plan."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from crumble_spark import lookup, synth
@@ -60,8 +61,6 @@ def test_sidecar_republish_is_atomic_overwrite(spark, tmp_path):
 
 
 def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
-    import pytest
-
     out, src = _encoded_dir(spark, tmp_path)
     with pytest.raises(ValueError, match="_crumble_meta.json"):
         lookup.decode_docs(spark, out, ["x"])
@@ -70,15 +69,106 @@ def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
 def test_lookup_prunes_partitions(spark, tmp_path):
     out, src = _encoded_dir(spark, tmp_path)
     ids = [src.select("doc_id").collect()[0]["doc_id"]]
-    enc = (
-        spark.read.parquet(out)
-        .filter(F.col("split_id").isin([lookup.split_of(ids[0], 16)]))
-        .filter(F.col("doc_id").isin(ids))
-    )
-    plan = enc._jdf.queryExecution().executedPlan().toString()
+    plan = lookup.decode_docs(spark, out, ids, n_splits=16)._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "split_id" in plan.split("PartitionFilters")[1][:120]
     # and the doc_id predicate reaches parquet
     assert "PushedFilters" in plan and "doc_id" in plan.split("PushedFilters")[1][:200]
+
+
+def _jobs_run(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran) — counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def store64(spark, tmp_path_factory):
+    """A 64-split partitioned store holding only splits 0..47, so ids
+    routed to 48..63 have no directory; returns (dir, {doc_id: row})."""
+    out = str(tmp_path_factory.mktemp("store64") / "enc")
+    df = with_split_id(synth.synth_table(spark, 400, seed=21, mean_len=300, parts=4), 64)
+    df = df.filter(F.col("split_id") < 48)
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    encode_df(df, block_size=256, n_splits=64).write.partitionBy(
+        "split_id"
+    ).mode("overwrite").parquet(out)
+    return out, {r["doc_id"]: r for r in df.collect()}
+
+
+def _unrouted_ids(k):
+    """k ids that route to splits 48..63 of a 64-split store."""
+    cands = (f"absent-{i}" for i in range(10_000))
+    return [d for d in cands if lookup.split_of(d, 64) >= 48][:k]
+
+
+def _check_docs(got, want):
+    assert sorted(r["doc_id"] for r in got) == sorted(want)
+    for r in got:
+        w = want[r["doc_id"]]
+        assert (list(r["tokens"]), r["n_tok"], r["source"]) == (
+            list(w["tokens"]), w["n_tok"], w["source"]
+        )
+
+
+def test_lookup_reads_only_routed_split_dirs(spark, store64):
+    out, rows = store64
+    ids = sorted(rows)[:3]
+    splits = {lookup.split_of(d, 64) for d in ids}
+
+    def run():
+        df = lookup.decode_docs(spark, out, ids, n_splits=64)
+        return df, df.collect()
+
+    (df, got), jobs = _jobs_run(spark, "lookup-routed", run)
+    _check_docs(got, {d: rows[d] for d in ids})
+    # one scan job: no listing job over the store, no footer-inference job
+    assert jobs == 1
+    files = df.inputFiles()
+    assert files
+    for f in files:
+        assert any(f"/split_id={s}/" in f for s in splits), f
+
+
+def test_lookup_mixed_absent_split_dirs(spark, store64):
+    out, rows = store64
+    present = sorted(rows)[-4:]
+    got = lookup.decode_docs(spark, out, present + _unrouted_ids(3), n_splits=64).collect()
+    _check_docs(got, {d: rows[d] for d in present})
+
+
+def test_lookup_all_absent_split_dirs_scans_nothing(spark, store64):
+    from crumble_spark.schema import TOKENS_SCHEMA
+
+    out, _ = store64
+
+    def run():
+        df = lookup.decode_docs(spark, out, _unrouted_ids(3), n_splits=64)
+        return df, df.collect()
+
+    (df, got), jobs = _jobs_run(spark, "lookup-absent", run)
+    assert got == [] and jobs == 0
+    assert df.schema == TOKENS_SCHEMA
+
+
+def test_lookup_on_direct_flat_store(spark, tmp_path):
+    # encode_job_direct writes flat enc-*.parquet files plus the sidecar;
+    # the lookup resolves n_splits from it and reads the store whole
+    from crumble_spark.sources import parquet_direct as direct
+
+    tok = str(tmp_path / "tokens")
+    synth.synth_table(spark, 120, seed=13, mean_len=300, parts=3).write.parquet(tok)
+    direct.encode_job_direct(spark, tok, str(tmp_path / "out"), block_size=256, n_splits=16)
+    rows = {r["doc_id"]: r for r in spark.read.parquet(tok).collect()}
+    ids = sorted(rows)[::30]
+    got = lookup.decode_docs(spark, str(tmp_path / "out" / "encoded"), ids + ["absent-0"]).collect()
+    _check_docs(got, {d: rows[d] for d in ids})
 
 
 def test_decode_docs_table_via_snapshot_property(spark, tmp_path):
@@ -113,8 +203,6 @@ def test_decode_docs_table_via_snapshot_property(spark, tmp_path):
         assert list(r["tokens"]) == want[r["doc_id"]]
 
     # missing property → explicit error, never a silent partial lookup
-    import pytest
-
     empty = spark.createDataFrame(
         [(dt.datetime(2024, 1, 1), {"other": "x"})],
         "committed_at timestamp, summary map<string,string>",
