@@ -17,10 +17,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+from pyspark import Accumulator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import DEFAULT_BLOCK_SIZE, cost, hashing
+from . import DEFAULT_BLOCK_SIZE, cost, hashing, lineage
 from . import codecs as codecs_mod
 from .schema import ENCODED_SCHEMA, PA_BLOCK, PA_ENCODED
 
@@ -453,9 +454,9 @@ def encode_record_batch(
     batch: pa.RecordBatch, block_size: int = DEFAULT_BLOCK_SIZE, n_splits: int = 256
 ) -> tuple[pa.RecordBatch, dict]:
     """(doc_id, tokens, source[, split_id][, force_raw]) Arrow batch →
-    (PA_ENCODED batch, lineage counters).  encode_flat sees row slices of
-    at most MAX_TOKENS_PER_SLICE tokens, or one longer row alone.  split_id
-    passes through, else is with_split_id's crc32(doc_id) % n_splits."""
+    (PA_ENCODED batch, its lineage.split_counters).  encode_flat sees row
+    slices of at most MAX_TOKENS_PER_SLICE tokens, or one longer row alone.
+    split_id passes through, else is with_split_id's crc32(doc_id) % n_splits."""
     names = batch.schema.names
     flat, offs = _token_buffers(batch.column("tokens"))
     n = batch.num_rows
@@ -493,15 +494,8 @@ def encode_record_batch(
         ],
         schema=PA_ENCODED,
     )
-    hist = np.bincount(blocks_arr.flatten().field("codec_id").to_numpy()).tolist()
-    return out, {
-        "n_rows": n,
-        "n_tokens": int(offs[-1]),
-        "bytes_in": int(offs[-1]) * 4,
-        "bytes_out": int(bytes_out.sum()),
-        "checksum": int((row_hash % (1 << 31)).sum()),
-        "codec_hist": {cid: k for cid, k in enumerate(hist) if k},
-    }
+    counters = lineage.split_counters(split_id.to_numpy(), n_tok, bytes_out, row_hash, blocks_arr)
+    return out, counters
 
 
 def with_split_id(df: DataFrame, n_splits: int) -> DataFrame:
@@ -519,13 +513,22 @@ def with_split_id(df: DataFrame, n_splits: int) -> DataFrame:
 
 
 def encode_df(
-    df: DataFrame, block_size: int = DEFAULT_BLOCK_SIZE, n_splits: int = 256
+    df: DataFrame,
+    block_size: int = DEFAULT_BLOCK_SIZE,
+    n_splits: int = 256,
+    lineage_acc: Accumulator | None = None,
 ) -> DataFrame:
-    """tokens table → encoded table (blocks of codec-tagged payloads)."""
+    """tokens table → encoded table (blocks of codec-tagged payloads).
+    With `lineage_acc` (a lineage.SplitCounters accumulator) every batch
+    also adds its per-split counters to it as the table is written; every
+    execution of the plan adds again, so run one action per accumulator."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            yield encode_record_batch(batch, block_size, n_splits)[0]
+            out, counters = encode_record_batch(batch, block_size, n_splits)
+            if lineage_acc is not None:
+                lineage_acc.add(counters)
+            yield out
 
     return df.mapInArrow(fn, schema=ENCODED_SCHEMA)
 

@@ -5,6 +5,15 @@ PRESETS levels.)  The encode itself is one scan → mapInArrow → sink, with
 no shuffle: giant rows stay single rows (encode.encode_record_batch bounds
 their kernel slices).
 
+Lineage: every writer emits rows of the one schema.LINEAGE_SCHEMA, built
+from the per-split counters encode.encode_record_batch returns, never
+from a read-back of the store.  This job and streaming.ingest sum them in
+a lineage.SplitCounters accumulator while the sink writes and append the
+rows after the write commits: lineage is per committed job, as Spark's
+committer publishes all of a job's splits or none.  The direct path
+(`--direct`) folds them per input split and publishes each record right
+after the split's data file: lineage and resume are per split there.
+
 Usage:
     spark-submit --py-files crumble_spark.zip -m crumble_spark.job \
         --input <parquet-or-iceberg> --output <dir> [--resume]
@@ -26,7 +35,6 @@ from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, lineage
 from .encode import encode_df, with_split_id
-from .schema import ENCODED_SCHEMA, LINEAGE_SCHEMA
 
 
 @dataclass
@@ -60,7 +68,10 @@ def run_encode_job(
     writer_factory=None,
 ) -> dict:
     """Encode `df` into {out_dir}/encoded (partitioned by split_id) with
-    lineage rows in {out_dir}/lineage. Returns run summary.
+    lineage rows in {out_dir}/lineage, appended once the write has
+    committed (per committed job; see the module docstring). Returns the
+    run summary over the splits this run wrote plus, when resuming, the
+    done splits it skipped.
 
     sink="iceberg" treats out_dir as a catalog table name and writes via
     sinks.write_encoded_iceberg (needs the Iceberg runtime; see README).
@@ -71,58 +82,35 @@ def run_encode_job(
 
     cfg = cfg or EncodeConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
-    enc_dir = f"{out_dir}/encoded"
-    lin_dir = f"{out_dir}/lineage"
-
-    if sink == "iceberg":
-        lin_dir = f"{out_dir}_lineage"
-    read_table = table_reader or (lambda name: spark.read.table(name))
-
-    def read_lineage():
-        if sink == "iceberg":
-            return read_table(lin_dir)
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
-
+    iceberg = sink == "iceberg"
+    lin_dir = f"{out_dir}_lineage" if iceberg else f"{out_dir}/lineage"
+    reader = (lambda: (table_reader or spark.read.table)(lin_dir)) if iceberg else None
+    done = lineage.done_rows(spark, lin_dir, reader) if resume else []
     df = with_split_id(df, cfg.n_splits)
-    done = lineage.completed_splits(spark, lin_dir, reader=read_lineage) if resume else None
-    todo = lineage.filter_resume(df, done)
+    if done:
+        df = df.filter(~F.col("split_id").isin([int(r["split"]) for r in done]))
 
-    enc = encode_df(todo, block_size=cfg.block_size, n_splits=cfg.n_splits)
+    acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
+    enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
 
     def wf(table):
         # sinks take factory(df); bind the table name per call site
         return (lambda d: writer_factory(d, table)) if writer_factory else None
 
-    if sink == "iceberg":
+    if iceberg:
         sinks.write_encoded_iceberg(
             enc, out_dir, run_id, writer_factory=wf(out_dir), n_splits=cfg.n_splits
         )
-        enc_written = read_table(out_dir)
     else:
-        sinks.write_encoded_parquet(enc, enc_dir, n_splits=cfg.n_splits)
-        enc_written = spark.read.schema(ENCODED_SCHEMA).parquet(enc_dir)
-    if done is not None:
-        enc_written = enc_written.join(F.broadcast(done), "split_id", "left_anti")
-    lin = lineage.lineage_from_encoded(enc_written, run_id)
-    if sink == "iceberg":
-        sinks.append_lineage_iceberg(lin, lin_dir, writer_factory=wf(lin_dir))
-    else:
-        lin.write.mode("append").parquet(lin_dir)
-
-    summary = (
-        read_lineage()
-        .agg(
-            F.countDistinct("split_id").alias("splits"),
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_tokens").alias("tokens"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-        )
-        .collect()[0]
-        .asDict()
-    )
-    summary["run_id"] = run_id
-    return summary
+        sinks.write_encoded_parquet(enc, f"{out_dir}/encoded", n_splits=cfg.n_splits)
+    rows = lineage.lineage_rows(acc.value, run_id)
+    if rows:
+        lin = lineage.lineage_frame(spark, rows)
+        if iceberg:
+            sinks.append_lineage_iceberg(lin, lin_dir, writer_factory=wf(lin_dir))
+        else:
+            lin.write.mode("append").parquet(lin_dir)
+    return {**lineage.summarize(done + rows), "run_id": run_id}
 
 
 def main() -> None:

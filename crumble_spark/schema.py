@@ -39,12 +39,14 @@ ENCODED_SCHEMA = T.StructType(
     ]
 )
 
-# per-partition lineage — crumble's exit counters + @PG provenance
-# (snp_score.c:2650-2666, 2588-2609) promoted to a first-class table
+# per-split lineage — crumble's exit counters + @PG provenance
+# (snp_score.c:2650-2666, 2588-2609) promoted to a first-class table, one
+# schema for every writer.  `split` is str(split_id) on the DataFrame and
+# streaming paths and "file:rgN" (the input row group) on the direct path.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
-        T.StructField("split_id", T.IntegerType(), False),
+        T.StructField("split", T.StringType(), False),
         T.StructField("n_rows", T.LongType(), False),
         T.StructField("n_tokens", T.LongType(), False),
         T.StructField("codec_hist", T.MapType(T.IntegerType(), T.LongType()), False),
@@ -67,9 +69,12 @@ def _arrow(t: T.DataType) -> pa.DataType:
         return pa.struct([(f.name, _arrow(f.dataType)) for f in t.fields])
     if isinstance(t, T.ArrayType):
         return pa.list_(_arrow(t.elementType))
+    if isinstance(t, T.MapType):
+        return pa.map_(_arrow(t.keyType), _arrow(t.valueType))
     return _PA_ATOMS[t]
 
 
 PA_TOKENS = pa.schema(_arrow(TOKENS_SCHEMA))
 PA_BLOCK = _arrow(BLOCK_SCHEMA)
 PA_ENCODED = pa.schema(_arrow(ENCODED_SCHEMA))
+PA_LINEAGE = pa.schema(_arrow(LINEAGE_SCHEMA))

@@ -263,7 +263,7 @@ def read_tokens_iceberg(spark, table: str, reader=None) -> DataFrame:
 def append_lineage_iceberg(lin: DataFrame, table: str, writer_factory=None) -> None:
     """Append lineage rows to `{table}` (created on first use).  Appends
     are snapshot-isolated in Iceberg, so concurrent runs interleave
-    safely — the resume anti-join reads a consistent snapshot."""
+    safely — a resume reads a consistent snapshot of the done splits."""
     factory = writer_factory or (lambda df: df.writeTo(table))
     try:
         factory(lin).append()

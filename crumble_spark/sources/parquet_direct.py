@@ -14,20 +14,23 @@ Spark still owns everything distributed-systems-shaped:
   * the task list ((file, row_group) rows — the "input split" of crumble's
     lineage discipline),
   * scheduling/retries, and
-  * lineage + resume (summaries come back as small rows; payload bytes
-    never cross the JVM boundary).
+  * collecting the lineage records (small rows; payload bytes never
+    cross the JVM boundary).
 
-Output files are deterministically named per input split, so a retried or
-resumed task overwrites its own partial output — idempotent by
+Each task publishes its split's data file, then its lineage record, each
+by atomic rename of a hidden tmp file; resume skips the splits that have
+a record.  Output files are deterministically named per input split, so a
+retried or resumed task overwrites its own partial output — idempotent by
 construction (same discipline as the split_id path in job.py).
 """
 
 from __future__ import annotations
 
 import os
-from collections import Counter
+import uuid
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -36,12 +39,9 @@ from pyspark.sql import functions as F
 
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
-from ..schema import PA_ENCODED
+from ..schema import LINEAGE_SCHEMA, PA_ENCODED, PA_LINEAGE
+from ..sinks import write_store_meta
 
-SUMMARY_SCHEMA = (
-    "input_split string, n_rows long, n_tokens long, bytes_in long, "
-    "bytes_out long, checksum long, codec_hist string, out_file string, status string"
-)
 
 def list_input_files(in_path: str) -> list[str]:
     """Parquet file NAMES only — a pure directory listing, no footer
@@ -65,7 +65,7 @@ def list_input_splits(in_path: str) -> list[tuple[str, int]]:
     Globally sorted by (path, rg) — os.walk order is per-directory, not
     lexicographic across nesting levels, and the distributed path sorts
     its collect; both paths must return the bit-identical list or
-    _task_partitions groups splits differently either side of the
+    _task_frame groups splits differently either side of the
     DISTRIBUTED_LISTING_MIN_FILES crossover (ADVICE r4)."""
     return _footer_splits(list_input_files(in_path))
 
@@ -103,9 +103,7 @@ def list_input_splits_distributed(
             if rows:
                 yield pd.DataFrame(rows, columns=["path", "rg"])
 
-    names = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        _task_partitions(spark, len(files))
-    )
+    names = _task_frame(spark, [(f,) for f in files], "path string")
     rows = names.mapInPandas(read_footers, schema="path string, rg int").collect()
     # deterministic order: the serial walk sorts by name then rg; the
     # distributed collect order is partition-arbitrary
@@ -116,15 +114,16 @@ def _split_name(path: str, rg: int) -> str:
     return f"{os.path.basename(path)}:rg{rg}"
 
 
-def _task_partitions(spark, n_splits: int) -> int:
-    """Batch input splits into tasks: one task per split pays a scheduler
-    launch + python-worker round trip per ~35 ms of work (measured 30%
-    of wall at bench scale).  Keep >=2 tasks per core for stealing, and
-    <=8 splits per task so a retry re-does a bounded amount of (fully
-    idempotent) work.  At 10^12-scale split counts the per-task batch
-    cap dominates; at bench scale the 2x-parallelism floor does."""
-    par = spark.sparkContext.defaultParallelism
-    return max(1, min(n_splits, max(2 * par, -(-n_splits // 8))))
+def _task_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """`rows`, one per split, batched into tasks: one task per split pays
+    a scheduler launch + python-worker round trip per ~35 ms of work
+    (measured 30% of wall at bench scale).  Keep >=2 tasks per core for
+    stealing, and <=8 splits per task so a retry re-does a bounded amount
+    of (fully idempotent) work.  At 10^12-scale split counts the per-task
+    batch cap dominates; at bench scale the 2x-parallelism floor does."""
+    par, n = spark.sparkContext.defaultParallelism, len(rows)
+    n_tasks = max(1, min(n, max(2 * par, -(-n // 8))))
+    return spark.createDataFrame(rows, schema).repartition(n_tasks)
 
 
 def _pin_arrow_single_thread() -> None:
@@ -146,32 +145,39 @@ def _read_split(path: str, rg: int, columns: list[str]):
     )
 
 
+def _publish(table: pa.Table, path: str) -> None:
+    """Write `table` to a hidden tmp name, then rename it into place: a
+    reader never sees a partial file (Spark and pyarrow skip names with a
+    leading '.'), and a retried task overwrites its own output."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+
+
 def _encode_split(
-    path: str, rg: int, out_dir: str, block_size: int, n_splits: int
-) -> tuple:
+    path: str, rg: int, out_dir: str, block_size: int, n_splits: int, run_id: str
+) -> dict:
+    """Encode one input split into {out_dir}/encoded, then publish its
+    lineage record into {out_dir}/lineage_direct; returns that record.
+    Data goes first, so every split with a record has its data."""
     _pin_arrow_single_thread()
     name = _split_name(path, rg)
-    totals: Counter = Counter()
-    hist: Counter = Counter()
+    total = np.zeros(lineage.N_COUNTERS, np.int64)
     out_batches = []
     for batch in _read_split(path, rg, ["doc_id", "tokens", "source"]):
         try:
-            out, stats = encode.encode_record_batch(batch, block_size, n_splits)
+            out, counters = encode.encode_record_batch(batch, block_size, n_splits)
         except ValueError as e:
             raise ValueError(f"{name}: {e}") from e
-        hist.update(stats.pop("codec_hist"))
-        totals.update(stats)
+        total += sum(counters.values())  # the input split is the lineage key
         out_batches.append(out)
-    out_file = os.path.join(out_dir, f"enc-{name.replace(':', '-')}.parquet")
-    tmp = out_file + ".tmp"
-    pq.write_table(pa.Table.from_batches(out_batches, schema=PA_ENCODED), tmp)
-    os.replace(tmp, out_file)  # atomic publish → idempotent retries
-    hist_str = ",".join(f"{k}:{v}" for k, v in sorted(hist.items()))
-    return (
-        name, totals["n_rows"], totals["n_tokens"], totals["bytes_in"],
-        totals["bytes_out"], totals["checksum"] & ((1 << 63) - 1), hist_str,
-        out_file, "done",
-    )
+    stem = name.replace(":", "-")
+    _publish(pa.Table.from_batches(out_batches, schema=PA_ENCODED),
+             os.path.join(out_dir, "encoded", f"enc-{stem}.parquet"))
+    (record,) = lineage.lineage_rows({name: total}, run_id)
+    _publish(pa.Table.from_pylist([record], schema=PA_LINEAGE),
+             os.path.join(out_dir, "lineage_direct", f"{stem}.parquet"))
+    return record
 
 
 def encode_job_direct(
@@ -182,49 +188,38 @@ def encode_job_direct(
     n_splits: int = 256,
     resume: bool = True,
 ) -> DataFrame:
-    """Distributed direct encode; returns the summary (lineage) DataFrame.
-    Writes encoded parquet under {out_dir}/encoded and appends lineage
-    under {out_dir}/lineage_direct."""
+    """Distributed direct encode; returns the lineage (the done records a
+    resume skipped plus this run's).  Each task publishes a split's data
+    under {out_dir}/encoded, then its record under {out_dir}/lineage_direct:
+    a run that dies midway keeps every split it finished."""
     enc_dir = os.path.join(out_dir, "encoded")
     lin_dir = os.path.join(out_dir, "lineage_direct")
     os.makedirs(enc_dir, exist_ok=True)
+    os.makedirs(lin_dir, exist_ok=True)
+    run_id = uuid.uuid4().hex[:12]
 
     splits = list_input_splits_distributed(spark, in_path)
-    if resume:
-        # the direct lineage keys its splits by input_split ("file:rgN")
-        done = lineage.completed_splits(
-            spark,
-            lin_dir,
-            lambda: spark.read.parquet(lin_dir).withColumnRenamed("input_split", "split_id"),
-        )
-        if done is not None:
-            names = {r["split_id"] for r in done.collect()}
-            splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in names]
-    if not splits:
-        return spark.read.parquet(lin_dir)
+    done = lineage.done_rows(spark, lin_dir) if resume else []
+    names = {r["split"] for r in done}
+    splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in names]
+    rows = []
+    if splits:
+        tasks = _task_frame(spark, splits, "path string, rg int")
 
-    tasks = spark.createDataFrame(splits, "path string, rg int").repartition(
-        _task_partitions(spark, len(splits))
-    )
+        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for b in batches:
+                recs = [
+                    _encode_split(p, g, out_dir, block_size, n_splits, run_id)
+                    for p, g in zip(b.column("path").to_pylist(), b.column("rg").to_pylist())
+                ]
+                if recs:
+                    yield pa.RecordBatch.from_pylist(recs, schema=PA_LINEAGE)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = SUMMARY_SCHEMA.replace(" string", "").replace(" long", "").split(", ")
-        for pdf in batches:
-            rows = [
-                _encode_split(p, int(g), enc_dir, block_size, n_splits)
-                for p, g in zip(pdf["path"], pdf["rg"])
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    summary = tasks.mapInPandas(run, schema=SUMMARY_SCHEMA)
-    summary.write.mode("append").parquet(lin_dir)
-    # stores from the throughput path must be self-describing too, or
-    # lookup.decode_docs needs a hand-passed n_splits (mismatch risk)
-    from ..sinks import write_store_meta
-
-    write_store_meta(enc_dir, n_splits)
-    return spark.read.parquet(lin_dir)
+        rows = tasks.mapInArrow(run, LINEAGE_SCHEMA).collect()
+        # stores from the throughput path must be self-describing too, or
+        # lookup.decode_docs needs a hand-passed n_splits (mismatch risk)
+        write_store_meta(enc_dir, n_splits)
+    return lineage.lineage_frame(spark, [r.asDict() for r in done + rows])
 
 
 def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
@@ -232,9 +227,7 @@ def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
     decoded and the block-combinable hash compared (V1 analogue at full
     throughput). Returns totals."""
     splits = list_input_splits_distributed(spark, enc_dir)
-    tasks = spark.createDataFrame(splits, "path string, rg int").repartition(
-        _task_partitions(spark, len(splits))
-    )
+    tasks = _task_frame(spark, splits, "path string, rg int")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _pin_arrow_single_thread()

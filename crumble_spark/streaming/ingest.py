@@ -1,6 +1,8 @@
 """Continuous encode of arriving token shards.
 
-readStream(file source) → foreachBatch(batch encode + lineage append).
+readStream(file source) → foreachBatch(batch encode + lineage write).  A
+micro-batch's lineage rows come from the counters its encode summed while
+the sink wrote; nothing is read back.
 `availableNow` drains everything present and stops — the cron-friendly
 incremental mode; drop the trigger for a long-running ingester.
 """
@@ -25,7 +27,8 @@ def encode_stream(
     await_termination: bool = True,
 ):
     """Encode newly arrived parquet shards from in_dir into
-    {out_dir}/encoded, one lineage row set per micro-batch."""
+    {out_dir}/encoded, one lineage row set per micro-batch (run_id
+    stream-<batch id>, a split row per split the batch touched)."""
     # layout guard: pre-r2 runs appended bare part files into encoded/;
     # mixing them with the batch=<id> partition dirs would make every
     # later read fail with 'conflicting directory structures' — refuse
@@ -48,31 +51,21 @@ def encode_stream(
     )
 
     def handle(batch_df, batch_id: int) -> None:
-        # persist: the encoded batch feeds both the sink and the lineage
-        # aggregation — without it the kernel would run twice
-        enc = encode_df(batch_df, block_size=block_size, n_splits=n_splits).persist()
         # exactly-once despite foreachBatch's at-least-once replay: each
-        # micro-batch owns the batch=<id> partition and dynamic-overwrites
-        # it, so a batch replayed after a post-write/pre-commit crash
+        # micro-batch owns the batch=<id> partition of the store and the
+        # run_id=stream-<id> partition of the lineage, and dynamic-overwrites
+        # both, so a batch replayed after a post-write/pre-commit crash
         # replaces its own previous output instead of duplicating it
         spark = batch_df.sparkSession
+        acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
+        enc = encode_df(batch_df, block_size=block_size, n_splits=n_splits, lineage_acc=acc)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                enc.withColumn("batch", F.lit(batch_id))
-                .write.partitionBy("batch")
-                .mode("overwrite")
-                .parquet(f"{out_dir}/encoded")
-            )
-            lin = lineage.lineage_from_encoded(enc, run_id=f"stream-{batch_id}")
-            (
-                lin.withColumn("batch", F.lit(batch_id))
-                .write.partitionBy("batch")
-                .mode("overwrite")
-                .parquet(f"{out_dir}/lineage")
-            )
-        finally:
-            enc.unpersist()
+        enc = enc.withColumn("batch", F.lit(batch_id))
+        enc.write.partitionBy("batch").mode("overwrite").parquet(f"{out_dir}/encoded")
+        rows = lineage.lineage_rows(acc.value, run_id=f"stream-{batch_id}")
+        if rows:
+            lin = lineage.lineage_frame(spark, rows)
+            lin.write.partitionBy("run_id").mode("overwrite").parquet(f"{out_dir}/lineage")
 
     writer = stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", f"{out_dir}/_checkpoint"

@@ -9,6 +9,13 @@ from crumble_spark.encode import encode_df
 from crumble_spark.sources import parquet_direct as direct
 
 
+def _store(root):
+    """A direct store root with its encoded/ and lineage_direct/ dirs."""
+    for d in ("encoded", "lineage_direct"):
+        (root / d).mkdir(parents=True)
+    return str(root)
+
+
 @pytest.fixture(scope="module")
 def tok_dir(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("tok") / "tokens")
@@ -44,7 +51,7 @@ def test_direct_decode_verify(spark, tok_dir, tmp_path):
 
 
 def test_direct_survives_stale_tmp_from_crashed_attempt(spark, tok_dir, tmp_path):
-    # a task that died mid-write leaves enc-*.parquet.tmp; the retry must
+    # a task that died mid-write leaves .enc-*.parquet.tmp; the retry must
     # overwrite it and publish atomically — output identical to a clean run
     import os
 
@@ -53,7 +60,7 @@ def test_direct_survives_stale_tmp_from_crashed_attempt(spark, tok_dir, tmp_path
     os.makedirs(enc_dir)
     f, rg = direct.list_input_splits(tok_dir)[0]
     stale = os.path.join(
-        enc_dir, f"enc-{os.path.basename(f)}-rg{rg}.parquet.tmp"
+        enc_dir, f".enc-{os.path.basename(f)}-rg{rg}.parquet.tmp"
     )
     with open(stale, "wb") as fh:
         fh.write(b"garbage from a crashed attempt")
@@ -83,7 +90,7 @@ def test_direct_rejects_out_of_range_int64_tokens(tmp_path):
     f = str(tmp_path / "bad.parquet")
     pq.write_table(bad, f)
     with pytest.raises(ValueError, match="contract violation"):
-        direct._encode_split(f, 0, str(tmp_path), 256, 16)
+        direct._encode_split(f, 0, _store(tmp_path), 256, 16, "r1")
 
 
 def test_direct_accepts_in_range_int64_tokens(tmp_path):
@@ -101,8 +108,8 @@ def test_direct_accepts_in_range_int64_tokens(tmp_path):
     )
     f = str(tmp_path / "ok.parquet")
     pq.write_table(ok, f)
-    row = direct._encode_split(f, 0, str(tmp_path), 256, 16)
-    assert row[-1] == "done" and row[1] == 1
+    row = direct._encode_split(f, 0, _store(tmp_path), 256, 16, "r1")
+    assert row["status"] == "done" and row["n_rows"] == 1
 
 
 def test_many_files_listing_is_distributed_no_driver_footer_reads(
@@ -178,7 +185,7 @@ def test_listing_order_identical_for_nested_dirs(spark, tmp_path, monkeypatch):
     # subdirs'), which is NOT globally lexicographic — e.g. root/z.parquet
     # walks before root/a/x.parquet.  Both listing paths must return the
     # bit-identical (path, rg)-sorted list on nested layouts or
-    # _task_partitions groups splits differently across the crossover.
+    # _task_frame groups splits differently across the crossover.
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -232,26 +239,24 @@ def test_direct_split_bounds_kernel_slices(tmp_path, monkeypatch):
         ),
         f,
     )
-    for d in ("unbounded", "bounded"):
-        (tmp_path / d).mkdir()
-    want = direct._encode_split(f, 0, str(tmp_path / "unbounded"), 256, 16)
+    want = direct._encode_split(f, 0, _store(tmp_path / "unbounded"), 256, 16, "r1")
 
     bound = 2000
     assert sum(lens) > bound
     calls = record_kernel_slices(monkeypatch, bound)
-    got = direct._encode_split(f, 0, str(tmp_path / "bounded"), 256, 16)
+    got = direct._encode_split(f, 0, _store(tmp_path / "bounded"), 256, 16, "r1")
 
     assert len(calls) > 1 and sum(r for r, _ in calls) == len(lens)
     for rows, n_tok in calls:
         assert n_tok <= bound or rows == 1, calls
     assert (1, 5000) in calls  # the giant row sits alone in its slice
-    assert got[:7] == want[:7]  # summary: all but out_file and status
+    assert got == want  # the split's lineage record
 
-    def rows_of(summary):
+    def rows_of(d):
         cols = ["doc_id", "row_hash", "bytes_out", "blocks"]
-        return pq.read_table(summary[7], columns=cols).to_pylist()
+        return pq.read_table(str(tmp_path / d / "encoded"), columns=cols).to_pylist()
 
-    assert rows_of(got) == rows_of(want)
+    assert rows_of("bounded") == rows_of("unbounded")
 
 
 def _tamper(enc_dir, what):
@@ -318,3 +323,146 @@ def test_direct_resume_fails_on_unreadable_lineage(spark, tok_dir, tmp_path):
         direct.encode_job_direct(spark, tok_dir, str(out), block_size=256, n_splits=16)
     enc = out / "encoded"
     assert not enc.exists() or not [p for p in os.listdir(enc) if p.startswith("enc-")]
+
+
+def _doc_file(path, docs, token_type=None):
+    """One input parquet file of (doc_id, tokens) rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([d for d, _ in docs], pa.string()),
+                "tokens": pa.array([t for _, t in docs], token_type or pa.list_(pa.int32())),
+                "n_tok": pa.array([len(t) for _, t in docs], pa.int32()),
+                "source": pa.array(["web"] * len(docs), pa.string()),
+            }
+        ),
+        str(path),
+    )
+
+
+def test_direct_lineage_matches_store_oracle(spark, tok_dir, tmp_path):
+    # each input split's record equals the groupBy/explode oracle over
+    # the rows of its data file (the oracle's split_ids summed per file),
+    # including a split made only of an empty row
+    import shutil
+
+    from test_lineage_resume import _merge_rows, oracle
+
+    inp = tmp_path / "in"
+    shutil.copytree(tok_dir, inp)
+    _doc_file(inp / "zz-empty.parquet", [("empty-b", [])])
+    out = str(tmp_path / "out")
+    lin = direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16)
+    got = _merge_rows(lin.collect())
+    f = F.input_file_name()
+    enc = spark.read.parquet(f"{out}/encoded").withColumn("split", F.concat(
+        F.regexp_extract(f, r"enc-(.*)-rg\d+\.parquet$", 1), F.lit(":rg"),
+        F.regexp_extract(f, r"-rg(\d+)\.parquet$", 1),
+    ))
+    want = oracle(enc, key="split")
+    assert got == want
+    assert got["zz-empty.parquet:rg0"]["codec_hist"] == {}
+    assert len(got) == len(direct.list_input_splits(str(inp)))
+
+
+def test_hidden_tmp_leftovers_are_invisible(spark, tok_dir, tmp_path, monkeypatch):
+    # a task killed mid-write leaves its partial tmp file in encoded/ or
+    # lineage_direct/; readers and resume skip it
+    import os
+
+    from crumble_spark import lookup
+    from crumble_spark.decode import decode_df
+
+    out = str(tmp_path / "leftover")
+    direct.encode_job_direct(spark, tok_dir, out, block_size=256, n_splits=16)
+    f, rg = direct.list_input_splits(tok_dir)[0]
+    write = direct.pq.write_table
+
+    def killed_in(sub):
+        def partial_write(table, where, **kw):
+            if os.path.basename(os.path.dirname(where)) != sub:
+                return write(table, where, **kw)
+            with open(where, "wb") as fh:
+                fh.write(b"PAR1 partial write")
+            raise RuntimeError("task killed")
+
+        return partial_write
+
+    # lineage first: a later data publish of the split would replace its tmp
+    for sub in ("lineage_direct", "encoded"):
+        monkeypatch.setattr(direct.pq, "write_table", killed_in(sub))
+        with pytest.raises(RuntimeError, match="task killed"):
+            direct._encode_split(f, rg, out, 256, 16, "killed")
+    monkeypatch.setattr(direct.pq, "write_table", write)
+    tmps = [n for d in ("encoded", "lineage_direct") for n in os.listdir(f"{out}/{d}")
+            if n.endswith(".tmp")]
+    assert len(tmps) == 2, tmps
+
+    enc_dir = f"{out}/encoded"
+    src = spark.read.parquet(tok_dir)
+    n = src.count()
+    assert direct.decode_verify_direct(spark, enc_dir)["rows"] == n
+    assert decode_df(spark.read.parquet(enc_dir), verify=True).count() == n
+    doc = src.first()
+    (hit,) = lookup.decode_docs(spark, enc_dir, [doc["doc_id"]]).collect()
+    assert list(hit["tokens"]) == list(doc["tokens"])
+    lin = direct.encode_job_direct(spark, tok_dir, out, block_size=256, n_splits=16)
+    assert len({r["run_id"] for r in lin.collect()}) == 1  # resume encoded nothing
+
+
+def test_direct_crash_resumes_only_unfinished_splits(spark, tmp_path):
+    # local[N] has no task retry: a poisoned input file fails its task and
+    # the job.  Every split that published its data also published its
+    # lineage record, and the re-run on fixed input encodes only the splits
+    # without one; the per-run_id lineage shows it
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(3)
+    inp, out, clean = tmp_path / "in", str(tmp_path / "out"), str(tmp_path / "clean")
+    inp.mkdir()
+    for i in range(8):
+        _doc_file(inp / f"good-{i}.parquet",
+                  [(f"g{i}-{j}", rng.integers(0, 500, 300).tolist()) for j in range(20)])
+    # the poisoned file encodes 16 clean batches before its bad row, so the
+    # other tasks finish first
+    docs = [(f"p-{j}", rng.integers(0, 500, 64).tolist()) for j in range(16 * 1024)]
+    poisoned = docs[:-1] + [("p-bad", [1, 1 << 40])]
+    _doc_file(inp / "poison.parquet", poisoned, pa.list_(pa.int64()))
+
+    with pytest.raises(Exception, match="exceed int32 range"):
+        direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16)
+    enc_dir, lin_dir = f"{out}/encoded", f"{out}/lineage_direct"
+    published = {f[4:] for f in os.listdir(enc_dir) if f.startswith("enc-")}
+    recorded = {f for f in os.listdir(lin_dir) if not f.startswith(".")}
+    assert published and published == recorded
+    lin1 = pq.read_table(lin_dir).to_pylist()
+    (run1,) = {r["run_id"] for r in lin1}
+    split1 = {r["split"] for r in lin1}
+    mtimes = {f"enc-{f}": os.stat(f"{enc_dir}/enc-{f}").st_mtime_ns for f in published}
+
+    _doc_file(inp / "poison.parquet", docs, pa.list_(pa.int64()))
+    lin2 = direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16)
+    by_run: dict = {}
+    for r in lin2.collect():
+        by_run.setdefault(r["run_id"], set()).add(r["split"])
+    assert by_run.pop(run1) == split1
+    (split2,) = by_run.values()
+    all_splits = {direct._split_name(f, rg) for f, rg in direct.list_input_splits(str(inp))}
+    assert split1.isdisjoint(split2) and split1 | split2 == all_splits
+    assert "poison.parquet:rg0" in split2
+    for f, t in mtimes.items():  # run 2 rewrote none of run 1's files
+        assert os.stat(os.path.join(enc_dir, f)).st_mtime_ns == t
+
+    direct.encode_job_direct(spark, str(inp), clean, block_size=256, n_splits=16)
+    key = lambda d: {
+        r["doc_id"]: (r["row_hash"], r["bytes_out"])
+        for r in spark.read.parquet(f"{d}/encoded").collect()
+    }
+    assert key(out) == key(clean)

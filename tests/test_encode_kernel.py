@@ -43,11 +43,18 @@ def test_encode_record_batch_roundtrip():
     assert enc.column("split_id").to_pylist() == [0, 1, 2]  # passed through
     bo = enc.column("bytes_out").to_numpy()
     assert all(bo <= np.array([400, 0, 8000]) + 32)
-    assert stats["n_rows"] == 3 and stats["n_tokens"] == 2100
-    assert stats["bytes_out"] == bo.sum()
-    assert sum(stats["codec_hist"].values()) == sum(
-        len(b) for b in enc.column("blocks").to_pylist()
-    )
+    # lineage counters come keyed by split_id, one row each here:
+    # (n_rows, n_tokens, bytes_out, checksum, blocks per codec id...)
+    blocks = enc.column("blocks").to_pylist()
+    assert sorted(stats) == [0, 1, 2]
+    for i, (_, toks, _, sid) in enumerate(rows):
+        n_rows, n_tokens, bytes_out, checksum, *hist = stats[sid].tolist()
+        assert (n_rows, n_tokens, bytes_out) == (1, len(toks), bo[i])
+        assert checksum == enc.column("row_hash")[i].as_py() % (1 << 31)
+        assert sum(hist) == len(blocks[i])
+        for b in blocks[i]:
+            assert hist[b["codec_id"]] > 0
+    assert not any(stats[1][4:])
 
 
 def test_encode_record_batch_caps_slice_tokens(monkeypatch):
@@ -165,3 +172,26 @@ def test_batched_slow_path_matches_per_block_choose():
                     np.testing.assert_array_equal(
                         codecs.decode(cid, payload, len(chunk)), chunk
                     )
+
+
+def test_split_counters_match_per_row_sums():
+    # many rows per split, empty rows included: the vectorized group sums
+    # equal a per-row loop
+    from crumble_spark.lineage import N_COUNTERS
+
+    rng = np.random.default_rng(9)
+    rows = [
+        (f"d{i}", rng.integers(0, 40, int(rng.integers(0, 700))).astype(np.int32), "web",
+         int(rng.integers(0, 5)))
+        for i in range(60)
+    ]
+    enc, stats = encode_record_batch(_batch(rows), block_size=128)
+    want: dict = {}
+    for r in enc.to_pylist():
+        v = want.setdefault(r["split_id"], np.zeros(N_COUNTERS, np.int64))
+        v[:4] += [1, r["n_tok"], r["bytes_out"], r["row_hash"] % (1 << 31)]
+        for b in r["blocks"]:
+            v[4 + b["codec_id"]] += 1
+    assert sorted(stats) == sorted(want)
+    for sid, v in want.items():
+        np.testing.assert_array_equal(stats[sid], v)

@@ -23,7 +23,7 @@ def test_resume_after_partial_run(spark, tmp_path):
     # simulated failure: first run only managed splits 0..7
     partial = with_split_id(df, cfg.n_splits).filter(F.col("split_id") < 8)
     run_encode_job(spark, partial, out_resume, run_id="r1", cfg=cfg, resume=False)
-    done_before = lineage.completed_splits(spark, f"{out_resume}/lineage").count()
+    done_before = len(lineage.done_rows(spark, f"{out_resume}/lineage"))
     assert 0 < done_before < 16
 
     # resume: second run gets the whole input, must only do the remainder
@@ -37,10 +37,10 @@ def test_resume_after_partial_run(spark, tmp_path):
 
     # r2's lineage only covers the splits r1 didn't finish
     lin = spark.read.parquet(f"{out_resume}/lineage")
-    r2_splits = {r["split_id"] for r in lin.filter("run_id='r2'").select("split_id").collect()}
-    r1_splits = {r["split_id"] for r in lin.filter("run_id='r1'").select("split_id").collect()}
+    r2_splits = {r["split"] for r in lin.filter("run_id='r2'").select("split").collect()}
+    r1_splits = {r["split"] for r in lin.filter("run_id='r1'").select("split").collect()}
     assert r1_splits.isdisjoint(r2_splits)
-    assert r1_splits | r2_splits == set(range(16))
+    assert r1_splits | r2_splits == {str(i) for i in range(16)}
 
 
 def test_lineage_accounting_exact(spark, tmp_path):
@@ -77,9 +77,9 @@ def test_completed_splits_forgives_only_missing_lineage():
         return reader
 
     missing = failing("[TABLE_OR_VIEW_NOT_FOUND] The table `lake`.`lin` cannot be found")
-    assert lineage.completed_splits(None, "unused", reader=missing) is None
+    assert lineage.done_rows(None, "unused", reader=missing) == []
     with pytest.raises(RuntimeError, match="quota exceeded"):
-        lineage.completed_splits(None, "unused", reader=failing("quota exceeded"))
+        lineage.done_rows(None, "unused", reader=failing("quota exceeded"))
 
 
 def test_lineage_keeps_splits_without_blocks(spark, tmp_path):
@@ -97,12 +97,169 @@ def test_lineage_keeps_splits_without_blocks(spark, tmp_path):
     summary = run_encode_job(spark, df, out, run_id="r1", cfg=cfg, resume=False)
     assert (summary["rows"], summary["splits"]) == (2, 2)
     hist = {
-        r["split_id"]: r["codec_hist"]
+        r["split"]: r["codec_hist"]
         for r in spark.read.parquet(f"{out}/lineage").collect()
     }
-    assert hist[zlib.crc32(b"empty-b") % 64] == {}
-    assert sum(hist[zlib.crc32(b"full-a") % 64].values()) == 3
+    assert hist[str(zlib.crc32(b"empty-b") % 64)] == {}
+    assert sum(hist[str(zlib.crc32(b"full-a") % 64)].values()) == 3
 
     # resume finds both splits done and encodes nothing
     run_encode_job(spark, df, out, run_id="r2", cfg=cfg, resume=True)
     assert spark.read.parquet(f"{out}/lineage").filter("run_id = 'r2'").count() == 0
+
+
+def oracle(enc, key="split_id"):
+    """Reference lineage: the groupBy/explode aggregation over a written
+    store, {str(key): counters}.  A key whose rows have no blocks gets an
+    empty histogram."""
+    per_key = enc.groupBy(key).agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.col("n_tok").cast("long")).alias("n_tokens"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("bytes_out").alias("bytes_out"),
+        F.sum(F.col("row_hash") % F.lit(1 << 31)).alias("checksum"),
+    )
+    hist = (
+        enc.select(key, F.explode("blocks.codec_id").alias("codec_id"))
+        .groupBy(key, "codec_id")
+        .count()
+        .collect()
+    )
+    out = {str(r[key]): {**r.asDict(), "codec_hist": {}} for r in per_key.collect()}
+    for r in hist:
+        out[str(r[key])]["codec_hist"][r["codec_id"]] = r["count"]
+    for c in out.values():
+        del c[key]
+    return out
+
+
+def _merge_rows(rows):
+    """{split: counters} of lineage rows, summed over the rows of a split."""
+    fields = ("n_rows", "n_tokens", "bytes_in", "bytes_out", "checksum")
+    acc = {}
+    for r in rows:
+        a = acc.setdefault(r["split"], {**dict.fromkeys(fields, 0), "codec_hist": {}})
+        for k in fields:
+            a[k] += r[k]
+        for cid, n in dict(r["codec_hist"]).items():
+            a["codec_hist"][cid] = a["codec_hist"].get(cid, 0) + n
+    return acc
+
+
+def _mixed_table(spark, n_splits):
+    """_table plus one empty row alone in its split: (df, that split)."""
+    import zlib
+
+    split = lambda d: zlib.crc32(d.encode()) % n_splits
+    used = {split(r["doc_id"]) for r in _table(spark).select("doc_id").collect()}
+    doc = next(d for d in (f"empty-{i}" for i in range(10**4)) if split(d) not in used)
+    empty = spark.createDataFrame(
+        [(doc, [], 0, "web")],
+        schema="doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    return _table(spark).unionByName(empty), str(split(doc))
+
+
+def test_lineage_matches_store_oracle(spark, tmp_path):
+    # the counters summed during the write equal the old read-back
+    # aggregation over the store, split by split
+    out = str(tmp_path / "parity")
+    cfg = EncodeConfig(block_size=256, n_splits=64)
+    df, empty_split = _mixed_table(spark, cfg.n_splits)
+    run_encode_job(spark, df, out, run_id="p", cfg=cfg, resume=False)
+    got = _merge_rows(spark.read.parquet(f"{out}/lineage").collect())
+    assert got == oracle(spark.read.parquet(f"{out}/encoded"))
+    assert got[empty_split]["n_rows"] == 1 and got[empty_split]["codec_hist"] == {}
+
+
+def test_streaming_lineage_matches_store_oracle(spark, tmp_path):
+    from crumble_spark.streaming.ingest import encode_stream
+
+    in_dir, out = str(tmp_path / "arrivals"), str(tmp_path / "out")
+    df, empty_split = _mixed_table(spark, 64)
+    df.write.parquet(in_dir)
+    encode_stream(spark, in_dir, out, block_size=128, n_splits=64)
+    got = _merge_rows(spark.read.parquet(f"{out}/lineage").collect())
+    assert got == oracle(spark.read.parquet(f"{out}/encoded"))
+    assert got[empty_split]["codec_hist"] == {}
+
+
+def test_two_full_runs_count_each_split_once(spark, tmp_path):
+    out = str(tmp_path / "twice")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    s1 = run_encode_job(spark, df, out, run_id="a", cfg=cfg, resume=False)
+    s2 = run_encode_job(spark, df, out, run_id="b", cfg=cfg, resume=False)
+    stored = spark.read.parquet(f"{out}/encoded").count()
+    assert stored == 200
+    for s in (s1, s2):
+        assert (s["rows"], s["splits"]) == (200, 16)
+    # a resumed third run skips everything and still describes the store
+    s3 = run_encode_job(spark, df, out, run_id="c", cfg=cfg, resume=True)
+    assert (s3["rows"], s3["splits"], s3["tokens"]) == (200, 16, s1["tokens"])
+
+
+def test_failed_dataframe_job_leaves_no_lineage(spark, tmp_path):
+    # local[N] has no task retry: one out-of-int32 token fails its task and
+    # the job; Spark's committer publishes nothing, and no lineage is
+    # appended, so a re-run on fixed input encodes every split
+    import os
+
+    import pytest
+
+    rows = [(r["doc_id"], r["tokens"], r["n_tok"], r["source"]) for r in _table(spark).collect()]
+    schema = "doc_id string, tokens array<bigint>, n_tok int, source string"
+    bad = list(rows)
+    bad[17] = (bad[17][0], bad[17][1][:-1] + [1 << 40], *bad[17][2:])
+    out, clean = str(tmp_path / "failed"), str(tmp_path / "clean")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    with pytest.raises(Exception, match="exceed int32 range"):
+        run_encode_job(spark, spark.createDataFrame(bad, schema), out, cfg=cfg)
+    assert not os.path.exists(f"{out}/lineage")
+    enc_dir = f"{out}/encoded"
+    assert not os.path.exists(enc_dir) or not [
+        d for d in os.listdir(enc_dir) if d.startswith("split_id=")
+    ]
+
+    fixed = spark.createDataFrame(rows, schema)
+    s = run_encode_job(spark, fixed, out, run_id="fixed", cfg=cfg)
+    run_encode_job(spark, fixed, clean, cfg=cfg, resume=False)
+    assert (s["rows"], s["splits"]) == (200, 16)
+    key = lambda d: {
+        r["doc_id"]: (r["row_hash"], r["bytes_out"])
+        for r in spark.read.parquet(f"{d}/encoded").collect()
+    }
+    assert key(out) == key(clean)
+
+
+def test_every_writer_has_the_lineage_schema(spark, tmp_path):
+    # direct, DataFrame, streaming and Iceberg (injected catalog) lineage
+    # all carry exactly the LINEAGE_SCHEMA fields
+    from test_sinks import DirCatalog
+
+    from crumble_spark.schema import LINEAGE_SCHEMA
+    from crumble_spark.sources.parquet_direct import encode_job_direct
+    from crumble_spark.streaming.ingest import encode_stream
+
+    want = LINEAGE_SCHEMA.fieldNames()
+    tok = str(tmp_path / "tokens")
+    _table(spark).write.parquet(tok)
+    cfg = EncodeConfig(block_size=256, n_splits=8)
+
+    run_encode_job(spark, spark.read.parquet(tok), str(tmp_path / "df"), cfg=cfg)
+    encode_job_direct(spark, tok, str(tmp_path / "direct"), block_size=256, n_splits=8)
+    encode_stream(spark, tok, str(tmp_path / "stream"), block_size=256, n_splits=8)
+    cat = DirCatalog(spark, tmp_path / "cat")
+    run_encode_job(
+        spark, spark.read.parquet(tok), "lake.enc", cfg=cfg, sink="iceberg",
+        table_reader=cat.read, writer_factory=cat.writer,
+    )
+    tables = {
+        "df": spark.read.parquet(str(tmp_path / "df" / "lineage")),
+        "direct": spark.read.parquet(str(tmp_path / "direct" / "lineage_direct")),
+        "stream": spark.read.parquet(str(tmp_path / "stream" / "lineage")),
+        "iceberg": cat.read("lake.enc_lineage"),
+    }
+    for name, lin in tables.items():
+        assert sorted(lin.columns) == sorted(want), name
+        assert lin.filter("status = 'done'").agg(F.sum("n_rows")).first()[0] == 200, name
