@@ -7,7 +7,7 @@ fallback bounds the worst case.
 encode_record_batch is the one batch core under the DataFrame path
 (encode_df, via mapInArrow) and the pyarrow-direct path, so both bound
 kernel memory alike and emit the same bytes.  Encoding adds no shuffle:
-scan → (optional salted repartition, partitioning.py) → mapInArrow → sink.
+scan → (optional salted repartition) → mapInArrow → split-sorted sink.
 """
 
 from __future__ import annotations

@@ -19,8 +19,11 @@ Usage:
         --input <parquet-or-iceberg> --output <dir> [--resume]
 
 Sink: Iceberg (`--format iceberg`) when the runtime has the Iceberg Spark
-connector on the classpath; parquet with dynamic partition overwrite
-otherwise (this sandbox).  Both give idempotent per-split re-writes.
+connector on the classpath; parquet otherwise (this sandbox).  The parquet
+sink writes each run into its own `encoded/run_id=<run>/` directory, one
+split-sorted file per task (sinks.write_encoded_parquet), then the store
+sidecar, then the run's lineage rows: those rows are the run's commit
+record, and a resume deletes every run directory that has none.
 """
 
 from __future__ import annotations
@@ -67,11 +70,17 @@ def run_encode_job(
     table_reader=None,
     writer_factory=None,
 ) -> dict:
-    """Encode `df` into {out_dir}/encoded (partitioned by split_id) with
-    lineage rows in {out_dir}/lineage, appended once the write has
-    committed (per committed job; see the module docstring). Returns the
-    run summary over the splits this run wrote plus, when resuming, the
-    done splits it skipped.
+    """Encode `df` into {out_dir}/encoded/run_id=<run_id>/ with lineage
+    rows in {out_dir}/lineage, appended once the write has committed (per
+    committed job; see the module docstring). Returns the run summary over
+    the splits this run wrote plus, when resuming, the done splits it
+    skipped.
+
+    resume=True keeps the store: it first deletes every run directory
+    without lineage rows (a run that died between its data commit and its
+    lineage append), and raises if `run_id` already has lineage rows.
+    resume=False replaces the store: it deletes encoded/ and lineage/
+    first.  One writer per out_dir at a time.
 
     sink="iceberg" treats out_dir as a catalog table name and writes via
     sinks.write_encoded_iceberg (needs the Iceberg runtime; see README).
@@ -84,8 +93,19 @@ def run_encode_job(
     run_id = run_id or uuid.uuid4().hex[:12]
     iceberg = sink == "iceberg"
     lin_dir = f"{out_dir}_lineage" if iceberg else f"{out_dir}/lineage"
+    enc_dir = f"{out_dir}/encoded"
     reader = (lambda: (table_reader or spark.read.table)(lin_dir)) if iceberg else None
     done = lineage.done_rows(spark, lin_dir, reader) if resume else []
+    if not iceberg and resume:
+        committed = {r["run_id"] for r in done}
+        orphans = sinks.store_runs(enc_dir) - committed
+        if run_id in committed:
+            raise ValueError(f"run_id {run_id!r} is already committed in {lin_dir}")
+        for orphan in orphans:
+            sinks.delete_path(f"{enc_dir}/run_id={orphan}")
+    elif not iceberg:
+        sinks.delete_path(enc_dir)
+        sinks.delete_path(lin_dir)
     df = with_split_id(df, cfg.n_splits)
     if done:
         df = df.filter(~F.col("split_id").isin([int(r["split"]) for r in done]))
@@ -102,7 +122,9 @@ def run_encode_job(
             enc, out_dir, run_id, writer_factory=wf(out_dir), n_splits=cfg.n_splits
         )
     else:
-        sinks.write_encoded_parquet(enc, f"{out_dir}/encoded", n_splits=cfg.n_splits)
+        sinks.write_encoded_parquet(enc, enc_dir, run_id)
+        held = {int(r["split"]) for r in done} | set(acc.value)
+        sinks.write_store_meta(enc_dir, cfg.n_splits, splits=held)
     rows = lineage.lineage_rows(acc.value, run_id)
     if rows:
         lin = lineage.lineage_frame(spark, rows)
@@ -129,7 +151,13 @@ def main() -> None:
         help="parquet dirs (default) or Iceberg catalog tables for BOTH "
         "--input and --output (requires the Iceberg Spark runtime; see README)",
     )
-    ap.add_argument("--no-resume", action="store_true")
+    ap.add_argument(
+        "--no-resume",
+        action="store_true",
+        help="replace the store: the DataFrame job deletes the output's "
+        "encoded/ and lineage/ first; --direct re-encodes every split "
+        "(default: keep the store and skip the done splits)",
+    )
     ap.add_argument(
         "--direct",
         action="store_true",

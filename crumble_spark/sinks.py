@@ -1,9 +1,12 @@
 """Encoded-table sinks: parquet (this sandbox) and Iceberg (cluster).
 
-Both sinks give idempotent per-split re-writes — the property resume
-depends on: a retried/resumed split replaces exactly its own rows.
-
-* parquet: dynamic partition overwrite on split_id directories.
+* parquet: one store layout for every writer.  Each task writes one file,
+  its rows sorted by split_id, in row groups of at most ROW_GROUP_BYTES,
+  so a lookup's split_id IN-filter prunes whole row groups by their
+  min/max statistics.  The DataFrame job and each streaming micro-batch
+  write one run directory, `run_id=<run>/`, overwriting it whole: a
+  retried run or replayed batch replaces its own output and nothing else.
+  The direct path writes the same sorted files flat, one per input split.
 * iceberg: `overwritePartitions()` on a split_id-partitioned table, with
   run provenance stamped into the snapshot summary via the public
   `snapshot-property.*` write option — the analogue of crumble writing a
@@ -20,70 +23,91 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def write_encoded_parquet(enc: DataFrame, enc_dir: str, n_splits: int | None = None) -> None:
-    spark = enc.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    enc.write.partitionBy("split_id").mode("overwrite").parquet(enc_dir)
-    if n_splits is not None:
-        write_store_meta(enc_dir, n_splits)
+# parquet row-group target of every writer: small enough that a lookup
+# reads little past its routed splits, large enough that parquet-mr's
+# memory check stays quiet on a giant row
+ROW_GROUP_BYTES = 256 * 1024
 
 
-def _hadoop_fs(enc_dir: str):
-    """(fs, Path-class) for enc_dir via the active session's Hadoop conf,
-    or None when no JVM session is active (plain-python unit tests)."""
+def write_encoded_parquet(enc: DataFrame, enc_dir: str, run_id: str) -> None:
+    """Write `enc` into {enc_dir}/run_id=<run_id>/, replacing that
+    directory: one file per task, rows sorted by split_id.  parquet-mr
+    checks the row group's size after every row (its default waits 100
+    rows, then estimates), so a group closes on the first row that takes
+    it to ROW_GROUP_BYTES.  Sets no session conf."""
+    (
+        enc.sortWithinPartitions("split_id")
+        .write.option("parquet.block.size", ROW_GROUP_BYTES)
+        .option("parquet.page.size.row.check.min", 1)
+        .option("parquet.page.size.row.check.max", 1)
+        .mode("overwrite")
+        .parquet(f"{enc_dir}/run_id={run_id}")
+    )
+
+
+def store_runs(enc_dir: str) -> set[str]:
+    """Run ids of enc_dir's `run_id=` directories (none when it is absent).
+    Raises on any other entry but hidden (`_`/`.`) ones: a file or
+    directory of another layout beside the run directories makes every
+    read of the store fail on conflicting partition columns."""
+    fs, path_cls = _hadoop_fs(enc_dir)
+    if not fs.exists(path_cls(enc_dir)):
+        return set()
+    out = set()
+    for st in fs.listStatus(path_cls(enc_dir)):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("run_id="):
+            out.add(name[len("run_id="):])
+        elif not name.startswith(("_", ".")):
+            raise ValueError(
+                f"{enc_dir} holds {name!r}, which is not a run_id= directory "
+                "of this store layout; use a fresh out_dir, or resume=False "
+                "to replace the store"
+            )
+    return out
+
+
+def delete_path(path: str) -> None:
+    """Recursive delete through the store's Hadoop filesystem; a missing
+    path is a no-op."""
+    fs, path_cls = _hadoop_fs(path)
+    fs.delete(path_cls(path), True)
+
+
+def _hadoop_fs(path: str):
+    """(fs, Path-class) for `path` via the active session's Hadoop conf,
+    so the store's listings, deletes and sidecar work on hdfs:// and
+    s3a:// alike."""
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
-    if spark is None or not hasattr(spark, "_jvm"):
-        return None
-    jvm = spark._jvm
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    fs = path_cls(enc_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path_cls
+    spark = SparkSession.active()
+    path_cls = spark._jvm.org.apache.hadoop.fs.Path
+    return path_cls(path).getFileSystem(spark._jsc.hadoopConfiguration()), path_cls
 
 
 def _rename_overwrite(tmp, final) -> bool:
-    """Atomic overwrite-rename via Hadoop's FileContext API (HDFS, local);
-    returns False ONLY when the scheme has no FileContext at all (e.g.
-    s3a raises UnsupportedFileSystemException) so the caller can fall
-    back to its inherently non-atomic delete-then-rename.  A genuine
-    rename failure on a scheme that HAS FileContext (HDFS permission or
-    quota error) propagates: converting it to False would silently
-    degrade to the delete-then-rename window this API exists to close,
-    deleting the old sidecar before failing (ADVICE r4)."""
+    """Atomic overwrite-rename via Hadoop's FileContext API (HDFS, local).
+    False ONLY when the scheme has no FileContext (e.g. s3a), so the
+    caller falls back to a non-atomic delete-then-rename; any other rename
+    failure propagates rather than degrade to that window (ADVICE r4)."""
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return False
+    spark = SparkSession.active()
     try:
         jvm = spark._jvm
-        gw = spark.sparkContext._gateway
         conf = spark._jsc.hadoopConfiguration()
         uri = final.toUri()
         fc_cls = jvm.org.apache.hadoop.fs.FileContext
-        fc = (
-            fc_cls.getFileContext(uri, conf)
-            if uri.getScheme()
-            else fc_cls.getFileContext(conf)
-        )
-        opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
+        fc = fc_cls.getFileContext(uri, conf) if uri.getScheme() else fc_cls.getFileContext(conf)
+        opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
         opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
         fc.rename(tmp, final, opts)
         return True
     except Exception as e:
-        # classify on the Java exception class when Py4J exposes it —
-        # message-substring matching breaks under wrapper formatting
-        # changes (ADVICE r5); the substring check stays as fallback for
-        # plain-Python raises in tests
+        # classify on the Java exception class when Py4J exposes it
+        # (ADVICE r5); the substring covers plain-Python raises in tests
         je = getattr(e, "java_exception", None)
-        name = ""
-        if je is not None:
-            try:
-                name = je.getClass().getName()
-            except Exception:
-                name = ""
+        name = je.getClass().getName() if je is not None else ""
         if name.endswith("UnsupportedFileSystemException") or (
             je is None and "UnsupportedFileSystemException" in str(e)
         ):
@@ -91,91 +115,58 @@ def _rename_overwrite(tmp, final) -> bool:
         raise
 
 
-def write_store_meta(enc_dir: str, n_splits: int) -> None:
-    """Sidecar recording the split routing parameter.  Point lookups
+def write_store_meta(enc_dir: str, n_splits: int, splits=None) -> None:
+    """Sidecar recording the split routing parameter and, when given, the
+    sorted ids of the splits the store holds.  Point lookups
     (lookup.decode_docs) need the SAME n_splits the encoder used — a
-    mismatch silently routes to the wrong partition and returns partial
+    mismatch silently routes to the wrong split and returns partial
     results, so the store carries its own routing metadata (underscore
-    prefix: ignored by Spark's file listing, survives dynamic
-    partition overwrite).
-
-    Written through the Hadoop FileSystem API so the sidecar lands next
-    to the data on hdfs:// / s3a:// sinks, not on the driver's local
-    disk; falls back to local-path I/O only when no Spark session is
-    active (and then only for scheme-less paths)."""
+    prefix: ignored by Spark's file listing).  A lookup whose routed
+    splits are all outside `splits` runs no job; the writer publishes
+    the sidecar after its data and before its lineage, so `splits` is
+    always a superset of the committed splits.  Written through the
+    Hadoop FileSystem API, so it lands next to the data on any scheme."""
     import json
 
-    payload = json.dumps({"n_splits": n_splits, "split_fn": "crc32(doc_id) % n_splits"})
-    hfs = _hadoop_fs(enc_dir)
-    if hfs is not None:
-        fs, path_cls = hfs
-        fs.mkdirs(path_cls(enc_dir))
-        tmp = path_cls(f"{enc_dir}/_crumble_meta.json.tmp")
-        out = fs.create(tmp, True)
-        out.write(bytearray(payload.encode("utf-8")))
-        out.close()
-        final = path_cls(f"{enc_dir}/_crumble_meta.json")
-        # Prefer FileContext.rename(OVERWRITE): an atomic republish with
-        # no window where a concurrent reader sees no sidecar (ADVICE r3:
-        # delete-then-rename left one).  Schemes without a FileContext
-        # (e.g. s3a) fall back to delete+rename — there the window is
-        # inherent to the store's non-atomic rename anyway.
-        if not _rename_overwrite(tmp, final):
-            # Hadoop reports most rename failures via the return value,
-            # not an exception — and the fallback deletes the old sidecar
-            # first, so a false here MUST surface or the store silently
-            # loses its routing
-            fs.delete(final, False)
-            if not fs.rename(tmp, final):
-                raise OSError(
-                    f"rename({tmp}, {final}) returned false — the store sidecar "
-                    "was NOT published; lookups would need a hand-passed n_splits"
-                )
-        return
-    import os
-
-    if "://" in enc_dir:
-        raise ValueError(
-            f"no active SparkSession to resolve the filesystem for {enc_dir!r}; "
-            "remote sidecars require the Hadoop FileSystem API"
-        )
-    os.makedirs(enc_dir, exist_ok=True)
-    tmp = os.path.join(enc_dir, "_crumble_meta.json.tmp")
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, os.path.join(enc_dir, "_crumble_meta.json"))
+    meta = {"n_splits": n_splits, "split_fn": "crc32(doc_id) % n_splits"}
+    if splits is not None:
+        meta["splits"] = sorted(splits)
+    fs, path_cls = _hadoop_fs(enc_dir)
+    fs.mkdirs(path_cls(enc_dir))
+    tmp = path_cls(f"{enc_dir}/_crumble_meta.json.tmp")
+    out = fs.create(tmp, True)
+    out.write(bytearray(json.dumps(meta).encode("utf-8")))
+    out.close()
+    final = path_cls(f"{enc_dir}/_crumble_meta.json")
+    # an atomic republish: no window where a reader sees no sidecar
+    # (ADVICE r3); s3a has no atomic rename, so there the window stays
+    if not _rename_overwrite(tmp, final):
+        # Hadoop reports most rename failures via a false return, and the
+        # old sidecar is gone by now: surface it
+        fs.delete(final, False)
+        if not fs.rename(tmp, final):
+            raise OSError(
+                f"rename({tmp}, {final}) returned false — the store sidecar "
+                "was NOT published; lookups would need a hand-passed n_splits"
+            )
 
 
 def read_store_meta(enc_dir: str) -> dict | None:
     import json
 
-    hfs = _hadoop_fs(enc_dir)
-    if hfs is not None:
-        fs, path_cls = hfs
-        p = path_cls(f"{enc_dir}/_crumble_meta.json")
-        if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            # commons-io ships with Spark; reads the stream fully
-            from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession
 
-            jvm = SparkSession.getActiveSession()._jvm
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        return json.loads(text)
-    import os
-
-    if "://" in enc_dir:
-        raise ValueError(
-            f"no active SparkSession to resolve the filesystem for {enc_dir!r}"
-        )
-    p = os.path.join(enc_dir, "_crumble_meta.json")
-    if not os.path.exists(p):
+    fs, path_cls = _hadoop_fs(enc_dir)
+    p = path_cls(f"{enc_dir}/_crumble_meta.json")
+    if not fs.exists(p):
         return None
-    with open(p) as f:
-        return json.load(f)
+    stream = fs.open(p)
+    try:
+        # commons-io ships with Spark; reads the stream fully
+        io_utils = SparkSession.active()._jvm.org.apache.commons.io.IOUtils
+        return json.loads(io_utils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
 
 
 def write_encoded_iceberg(
@@ -199,30 +190,24 @@ def write_encoded_iceberg(
     flow is unit-testable without the Iceberg runtime on the classpath.
     """
     factory = writer_factory or (lambda df: df.writeTo(table))
-    w = (
-        factory(enc)
-        .option("snapshot-property.crumble.run_id", run_id)
-        .option("snapshot-property.crumble.engine", "crumble_spark")
-    )
-    if n_splits is not None:
-        w = w.option("snapshot-property.crumble.n_splits", str(n_splits))
+
+    def provenance(w):
+        w = w.option("snapshot-property.crumble.run_id", run_id).option(
+            "snapshot-property.crumble.engine", "crumble_spark"
+        )
+        if n_splits is not None:
+            w = w.option("snapshot-property.crumble.n_splits", str(n_splits))
+        return w
+
     try:
-        w.overwritePartitions()
+        provenance(factory(enc)).overwritePartitions()
     except Exception as e:
         if _is_missing_table(e):
             # first run: create the table partitioned by split_id so every
             # later overwritePartitions stays split-scoped
             try:
-                cw = (
-                    factory(enc)
-                    .using("iceberg")
-                    .partitionedBy(F.col("split_id"))
-                    .option("snapshot-property.crumble.run_id", run_id)
-                    .option("snapshot-property.crumble.engine", "crumble_spark")
-                )
-                if n_splits is not None:
-                    cw = cw.option("snapshot-property.crumble.n_splits", str(n_splits))
-                cw.create()
+                cw = factory(enc).using("iceberg").partitionedBy(F.col("split_id"))
+                provenance(cw).create()
             except Exception as e2:
                 if _is_missing_runtime(e2):
                     _raise_runtime_hint(e2)

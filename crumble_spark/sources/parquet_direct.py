@@ -21,7 +21,9 @@ Each task publishes its split's data file, then its lineage record, each
 by atomic rename of a hidden tmp file; resume skips the splits that have
 a record.  Output files are deterministically named per input split, so a
 retried or resumed task overwrites its own partial output — idempotent by
-construction (same discipline as the split_id path in job.py).
+construction.  Each data file has the layout of every writer (sinks.py):
+rows sorted by split_id, row groups cut at sinks.ROW_GROUP_BYTES, so a
+lookup prunes it by row-group statistics.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from pyspark.sql import functions as F
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
 from ..schema import LINEAGE_SCHEMA, PA_ENCODED, PA_LINEAGE
-from ..sinks import write_store_meta
+from ..sinks import ROW_GROUP_BYTES, write_store_meta
 
 
 def list_input_files(in_path: str) -> list[str]:
@@ -145,13 +147,27 @@ def _read_split(path: str, rg: int, columns: list[str]):
     )
 
 
-def _publish(table: pa.Table, path: str) -> None:
-    """Write `table` to a hidden tmp name, then rename it into place: a
-    reader never sees a partial file (Spark and pyarrow skip names with a
-    leading '.'), and a retried task overwrites its own output."""
+def _publish(path: str, schema: pa.Schema, groups: list[pa.Table]) -> None:
+    """Write `groups`, one row group each, to a hidden tmp name, then
+    rename it into place: a reader never sees a partial file (Spark and
+    pyarrow skip names with a leading '.'), and a retried task overwrites
+    its own output."""
     tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
-    pq.write_table(table, tmp)
+    with pq.ParquetWriter(tmp, schema) as w:
+        for g in groups:
+            w.write_table(g)
     os.replace(tmp, path)
+
+
+def _row_group_ends(sizes: np.ndarray) -> list[int]:
+    """[0, end offsets...] of consecutive row groups over rows of `sizes`
+    bytes: a group closes on the first row that takes it to
+    ROW_GROUP_BYTES, as parquet-mr's does in the DataFrame sink."""
+    cum, ends = np.cumsum(sizes), [0]
+    while ends[-1] < len(cum):
+        base = cum[ends[-1] - 1] if ends[-1] else 0
+        ends.append(min(len(cum), int(np.searchsorted(cum, base + ROW_GROUP_BYTES)) + 1))
+    return ends
 
 
 def _encode_split(
@@ -172,11 +188,13 @@ def _encode_split(
         total += sum(counters.values())  # the input split is the lineage key
         out_batches.append(out)
     stem = name.replace(":", "-")
-    _publish(pa.Table.from_batches(out_batches, schema=PA_ENCODED),
-             os.path.join(out_dir, "encoded", f"enc-{stem}.parquet"))
+    table = pa.Table.from_batches(out_batches, schema=PA_ENCODED).sort_by("split_id")
+    ends = _row_group_ends(table.column("bytes_out").to_numpy())
+    _publish(os.path.join(out_dir, "encoded", f"enc-{stem}.parquet"), PA_ENCODED,
+             [table.slice(a, b - a) for a, b in zip(ends, ends[1:])] or [table])
     (record,) = lineage.lineage_rows({name: total}, run_id)
-    _publish(pa.Table.from_pylist([record], schema=PA_LINEAGE),
-             os.path.join(out_dir, "lineage_direct", f"{stem}.parquet"))
+    _publish(os.path.join(out_dir, "lineage_direct", f"{stem}.parquet"), PA_LINEAGE,
+             [pa.Table.from_pylist([record], schema=PA_LINEAGE)])
     return record
 
 

@@ -379,12 +379,12 @@ def test_hidden_tmp_leftovers_are_invisible(spark, tok_dir, tmp_path, monkeypatc
     out = str(tmp_path / "leftover")
     direct.encode_job_direct(spark, tok_dir, out, block_size=256, n_splits=16)
     f, rg = direct.list_input_splits(tok_dir)[0]
-    write = direct.pq.write_table
+    writer = direct.pq.ParquetWriter
 
     def killed_in(sub):
-        def partial_write(table, where, **kw):
+        def partial_write(where, schema, **kw):
             if os.path.basename(os.path.dirname(where)) != sub:
-                return write(table, where, **kw)
+                return writer(where, schema, **kw)
             with open(where, "wb") as fh:
                 fh.write(b"PAR1 partial write")
             raise RuntimeError("task killed")
@@ -393,10 +393,10 @@ def test_hidden_tmp_leftovers_are_invisible(spark, tok_dir, tmp_path, monkeypatc
 
     # lineage first: a later data publish of the split would replace its tmp
     for sub in ("lineage_direct", "encoded"):
-        monkeypatch.setattr(direct.pq, "write_table", killed_in(sub))
+        monkeypatch.setattr(direct.pq, "ParquetWriter", killed_in(sub))
         with pytest.raises(RuntimeError, match="task killed"):
             direct._encode_split(f, rg, out, 256, 16, "killed")
-    monkeypatch.setattr(direct.pq, "write_table", write)
+    monkeypatch.setattr(direct.pq, "ParquetWriter", writer)
     tmps = [n for d in ("encoded", "lineage_direct") for n in os.listdir(f"{out}/{d}")
             if n.endswith(".tmp")]
     assert len(tmps) == 2, tmps

@@ -217,8 +217,8 @@ def test_failed_dataframe_job_leaves_no_lineage(spark, tmp_path):
         run_encode_job(spark, spark.createDataFrame(bad, schema), out, cfg=cfg)
     assert not os.path.exists(f"{out}/lineage")
     enc_dir = f"{out}/encoded"
-    assert not os.path.exists(enc_dir) or not [
-        d for d in os.listdir(enc_dir) if d.startswith("split_id=")
+    assert not [
+        f for _, _, fs in os.walk(enc_dir) for f in fs if f.endswith(".parquet")
     ]
 
     fixed = spark.createDataFrame(rows, schema)
@@ -263,3 +263,100 @@ def test_every_writer_has_the_lineage_schema(spark, tmp_path):
     for name, lin in tables.items():
         assert sorted(lin.columns) == sorted(want), name
         assert lin.filter("status = 'done'").agg(F.sum("n_rows")).first()[0] == 200, name
+
+
+def _files(root):
+    """{path: mtime_ns} of every file under root."""
+    import os
+
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(root) for f in fs
+    }
+
+
+def test_crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypatch):
+    # the run's data and sidecar are committed, then the driver dies before
+    # the lineage append: the run directory is an orphan.  The resume
+    # deletes it and re-encodes its splits, so every doc is stored once
+    import os
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    from crumble_spark import sinks
+
+    out, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    first = with_split_id(df, cfg.n_splits).filter(F.col("split_id") < 8)
+    run_encode_job(spark, first, out, run_id="r1", cfg=cfg, resume=False)
+
+    real = DataFrameWriter.parquet
+
+    def dies_at_lineage(self, path, *a, **kw):
+        if path == f"{out}/lineage":
+            raise RuntimeError("driver died before the lineage append")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dies_at_lineage)
+    with pytest.raises(RuntimeError, match="driver died"):
+        run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    assert os.path.isdir(f"{out}/encoded/run_id=r2")
+
+    s = run_encode_job(spark, df, out, run_id="r3", cfg=cfg)
+    assert (s["rows"], s["splits"]) == (200, 16)
+    runs = sorted(d for d in os.listdir(f"{out}/encoded") if not d.startswith(("_", ".")))
+    assert runs == ["run_id=r1", "run_id=r3"]
+    stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
+    assert len(stored) == len(set(stored)) == 200
+
+    run_encode_job(spark, df, clean, cfg=cfg, resume=False)
+    key = lambda d: {
+        r["doc_id"]: (r["row_hash"], r["bytes_out"])
+        for r in spark.read.parquet(f"{d}/encoded").collect()
+    }
+    assert key(out) == key(clean)
+    lin_splits = {int(r["split"]) for r in lineage.done_rows(spark, f"{out}/lineage")}
+    assert set(sinks.read_store_meta(f"{out}/encoded")["splits"]) >= lin_splits
+
+
+def test_resume_refuses_a_committed_run_id(spark, tmp_path):
+    # reusing a committed run_id would overwrite that run's directory; the
+    # resume raises before it deletes or writes anything
+    import os
+
+    import pytest
+
+    out = str(tmp_path / "reuse")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    first = with_split_id(df, cfg.n_splits).filter(F.col("split_id") < 8)
+    run_encode_job(spark, first, out, run_id="r1", cfg=cfg, resume=False)
+    os.makedirs(f"{out}/encoded/run_id=orphan")
+    before = _files(out)
+    with pytest.raises(ValueError, match="'r1' is already committed"):
+        run_encode_job(spark, df, out, run_id="r1", cfg=cfg)
+    assert _files(out) == before
+    assert os.path.isdir(f"{out}/encoded/run_id=orphan")
+
+
+def test_resume_refuses_a_split_id_partitioned_store(spark, tmp_path):
+    # a store of the earlier split_id= layout beside a new run_id= directory
+    # would fail every read on conflicting partition columns; the resume
+    # names the entry instead and writes nothing
+    import pytest
+
+    from crumble_spark.encode import encode_df
+
+    out = str(tmp_path / "old_layout")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    encode_df(with_split_id(df, cfg.n_splits), block_size=256, n_splits=16).write.partitionBy(
+        "split_id"
+    ).parquet(f"{out}/encoded")
+    before = _files(out)
+    with pytest.raises(ValueError, match="'split_id=.*not a run_id= directory"):
+        run_encode_job(spark, df, out, cfg=cfg)
+    assert _files(out) == before

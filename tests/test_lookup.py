@@ -1,20 +1,22 @@
 """Point lookups into the encoded store: correct rows back, only the
-routed split directories read, and the split filter kept in the plan."""
+routed splits' row groups read, and both IN-filters pushed to parquet."""
 
+import os
+
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
-from crumble_spark import lookup, synth
+from crumble_spark import lookup, sinks, synth
 from crumble_spark.encode import encode_df, with_split_id
+from crumble_spark.schema import PA_ENCODED
 
 
 def _encoded_dir(spark, tmp_path, n_splits=16):
+    """A store written by the sink alone: one run directory, no sidecar."""
     out = str(tmp_path / "enc")
     df = with_split_id(synth.synth_table(spark, 300, seed=21, mean_len=300, parts=4), n_splits)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    encode_df(df, block_size=256, n_splits=n_splits).write.partitionBy(
-        "split_id"
-    ).mode("overwrite").parquet(out)
+    sinks.write_encoded_parquet(encode_df(df, block_size=256, n_splits=n_splits), out, "t")
     return out, df
 
 
@@ -67,12 +69,15 @@ def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
 
 
 def test_lookup_prunes_partitions(spark, tmp_path):
+    # split_id is a data column: both IN-filters are parquet data filters,
+    # pushed down to the row-group statistics
     out, src = _encoded_dir(spark, tmp_path)
     ids = [src.select("doc_id").collect()[0]["doc_id"]]
     plan = lookup.decode_docs(spark, out, ids, n_splits=16)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "split_id" in plan.split("PartitionFilters")[1][:120]
-    # and the doc_id predicate reaches parquet
-    assert "PushedFilters" in plan and "doc_id" in plan.split("PushedFilters")[1][:200]
+    for section in ("DataFilters", "PushedFilters"):
+        assert section in plan, plan
+        filters = plan.split(section)[1].split("], ")[0]
+        assert "split_id" in filters and "doc_id" in filters, filters
 
 
 def _jobs_run(spark, group, fn):
@@ -90,16 +95,15 @@ def _jobs_run(spark, group, fn):
 
 @pytest.fixture(scope="module")
 def store64(spark, tmp_path_factory):
-    """A 64-split partitioned store holding only splits 0..47, so ids
-    routed to 48..63 have no directory; returns (dir, {doc_id: row})."""
-    out = str(tmp_path_factory.mktemp("store64") / "enc")
+    """A 64-split store written by run_encode_job from splits 0..47 only,
+    so its sidecar lists no split of 48..63; returns (dir, {doc_id: row})."""
+    from crumble_spark.job import EncodeConfig, run_encode_job
+
+    out = str(tmp_path_factory.mktemp("store64"))
     df = with_split_id(synth.synth_table(spark, 400, seed=21, mean_len=300, parts=4), 64)
     df = df.filter(F.col("split_id") < 48)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    encode_df(df, block_size=256, n_splits=64).write.partitionBy(
-        "split_id"
-    ).mode("overwrite").parquet(out)
-    return out, {r["doc_id"]: r for r in df.collect()}
+    run_encode_job(spark, df, out, cfg=EncodeConfig(block_size=256, n_splits=64), resume=False)
+    return f"{out}/encoded", {r["doc_id"]: r for r in df.collect()}
 
 
 def _unrouted_ids(k):
@@ -120,26 +124,101 @@ def _check_docs(got, want):
 def test_lookup_reads_only_routed_split_dirs(spark, store64):
     out, rows = store64
     ids = sorted(rows)[:3]
-    splits = {lookup.split_of(d, 64) for d in ids}
 
     def run():
-        df = lookup.decode_docs(spark, out, ids, n_splits=64)
+        df = lookup.decode_docs(spark, out, ids)
         return df, df.collect()
 
     (df, got), jobs = _jobs_run(spark, "lookup-routed", run)
     _check_docs(got, {d: rows[d] for d in ids})
     # one scan job: no listing job over the store, no footer-inference job
     assert jobs == 1
+    # the store is one run directory of split-sorted files, all scanned
     files = df.inputFiles()
-    assert files
-    for f in files:
-        assert any(f"/split_id={s}/" in f for s in splits), f
+    assert files and all("/run_id=" in f for f in files), files
+
+
+def _input_bytes(spark, group):
+    """Input bytes of the stages of the jobs run under `group`, from the
+    status store's stage data."""
+    sc = spark.sparkContext
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    return sum(
+        store.lastStageAttempt(s).inputBytes()
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+
+
+def test_lookup_reads_only_routed_row_groups(spark, tmp_path):
+    # a store whose row groups each hold one split: the scan emits only the
+    # routed row groups' rows, and the lookup reads no more than their
+    # bytes plus each file's footer.  The reader fetches a routed group at
+    # most twice (the doc_id dictionary filter, then the data), and the
+    # local filesystem serves a read shorter than its buffer by filling
+    # the whole buffer.
+    import glob
+
+    import pyarrow.parquet as pq
+
+    n_splits = 16
+    df = with_split_id(synth.synth_table(spark, 300, seed=21, mean_len=3000, parts=4), n_splits)
+    table = encode_df(df, block_size=256, n_splits=n_splits).toArrow()
+    table = table.cast(PA_ENCODED).sort_by("split_id")
+    out = str(tmp_path / "one_split_per_group")
+    sinks.write_store_meta(out, n_splits)
+    os.makedirs(f"{out}/run_id=t")
+    for part, splits in enumerate((range(0, 8), range(8, 16))):
+        with pq.ParquetWriter(f"{out}/run_id=t/part-{part}.parquet", PA_ENCODED) as w:
+            for s in splits:
+                w.write_table(table.filter(pc.equal(table["split_id"], s)))
+    rows = {r["doc_id"]: r for r in df.collect()}
+    ids = [d for d in sorted(rows) if rows[d]["split_id"] in (3, 12)][:4]
+    assert {rows[d]["split_id"] for d in ids} == {3, 12}
+
+    buf = int(spark.sparkContext._jsc.hadoopConfiguration().get("io.file.buffer.size"))
+    budget = routed_rows = store = 0
+    split_col = PA_ENCODED.get_field_index("split_id")
+    for f in glob.glob(f"{out}/run_id=t/*.parquet"):
+        md = pq.ParquetFile(f).metadata
+        store += os.path.getsize(f)
+        budget += md.serialized_size + 16  # footer, and its 8-byte tail read twice
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.column(split_col).statistics.min in (3, 12):
+                size = sum(rg.column(c).total_compressed_size for c in range(rg.num_columns))
+                budget += 2 * max(size, buf)
+                routed_rows += rg.num_rows
+    assert budget < store / 2  # the bound excludes most of the store
+
+    def run():
+        res = lookup.decode_docs(spark, out, ids)
+        return res, res.collect()
+
+    (res, got), jobs = _jobs_run(spark, "lookup-bytes", run)
+    _check_docs(got, {d: rows[d] for d in ids})
+    assert jobs == 1
+    (scan,) = [
+        n for n in _nodes(res._jdf.queryExecution().executedPlan())
+        if n.nodeName().startswith("Scan parquet")
+    ]
+    assert scan.metrics().apply("numOutputRows").value() == routed_rows
+    read = _input_bytes(spark, "lookup-bytes")
+    assert 0 < read <= budget, (read, budget)
+
+
+def _nodes(plan):
+    """`plan` and all its descendants (Py4J SparkPlan objects)."""
+    out, children = [plan], plan.children()
+    for i in range(children.size()):
+        out += _nodes(children.apply(i))
+    return out
 
 
 def test_lookup_mixed_absent_split_dirs(spark, store64):
     out, rows = store64
     present = sorted(rows)[-4:]
-    got = lookup.decode_docs(spark, out, present + _unrouted_ids(3), n_splits=64).collect()
+    got = lookup.decode_docs(spark, out, present + _unrouted_ids(3)).collect()
     _check_docs(got, {d: rows[d] for d in present})
 
 
@@ -149,7 +228,7 @@ def test_lookup_all_absent_split_dirs_scans_nothing(spark, store64):
     out, _ = store64
 
     def run():
-        df = lookup.decode_docs(spark, out, _unrouted_ids(3), n_splits=64)
+        df = lookup.decode_docs(spark, out, _unrouted_ids(3))
         return df, df.collect()
 
     (df, got), jobs = _jobs_run(spark, "lookup-absent", run)

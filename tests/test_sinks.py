@@ -203,3 +203,66 @@ def test_job_iceberg_resume_skips_completed_splits(spark, tmp_path):
     assert files2 == files1
     assert all(os.path.getmtime(f) == mtimes1[f] for f in files1)
     assert decode_df(cat.read("lake.enc"), verify=True).count() == 50
+
+
+def test_writers_leave_the_session_conf_alone(spark, tmp_path):
+    # the parquet sink sets no session conf: after one encode job and one
+    # stream batch, a caller's partitionBy overwrite still replaces what
+    # its static mode says
+    from crumble_spark import job, synth
+    from crumble_spark.streaming.ingest import encode_stream
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    caller = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        tok = str(tmp_path / "tokens")
+        synth.synth_table(spark, 20, seed=2, mean_len=100, parts=1).write.parquet(tok)
+        cfg = job.EncodeConfig(block_size=128, n_splits=4)
+        job.run_encode_job(spark, spark.read.parquet(tok), str(tmp_path / "df"), cfg=cfg)
+        assert spark.conf.get(key) == "STATIC"
+        encode_stream(spark, tok, str(tmp_path / "stream"), block_size=128, n_splits=4)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, caller)
+
+
+def test_every_writer_emits_split_sorted_files(spark, tmp_path):
+    # the DataFrame job, a stream batch and the direct path all write the
+    # one store layout: each file sorted by split_id, and each row group
+    # closed on the first row that takes it to ROW_GROUP_BYTES of encoded
+    # blocks, so every group but its last row stays within the bound
+    import glob
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from crumble_spark import job, synth
+    from crumble_spark.sources.parquet_direct import encode_job_direct
+    from crumble_spark.streaming.ingest import encode_stream
+
+    tok = str(tmp_path / "tokens")
+    synth.synth_table(spark, 1500, seed=5, mean_len=1000, parts=2).write.parquet(tok)
+    cfg = job.EncodeConfig(block_size=256, n_splits=64)
+    job.run_encode_job(spark, spark.read.parquet(tok), str(tmp_path / "df"), cfg=cfg)
+    encode_stream(spark, tok, str(tmp_path / "stream"), block_size=256, n_splits=64)
+    encode_job_direct(spark, tok, str(tmp_path / "direct"), block_size=256, n_splits=64)
+
+    # the DataFrame job: one run directory, at most one file per encode task
+    (run_dir,) = glob.glob(str(tmp_path / "df" / "encoded" / "run_id=*"))
+    tasks = spark.read.parquet(tok).rdd.getNumPartitions()
+    assert 0 < len(glob.glob(f"{run_dir}/*.parquet")) <= tasks
+    for writer in ("df", "stream", "direct"):
+        files = glob.glob(str(tmp_path / writer / "encoded" / "**" / "*.parquet"), recursive=True)
+        assert files, writer
+        n_groups = 0
+        for f in files:
+            pf = pq.ParquetFile(f)
+            split = pf.read(columns=["split_id"]).column(0).to_numpy()
+            assert (np.diff(split) >= 0).all(), (writer, os.path.basename(f))
+            for i in range(pf.metadata.num_row_groups):
+                size = pf.read_row_group(i, columns=["bytes_out"]).column(0).to_numpy()
+                assert size[:-1].sum() < sinks.ROW_GROUP_BYTES, (writer, f, i, size.sum())
+                n_groups += 1
+        assert n_groups > len(files), writer  # the bound cuts the files

@@ -212,7 +212,7 @@ def test_ingest_refuses_legacy_flat_layout(spark, tmp_path):
         f.write(b"pre-r2 flat-layout file")
     import pytest
 
-    with pytest.raises(ValueError, match="pre-batch-partition layout"):
+    with pytest.raises(ValueError, match="not a run_id= directory"):
         encode_stream(spark, in_dir, out_dir, block_size=128, n_splits=4)
 
 
