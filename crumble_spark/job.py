@@ -5,25 +5,21 @@ PRESETS levels.)  The encode itself is one scan → mapInArrow → sink, with
 no shuffle: giant rows stay single rows (encode.encode_record_batch bounds
 their kernel slices).
 
-Lineage: every writer emits rows of the one schema.LINEAGE_SCHEMA, built
-from the per-split counters encode.encode_record_batch returns, never
-from a read-back of the store.  This job and streaming.ingest sum them in
-a lineage.SplitCounters accumulator while the sink writes and append the
-rows after the write commits: lineage is per committed job, as Spark's
-committer publishes all of a job's splits or none.  The direct path
-(`--direct`) folds them per input split and publishes each record right
-after the split's data file: lineage and resume are per split there.
+One run writer: write_run writes every run of the parquet store, a run
+of this job or a streaming.ingest micro-batch (run id stream-<batch>):
+its data, then the store sidecar, then its lineage rows under
+lineage/run_id=<run>/, which are its commit record (Spark's committer
+publishes all of a run's rows or none; a failed write can leave the
+directory behind without rows).  The direct path (`--direct`) folds the same per-split counters
+per input split and publishes each record right after the split's data
+file: lineage and resume are per split there.
 
 Usage:
     spark-submit --py-files crumble_spark.zip -m crumble_spark.job \
-        --input <parquet-or-iceberg> --output <dir> [--resume]
+        --input <parquet-or-iceberg> --output <dir> [--no-resume]
 
 Sink: Iceberg (`--format iceberg`) when the runtime has the Iceberg Spark
-connector on the classpath; parquet otherwise (this sandbox).  The parquet
-sink writes each run into its own `encoded/run_id=<run>/` directory, one
-split-sorted file per task (sinks.write_encoded_parquet), then the store
-sidecar, then the run's lineage rows: those rows are the run's commit
-record, and a resume deletes every run directory that has none.
+connector on the classpath; parquet otherwise.
 """
 
 from __future__ import annotations
@@ -59,6 +55,47 @@ PRESETS = {
 }
 
 
+# run id prefix of a streaming.ingest micro-batch
+STREAM_RUN_PREFIX = "stream-"
+
+
+def write_run(
+    spark: SparkSession, df: DataFrame, out_dir: str, run_id: str, cfg: EncodeConfig
+) -> list[dict]:
+    """Write one run of the parquet store at out_dir and return its
+    lineage rows: `df` encoded into {out_dir}/encoded/run_id=<run_id>/,
+    then the store sidecar, then the rows into
+    {out_dir}/lineage/run_id=<run_id>/ (run_id as the directory's
+    partition value).  Both run directories are overwritten whole, so a
+    retried run or replayed batch replaces its own output.
+
+    The sidecar is read first: a store of another n_splits raises before
+    anything is written (this run's docs would route to other splits and
+    be stored twice).  It is read again right before it is rewritten with
+    its splits ∪ this run's, so a run that overlapped this one keeps its
+    splits listed."""
+    from . import sinks
+
+    enc_dir = f"{out_dir}/encoded"
+    meta = sinks.read_store_meta(enc_dir)
+    if meta is not None and int(meta["n_splits"]) != cfg.n_splits:
+        raise ValueError(
+            f"{enc_dir} was written with n_splits={meta['n_splits']}, this run has "
+            f"n_splits={cfg.n_splits}; use the store's value, or resume=False to "
+            "replace the store"
+        )
+    acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
+    enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
+    sinks.write_encoded_parquet(enc, enc_dir, run_id)
+    held = (sinks.read_store_meta(enc_dir) or {}).get("splits", [])
+    sinks.write_store_meta(enc_dir, cfg.n_splits, splits=set(held) | set(acc.value))
+    rows = lineage.lineage_rows(acc.value, run_id)
+    if rows:
+        lin = lineage.lineage_frame(spark, rows).drop("run_id")
+        lin.write.mode("overwrite").parquet(f"{out_dir}/lineage/run_id={run_id}")
+    return rows
+
+
 def run_encode_job(
     spark: SparkSession,
     df: DataFrame,
@@ -70,68 +107,76 @@ def run_encode_job(
     table_reader=None,
     writer_factory=None,
 ) -> dict:
-    """Encode `df` into {out_dir}/encoded/run_id=<run_id>/ with lineage
-    rows in {out_dir}/lineage, appended once the write has committed (per
-    committed job; see the module docstring). Returns the run summary over
-    the splits this run wrote plus, when resuming, the done splits it
-    skipped.
+    """Encode `df` as one run (write_run) of the store at out_dir.
+    Returns the run summary over the splits this run wrote plus, when
+    resuming, the done splits it skipped.
 
-    resume=True keeps the store: it first deletes every run directory
-    without lineage rows (a run that died between its data commit and its
-    lineage append), and raises if `run_id` already has lineage rows.
-    resume=False replaces the store: it deletes encoded/ and lineage/
-    first.  One writer per out_dir at a time.
+    resume=True keeps the store: it raises if encoded/ or lineage/ hold
+    anything but run directories or if `run_id` is already committed
+    (has lineage rows), then deletes both run directories of every run
+    without lineage rows (a run that died after its data commit, before
+    or inside its lineage write).  resume=False replaces the store: it
+    deletes encoded/ and lineage/ first.  Run ids starting with
+    STREAM_RUN_PREFIX belong to encode_stream and are refused.  One
+    writer per out_dir at a time.
 
     sink="iceberg" treats out_dir as a catalog table name and writes via
-    sinks.write_encoded_iceberg (needs the Iceberg runtime; see README).
-    `table_reader(name) -> DataFrame` / `writer_factory(df, name)` inject
-    the catalog IO so the whole table-in/table-out job is testable without
-    the runtime (tests/test_sinks.py round-trips it)."""
+    sinks.write_encoded_iceberg, with lineage rows appended to
+    {out_dir}_lineage after the write (needs the Iceberg runtime; see
+    README).  `table_reader(name) -> DataFrame` / `writer_factory(df,
+    name)` inject the catalog IO so the whole table-in/table-out job is
+    testable without the runtime (tests/test_sinks.py round-trips it)."""
     from . import sinks
 
     cfg = cfg or EncodeConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
+    if run_id.startswith(STREAM_RUN_PREFIX):
+        raise ValueError(
+            f"run_id {run_id!r}: the prefix {STREAM_RUN_PREFIX!r} is reserved for "
+            "encode_stream's micro-batches"
+        )
     iceberg = sink == "iceberg"
     lin_dir = f"{out_dir}_lineage" if iceberg else f"{out_dir}/lineage"
     enc_dir = f"{out_dir}/encoded"
-    reader = (lambda: (table_reader or spark.read.table)(lin_dir)) if iceberg else None
-    done = lineage.done_rows(spark, lin_dir, reader) if resume else []
-    if not iceberg and resume:
-        committed = {r["run_id"] for r in done}
-        orphans = sinks.store_runs(enc_dir) - committed
+    done = []
+    if iceberg and resume:
+        reader = lambda: (table_reader or spark.read.table)(lin_dir)  # noqa: E731
+        done = lineage.done_rows(spark, lin_dir, reader)
+    elif resume:
+        runs = sinks.store_runs(enc_dir) | sinks.store_runs(lin_dir)
+        rows = lineage.done_rows(spark, lin_dir)
+        committed = {r["run_id"] for r in rows}
         if run_id in committed:
             raise ValueError(f"run_id {run_id!r} is already committed in {lin_dir}")
-        for orphan in orphans:
+        for orphan in runs - committed:
             sinks.delete_path(f"{enc_dir}/run_id={orphan}")
+            sinks.delete_path(f"{lin_dir}/run_id={orphan}")
+        # a stream batch's splits hold other input: only a job run marks
+        # a split of this input done
+        done = [r for r in rows if not r["run_id"].startswith(STREAM_RUN_PREFIX)]
     elif not iceberg:
         sinks.delete_path(enc_dir)
         sinks.delete_path(lin_dir)
     df = with_split_id(df, cfg.n_splits)
     if done:
         df = df.filter(~F.col("split_id").isin([int(r["split"]) for r in done]))
-
-    acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
-    enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
+    if not iceberg:
+        rows = write_run(spark, df, out_dir, run_id, cfg)
+        return {**lineage.summarize(done + rows), "run_id": run_id}
 
     def wf(table):
         # sinks take factory(df); bind the table name per call site
         return (lambda d: writer_factory(d, table)) if writer_factory else None
 
-    if iceberg:
-        sinks.write_encoded_iceberg(
-            enc, out_dir, run_id, writer_factory=wf(out_dir), n_splits=cfg.n_splits
-        )
-    else:
-        sinks.write_encoded_parquet(enc, enc_dir, run_id)
-        held = {int(r["split"]) for r in done} | set(acc.value)
-        sinks.write_store_meta(enc_dir, cfg.n_splits, splits=held)
+    acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
+    enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
+    sinks.write_encoded_iceberg(
+        enc, out_dir, run_id, writer_factory=wf(out_dir), n_splits=cfg.n_splits
+    )
     rows = lineage.lineage_rows(acc.value, run_id)
     if rows:
         lin = lineage.lineage_frame(spark, rows)
-        if iceberg:
-            sinks.append_lineage_iceberg(lin, lin_dir, writer_factory=wf(lin_dir))
-        else:
-            lin.write.mode("append").parquet(lin_dir)
+        sinks.append_lineage_iceberg(lin, lin_dir, writer_factory=wf(lin_dir))
     return {**lineage.summarize(done + rows), "run_id": run_id}
 
 
@@ -154,9 +199,8 @@ def main() -> None:
     ap.add_argument(
         "--no-resume",
         action="store_true",
-        help="replace the store: the DataFrame job deletes the output's "
-        "encoded/ and lineage/ first; --direct re-encodes every split "
-        "(default: keep the store and skip the done splits)",
+        help="replace the store: delete the output's encoded data and its "
+        "lineage before writing (default: keep the store and skip the done splits)",
     )
     ap.add_argument(
         "--direct",

@@ -5,9 +5,12 @@ provenance header (snp_score.c:2650-2666, 1496-1498, 2588-2609) become a
 first-class lineage table: one LINEAGE_SCHEMA row per split with the
 codec histogram, bytes in/out, row checksum and completion status, built
 from the per-split counters split_counters takes from each encoded batch
-(see job.py for where each writer sums them).  Resume skips the splits
-with a done row — encoding is deterministic, so a re-run of any split is
-byte-identical.
+(see job.py for where each writer sums them).  A run of job.write_run
+(the DataFrame job or a stream batch) writes its rows into
+`lineage/run_id=<run>/`, whose partition value is the rows' run_id; the
+direct path publishes one file per input split into `lineage_direct/`.
+Resume skips the splits with a done row — encoding is deterministic, so
+a re-run of any split is byte-identical.
 """
 
 from __future__ import annotations

@@ -48,7 +48,7 @@ def decode_docs(
     the routed splits (both filters asserted by test_lookup.py).
 
     n_splits defaults to the store's own `_crumble_meta.json` sidecar
-    (written by the encode job) — a hand-passed mismatch would silently
+    (written by every writer) — a hand-passed mismatch would silently
     route lookups to the wrong split and return partial results.
     """
     from .sinks import read_store_meta

@@ -3,9 +3,10 @@
 * parquet: one store layout for every writer.  Each task writes one file,
   its rows sorted by split_id, in row groups of at most ROW_GROUP_BYTES,
   so a lookup's split_id IN-filter prunes whole row groups by their
-  min/max statistics.  The DataFrame job and each streaming micro-batch
-  write one run directory, `run_id=<run>/`, overwriting it whole: a
-  retried run or replayed batch replaces its own output and nothing else.
+  min/max statistics.  Each run of job.write_run (the DataFrame job, or
+  a streaming micro-batch) writes one run directory, `run_id=<run>/`,
+  overwriting it whole: a retried run or replayed batch replaces its own
+  output and nothing else.
   The direct path writes the same sorted files flat, one per input split.
 * iceberg: `overwritePartitions()` on a split_id-partitioned table, with
   run provenance stamped into the snapshot summary via the public

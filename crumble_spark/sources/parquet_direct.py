@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
 from ..schema import LINEAGE_SCHEMA, PA_ENCODED, PA_LINEAGE
-from ..sinks import ROW_GROUP_BYTES, write_store_meta
+from ..sinks import ROW_GROUP_BYTES, delete_path, write_store_meta
 
 
 def list_input_files(in_path: str) -> list[str]:
@@ -209,9 +209,13 @@ def encode_job_direct(
     """Distributed direct encode; returns the lineage (the done records a
     resume skipped plus this run's).  Each task publishes a split's data
     under {out_dir}/encoded, then its record under {out_dir}/lineage_direct:
-    a run that dies midway keeps every split it finished."""
+    a run that dies midway keeps every split it finished.  resume=False
+    replaces the store: it deletes both directories first."""
     enc_dir = os.path.join(out_dir, "encoded")
     lin_dir = os.path.join(out_dir, "lineage_direct")
+    if not resume:
+        delete_path(enc_dir)
+        delete_path(lin_dir)
     os.makedirs(enc_dir, exist_ok=True)
     os.makedirs(lin_dir, exist_ok=True)
     run_id = uuid.uuid4().hex[:12]

@@ -1,10 +1,9 @@
 """Continuous encode of arriving token shards.
 
-readStream(file source) → foreachBatch(batch encode + lineage write).
-Micro-batch <id> writes the run directory `encoded/run_id=stream-<id>/`
-with the batch job's sink (sinks.write_encoded_parquet) and its lineage
-rows into `lineage/run_id=stream-<id>/`, overwriting both whole.  The
-rows come from the counters its encode summed while the sink wrote.
+readStream(file source) → foreachBatch(one run of the batch job).
+Micro-batch <id> is one job.write_run call with run id `stream-<id>`: it
+writes `encoded/run_id=stream-<id>/`, the store sidecar and
+`lineage/run_id=stream-<id>/`, overwriting both run directories whole.
 `availableNow` drains everything present and stops — the cron-friendly
 incremental mode; drop the trigger for a long-running ingester.
 """
@@ -13,8 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from .. import DEFAULT_BLOCK_SIZE, lineage, sinks
-from ..encode import encode_df
+from .. import DEFAULT_BLOCK_SIZE, sinks
+from ..job import STREAM_RUN_PREFIX, EncodeConfig, write_run
 from ..schema import TOKENS_SCHEMA
 
 
@@ -27,11 +26,14 @@ def encode_stream(
     available_now: bool = True,
     await_termination: bool = True,
 ):
-    """Encode newly arrived parquet shards from in_dir into
-    {out_dir}/encoded, one lineage row set per micro-batch (run_id
-    stream-<batch id>, a split row per split the batch touched).  Refuses
-    an encoded/ that holds anything but run directories."""
+    """Encode newly arrived parquet shards from in_dir into the store at
+    out_dir, one run per micro-batch (run_id stream-<batch id>, a lineage
+    row per split the batch touched).  Refuses a store whose encoded/ or
+    lineage/ holds anything but run directories; a batch raises if the
+    store's n_splits differs."""
     sinks.store_runs(f"{out_dir}/encoded")
+    sinks.store_runs(f"{out_dir}/lineage")
+    cfg = EncodeConfig(block_size=block_size, n_splits=n_splits)
 
     stream = (
         spark.readStream.schema(TOKENS_SCHEMA)
@@ -40,20 +42,11 @@ def encode_stream(
     )
 
     def handle(batch_df, batch_id: int) -> None:
-        # exactly-once despite foreachBatch's at-least-once replay: each
-        # micro-batch owns one run directory of the store and one of the
-        # lineage and overwrites both, so a batch replayed after a
-        # post-write/pre-commit crash replaces its own previous output
-        # instead of duplicating it
-        spark = batch_df.sparkSession
-        run_id = f"stream-{batch_id}"
-        acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
-        enc = encode_df(batch_df, block_size=block_size, n_splits=n_splits, lineage_acc=acc)
-        sinks.write_encoded_parquet(enc, f"{out_dir}/encoded", run_id)
-        rows = lineage.lineage_rows(acc.value, run_id)
-        if rows:
-            lin = lineage.lineage_frame(spark, rows).drop("run_id")
-            lin.write.mode("overwrite").parquet(f"{out_dir}/lineage/run_id={run_id}")
+        # exactly-once despite foreachBatch's at-least-once replay: a
+        # batch replayed after a post-write/pre-commit crash overwrites
+        # its own run directories instead of duplicating them
+        run_id = f"{STREAM_RUN_PREFIX}{batch_id}"
+        write_run(batch_df.sparkSession, batch_df, out_dir, run_id, cfg)
 
     writer = stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", f"{out_dir}/_checkpoint"

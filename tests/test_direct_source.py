@@ -466,3 +466,23 @@ def test_direct_crash_resumes_only_unfinished_splits(spark, tmp_path):
         for r in spark.read.parquet(f"{d}/encoded").collect()
     }
     assert key(out) == key(clean)
+
+
+def test_direct_no_resume_replaces_the_store(spark, tmp_path):
+    # resume=False after an input file is removed stores exactly the
+    # remaining input: no rows or lineage records of the old run survive
+    import os
+
+    tok, out = str(tmp_path / "tokens"), str(tmp_path / "out")
+    synth.synth_table(spark, 80, seed=12, mean_len=100, parts=4).write.parquet(tok)
+    direct.encode_job_direct(spark, tok, out, block_size=256, n_splits=16)
+    assert spark.read.parquet(f"{out}/encoded").count() == 80
+    os.remove(direct.list_input_files(tok)[0])
+    left = spark.read.parquet(tok).count()
+    assert left < 80
+    direct.encode_job_direct(spark, tok, out, block_size=256, n_splits=16, resume=False)
+    stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
+    assert len(stored) == len(set(stored)) == left
+    lin = spark.read.parquet(f"{out}/lineage_direct")
+    assert lin.count() == len(direct.list_input_splits(tok))
+    assert lin.agg(F.sum("n_rows")).first()[0] == left

@@ -1,6 +1,7 @@
 """Checkpoint/resume: kill-and-rerun yields identical output (FIXTURES.md
 assertion 4); lineage accounting is exact."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from crumble_spark import lineage, synth
@@ -295,7 +296,7 @@ def test_crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypat
     real = DataFrameWriter.parquet
 
     def dies_at_lineage(self, path, *a, **kw):
-        if path == f"{out}/lineage":
+        if path == f"{out}/lineage/run_id=r2":
             raise RuntimeError("driver died before the lineage append")
         return real(self, path, *a, **kw)
 
@@ -320,6 +321,79 @@ def test_crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypat
     assert key(out) == key(clean)
     lin_splits = {int(r["split"]) for r in lineage.done_rows(spark, f"{out}/lineage")}
     assert set(sinks.read_store_meta(f"{out}/encoded")["splits"]) >= lin_splits
+
+
+@pytest.mark.parametrize("left", ["", "_temporary/0"])
+def test_crash_inside_the_lineage_write(spark, tmp_path, monkeypatch, left):
+    # the lineage write dies after the committer made the run's lineage
+    # directory: aborted ("", _temporary deleted) or with the driver
+    # ("_temporary/0" left).  A directory without rows is no commit: the
+    # resume deletes the run and re-encodes its splits, every doc once
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    out = str(tmp_path / "torn")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    first = with_split_id(df, cfg.n_splits).filter(F.col("split_id") < 8)
+    run_encode_job(spark, first, out, run_id="r1", cfg=cfg, resume=False)
+
+    real = DataFrameWriter.parquet
+
+    def dies_in_lineage(self, path, *a, **kw):
+        if path == f"{out}/lineage/run_id=r2":
+            os.makedirs(os.path.join(path, left))
+            raise RuntimeError("lineage write failed")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dies_in_lineage)
+    with pytest.raises(RuntimeError, match="lineage write failed"):
+        run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    assert os.path.isdir(f"{out}/lineage/run_id=r2")
+
+    s = run_encode_job(spark, df, out, run_id="r3", cfg=cfg)
+    assert (s["rows"], s["splits"]) == (200, 16)
+    for d in ("encoded", "lineage"):
+        runs = sorted(r for r in os.listdir(f"{out}/{d}") if not r.startswith(("_", ".")))
+        assert runs == ["run_id=r1", "run_id=r3"]
+    stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
+    assert len(stored) == len(set(stored)) == 200
+
+
+def test_sidecar_keeps_the_splits_of_an_overlapping_run(spark, tmp_path, monkeypatch):
+    # another writer publishes split 15 while this run encodes splits
+    # 0-7: the sidecar this run writes still lists 15, so lookups of
+    # the other run's docs are not skipped
+    from crumble_spark import sinks
+
+    out = str(tmp_path / "overlap")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = with_split_id(_table(spark), cfg.n_splits).filter(F.col("split_id") < 8)
+    real = sinks.write_encoded_parquet
+
+    def overlapped(enc, enc_dir, run_id):
+        real(enc, enc_dir, run_id)
+        sinks.write_store_meta(enc_dir, cfg.n_splits, splits={15})
+
+    monkeypatch.setattr(sinks, "write_encoded_parquet", overlapped)
+    run_encode_job(spark, df.drop("split_id"), out, run_id="r1", cfg=cfg)
+    assert sinks.read_store_meta(f"{out}/encoded")["splits"] == list(range(8)) + [15]
+
+
+def test_job_refuses_a_stream_run_id(spark, tmp_path):
+    # a job run named like a stream batch would never count as done and
+    # would be overwritten by that batch; it is refused before any change
+    out = str(tmp_path / "reserved")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    run_encode_job(spark, df, out, run_id="r1", cfg=cfg)
+    before = _files(out)
+    for resume in (True, False):
+        with pytest.raises(ValueError, match="'stream-3'.*reserved"):
+            run_encode_job(spark, df, out, run_id="stream-3", cfg=cfg, resume=resume)
+    assert _files(out) == before
 
 
 def test_resume_refuses_a_committed_run_id(spark, tmp_path):
@@ -360,3 +434,97 @@ def test_resume_refuses_a_split_id_partitioned_store(spark, tmp_path):
     with pytest.raises(ValueError, match="'split_id=.*not a run_id= directory"):
         run_encode_job(spark, df, out, cfg=cfg)
     assert _files(out) == before
+
+
+def test_resume_refuses_another_n_splits(spark, tmp_path):
+    # docs routed by another n_splits land in other splits than their
+    # stored copies, so a resume would store them twice; the run raises
+    # before it writes anything, naming both values
+    import pytest
+
+    out = str(tmp_path / "resplit")
+    df = synth.synth_table(spark, n_rows=60, seed=7, mean_len=100, parts=2)
+    run_encode_job(spark, df, out, run_id="r1", cfg=EncodeConfig(block_size=256, n_splits=64))
+    before = _files(out)
+    with pytest.raises(ValueError, match="n_splits=64.*n_splits=16"):
+        run_encode_job(spark, df, out, run_id="r2", cfg=EncodeConfig(block_size=256, n_splits=16))
+    assert _files(out) == before
+
+
+def test_job_and_stream_runs_share_one_store(spark, tmp_path):
+    # a job run, a stream batch, then a resumed job run on the same input
+    # into one store: every doc is stored once, the job's committed run
+    # survives, and lookups without n_splits find every stream doc
+    import os
+
+    from crumble_spark.lookup import decode_docs
+    from crumble_spark.streaming.ingest import encode_stream
+
+    out, arrivals = str(tmp_path / "mixed"), str(tmp_path / "arrivals")
+    cfg = EncodeConfig(block_size=128, n_splits=64)
+    df = synth.synth_table(spark, n_rows=50, seed=5, mean_len=100, parts=2)
+    synth.synth_table(spark, n_rows=40, seed=6, mean_len=100, parts=2).withColumn(
+        "doc_id", F.concat(F.lit("s-"), F.col("doc_id"))
+    ).write.parquet(arrivals)
+    run_encode_job(spark, df, out, run_id="job1", cfg=cfg)
+    encode_stream(spark, arrivals, out, block_size=128, n_splits=64)
+    s = run_encode_job(spark, df, out, run_id="job2", cfg=cfg)
+
+    assert os.path.isdir(f"{out}/encoded/run_id=job1")
+    runs = {d for d in os.listdir(f"{out}/lineage") if not d.startswith(("_", "."))}
+    assert runs == {"run_id=job1", "run_id=stream-0"}
+    job_ids = [r["doc_id"] for r in df.select("doc_id").collect()]
+    stream_ids = [r["doc_id"] for r in spark.read.parquet(arrivals).select("doc_id").collect()]
+    stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
+    assert sorted(stored) == sorted(job_ids + stream_ids)
+    assert s["rows"] == 50
+    got = decode_docs(spark, f"{out}/encoded", stream_ids).collect()
+    assert sorted(r["doc_id"] for r in got) == sorted(stream_ids)
+
+
+def test_resume_refuses_a_flat_lineage_store(spark, tmp_path):
+    # lineage appended flat into lineage/ (the layout before run_id=
+    # lineage directories) is invisible to Spark next to run_id=
+    # directories; the job's resume and the stream both name the file
+    # and change nothing
+    import os
+    import shutil
+
+    import pytest
+
+    from crumble_spark.streaming.ingest import encode_stream
+
+    out, tok = str(tmp_path / "flat_lineage"), str(tmp_path / "tokens")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = _table(spark)
+    df.write.parquet(tok)
+    run_encode_job(spark, df, out, run_id="r1", cfg=cfg)
+    rows = [r.asDict() for r in lineage.done_rows(spark, f"{out}/lineage")]
+    shutil.rmtree(f"{out}/lineage")
+    lineage.lineage_frame(spark, rows).write.parquet(f"{out}/lineage")
+    assert any(f.startswith("part-") for f in os.listdir(f"{out}/lineage"))
+    before = _files(out)
+    with pytest.raises(ValueError, match="'part-.*not a run_id= directory"):
+        run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
+    with pytest.raises(ValueError, match="'part-.*not a run_id= directory"):
+        encode_stream(spark, tok, out, block_size=256, n_splits=16)
+    assert _files(out) == before
+
+
+def test_job_resume_after_a_stream_encodes_every_input_doc(spark, tmp_path):
+    # the splits a stream batch wrote hold other docs than the job's
+    # input, so they are not done for the job: a resumed job into a store
+    # that only a stream has written stores every one of its docs
+    from crumble_spark.streaming.ingest import encode_stream
+
+    out, arrivals = str(tmp_path / "stream_first"), str(tmp_path / "arrivals")
+    cfg = EncodeConfig(block_size=128, n_splits=64)
+    synth.synth_table(spark, n_rows=40, seed=6, mean_len=100, parts=2).withColumn(
+        "doc_id", F.concat(F.lit("s-"), F.col("doc_id"))
+    ).write.parquet(arrivals)
+    encode_stream(spark, arrivals, out, block_size=128, n_splits=64)
+    df = synth.synth_table(spark, n_rows=50, seed=5, mean_len=100, parts=2)
+    s = run_encode_job(spark, df, out, run_id="job", cfg=cfg)
+    assert (s["rows"], s["tokens"]) == (50, df.agg(F.sum("n_tok")).first()[0])
+    stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
+    assert len(stored) == len(set(stored)) == 90
