@@ -67,7 +67,8 @@ def write_run(
     then the store sidecar, then the rows into
     {out_dir}/lineage/run_id=<run_id>/ (run_id as the directory's
     partition value).  Both run directories are overwritten whole, so a
-    retried run or replayed batch replaces its own output.
+    retried run or replayed batch replaces its own output; a `df` with
+    no row leaves neither (nothing to commit) and returns [].
 
     The sidecar is read first: a store of another n_splits raises before
     anything is written (this run's docs would route to other splits and
@@ -87,12 +88,14 @@ def write_run(
     acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
     enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
     sinks.write_encoded_parquet(enc, enc_dir, run_id)
+    if not acc.value:
+        sinks.delete_path(f"{enc_dir}/run_id={run_id}")
+        return []
     held = (sinks.read_store_meta(enc_dir) or {}).get("splits", [])
     sinks.write_store_meta(enc_dir, cfg.n_splits, splits=set(held) | set(acc.value))
     rows = lineage.lineage_rows(acc.value, run_id)
-    if rows:
-        lin = lineage.lineage_frame(spark, rows).drop("run_id")
-        lin.write.mode("overwrite").parquet(f"{out_dir}/lineage/run_id={run_id}")
+    lin = lineage.lineage_frame(spark, rows).drop("run_id")
+    lin.write.mode("overwrite").parquet(f"{out_dir}/lineage/run_id={run_id}")
     return rows
 
 

@@ -10,12 +10,18 @@ speed and scales with cores alone.  The per-batch work is the same
 encode.encode_record_batch / decode.decode_record_batch the DataFrame
 path runs, so both paths emit identical bytes.
 
-Spark still owns everything distributed-systems-shaped:
-  * the task list ((file, row_group) rows — the "input split" of crumble's
-    lineage discipline),
-  * scheduling/retries, and
-  * collecting the lineage records (small rows; payload bytes never
-    cross the JVM boundary).
+Spark still owns everything distributed-systems-shaped: the task list
+((file, row_group) rows — the "input split" of crumble's lineage
+discipline), scheduling/retries, and collecting the lineage records
+(small rows; payload bytes never cross the JVM boundary).
+
+Each call is one job of at most one Python task per core: the sorted
+split list is an Arrow-built local relation (no job or shuffle to build
+it) that Spark slices into min(splits, defaultParallelism) contiguous
+partitions.  A Python task costs ~0.2 s of fixed worker CPU (pyspark's
+per-task importlib.invalidate_caches), so a second wave for stealing
+loses more than it balances; a retried task re-does its whole
+(idempotent) slice.
 
 Each task publishes its split's data file, then its lineage record, each
 by atomic rename of a hidden tmp file; resume skips the splits that have
@@ -33,11 +39,9 @@ import uuid
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
@@ -66,8 +70,8 @@ def list_input_splits(in_path: str) -> list[tuple[str, int]]:
 
     Globally sorted by (path, rg) — os.walk order is per-directory, not
     lexicographic across nesting levels, and the distributed path sorts
-    its collect; both paths must return the bit-identical list or
-    _task_frame groups splits differently either side of the
+    its collect; both paths must return the bit-identical list or the
+    tasks' contiguous slices of it differ either side of the
     DISTRIBUTED_LISTING_MIN_FILES crossover (ADVICE r4)."""
     return _footer_splits(list_input_files(in_path))
 
@@ -98,15 +102,13 @@ def list_input_splits_distributed(
     if len(files) <= DISTRIBUTED_LISTING_MIN_FILES:
         return _footer_splits(files)
 
-    def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read_footers(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_arrow_single_thread()
-        for pdf in batches:
-            rows = _footer_splits(list(pdf["path"]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["path", "rg"])
+        for b in batches:
+            yield _split_batch(_footer_splits(b.column("path").to_pylist()))
 
-    names = _task_frame(spark, [(f,) for f in files], "path string")
-    rows = names.mapInPandas(read_footers, schema="path string, rg int").collect()
+    names = spark.createDataFrame(pa.table({"path": pa.array(files, pa.string())}))
+    rows = names.mapInArrow(read_footers, "path string, rg int").collect()
     # deterministic order: the serial walk sorts by name then rg; the
     # distributed collect order is partition-arbitrary
     return sorted((r["path"], r["rg"]) for r in rows)
@@ -116,16 +118,15 @@ def _split_name(path: str, rg: int) -> str:
     return f"{os.path.basename(path)}:rg{rg}"
 
 
-def _task_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """`rows`, one per split, batched into tasks: one task per split pays
-    a scheduler launch + python-worker round trip per ~35 ms of work
-    (measured 30% of wall at bench scale).  Keep >=2 tasks per core for
-    stealing, and <=8 splits per task so a retry re-does a bounded amount
-    of (fully idempotent) work.  At 10^12-scale split counts the per-task
-    batch cap dominates; at bench scale the 2x-parallelism floor does."""
-    par, n = spark.sparkContext.defaultParallelism, len(rows)
-    n_tasks = max(1, min(n, max(2 * par, -(-n // 8))))
-    return spark.createDataFrame(rows, schema).repartition(n_tasks)
+def _split_batch(splits: list[tuple[str, int]]) -> pa.RecordBatch:
+    paths, rgs = zip(*splits) if splits else ((), ())
+    return pa.record_batch({"path": pa.array(paths, pa.string()), "rg": pa.array(rgs, pa.int32())})
+
+
+def _task_frame(spark, splits: list[tuple[str, int]]) -> DataFrame:
+    """The sorted `splits` as a local relation, which Spark slices into
+    min(len(splits), defaultParallelism) contiguous tasks (module docstring)."""
+    return spark.createDataFrame(pa.Table.from_batches([_split_batch(splits)]))
 
 
 def _pin_arrow_single_thread() -> None:
@@ -226,7 +227,7 @@ def encode_job_direct(
     splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in names]
     rows = []
     if splits:
-        tasks = _task_frame(spark, splits, "path string, rg int")
+        tasks = _task_frame(spark, splits)
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for b in batches:
@@ -247,29 +248,25 @@ def encode_job_direct(
 def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
     """Distributed direct decode + verification: every row's blocks are
     decoded and the block-combinable hash compared (V1 analogue at full
-    throughput). Returns totals."""
+    throughput). Returns totals, summed on the driver over one
+    (n_rows, n_tokens) row per task."""
     splits = list_input_splits_distributed(spark, enc_dir)
-    tasks = _task_frame(spark, splits, "path string, rg int")
+    if not splits:
+        return {"rows": 0, "tokens": 0}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_arrow_single_thread()
-        for pdf in batches:
-            rows = []
-            for path, rg in zip(pdf["path"], pdf["rg"]):
-                n_rows = n_tokens = 0
-                for batch in _read_split(path, int(rg), ["doc_id", "blocks", "row_hash"]):
+        n_rows = n_tokens = 0
+        for b in batches:
+            for path, rg in zip(b.column("path").to_pylist(), b.column("rg").to_pylist()):
+                for batch in _read_split(path, rg, ["doc_id", "blocks", "row_hash"]):
                     try:
                         values, _ = decode_record_batch(batch, verify=True)
                     except ValueError as e:
                         raise ValueError(f"{_split_name(path, rg)}: {e}") from e
                     n_rows += batch.num_rows
                     n_tokens += len(values)
-                rows.append((n_rows, n_tokens))
-            yield pd.DataFrame(rows, columns=["n_rows", "n_tokens"])
+        yield pa.RecordBatch.from_pydict({"n_rows": [n_rows], "n_tokens": [n_tokens]})
 
-    agg = (
-        tasks.mapInPandas(run, schema="n_rows long, n_tokens long")
-        .agg(F.sum("n_rows").alias("rows"), F.sum("n_tokens").alias("tokens"))
-        .collect()[0]
-    )
-    return {"rows": agg["rows"], "tokens": agg["tokens"]}
+    rows = _task_frame(spark, splits).mapInArrow(run, "n_rows long, n_tokens long").collect()
+    return {"rows": sum(r["n_rows"] for r in rows), "tokens": sum(r["n_tokens"] for r in rows)}

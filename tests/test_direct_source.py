@@ -50,6 +50,44 @@ def test_direct_decode_verify(spark, tok_dir, tmp_path):
     assert totals["tokens"] == src["t"]
 
 
+def _job_tasks(spark, group, fn):
+    """(fn(), [tasks of each stage] for each Spark job fn ran)."""
+    from test_lookup import _jobs_run
+
+    result, jobs = _jobs_run(spark, group, fn)
+    st = spark.sparkContext.statusTracker()
+    return result, [[st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+                    for j in jobs]
+
+
+def test_direct_calls_are_one_job_of_one_task_per_core(spark, tok_dir, tmp_path):
+    # the split list is a local relation (no job to build it, no
+    # shuffle): each call is one job whose one stage runs at most one
+    # Python task per core
+    out = str(tmp_path / "plan")
+    n = len(direct.list_input_splits(tok_dir))
+    want = [[min(n, spark.sparkContext.defaultParallelism)]]
+    assert n > spark.sparkContext.defaultParallelism  # the cap is exercised
+    _, enc = _job_tasks(spark, "direct-enc", lambda: direct.encode_job_direct(
+        spark, tok_dir, out, block_size=256, n_splits=16, resume=False))
+    assert enc == want
+    totals, dec = _job_tasks(
+        spark, "direct-dec", lambda: direct.decode_verify_direct(spark, f"{out}/encoded"))
+    assert dec == want
+    assert totals["rows"] == spark.read.parquet(tok_dir).count()
+
+
+def test_direct_verify_of_an_empty_store_is_zero(spark, tmp_path):
+    # an empty input stores no split; its verify totals are 0, not None
+    import os
+
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    inp.mkdir()
+    direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16)
+    assert not os.listdir(f"{out}/encoded")
+    assert direct.decode_verify_direct(spark, f"{out}/encoded") == {"rows": 0, "tokens": 0}
+
+
 def test_direct_survives_stale_tmp_from_crashed_attempt(spark, tok_dir, tmp_path):
     # a task that died mid-write leaves .enc-*.parquet.tmp; the retry must
     # overwrite it and publish atomically — output identical to a clean run
@@ -184,8 +222,8 @@ def test_listing_order_identical_for_nested_dirs(spark, tmp_path, monkeypatch):
     # ADVICE r4: os.walk visits per-directory (root's files before
     # subdirs'), which is NOT globally lexicographic — e.g. root/z.parquet
     # walks before root/a/x.parquet.  Both listing paths must return the
-    # bit-identical (path, rg)-sorted list on nested layouts or
-    # _task_frame groups splits differently across the crossover.
+    # bit-identical (path, rg)-sorted list on nested layouts or the
+    # tasks' contiguous slices of it differ across the crossover.
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -266,6 +266,25 @@ def test_every_writer_has_the_lineage_schema(spark, tmp_path):
         assert lin.filter("status = 'done'").agg(F.sum("n_rows")).first()[0] == 200, name
 
 
+def test_resume_with_nothing_left_leaves_no_run(spark, tmp_path):
+    # every split is done: the resumed run encodes no row, so it must
+    # leave no run directory behind (an uncommitted orphan)
+    import os
+
+    out = str(tmp_path / "nothing_left")
+    cfg = EncodeConfig(block_size=256, n_splits=16)
+    df = synth.synth_table(spark, n_rows=50, seed=8, mean_len=100, parts=2)
+    s1 = run_encode_job(spark, df, out, run_id="r1", cfg=cfg, resume=False)
+    s2 = run_encode_job(spark, df, out, run_id="r2", cfg=cfg, resume=True)
+    for d in ("encoded", "lineage"):
+        assert sorted(n for n in os.listdir(f"{out}/{d}") if not n.startswith((".", "_"))) == [
+            "run_id=r1"
+        ]
+    key = ("splits", "rows", "tokens")
+    assert [s2[k] for k in key] == [s1[k] for k in key]
+    assert spark.read.parquet(f"{out}/encoded").count() == 50
+
+
 def _files(root):
     """{path: mtime_ns} of every file under root."""
     import os
