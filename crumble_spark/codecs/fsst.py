@@ -33,7 +33,6 @@ from . import rle
 
 _U8 = struct.Struct("<B")
 _U16 = struct.Struct("<H")
-_U32 = struct.Struct("<I")
 _TAIL = struct.Struct("<IBB")
 
 ROUNDS = 3

@@ -71,20 +71,13 @@ def write_run(
     no row leaves neither (nothing to commit) and returns [].
 
     The sidecar is read first: a store of another n_splits raises before
-    anything is written (this run's docs would route to other splits and
-    be stored twice).  It is read again right before it is rewritten with
-    its splits ∪ this run's, so a run that overlapped this one keeps its
-    splits listed."""
+    anything is written (sinks.check_store_n_splits).  It is read again
+    right before it is rewritten with its splits ∪ this run's, so a run
+    that overlapped this one keeps its splits listed."""
     from . import sinks
 
     enc_dir = f"{out_dir}/encoded"
-    meta = sinks.read_store_meta(enc_dir)
-    if meta is not None and int(meta["n_splits"]) != cfg.n_splits:
-        raise ValueError(
-            f"{enc_dir} was written with n_splits={meta['n_splits']}, this run has "
-            f"n_splits={cfg.n_splits}; use the store's value, or resume=False to "
-            "replace the store"
-        )
+    sinks.check_store_n_splits(enc_dir, cfg.n_splits)
     acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
     enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
     sinks.write_encoded_parquet(enc, enc_dir, run_id)
@@ -118,10 +111,12 @@ def run_encode_job(
     anything but run directories or if `run_id` is already committed
     (has lineage rows), then deletes both run directories of every run
     without lineage rows (a run that died after its data commit, before
-    or inside its lineage write).  resume=False replaces the store: it
-    deletes encoded/ and lineage/ first.  Run ids starting with
-    STREAM_RUN_PREFIX belong to encode_stream and are refused.  One
-    writer per out_dir at a time.
+    or inside its lineage write).  When the done splits cover every
+    split id below n_splits, no doc is left to encode: it returns their
+    summary and runs no job past the lineage read.  resume=False
+    replaces the store: it deletes encoded/ and lineage/ first.  Run ids
+    starting with STREAM_RUN_PREFIX belong to encode_stream and are
+    refused.  One writer per out_dir at a time.
 
     sink="iceberg" treats out_dir as a catalog table name and writes via
     sinks.write_encoded_iceberg, with lineage rows appended to
@@ -157,6 +152,9 @@ def run_encode_job(
         # a stream batch's splits hold other input: only a job run marks
         # a split of this input done
         done = [r for r in rows if not r["run_id"].startswith(STREAM_RUN_PREFIX)]
+        if {int(r["split"]) for r in done} >= set(range(cfg.n_splits)):
+            sinks.check_store_n_splits(enc_dir, cfg.n_splits)
+            return {**lineage.summarize(done), "run_id": run_id}
     elif not iceberg:
         sinks.delete_path(enc_dir)
         sinks.delete_path(lin_dir)

@@ -1,13 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, decoded/feature-extracted via Arrow-batched pandas
-UDFs (mapInPandas).
+with typed metadata, decoded via Arrow-batched pandas UDFs (mapInPandas).
 
-The decode kernels are STUBS by design — the sandbox has no image/audio
-libraries — but everything Spark-side is real and tested: schemas, the
-binary column path through Arrow, batch shapes, partitioning, and the
-metadata extraction.  `decode_image_stub` produces a *deterministic fake*
-(seeded from the payload bytes) with the exact shape a real decoder would
-return; `decode_image_real` marks the integration point.
+PPM, PNG and WAV payloads decode with pure numpy/stdlib parsers, so no
+image or audio library is required.  `decode_image_stub` produces a
+*deterministic fake* (seeded from the payload bytes) with the exact
+shape a real decoder would return — its header bytes are the dimensions
+q_mm_binary_meta derives in Catalyst; `decode_image_real` marks the
+integration point for compressed formats (PIL when installed).
 
 Reference analogue: crumble treats the aux-tag blob as opaque bytes with
 typed accessors (bam_get_aux / aux_type2size, snp_score.c:949-965).
@@ -21,27 +20,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField("n_bytes", T.IntegerType(), False),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("mean_pixel_e6", T.LongType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType(), False), False),
-    ]
-)
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,28 +288,6 @@ def decode_image_stub(payload: bytes) -> np.ndarray:
     return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
-def extract_features_df(media: DataFrame, dim: int = 8) -> DataFrame:
-    """decode → resize-ish pooling → tiny feature vector, as one
-    mapInPandas pass (the pattern a real CLIP/whisper stage follows).
-    Arrow batches bound memory; payload bytes never hit the driver."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mt, payload in zip(pdf["doc_id"], pdf["media_type"], pdf["payload"]):
-                img = decode_image_stub(bytes(payload))
-                h, w = img.shape[0], img.shape[1]
-                mean_px = int(np.floor(img.mean() * 1_000_000))
-                pooled = img.reshape(-1, 3).mean(axis=0)
-                feat = np.resize(pooled.astype(np.float32), dim)
-                rows.append((int(doc_id), mt, w, h, mean_px, feat.tolist()))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURE_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(fn, schema=FEATURE_SCHEMA)
-
-
 def q_mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata off the binary column, pure Catalyst (oracle-checked):
     byte length + header-derived dimensions (the same bytes the stub decoder
@@ -356,89 +312,14 @@ Q_MM_BINARY_META_SQL = (
 )
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("out_w", T.IntegerType(), False),
-        T.StructField("out_h", T.IntegerType(), False),
-        T.StructField("mean_pixel_e6", T.LongType(), False),
-        T.StructField("checksum", T.LongType(), False),
-    ]
-)
-
-
-def resize_images_df(media: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
-    """decode → fixed-size area resize (integer block pooling), one
-    mapInPandas pass.  The pooling itself is the real kernel (pure
-    numpy, deterministic); only the decode behind it is the stub."""
-    import zlib
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img = decode_image_stub(bytes(payload)).astype(np.int64)
-                h, w = img.shape[0], img.shape[1]
-                # area pooling via index mapping (works for any h,w -> out)
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                small = img[yi][:, xi]
-                rows.append(
-                    (
-                        int(doc_id),
-                        out_w,
-                        out_h,
-                        int(np.floor(small.mean() * 1_000_000)),
-                        zlib.crc32(small.astype(np.uint8).tobytes()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
-
-    return media.mapInPandas(fn, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("mean_pixel_e6", T.LongType(), False),
-    ]
-)
-
-FRAME_STRIDE = 4  # sample every 4th frame — baked into q_mm_frame_plan's
-# oracle; change it THERE, not per call, so the sampler can never drift
-# from the oracle-checked sampling contract
-
-
-def sample_frames_df(media: DataFrame) -> DataFrame:
-    """Video frame sampling: the payload header declares n_frames
-    (byte[2] % 16 + 1); every FRAME_STRIDE-th frame is decoded (stub:
-    frame i = image seeded by a varied header byte) and reduced to a
-    mean.  One row per sampled frame — the fan-out happens inside the
-    Arrow batch, bounded by n_frames/stride per video, never on the
-    driver.  The sampled index set is exactly q_mm_frame_plan's."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pb = bytes(payload)
-                n_frames = pb[2] % 16 + 1
-                for i in range(0, n_frames, FRAME_STRIDE):
-                    # vary a seed byte per frame, keep the h/w header bytes
-                    # (0,1) stable so every frame of a video has one shape
-                    frame = decode_image_stub(pb[:2] + bytes([(pb[2] + i) % 256]) + pb[3:])
-                    rows.append((int(doc_id), i, int(np.floor(frame.mean() * 1_000_000))))
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return media.mapInPandas(fn, schema=FRAME_SCHEMA)
+FRAME_STRIDE = 4  # sample every 4th frame — baked into q_mm_frame_plan's oracle
 
 
 def q_mm_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sampling plan (which frames of which docs get decoded),
-    derived purely from header math — the Catalyst-side contract the
-    mapInPandas sampler must honor (oracle-checked; the decoded means
-    themselves come from the stub and are covered by pytest)."""
+    derived purely from header math — the payload header declares
+    n_frames (byte[2] % 16 + 1) and every FRAME_STRIDE-th frame is
+    sampled (oracle-checked)."""
     m = media_table(spark, sf_dir)
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", F.md5("text").alias("hx"))
     n_frames = (F.conv(F.substring("hx", 5, 2), 16, 10).cast("int") % 16 + 1).alias("n_frames")

@@ -1,15 +1,15 @@
 """Deduplication operators over the documents table.
 
-Four families, each a pure DataFrame composition with a DuckDB oracle:
+Five families, each a pure DataFrame composition with a DuckDB oracle:
 
 * exact        — full-text md5 group dedup (hash-groupBy)
 * prefix       — first-10-word hash dedup (catches boilerplate heads)
 * minhash LSH  — shingle → 16-perm minhash → 4-row bands → bucket join
-* simhash      — 16-bit sign-of-weighted-bits signature + hamming pairs
+* simhash      — 48-bit sign-of-weighted-bits signature + hamming pairs
 * ngram jaccard— exact jaccard on distinct 3-gram sets for candidate pairs
 
 Scale notes (100 TB): every candidate generator is a shuffle on a *short
-key* (band hash / gram / nibble band), never a cross join; pair dedup is
+key* (band hash / gram / 12-bit band), never a cross join; pair dedup is
 a groupBy on (doc_a, doc_b).  Per-key fanout is explicitly bounded
 everywhere a degenerate key could go quadratic on a production path: hot
 grams are frequency-capped (GRAM_DF_CAP) via a map-side-combinable count
@@ -21,20 +21,17 @@ dropped-and-reported (q_simhash48_bucket_stats, VERDICT r6 #1) — a
 mass-duplicated boilerplate family with one shared 48-bit signature
 lands whole in all four 12-bit bands, so without the cap its band
 self-join is O(k^2) with nothing for the hamming filter to remove.
-(The 16-bit simhash variant is a retired round-1 parity baseline kept
-in LOCAL_QUERIES, deliberately uncapped: its 4-bit bands put >half the
-corpus in one bucket at ANY scale — it is not a scale path and its
-oracle is the plain self-join.)  Exact-dup mass is additionally
-removable at the source: the clustering pair feed collapses each
-distinct text to one representative before signatures and re-attaches
-duplicates as star edges, which preserves connected components exactly
-(a dup family is a clique; a star on the same vertex set has the same
-components) while deleting the quadratic both inside families and
-across near-dup families.  The exact-jaccard verifier runs only on LSH
-candidate pairs (restricted BEFORE the intersect groupBy), mirroring
-cheap-gate-then-expensive from the engine's cost model.  All caps sit
-far above the measured test-scale maxima, so they are semantics-neutral
-at oracle scale and binding at 10^12.
+Exact-dup mass is additionally removable at the source: the clustering
+pair feed collapses each distinct text to one representative before
+signatures and re-attaches duplicates as star edges, which preserves
+connected components exactly (a dup family is a clique; a star on the
+same vertex set has the same components) while deleting the quadratic
+both inside families and across near-dup families.  The exact-jaccard
+verifier runs only on LSH candidate pairs (restricted BEFORE the
+intersect groupBy), mirroring cheap-gate-then-expensive from the
+engine's cost model.  All caps sit far above the measured test-scale
+maxima, so they are semantics-neutral at oracle scale and binding at
+10^12.
 """
 
 from __future__ import annotations
@@ -47,7 +44,6 @@ from .tokenize import documents
 
 N_PERM = 16
 N_BANDS = 4  # 4 rows per band
-SIMHASH_BITS = 16
 JACCARD_THRESHOLD = 0.3
 PREFIX_WORDS = 10
 
@@ -58,8 +54,6 @@ PREFIX_WORDS = 10
 # and they bind exactly where the quadratic blowups would start at 100 TB.
 GRAM_DF_CAP = 64  # shingles shared by more docs than this are stop-shingles
 LSH_MAX_BUCKET = 64  # band buckets larger than this are skipped (reported)
-SIMHASH_HAM_MAX = 2
-SIMHASH_N_BANDS = 4  # 4-bit nibbles; ham<=2 leaves >=2 of 4 bands intact
 # Production-width simhash band-bucket cap (VERDICT r6 #1).  Measured band
 # bucket maxima on the 48-bit/12-bit-band path: 58 at sf0.001, 57 at
 # sf0.01 (4096 keys/band over 500 low-entropy synthetic docs), so 128
@@ -400,45 +394,6 @@ Q_LSH_BUCKET_STATS_SQL = (
 
 # --- simhash -----------------------------------------------------------------
 
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit simhash per doc from 24-bit word hashes (explode → groupBy,
-    map-side combinable — one shuffle of (doc_id, 16 counters))."""
-    d = documents(spark, sf_dir)
-    w = d.select("doc_id", F.explode(shared.words(F.col("text"))).alias("w"))
-    h = w.select("doc_id", shared.word_hash(F.col("w")).alias("h"))
-    sums = [
-        F.sum(
-            F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(SIMHASH_BITS)
-    ]
-    agg = h.groupBy("doc_id").agg(*sums)
-    sim = None
-    for i in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        sim = bit if sim is None else sim + bit
-    return agg.select("doc_id", sim.cast("int").alias("simhash"))
-
-
-def _simhash_cte() -> str:
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(SIMHASH_BITS)
-    )
-    val = " + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(SIMHASH_BITS))
-    return (
-        "WITH wds AS (SELECT doc_id, unnest("
-        + shared.WORDS_SQL.format(c="text")
-        + ") AS w FROM documents), "
-        "h AS (SELECT doc_id, " + shared.WORD_HASH_SQL.format(w="w") + " AS h FROM wds), "
-        f"agg AS (SELECT doc_id, {bit_sums} FROM h GROUP BY doc_id), "
-        f"sim AS (SELECT doc_id, CAST({val} AS INTEGER) AS simhash FROM agg)"
-    )
-
-
-Q_SIMHASH_SQL = _simhash_cte() + " SELECT doc_id, simhash FROM sim"
-
-
 def _simhash_banded(sig: DataFrame, total_bits: int, n_bands: int) -> DataFrame:
     """(doc_id, simhash, band, key) rows: the signature split into n_bands
     equal bit-bands — the short join key shared by the pair generator and
@@ -465,7 +420,7 @@ def _banded_hamming_pairs(
     total_bits: int,
     n_bands: int,
     ham_max: int,
-    max_bucket: int | None = None,
+    max_bucket: int,
 ) -> DataFrame:
     """Near-dup pairs within `ham_max` on a `simhash` column, via banding.
 
@@ -489,94 +444,45 @@ def _banded_hamming_pairs(
     one fewer sort/exchange pass over the banded rows; measured
     interleaved at sf0.1 on the clustering feed: 2.99-3.35 s (self-join)
     vs 2.70-2.75 s (collect_set), identical 1,885 pairs.  Drops are
-    observable via q_simhash48_bucket_stats.  None = uncapped (the
-    16-bit parity baseline, whose oracle is a plain self-join and whose
-    4-bit bands put >half the corpus in one bucket — an UNBOUNDED
-    collect_set array there, so the uncapped branch keeps the streaming
-    self-join shape).
+    observable via q_simhash48_bucket_stats.
     """
     assert n_bands > ham_max, "banding incomplete: need n_bands > ham_max"
-    banded = _simhash_banded(sig, total_bits, n_bands)
-    if max_bucket is not None:
-        # Lazy localCheckpoint: the cap's count and probe branches cannot
-        # share an exchange (r5 finding), so without this the 48-bit
-        # signature pipeline (explode words → md5 → 48 sums) executes
-        # twice.  Banded rows are 4 narrow rows/doc; measured interleaved
-        # at sf0.1 on the clustering feed: faster in 7/8 pairs, best
-        # 2.55 -> 2.23 s.  (The uncapped 16-bit branch below has a single
-        # consumer — no benefit, left alone.)
-        banded = banded.localCheckpoint(eager=False)
-        buckets = (
-            _capped_bucket_rows(banded, max_bucket)
-            .groupBy("band", "key")
-            .agg(F.sort_array(F.collect_set(F.struct("doc_id", "simhash"))).alias("ds"))
-        )
-        pairs = F.filter(
-            F.flatten(
-                F.transform(
+    # Lazy localCheckpoint: the cap's count and probe branches cannot
+    # share an exchange (r5 finding), so without this the 48-bit
+    # signature pipeline (explode words → md5 → 48 sums) executes
+    # twice.  Banded rows are 4 narrow rows/doc; measured interleaved
+    # at sf0.1 on the clustering feed: faster in 7/8 pairs, best
+    # 2.55 -> 2.23 s.
+    banded = _simhash_banded(sig, total_bits, n_bands).localCheckpoint(eager=False)
+    buckets = (
+        _capped_bucket_rows(banded, max_bucket)
+        .groupBy("band", "key")
+        .agg(F.sort_array(F.collect_set(F.struct("doc_id", "simhash"))).alias("ds"))
+    )
+    pairs = F.filter(
+        F.flatten(
+            F.transform(
+                F.col("ds"),
+                lambda x: F.transform(
                     F.col("ds"),
-                    lambda x: F.transform(
-                        F.col("ds"),
-                        lambda y: F.struct(
-                            x["doc_id"].alias("doc_a"),
-                            y["doc_id"].alias("doc_b"),
-                            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"]))
-                            .cast("int")
-                            .alias("hamming"),
-                        ),
+                    lambda y: F.struct(
+                        x["doc_id"].alias("doc_a"),
+                        y["doc_id"].alias("doc_b"),
+                        F.bit_count(x["simhash"].bitwiseXOR(y["simhash"]))
+                        .cast("int")
+                        .alias("hamming"),
                     ),
-                )
-            ),
-            lambda p: (p["doc_a"] < p["doc_b"]) & (p["hamming"] <= ham_max),
-        )
-        return (
-            buckets.select(F.explode(pairs).alias("p"))
-            .select("p.doc_a", "p.doc_b", "p.hamming")
-            .distinct()  # a pair can collide in more than one band
-        )
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+                ),
+            )
+        ),
+        lambda p: (p["doc_a"] < p["doc_b"]) & (p["hamming"] <= ham_max),
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= ham_max)
+        buckets.select(F.explode(pairs).alias("p"))
+        .select("p.doc_a", "p.doc_b", "p.hamming")
         .distinct()  # a pair can collide in more than one band
     )
 
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded near-dup pairs at hamming <= 2 on the 16-bit simhash (the
-    round-1-oracle-parity width; q_simhash48_pairs is the production
-    width — same _banded_hamming_pairs shape, wider keys).  Deliberately
-    uncapped: 4-bit bands have 16 keys, so buckets hold >half the corpus
-    at any scale (measured 300 of 500 docs at sf0.001) — a cap would be
-    either corpus-sized (meaningless) or binding at test scale (breaking
-    the plain-self-join oracle).  This width is a parity baseline, not a
-    deployment path; the capped 48-bit query is."""
-    return _banded_hamming_pairs(
-        q_simhash(spark, sf_dir), SIMHASH_BITS, SIMHASH_N_BANDS, SIMHASH_HAM_MAX
-    )
-
-
-Q_DEDUP_SIMHASH_SQL = (
-    _simhash_cte()
-    + " SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-    "CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming "
-    "FROM sim a JOIN sim b ON a.doc_id < b.doc_id "
-    "WHERE bit_count(xor(a.simhash, b.simhash)) <= 2"
-)
-
-
-# --- production-width simhash -------------------------------------------------
 
 SIMHASH64_BITS = 48  # production width (48 of 64 so the int64 stays positive)
 SIMHASH64_BANDS = 4  # 12-bit bands: 4096 keys/band; ham<=3 leaves >=1 intact
@@ -620,9 +526,7 @@ def q_simhash48_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs on the production-width 48-bit simhash, banded into
     4 x 12-bit keys (4096 values per band — the short-key shuffle that
     holds at 10^12 docs), band buckets capped at SIMHASH_MAX_BUCKET
-    (dropped-and-reported, see q_simhash48_bucket_stats).  The 16-bit
-    variant above keeps round-1 oracle parity; this one is the width you
-    would actually deploy."""
+    (dropped-and-reported, see q_simhash48_bucket_stats)."""
     sig = _simhash48_sig(documents(spark, sf_dir).select("doc_id", "text"))
     return _banded_hamming_pairs(
         sig,
@@ -1271,16 +1175,9 @@ ORACLES = {
     "dedup_clusters": _q_dedup_clusters_sql(),
 }
 
-# Parity baselines retired from the driver registry (the driver records at
-# most 50 correctness rows; these are superseded by deploy-width variants —
-# 16-bit simhash signature/pairs by the 48-bit 4x12-band query; the sig
-# slot freed r5's mm_png_decode row) but still verified locally every run
-# via tests/test_oracles.py.
+# Drop audits of the production simhash band cap, outside the 50-query
+# registry and DuckDB-checked by tests/test_oracles.py.
 LOCAL_QUERIES = {
-    "dedup_simhash_sig": q_simhash,
-    "dedup_simhash_pairs": q_dedup_simhash,
-    # r7 (VERDICT r6 #1): the drop audit for the production simhash band
-    # cap — LOCAL because the driver window is pinned at exactly 50.
     "dedup_simhash48_bucket_stats": q_simhash48_bucket_stats,
     # r7: the same census over the collapsed (clustering) feed — the
     # plain-feed audit cannot see what the collapse's rep-level banding
@@ -1289,8 +1186,6 @@ LOCAL_QUERIES = {
 }
 
 LOCAL_ORACLES = {
-    "dedup_simhash_sig": Q_SIMHASH_SQL,
-    "dedup_simhash_pairs": Q_DEDUP_SIMHASH_SQL,
     "dedup_simhash48_bucket_stats": _q_simhash48_bucket_stats_sql(),
     "dedup_simhash48_bucket_stats_collapsed": _q_simhash48_bucket_stats_sql(
         src="reps", head=_FAM_REPS_CTE

@@ -320,8 +320,8 @@ ORACLES = {
     "rel_top_suppliers": Q_TOP_SUPPLIERS_SQL,
 }
 
-# Parity baselines outside the driver's pinned 50-row window (VERDICT r4
-# registry discipline) — still DuckDB-checked by tests/test_oracles.py.
+# The session-cap drop audit, outside the 50-query registry (VERDICT r4
+# registry discipline) — DuckDB-checked by tests/test_oracles.py.
 LOCAL_QUERIES = {
     "events_session_cap_stats": q_session_cap_stats,
 }

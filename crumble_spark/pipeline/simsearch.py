@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 N_QUERIES = 10
 TOP_K = 5
-BUCKET_DIMS = 8
 NEARDUP_COS = 0.4
 
 _DOT_SQL = (
@@ -96,106 +95,10 @@ Q_ANN_BRUTE_SQL = (
 )
 
 
-def _bucket(emb: Column) -> Column:
-    b = None
-    for i in range(1, BUCKET_DIMS + 1):
-        bit = F.when(F.element_at(emb, i) > 0, F.lit(1 << (i - 1))).otherwise(F.lit(0))
-        b = bit if b is None else b + bit
-    return b.cast("int")
-
-
-_BUCKET_SQL = " + ".join(
-    f"(CASE WHEN emb[{i}] > 0 THEN {1 << (i - 1)} ELSE 0 END)" for i in range(1, BUCKET_DIMS + 1)
-)
-
-
-def q_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH/IVF-style top-k: sign-of-first-8-dims bucket as the coarse
-    quantizer; candidates = same-bucket vectors (the scale path — the
-    bucket column is what you'd partition/cluster the table by)."""
-    e = _embeddings(spark, sf_dir).withColumn("bucket", _bucket(F.col("emb")))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    pairs = e.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("q_id")),
-    )
-    cos = _dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))
-    ranked = pairs.select(
-        "q_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= TOP_K).select(
-        "q_id",
-        "neighbor_id",
-        F.floor(F.col("cos") * 1_000_000).cast("long").alias("cos_e6"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-
-
-Q_ANN_BUCKETED_SQL = (
-    _EMB_CTE
-    + f", b AS (SELECT vec_id, emb, nrm, CAST({_BUCKET_SQL} AS INTEGER) AS bucket FROM n), "
-    "p AS (SELECT q.vec_id AS q_id, v.vec_id AS neighbor_id, "
-    + _DOT_SQL.format(a="q.emb", b="v.emb")
-    + " / (q.nrm * v.nrm) AS cos FROM b q JOIN b v ON q.vec_id < "
-    + str(N_QUERIES)
-    + " AND v.bucket = q.bucket AND v.vec_id <> q.vec_id), "
-    "r AS (SELECT q_id, neighbor_id, cos, row_number() OVER "
-    "(PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rank FROM p) "
-    "SELECT q_id, neighbor_id, CAST(floor(cos * 1000000) AS BIGINT) AS cos_e6, "
-    f"CAST(rank AS INTEGER) AS rank FROM r WHERE rank <= {TOP_K}"
-)
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate vector pairs (cosine >= threshold), bucket-pruned.
-    Within-bucket self-join ≡ the blocked all-pairs pattern that scales."""
-    e = _embeddings(spark, sf_dir).withColumn("bucket", _bucket(F.col("emb")))
-    a, b = e.alias("a"), e.alias("b")
-    cos = _dot(F.col("a.emb"), F.col("b.emb")) / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cos.alias("cos"),
-        )
-        .filter(F.col("cos") >= NEARDUP_COS)
-        .select(
-            "vec_a", "vec_b", F.floor(F.col("cos") * 1_000_000).cast("long").alias("cos_e6")
-        )
-    )
-
-
-Q_EMB_NEARDUP_SQL = (
-    _EMB_CTE
-    + f", b AS (SELECT vec_id, emb, nrm, CAST({_BUCKET_SQL} AS INTEGER) AS bucket FROM n), "
-    "p AS (SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b, "
-    + _DOT_SQL.format(a="a.emb", b="b2.emb")
-    + " / (a.nrm * b2.nrm) AS cos FROM b a JOIN b b2 "
-    "ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id) "
-    "SELECT vec_a, vec_b, CAST(floor(cos * 1000000) AS BIGINT) AS cos_e6 "
-    f"FROM p WHERE cos >= {NEARDUP_COS}"
-)
-
-
 # --- N-scaled buckets + multi-probe (the 10^12-row path) ---------------------
 #
-# The fixed 2^8 bucket table above keeps bucket population growing linearly
-# with corpus size.  The scaled variant derives the bucket bit-count from N
+# A fixed 2^8 bucket table keeps bucket population growing linearly with
+# corpus size.  The scaled variant derives the bucket bit-count from N
 # so buckets hold ~ANN_TARGET_BUCKET rows regardless of corpus size
 # (nb = clamp(ceil(log2(N / target)), 4, 16) — spelled as an integer
 # threshold chain so Spark and DuckDB agree exactly), and probes the
@@ -668,43 +571,6 @@ Q_ANN_PROBE_TRADEOFF_SQL = (
 )
 
 
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the bucketed (approximate) search against the brute
-    baseline — the evaluation harness an ANN scale path needs."""
-    # lazy checkpoint (r8): same dual-consumer brute as q_ann_recall_scaled
-    brute = (
-        q_ann_brute_topk(spark, sf_dir)
-        .select("q_id", "neighbor_id")
-        .localCheckpoint(eager=False)
-    )
-    approx = q_ann_bucketed_topk(spark, sf_dir).select("q_id", "neighbor_id")
-    hits = brute.join(approx, ["q_id", "neighbor_id"]).groupBy("q_id").agg(
-        F.count("*").alias("n_hits")
-    )
-    return (
-        brute.groupBy("q_id")
-        .agg(F.count("*").alias("n_true"))
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("int").alias("n_hits"),
-            F.col("n_true").cast("int").alias("n_true"),
-        )
-    )
-
-
-Q_ANN_RECALL_SQL = (
-    "WITH brute AS (SELECT q_id, neighbor_id FROM (" + Q_ANN_BRUTE_SQL + ")), "
-    "approx AS (SELECT q_id, neighbor_id FROM (" + Q_ANN_BUCKETED_SQL + ")), "
-    "h AS (SELECT b.q_id, count(*) AS n_hits FROM brute b "
-    "JOIN approx a ON a.q_id = b.q_id AND a.neighbor_id = b.neighbor_id GROUP BY b.q_id) "
-    "SELECT t.q_id, CAST(coalesce(h.n_hits, 0) AS INTEGER) AS n_hits, "
-    "CAST(t.n_true AS INTEGER) AS n_true "
-    "FROM (SELECT q_id, count(*) AS n_true FROM brute GROUP BY q_id) t "
-    "LEFT JOIN h ON h.q_id = t.q_id"
-)
-
-
 QUERIES = {
     "ann_brute_topk": q_ann_brute_topk,
     "ann_scaled_topk": q_ann_scaled_topk,
@@ -723,20 +589,4 @@ ORACLES = {
     "embedding_neardup_scaled": Q_EMB_NEARDUP_SCALED_SQL,
     "ann_ivf_topk": Q_ANN_IVF_SQL,
     "ann_probe_tradeoff": Q_ANN_PROBE_TRADEOFF_SQL,
-}
-
-# Fixed-bucket parity baselines retired from the driver registry (the driver
-# records at most 50 correctness rows; the N-scaled multi-probe variants are
-# the deploy path and stay registered) but still verified locally every run
-# via tests/test_oracles.py.
-LOCAL_QUERIES = {
-    "ann_recall_eval": q_ann_recall,
-    "ann_bucketed_topk": q_ann_bucketed_topk,
-    "embedding_neardup": q_embedding_neardup,
-}
-
-LOCAL_ORACLES = {
-    "ann_recall_eval": Q_ANN_RECALL_SQL,
-    "ann_bucketed_topk": Q_ANN_BUCKETED_SQL,
-    "embedding_neardup": Q_EMB_NEARDUP_SQL,
 }

@@ -82,16 +82,6 @@ def quality_score_expr(n_words: F.Column, mean_wl: F.Column, stop: F.Column) -> 
     )
 
 
-def quality_exprs(text: F.Column, ws: F.Column) -> dict:
-    """The quality feature expressions over (text, words) columns —
-    exposed so composites (curate) can compute them in the SAME scan
-    instead of re-joining q_text_quality's output; values are identical
-    by construction (same expressions, same floor scaling)."""
-    e = quality_feature_exprs(text, ws)
-    e["score"] = quality_score_expr(e["n_words"], e["mean_wl"], e["stop"])
-    return e
-
-
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/stopword/mean-word-length quality features + composite score.
 
@@ -191,15 +181,6 @@ def langid_pred_expr(score_cols: dict) -> F.Column:
     for lang in reversed(langs):  # alphabetical-first wins ties
         pick = F.when(score_cols[lang] == mx, F.lit(lang)).otherwise(pick)
     return F.when(mx < LANG_MIN_SCORE, F.lit("unk")).otherwise(pick)
-
-
-def langid_profile_exprs(ws: F.Column) -> tuple[dict, F.Column]:
-    """({lang: score_col}, lang_pred_col) over a words column — the
-    inline (unstaged) composition, kept for expression-level reuse;
-    staged consumers materialize profile_score_exprs as columns first
-    and apply langid_pred_expr to the attributes (identical values)."""
-    scores = profile_score_exprs(ws)
-    return scores, langid_pred_expr(scores)
 
 
 def q_langid_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -152,6 +152,20 @@ def write_store_meta(enc_dir: str, n_splits: int, splits=None) -> None:
             )
 
 
+def check_store_n_splits(enc_dir: str, n_splits: int) -> None:
+    """Raise when the store at enc_dir was written with another n_splits:
+    a doc routed by this one lands in another split than its stored copy,
+    so it would be stored twice and lookups would route to the wrong
+    split."""
+    meta = read_store_meta(enc_dir)
+    if meta is not None and int(meta["n_splits"]) != n_splits:
+        raise ValueError(
+            f"{enc_dir} was written with n_splits={meta['n_splits']}, this run has "
+            f"n_splits={n_splits}; use the store's value, or resume=False to "
+            "replace the store"
+        )
+
+
 def read_store_meta(enc_dir: str) -> dict | None:
     import json
 

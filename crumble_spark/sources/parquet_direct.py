@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
 from ..schema import LINEAGE_SCHEMA, PA_ENCODED, PA_LINEAGE
-from ..sinks import ROW_GROUP_BYTES, delete_path, write_store_meta
+from ..sinks import ROW_GROUP_BYTES, check_store_n_splits, delete_path, write_store_meta
 
 
 def list_input_files(in_path: str) -> list[str]:
@@ -210,11 +210,24 @@ def encode_job_direct(
     """Distributed direct encode; returns the lineage (the done records a
     resume skipped plus this run's).  Each task publishes a split's data
     under {out_dir}/encoded, then its record under {out_dir}/lineage_direct:
-    a run that dies midway keeps every split it finished.  resume=False
-    replaces the store: it deletes both directories first."""
+    a run that dies midway keeps every split it finished.  resume=True
+    raises, before anything is written, on a store of job.write_run's
+    layout (its flat files would store the docs twice beside the run
+    directories) or of another n_splits.  resume=False replaces the
+    store: it deletes both directories first."""
     enc_dir = os.path.join(out_dir, "encoded")
     lin_dir = os.path.join(out_dir, "lineage_direct")
-    if not resume:
+    if resume:
+        held = os.listdir(enc_dir) if os.path.isdir(enc_dir) else []
+        if os.path.isdir(os.path.join(out_dir, "lineage")) or any(
+            n.startswith("run_id=") for n in held
+        ):
+            raise ValueError(
+                f"{out_dir} holds a job or stream store (run_id= directories, "
+                "lineage/); use a fresh out_dir, or resume=False to replace the store"
+            )
+        check_store_n_splits(enc_dir, n_splits)
+    else:
         delete_path(enc_dir)
         delete_path(lin_dir)
     os.makedirs(enc_dir, exist_ok=True)
@@ -227,6 +240,11 @@ def encode_job_direct(
     splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in names]
     rows = []
     if splits:
+        # stores from the throughput path must be self-describing too, or
+        # lookup.decode_docs needs a hand-passed n_splits (mismatch risk);
+        # published before any split, so a resume of a run that died
+        # midway is checked against it too
+        write_store_meta(enc_dir, n_splits)
         tasks = _task_frame(spark, splits)
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -239,9 +257,6 @@ def encode_job_direct(
                     yield pa.RecordBatch.from_pylist(recs, schema=PA_LINEAGE)
 
         rows = tasks.mapInArrow(run, LINEAGE_SCHEMA).collect()
-        # stores from the throughput path must be self-describing too, or
-        # lookup.decode_docs needs a hand-passed n_splits (mismatch risk)
-        write_store_meta(enc_dir, n_splits)
     return lineage.lineage_frame(spark, [r.asDict() for r in done + rows])
 
 

@@ -24,12 +24,3 @@ def validation_report(df: DataFrame) -> DataFrame:
         ).alias("bad_doc_id"),
     )
 
-
-def assert_valid(df: DataFrame) -> None:
-    bad = (
-        validation_report(df)
-        .filter("null_tokens > 0 OR n_tok_mismatch > 0 OR bad_doc_id > 0")
-        .count()
-    )
-    if bad:
-        raise ValueError(f"{bad} source(s) violate the tokens-table contract")

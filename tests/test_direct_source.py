@@ -482,6 +482,10 @@ def test_direct_crash_resumes_only_unfinished_splits(spark, tmp_path):
     assert published and published == recorded
     lin1 = pq.read_table(lin_dir).to_pylist()
     (run1,) = {r["run_id"] for r in lin1}
+    # the sidecar went out before the first split: a resume with another
+    # n_splits is refused even though the run never finished
+    with pytest.raises(ValueError, match="n_splits=16.*n_splits=8"):
+        direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=8)
     split1 = {r["split"] for r in lin1}
     mtimes = {f"enc-{f}": os.stat(f"{enc_dir}/enc-{f}").st_mtime_ns for f in published}
 
@@ -524,3 +528,46 @@ def test_direct_no_resume_replaces_the_store(spark, tmp_path):
     lin = spark.read.parquet(f"{out}/lineage_direct")
     assert lin.count() == len(direct.list_input_splits(tok))
     assert lin.agg(F.sum("n_rows")).first()[0] == left
+
+
+def _tree(root):
+    """{path: mtime_ns} of every file and directory under root."""
+    import os
+
+    return {
+        os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+        for d, ds, fs in os.walk(root) for n in ds + fs
+    }
+
+
+def test_direct_resume_refuses_another_n_splits(spark, tmp_path):
+    # the stored docs are routed by the store's n_splits: a resume with
+    # another value would rewrite the sidecar and send lookups of the
+    # stored docs to the wrong split.  It raises before it writes
+    # anything, naming both values
+    tok, out = tmp_path / "tokens", str(tmp_path / "out")
+    synth.synth_table(spark, 40, seed=13, mean_len=100, parts=1).write.parquet(str(tok / "a"))
+    direct.encode_job_direct(spark, str(tok), out, block_size=256, n_splits=16)
+    synth.synth_table(spark, 40, seed=14, mean_len=100, parts=1).withColumn(
+        "doc_id", F.concat(F.lit("b-"), F.col("doc_id"))
+    ).write.parquet(str(tok / "b"))
+    before = _tree(out)
+    with pytest.raises(ValueError, match="n_splits=16.*n_splits=8"):
+        direct.encode_job_direct(spark, str(tok), out, block_size=256, n_splits=8)
+    assert _tree(out) == before
+
+
+def test_direct_resume_refuses_a_job_store(spark, tmp_path):
+    # flat direct files beside a job's run_id= directories would store the
+    # input's docs twice and break the job's next resume: the direct
+    # resume raises before it writes anything
+    from crumble_spark.job import EncodeConfig, run_encode_job
+
+    tok, out = str(tmp_path / "tokens"), str(tmp_path / "out")
+    df = synth.synth_table(spark, 40, seed=15, mean_len=100, parts=2)
+    df.write.parquet(tok)
+    run_encode_job(spark, df, out, cfg=EncodeConfig(block_size=256, n_splits=16))
+    before = _tree(out)
+    with pytest.raises(ValueError, match="job or stream store"):
+        direct.encode_job_direct(spark, tok, out, block_size=256, n_splits=16)
+    assert _tree(out) == before

@@ -13,8 +13,8 @@ def test_registered_query_count_fits_driver_window():
     qs = entry.queries()
     assert len(qs) == DRIVER_ROW_CAP, (
         f"{len(qs)} registered queries: the driver records at most "
-        f"{DRIVER_ROW_CAP} rows — retire a parity baseline to a module's "
-        "LOCAL_QUERIES (and LOCAL_ORACLES) instead of registering past the cap"
+        f"{DRIVER_ROW_CAP} rows — delete a superseded query instead of "
+        "registering past the cap"
     )
 
 
@@ -24,6 +24,13 @@ def test_every_oracle_key_has_a_query():
     lqs, los = set(entry.local_queries()), set(entry.local_oracle_sql())
     assert los <= lqs, f"orphan local oracle entries: {los - lqs}"
     assert not (lqs & qs), f"queries registered both locally and with the driver: {lqs & qs}"
+
+
+def test_local_queries_are_only_drop_audits():
+    # a superseded query is deleted, not kept beside its replacement: the
+    # only queries outside the registry are the censuses that report
+    # what a production cap dropped
+    assert all("_stats" in n for n in entry.local_queries()), sorted(entry.local_queries())
 
 
 def test_rows_only_queries_are_the_documented_set():

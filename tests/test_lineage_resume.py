@@ -285,6 +285,25 @@ def test_resume_with_nothing_left_leaves_no_run(spark, tmp_path):
     assert spark.read.parquet(f"{out}/encoded").count() == 50
 
 
+def test_resume_with_every_split_done_runs_no_job_past_the_lineage_read(spark, tmp_path):
+    # every doc routes to a split below n_splits, so when the done splits
+    # cover them all nothing is left: the resume returns the done summary
+    # without scanning, encoding or writing the input
+    from test_lookup import _jobs_run
+
+    out = str(tmp_path / "all_done")
+    cfg = EncodeConfig(block_size=256, n_splits=4)
+    df = synth.synth_table(spark, n_rows=50, seed=8, mean_len=100, parts=2)
+    s1 = run_encode_job(spark, df, out, run_id="r1", cfg=cfg, resume=False)
+    assert s1["splits"] == 4
+    _, read = _jobs_run(spark, "lineage-read", lambda: lineage.done_rows(spark, f"{out}/lineage"))
+    s2, jobs = _jobs_run(
+        spark, "all-done", lambda: run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
+    )
+    assert len(jobs) == len(read)
+    assert {**s2, "run_id": "r1"} == s1
+
+
 def _files(root):
     """{path: mtime_ns} of every file under root."""
     import os

@@ -1,5 +1,5 @@
 """Multimodal plumbing: binary columns through Arrow, stubbed decode with
-real batch shapes, metadata consistency with the oracle-checked query."""
+real shapes, metadata consistency with the oracle-checked query."""
 
 import numpy as np
 import pytest
@@ -51,55 +51,19 @@ def test_ppm_truncated_header_raises_explicit():
             mm.decode_ppm(cut)
 
 
-def test_extract_features_df(spark):
-    m = mm.media_table(spark, SF)
-    feats = mm.extract_features_df(m, dim=8)
-    rows = feats.collect()
-    assert len(rows) == m.count()
-    for r in rows[:10]:
-        assert len(r["feature"]) == 8
-        assert 1 <= r["width"] <= 32 and 1 <= r["height"] <= 32
-        assert 0 <= r["mean_pixel_e6"] <= 255_000_000
-
-
-def test_resize_pooling_is_deterministic_and_shaped(spark):
-    m = mm.media_table(spark, SF).limit(50)
-    a = {r["doc_id"]: (r["checksum"], r["mean_pixel_e6"]) for r in mm.resize_images_df(m).collect()}
-    b = {r["doc_id"]: (r["checksum"], r["mean_pixel_e6"]) for r in mm.resize_images_df(m).collect()}
-    assert a == b and len(a) == 50
-    out = mm.resize_images_df(m, out_w=4, out_h=4).collect()
-    assert all(r["out_w"] == 4 and r["out_h"] == 4 for r in out)
-
-
-def test_frame_sampler_honors_the_catalyst_plan(spark):
-    # the mapInPandas sampler must decode exactly the frames the
-    # oracle-checked plan says (doc_id, frame_idx pairs equal)
-    m = mm.media_table(spark, SF).limit(100)
-    got = {(r["doc_id"], r["frame_idx"]) for r in mm.sample_frames_df(m).collect()}
-    plan = {
-        (r["doc_id"], r["frame_idx"])
-        for r in mm.q_mm_frame_plan(spark, SF).collect()
-        if r["doc_id"] in {x[0] for x in got}
-    }
-    assert got == plan
-    # frames of one video differ (the per-frame seed varies)
-    by_doc = {}
-    for r in mm.sample_frames_df(m).collect():
-        by_doc.setdefault(r["doc_id"], set()).add(r["mean_pixel_e6"])
-    multi = [v for v in by_doc.values() if len(v) > 1]
-    assert multi, "every sampled video produced identical frames"
-
-
 def test_feature_dims_match_metadata_query(spark):
-    feats = {
-        r["doc_id"]: (r["width"], r["height"])
-        for r in mm.extract_features_df(mm.media_table(spark, SF)).collect()
+    # the stub decoder and the Catalyst metadata query read the same
+    # header bytes: every doc decodes to the (height, width) the query
+    # derives without decoding
+    stub = {
+        r["doc_id"]: mm.decode_image_stub(bytes(r["payload"])).shape[:2]
+        for r in mm.media_table(spark, SF).collect()
     }
     meta = {
-        r["doc_id"]: (r["width"], r["height"])
+        r["doc_id"]: (r["height"], r["width"])
         for r in mm.q_mm_binary_meta(spark, SF).collect()
     }
-    assert feats == meta
+    assert stub == meta
 
 
 def test_ppm_encode_decode_roundtrip():

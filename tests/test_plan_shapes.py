@@ -66,7 +66,13 @@ def test_clean_manifest_drop_list_not_broadcast_hinted(spark):
 
 
 def test_simhash_pairs_is_banded_equi_join_not_cartesian(spark):
-    plan = _plan(dedup.q_dedup_simhash(spark, SF_DIR))
+    # The clustering edge feed bands exact-dup representatives and pairs
+    # them through the same banded hamming join as q_simhash48_pairs; its
+    # rep selection and star re-attachment must not bring back a
+    # nested-loop or Cartesian join either.
+    from crumble_spark.pipeline.dedup import _simhash48_edges
+
+    plan = _plan(_simhash48_edges(spark, SF_DIR, collapse_exact=True))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
