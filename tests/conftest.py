@@ -49,3 +49,29 @@ def record_kernel_slices(monkeypatch, bound):
 
     monkeypatch.setattr(encode, "encode_flat", spy)
     return calls
+
+
+def kernel_rows():
+    """Token rows that exercise every codec decision of the encode kernel:
+    seeded synth rows of every regime (lengths spanning many blocks at
+    every preset block size), a row of two randomly interleaved 4-token
+    grams (an FSST win), a one-token row, and three adversarial rows
+    for the dictionary planner's uniquing classes (unit runs over a wide
+    range, a narrow range in few runs, the full int32 span)."""
+    import numpy as np
+
+    from crumble_spark import synth
+
+    rng = np.random.default_rng(7)
+    rows = [
+        synth.gen_tokens(rng, regime, int(rng.integers(1, 12_000)))
+        for _ in range(4)
+        for regime in synth.REGIMES
+    ]
+    grams = [rng.integers(0, synth.VOCAB, 4), rng.integers(0, synth.VOCAB, 4)]
+    rows.append(np.concatenate([grams[int(rng.integers(0, 2))] for _ in range(1500)]))
+    rows.append(np.array([42], np.int32))
+    rows.append(np.arange(1000, dtype=np.int32) * 7919)
+    rows.append(np.repeat(np.arange(5, dtype=np.int32), 100))
+    rows.append(rng.integers(-(2**31), 2**31 - 1, 600).astype(np.int32))
+    return [np.asarray(r, np.int32) for r in rows]

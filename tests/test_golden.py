@@ -59,3 +59,31 @@ def test_golden_covers_most_codecs():
     # raw, constant, rle, dict, for, delta, tile (fsst needs larger blocks
     # than the 64-token golden uses; its format is pinned by unit tests)
     assert {0, 1, 2, 3, 4, 5, 7} <= used
+
+
+# sha256 over encode_flat's output for conftest.kernel_rows() at the
+# non-golden preset block sizes: every block's (block_id, codec_id, n,
+# payload) plus each row's bytes_out and row_hash.  Pins the kernel's
+# codec choices and bytes at the sizes the presets and the benchmark run.
+PRESET_DIGEST = "fb23a1de3c27a7972a8742f442cc0eb6f81cf4980951662c11f9f93943736fa0"
+
+
+def test_kernel_bytes_pinned_at_preset_block_sizes():
+    import hashlib
+    import struct
+
+    from conftest import kernel_rows
+    from crumble_spark.encode import encode_flat
+
+    rows = kernel_rows()
+    flat = np.concatenate(rows)
+    offsets = np.concatenate(([0], np.cumsum([len(r) for r in rows]))).astype(np.int64)
+    h = hashlib.sha256()
+    for block_size in (256, 1024, 4096):
+        blocks_per_row, bytes_out, row_hash = encode_flat(flat, offsets, block_size)
+        for blocks, bo, rh in zip(blocks_per_row, bytes_out.tolist(), row_hash.tolist()):
+            h.update(struct.pack("<qq", bo, rh))
+            for b in blocks:
+                h.update(struct.pack("<iBi", b["block_id"], b["codec_id"], b["n"]))
+                h.update(struct.pack("<i", len(b["payload"])) + b["payload"])
+    assert h.hexdigest() == PRESET_DIGEST
