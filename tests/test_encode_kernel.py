@@ -128,50 +128,65 @@ def test_encode_tokens_block_structure():
     assert h == rh
 
 
-def test_batched_slow_path_matches_per_block_choose():
-    # encode_flat's _batch_slow_plans must reproduce the per-block
-    # cost.choose decision AND payload bytes exactly, for every regime
-    # and for blocks that straddle the narrow/unit/general uniquing
-    # classes — this is the direct equivalence pin for the r3 batching
-    import numpy as np
+def _brute_force_choice(a):
+    """The cheapest standalone encoding of block `a` by (bytes, codec id),
+    from trial encodes of every candidate: RAW, RLE, FOR_BP, DELTA_BP, the
+    full dictionary and every power-of-two top-k + escape dictionary (in
+    dictionary.plan's order, so equal-size plans resolve as it does).
+    Two rules of the kernel's are kept: a constant block is CONSTANT (it
+    is routed before any sizing, so a one-token block is CONSTANT although
+    RAW ties it at 4 bytes), and DICT competes only while its 2-entry
+    lower bound is strictly below the cheapest other codec (at an exact
+    tie on that bound the cheap codec keeps the block)."""
+    from crumble_spark import codecs
+    from crumble_spark.codecs import dictionary
 
-    from crumble_spark import cost, synth
+    if a.min() == a.max():
+        return codecs.CONSTANT, codecs.encode(codecs.CONSTANT, a)
+    cheap = [(cid, codecs.encode(cid, a))
+             for cid in (codecs.RAW, codecs.RLE, codecs.FOR_BP, codecs.DELTA_BP)]
+    cands = sorted(cheap, key=lambda c: (len(c[1]), c[0]))[:1]
+    if dictionary.full_size(2, len(a)) < len(cands[0][1]):
+        card = len(np.unique(a))
+        if card <= dictionary.MAX_TABLE:
+            cands.append((codecs.DICT, dictionary.encode(a, card, False)))
+        k = 1
+        while k < min(card, dictionary.MAX_TABLE):
+            cands.append((codecs.DICT, dictionary.encode(a, k, True)))
+            k <<= 1
+    return min(cands, key=lambda c: (len(c[1]), c[0]))
+
+
+@pytest.mark.parametrize("block_size", [64, 256, 1024, 4096])
+def test_kernel_choice_matches_brute_force_reference(block_size):
+    # every block encode_flat emits is the exhaustive argmin over the
+    # standalone encoders — the check on the vectorised sizing and the
+    # batch dictionary planner — unless a periodic trial (TILE, FSST)
+    # beat that argmin strictly
+    from conftest import kernel_rows
+    from crumble_spark import codecs
     from crumble_spark.encode import encode_flat
 
-    rng = np.random.default_rng(7)
-    arrs = []
-    for i in range(120):
-        regime = synth.REGIMES[i % len(synth.REGIMES)]
-        arrs.append(synth.gen_tokens(rng, regime, int(rng.integers(8, 1500))).astype(np.int32))
-    # adversarial extremes for the class split
-    arrs.append(np.arange(1000, dtype=np.int32) * 7919)          # unit runs, wide range
-    arrs.append(np.repeat(np.arange(5, dtype=np.int32), 100))     # narrow, few runs
-    arrs.append(rng.integers(-(2**31), 2**31 - 1, 600).astype(np.int32))  # full int32 span
-    flat = np.concatenate(arrs)
-    offsets = np.concatenate(([0], np.cumsum([len(a) for a in arrs]))).astype(np.int64)
-
-    from crumble_spark import codecs
-
-    for block_size in (64, 512, 4096):
-        blocks_per_row, _, _ = encode_flat(flat, offsets, block_size)
-        for row, a in enumerate(arrs):
-            for b in blocks_per_row[row]:
-                s = b["block_id"] * block_size
-                chunk = a[s : s + block_size]
-                cid, payload = cost.choose(chunk)
-                if (cid, payload) != (b["codec_id"], b["payload"]):
-                    # the ONE documented divergence: exact size ties may
-                    # pick different codec ids (encode_flat routes
-                    # constant blocks before the argmin) — sizes must
-                    # tie and both must invert bit-identically
-                    assert len(payload) == len(b["payload"]), (
-                        row, b["block_id"], block_size, cid, b["codec_id"])
-                    np.testing.assert_array_equal(
-                        codecs.decode(b["codec_id"], b["payload"], b["n"]), chunk
-                    )
-                    np.testing.assert_array_equal(
-                        codecs.decode(cid, payload, len(chunk)), chunk
-                    )
+    rows = kernel_rows()
+    flat = np.concatenate(rows)
+    offsets = np.concatenate(([0], np.cumsum([len(r) for r in rows]))).astype(np.int64)
+    blocks_per_row, _, _ = encode_flat(flat, offsets, block_size)
+    trial_wins = 0
+    for row, a in enumerate(rows):
+        for b in blocks_per_row[row]:
+            s = b["block_id"] * block_size
+            chunk = a[s : s + block_size]
+            cid, payload = _brute_force_choice(chunk)
+            where = (row, b["block_id"], b["codec_id"], cid)
+            if b["codec_id"] in (codecs.TILE, codecs.FSST):
+                trial_wins += 1
+                assert len(b["payload"]) < len(payload), where
+                np.testing.assert_array_equal(
+                    codecs.decode(b["codec_id"], b["payload"], b["n"]), chunk
+                )
+            else:
+                assert (b["codec_id"], b["payload"]) == (cid, payload), where
+    assert trial_wins  # the inputs exercise the periodic trials
 
 
 def test_split_counters_match_per_row_sums():
