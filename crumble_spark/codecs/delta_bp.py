@@ -41,7 +41,3 @@ def decode(buf: bytes, n: int) -> np.ndarray:
         np.cumsum(deltas, out=out[1:])
         out[1:] += first
     return out.astype(np.int32)
-
-
-def size(n: int, max_zigzag: int) -> int:
-    return _HDR.size + ((n - 1) * bitpack.width_for(max_zigzag) + 7) // 8

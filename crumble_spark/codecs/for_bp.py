@@ -37,7 +37,3 @@ def decode(buf: bytes, n: int) -> np.ndarray:
     vmin, width = _HDR.unpack_from(buf, 0)
     vals = bitpack.unpack(buf[_HDR.size :], n, width).astype(np.int64) + vmin
     return vals.astype(np.int32)
-
-
-def size(n: int, vrange: int) -> int:
-    return _HDR.size + (n * bitpack.width_for(vrange) + 7) // 8

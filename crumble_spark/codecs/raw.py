@@ -16,7 +16,3 @@ def encode(arr: np.ndarray) -> bytes:
 
 def decode(buf: bytes, n: int) -> np.ndarray:
     return np.frombuffer(buf, dtype="<i4", count=n).astype(np.int32, copy=False)
-
-
-def size(n: int) -> int:
-    return 4 * n

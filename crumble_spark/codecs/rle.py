@@ -58,10 +58,3 @@ def decode(buf: bytes, n: int) -> np.ndarray:
     off += vbytes
     lengths = bitpack.unpack(buf[off:], n_runs, lwidth).astype(np.int64) + 1
     return np.repeat(values, lengths).astype(np.int32)
-
-
-def size(n_runs: int, vrange: int, max_len: int) -> int:
-    """Exact encoded size from stats (no trial encode needed)."""
-    vwidth = bitpack.width_for(vrange)
-    lwidth = bitpack.width_for(max_len - 1)
-    return _HDR.size + (n_runs * vwidth + 7) // 8 + (n_runs * lwidth + 7) // 8

@@ -23,6 +23,11 @@ from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, cost, hashing, lineage
 from . import codecs as codecs_mod
+from .codecs import constant as constant_mod
+from .codecs import delta_bp as delta_mod
+from .codecs import dictionary as dict_mod
+from .codecs import for_bp as for_mod
+from .codecs import rle as rle_mod
 from .schema import ENCODED_SCHEMA, PA_BLOCK, PA_ENCODED
 
 # the fused loop hashes (and stores RAW payloads from) chunk.tobytes() in
@@ -60,15 +65,14 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
     """Whole-batch uniquing + dictionary planning for every slow-path
     block at once.
 
-    Blocks are split into the SAME three classes as
-    stats._materialize_counts — narrow value range (bincount), unit runs
-    (plain sort; all weights 1), general (argsort + segmented sum) — so
-    every block's (values, counts) are computed by the same algorithm it
-    would have used per-block, just batched: one global bincount with
-    per-block key offsets, one direct sort / argsort of a combined
-    (block_rank << 33 | value-vmin) key.  The dict plan (top-k powers of
-    two + escape, dictionary.plan) is then evaluated once per k over
-    vectors; descending-count prefix sums come from only the counts > 1
+    Each block's run values are uniqued (weighted by run length) by the
+    cheapest of three algorithms for its class — narrow value range
+    (bincount), unit runs (plain sort; all weights 1), general (argsort +
+    segmented sum) — each batched over its class: one global bincount
+    with per-block key offsets, one direct sort / argsort of a combined
+    (block_rank << 33 | value-vmin) key.  The dict plan (the full table,
+    or top-k powers of two + escape, as dictionary.plan picks it) is then
+    evaluated once per k over vectors; descending-count prefix sums come from only the counts > 1
     (few by construction: low-card blocks have few distinct values,
     high-entropy blocks have few duplicates), with the run of trailing
     1-counts handled arithmetically.
@@ -77,8 +81,6 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
     class id, slice start/end into that class's arrays, plan k /
     use_escape / exact size).
     """
-    from .codecs.dictionary import MAX_TABLE as _DICT_MAX
-
     n_slow = len(slow_sel)
     nruns = (rb_end - rb)[slow_sel]
     vr = (vmax - vmin)[slow_sel]
@@ -88,6 +90,7 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
     rest = ~narrow & ~unit
     _SHIFT = np.int64(33)  # value - vmin < 2^33 for any int32 block
     _BIG = np.int64(1) << 62
+    esc_hdr = dict_mod._HDR.size + dict_mod._ESC.size
 
     vals_by_class: list = [None, None, None]
     cnts_by_class: list = [None, None, None]
@@ -126,19 +129,19 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
         bend = np.concatenate((bstart[1:], [len(bcnt_s)]))
         nbig = bend - bstart
         bcum = np.concatenate(([0], np.cumsum(bcnt_s)))
-        full_sz = 4 + 4 * card + (n * _widths(card - 1) + 7) // 8
-        best_sz = np.where(card <= _DICT_MAX, full_sz, _BIG)
+        full_sz = dict_mod._HDR.size + 4 * card + (n * _widths(card - 1) + 7) // 8
+        best_sz = np.where(card <= dict_mod.MAX_TABLE, full_sz, _BIG)
         best_k = card.astype(np.int64)
         best_esc = np.zeros(nblk, bool)
         k = 1
-        while k < _DICT_MAX:
-            kmask = (card > 1) & (k < np.minimum(card, _DICT_MAX))
+        while k < dict_mod.MAX_TABLE:
+            kmask = (card > 1) & (k < np.minimum(card, dict_mod.MAX_TABLE))
             topk = (
                 bcum[bstart + np.minimum(k, nbig)]
                 - bcum[bstart]
                 + np.maximum(0, k - nbig)
             )
-            sz = 8 + 4 * k + (n * int(k).bit_length() + 7) // 8 + 4 * (n - topk)
+            sz = esc_hdr + 4 * k + (n * int(k).bit_length() + 7) // 8 + 4 * (n - topk)
             upd = kmask & (sz < best_sz)
             best_k = np.where(upd, k, best_k)
             best_esc = np.where(upd, True, best_esc)
@@ -229,7 +232,9 @@ def encode_flat(
     the flat buffer — per-block Python work only remains where the
     dictionary or periodic candidates are genuinely in play (crumble's
     cheap-stats-gate-expensive-analysis, applied to the batch dimension).
-    Choices are identical to cost.choose modulo exact-tie ordering.
+    This is the one codec chooser: each block gets the cheapest candidate
+    by (bytes, codec id), a constant block is CONSTANT, and slow blocks
+    finish in cost.choose_with_stats (dictionary, periodic trials).
     """
     offsets = np.asarray(offsets, dtype=np.int64)
     base = int(offsets[0])
@@ -279,21 +284,22 @@ def encode_flat(
         zz = np.zeros(0, np.int64)
         zzmax = np.zeros(total, np.int64)
 
+    # each codec's exact size in closed form, headers from its layout
     sz_raw = 4 * blen
-    sz_for = 9 + (blen * _widths(vmax - vmin) + 7) // 8
+    sz_for = for_mod._HDR.size + (blen * _widths(vmax - vmin) + 7) // 8
     sz_rle = (
-        14
+        rle_mod._HDR.size
         + (n_runs * _widths(run_vmax - run_vmin) + 7) // 8
         + (n_runs * _widths(max_run - 1) + 7) // 8
     )
-    sz_delta = 5 + ((blen - 1) * _widths(zzmax) + 7) // 8
-    # codec-id order so argmin tie-breaks match cost.choose's (size, id)
+    sz_delta = delta_mod._HDR.size + ((blen - 1) * _widths(zzmax) + 7) // 8
+    # codec-id order, so argmin breaks ties by (size, id)
     size_matrix = np.stack([sz_raw, sz_rle, sz_for, sz_delta])
     cheap_ids = np.array([0, 2, 4, 5], dtype=np.int64)[np.argmin(size_matrix, axis=0)]
     best_cheap = size_matrix.min(axis=0)
 
     const_mask = vmin == vmax
-    dict_lb = 12 + (blen + 7) // 8
+    dict_lb = dict_mod.full_size(2, 0) + (blen + 7) // 8  # full_size(2, blen)
     slow_mask = (~const_mask) & ((dict_lb < best_cheap) | (best_cheap * 8 > blen))
 
     rb_end = np.concatenate((rb[1:], [len(all_starts)]))
@@ -302,9 +308,7 @@ def encode_flat(
     # descending-count planning and the power-of-two dict plan were the
     # dominant per-block Python cost (~7k of 16k blocks on the mixed
     # corpus take this path).  _batch_slow_plans computes all of it in a
-    # handful of whole-batch numpy ops, class-split exactly like
-    # stats._materialize_counts so each block pays the same algorithm it
-    # would have per-block — byte-identical output, golden-pinned.
+    # handful of whole-batch numpy ops.
     slow_sel = np.flatnonzero(slow_mask & ~force_raw[block_row])
     if len(slow_sel):
         slow_batch = _batch_slow_plans(
@@ -315,11 +319,6 @@ def encode_flat(
         slow_pos_l = slow_pos.tolist()
         (sb_vals, sb_cnts, sb_grp_l, sb_ds_l, sb_de_l,
          sb_k_l, sb_esc_l, sb_sz_l) = slow_batch
-    from . import stats as stats_mod  # local import avoids a cycle
-    from .codecs import constant as constant_mod
-    from .codecs import delta_bp as delta_mod
-    from .codecs import for_bp as for_mod
-    from .codecs import rle as rle_mod
 
     # interpreter-cost discipline: at small blocks the per-block Python
     # work dominates, so (a) every per-block scalar is pre-converted to a
@@ -334,6 +333,7 @@ def encode_flat(
         np.where(const_mask, 1, np.where(slow_mask, 3, cheap_ids + 4)),
     ).tolist()
     best_cheap_l = best_cheap.tolist()
+    cheap_ids_l = cheap_ids.tolist()
     bstart_l = bstart.tolist()
     blen_l = blen.tolist()
     block_row_l = block_row.tolist()
@@ -381,23 +381,12 @@ def encode_flat(
             cid, payload = CONSTANT, constant_mod.encode(chunk)
         else:  # slow path: dict / fsst / tile candidates in play
             sp = slow_pos_l[b]
-            st = stats_mod.BlockStats(
-                n=n_b,
-                vmin=vmin_l[b],
-                vmax=int(vmax[b]),
-                n_runs=int(n_runs[b]),
-                run_vrange=int(run_vmax[b]) - rvmin_l[b],
-                max_run_len=int(max_run[b]),
-                max_zigzag=int(zzmax[b]),
-                _rvals=rvals[rb_l[b] : rb_end_l[b]],
-                _lengths=seg_len[rb_l[b] : rb_end_l[b]],
-                # batch-derived uniquing + dict plan (byte-identical to the
-                # per-block derivation; see _batch_slow_plans)
-                _values=sb_vals[sb_grp_l[sp]][sb_ds_l[sp] : sb_de_l[sp]],
-                _counts=sb_cnts[sb_grp_l[sp]][sb_ds_l[sp] : sb_de_l[sp]],
-                _dict_plan=(sb_k_l[sp], sb_esc_l[sp], sb_sz_l[sp]),
+            g, ds, de = sb_grp_l[sp], sb_ds_l[sp], sb_de_l[sp]
+            cid, payload = cost.choose_with_stats(
+                chunk, cheap_ids_l[b], best_cheap_l[b],
+                (sb_k_l[sp], sb_esc_l[sp], sb_sz_l[sp]),
+                sb_vals[g][ds:de], sb_cnts[g][ds:de],
             )
-            cid, payload = cost.choose_with_stats(chunk, st)
         if c >= 4 and len(payload) != best_cheap_l[b]:
             # the vectorized sizing (reduceat stats + _widths) and the
             # emitted encode_pre bytes must never disagree — the cheap-path

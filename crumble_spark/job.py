@@ -113,7 +113,10 @@ def run_encode_job(
     without lineage rows (a run that died after its data commit, before
     or inside its lineage write).  When the done splits cover every
     split id below n_splits, no doc is left to encode: it returns their
-    summary and runs no job past the lineage read.  resume=False
+    summary and runs no job past the lineage read.  Otherwise it scans
+    the input, even when every split that held a doc is done: a doc
+    added to the input since may route to a split id without a done
+    row, and only the scan finds it.  resume=False
     replaces the store: it deletes encoded/ and lineage/ first.  Run ids
     starting with STREAM_RUN_PREFIX belong to encode_stream and are
     refused.  One writer per out_dir at a time.

@@ -5,8 +5,10 @@ snp_score.c:1443-1463): rows whose (source, doc_id) fall inside any
 range of a small keep table are emitted verbatim (codec 0), e.g. a
 golden evaluation corpus that must stay byte-inspectable.
 
-The keep table is tiny → broadcast range join, no shuffle of the big
-side; the flag rides into the encode kernel as a bool column.
+The keep table is tiny, so it is collected and applied as one row
+predicate: no join, so every input row comes out exactly once (a
+repeated doc_id is neither multiplied nor flagged by another source's
+range); the flag rides into the encode kernel as a bool column.
 """
 
 from __future__ import annotations
@@ -19,21 +21,11 @@ KEEP_SCHEMA = "source string, doc_lo string, doc_hi string"
 
 def with_force_raw(df: DataFrame, keep: DataFrame) -> DataFrame:
     """Mark rows covered by any keep range. keep: (source, doc_lo, doc_hi)."""
-    k = keep.select(
-        F.col("source").alias("_k_source"),
-        F.col("doc_lo").alias("_k_lo"),
-        F.col("doc_hi").alias("_k_hi"),
-    )
-    cond = (
-        (F.col("source") == F.col("_k_source"))
-        & (F.col("doc_id") >= F.col("_k_lo"))
-        & (F.col("doc_id") <= F.col("_k_hi"))
-    )
-    hit = (
-        df.join(F.broadcast(k), cond, "left_semi")
-        .select("doc_id")
-        .withColumn("force_raw", F.lit(True))
-    )
-    return df.join(hit, "doc_id", "left").withColumn(
-        "force_raw", F.coalesce(F.col("force_raw"), F.lit(False))
-    )
+    hit = F.lit(False)
+    for r in keep.select("source", "doc_lo", "doc_hi").collect():
+        hit = hit | (
+            (F.col("source") == F.lit(r["source"]))
+            & F.col("doc_id").between(F.lit(r["doc_lo"]), F.lit(r["doc_hi"]))
+        )
+    # a null source, doc_id or bound matches no range
+    return df.withColumn("force_raw", F.coalesce(hit, F.lit(False)))

@@ -37,6 +37,7 @@ from __future__ import annotations
 import os
 import uuid
 from collections.abc import Iterator
+from urllib.parse import quote
 
 import numpy as np
 import pyarrow as pa
@@ -114,8 +115,11 @@ def list_input_splits_distributed(
     return sorted((r["path"], r["rg"]) for r in rows)
 
 
-def _split_name(path: str, rg: int) -> str:
-    return f"{os.path.basename(path)}:rg{rg}"
+def _split_name(path: str, rg: int, root: str) -> str:
+    """An input split's lineage key: its file's path below the listed
+    `root` (nested inputs, e.g. hive-style source=a/part-0.parquet and
+    source=b/part-0.parquet, may share a basename) and its row group."""
+    return f"{os.path.relpath(path, root)}:rg{rg}"
 
 
 def _split_batch(splits: list[tuple[str, int]]) -> pa.RecordBatch:
@@ -172,13 +176,15 @@ def _row_group_ends(sizes: np.ndarray) -> list[int]:
 
 
 def _encode_split(
-    path: str, rg: int, out_dir: str, block_size: int, n_splits: int, run_id: str
+    path: str, rg: int, out_dir: str, block_size: int, n_splits: int, run_id: str,
+    in_path: str,
 ) -> dict:
-    """Encode one input split into {out_dir}/encoded, then publish its
-    lineage record into {out_dir}/lineage_direct; returns that record.
-    Data goes first, so every split with a record has its data."""
+    """Encode one input split of the listing of `in_path` into
+    {out_dir}/encoded, then publish its lineage record into
+    {out_dir}/lineage_direct; returns that record.  Data goes first, so
+    every split with a record has its data."""
     _pin_arrow_single_thread()
-    name = _split_name(path, rg)
+    name = _split_name(path, rg, in_path)
     total = np.zeros(lineage.N_COUNTERS, np.int64)
     out_batches = []
     for batch in _read_split(path, rg, ["doc_id", "tokens", "source"]):
@@ -188,7 +194,10 @@ def _encode_split(
             raise ValueError(f"{name}: {e}") from e
         total += sum(counters.values())  # the input split is the lineage key
         out_batches.append(out)
-    stem = name.replace(":", "-")
+    # percent-escaping keeps nested keys distinct as one flat file name
+    # (a flat input's name has nothing to escape and stays as it is)
+    rel, rg_tag = name.rsplit(":", 1)
+    stem = f"{quote(rel, safe='')}-{rg_tag}"
     table = pa.Table.from_batches(out_batches, schema=PA_ENCODED).sort_by("split_id")
     ends = _row_group_ends(table.column("bytes_out").to_numpy())
     _publish(os.path.join(out_dir, "encoded", f"enc-{stem}.parquet"), PA_ENCODED,
@@ -237,7 +246,7 @@ def encode_job_direct(
     splits = list_input_splits_distributed(spark, in_path)
     done = lineage.done_rows(spark, lin_dir) if resume else []
     names = {r["split"] for r in done}
-    splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in names]
+    splits = [(f, rg) for f, rg in splits if _split_name(f, rg, in_path) not in names]
     rows = []
     if splits:
         # stores from the throughput path must be self-describing too, or
@@ -250,7 +259,7 @@ def encode_job_direct(
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for b in batches:
                 recs = [
-                    _encode_split(p, g, out_dir, block_size, n_splits, run_id)
+                    _encode_split(p, g, out_dir, block_size, n_splits, run_id, in_path)
                     for p, g in zip(b.column("path").to_pylist(), b.column("rg").to_pylist())
                 ]
                 if recs:
@@ -278,7 +287,7 @@ def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
                     try:
                         values, _ = decode_record_batch(batch, verify=True)
                     except ValueError as e:
-                        raise ValueError(f"{_split_name(path, rg)}: {e}") from e
+                        raise ValueError(f"{_split_name(path, rg, enc_dir)}: {e}") from e
                     n_rows += batch.num_rows
                     n_tokens += len(values)
         yield pa.RecordBatch.from_pydict({"n_rows": [n_rows], "n_tokens": [n_tokens]})

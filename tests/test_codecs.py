@@ -53,6 +53,8 @@ def test_choose_roundtrips_and_never_beats_raw(name):
 
 def test_choose_picks_expected_codecs():
     assert cost.choose(CASES["constant"])[0] == codecs.CONSTANT
+    # one token is a constant block: CONSTANT, although RAW ties it at 4 bytes
+    assert cost.choose(CASES["single"])[0] == codecs.CONSTANT
     assert cost.choose(CASES["runs"])[0] == codecs.RLE
     assert cost.choose(CASES["narrow_range"])[0] == codecs.FOR_BP
     assert cost.choose(CASES["monotone"])[0] == codecs.DELTA_BP

@@ -128,7 +128,7 @@ def test_direct_rejects_out_of_range_int64_tokens(tmp_path):
     f = str(tmp_path / "bad.parquet")
     pq.write_table(bad, f)
     with pytest.raises(ValueError, match="contract violation"):
-        direct._encode_split(f, 0, _store(tmp_path), 256, 16, "r1")
+        direct._encode_split(f, 0, _store(tmp_path), 256, 16, "r1", str(tmp_path))
 
 
 def test_direct_accepts_in_range_int64_tokens(tmp_path):
@@ -146,7 +146,7 @@ def test_direct_accepts_in_range_int64_tokens(tmp_path):
     )
     f = str(tmp_path / "ok.parquet")
     pq.write_table(ok, f)
-    row = direct._encode_split(f, 0, _store(tmp_path), 256, 16, "r1")
+    row = direct._encode_split(f, 0, _store(tmp_path), 256, 16, "r1", str(tmp_path))
     assert row["status"] == "done" and row["n_rows"] == 1
 
 
@@ -277,12 +277,14 @@ def test_direct_split_bounds_kernel_slices(tmp_path, monkeypatch):
         ),
         f,
     )
-    want = direct._encode_split(f, 0, _store(tmp_path / "unbounded"), 256, 16, "r1")
+    want = direct._encode_split(f, 0, _store(tmp_path / "unbounded"), 256, 16, "r1",
+                                str(tmp_path))
 
     bound = 2000
     assert sum(lens) > bound
     calls = record_kernel_slices(monkeypatch, bound)
-    got = direct._encode_split(f, 0, _store(tmp_path / "bounded"), 256, 16, "r1")
+    got = direct._encode_split(f, 0, _store(tmp_path / "bounded"), 256, 16, "r1",
+                               str(tmp_path))
 
     assert len(calls) > 1 and sum(r for r, _ in calls) == len(lens)
     for rows, n_tok in calls:
@@ -433,7 +435,7 @@ def test_hidden_tmp_leftovers_are_invisible(spark, tok_dir, tmp_path, monkeypatc
     for sub in ("lineage_direct", "encoded"):
         monkeypatch.setattr(direct.pq, "ParquetWriter", killed_in(sub))
         with pytest.raises(RuntimeError, match="task killed"):
-            direct._encode_split(f, rg, out, 256, 16, "killed")
+            direct._encode_split(f, rg, out, 256, 16, "killed", tok_dir)
     monkeypatch.setattr(direct.pq, "ParquetWriter", writer)
     tmps = [n for d in ("encoded", "lineage_direct") for n in os.listdir(f"{out}/{d}")
             if n.endswith(".tmp")]
@@ -496,7 +498,8 @@ def test_direct_crash_resumes_only_unfinished_splits(spark, tmp_path):
         by_run.setdefault(r["run_id"], set()).add(r["split"])
     assert by_run.pop(run1) == split1
     (split2,) = by_run.values()
-    all_splits = {direct._split_name(f, rg) for f, rg in direct.list_input_splits(str(inp))}
+    all_splits = {direct._split_name(f, rg, str(inp))
+                  for f, rg in direct.list_input_splits(str(inp))}
     assert split1.isdisjoint(split2) and split1 | split2 == all_splits
     assert "poison.parquet:rg0" in split2
     for f, t in mtimes.items():  # run 2 rewrote none of run 1's files
@@ -571,3 +574,25 @@ def test_direct_resume_refuses_a_job_store(spark, tmp_path):
     with pytest.raises(ValueError, match="job or stream store"):
         direct.encode_job_direct(spark, tok, out, block_size=256, n_splits=16)
     assert _tree(out) == before
+
+
+def test_direct_keeps_input_files_that_share_a_basename(spark, tmp_path):
+    # hive-style nested input: source=a/part-00000.parquet and
+    # source=b/part-00000.parquet are two splits with a data file and a
+    # lineage record each, not one name written twice
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    for s in ("a", "b"):
+        (inp / f"source={s}").mkdir(parents=True)
+        _doc_file(inp / f"source={s}" / "part-00000.parquet",
+                  [(f"{s}-{j}", list(range(j, j + 50))) for j in range(20)])
+    lin = direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16).collect()
+    assert sorted((r["split"], r["n_rows"]) for r in lin) == [
+        ("source=a/part-00000.parquet:rg0", 20), ("source=b/part-00000.parquet:rg0", 20)
+    ]
+    assert direct.decode_verify_direct(spark, f"{out}/encoded")["rows"] == 40
+    stored = spark.read.parquet(f"{out}/encoded").select("doc_id").collect()
+    assert len({r["doc_id"] for r in stored}) == len(stored) == 40
+    # the resume finds both records and encodes nothing
+    lin2 = direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16).collect()
+    key = lambda rows: sorted((r["split"], r["run_id"], r["checksum"]) for r in rows)
+    assert key(lin2) == key(lin)

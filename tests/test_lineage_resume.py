@@ -304,6 +304,29 @@ def test_resume_with_every_split_done_runs_no_job_past_the_lineage_read(spark, t
     assert {**s2, "run_id": "r1"} == s1
 
 
+def test_resume_encodes_a_new_doc_of_a_split_that_held_none(spark, tmp_path):
+    # a resume whose done splits miss some split ids must still scan the
+    # input: a doc added since may route to a split without a done row
+    import zlib
+
+    from crumble_spark import lookup
+
+    out = str(tmp_path / "new_doc")
+    cfg = EncodeConfig(block_size=256, n_splits=64)
+    df = synth.synth_table(spark, n_rows=50, seed=8, mean_len=100, parts=2)
+    s1 = run_encode_job(spark, df, out, run_id="r1", cfg=cfg, resume=False)
+    held = {int(r["split"]) for r in lineage.done_rows(spark, f"{out}/lineage")}
+    assert s1["splits"] == len(held) < 64
+    new_id = next(d for d in (f"new-{i}" for i in range(1000))
+                  if zlib.crc32(d.encode()) % 64 not in held)
+    new = spark.createDataFrame([(new_id, [7, 8, 9], 3, "web")], df.schema)
+    s2 = run_encode_job(spark, df.unionByName(new), out, run_id="r2", cfg=cfg)
+    assert s2["splits"] == s1["splits"] + 1 and s2["rows"] == 51
+    (hit,) = lookup.decode_docs(spark, f"{out}/encoded", [new_id]).collect()
+    assert list(hit["tokens"]) == [7, 8, 9]
+    assert spark.read.parquet(f"{out}/encoded").count() == 51
+
+
 def _files(root):
     """{path: mtime_ns} of every file under root."""
     import os

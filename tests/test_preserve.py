@@ -40,3 +40,31 @@ def test_keep_ranges_force_raw(spark):
     got = {r["doc_id"]: r["tokens"] for r in dec.collect()}
     want = {r["doc_id"]: r["tokens"] for r in df.collect()}
     assert got == want
+
+
+def test_force_raw_keeps_every_row_once(spark):
+    # a doc_id repeated inside a keep range stays as many rows as it came
+    # in, every copy flagged; the same doc_id under another source is not
+    # in the range; and the plan joins nothing
+    rows = [
+        ("web-1", [1, 2], 2, "web"),
+        ("web-1", [3, 4], 2, "web"),
+        ("web-1", [5], 1, "code"),
+        ("web-2", [6], 1, "web"),
+        ("web-9", [7], 1, "web"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    keep = spark.createDataFrame(
+        [("web", "web-0", "web-5"), ("chat", "a", "z")], schema=KEEP_SCHEMA
+    )
+    marked = with_force_raw(df, keep)
+    got = sorted((r["doc_id"], r["source"], r["n_tok"], r["force_raw"]) for r in marked.collect())
+    assert got == [
+        ("web-1", "code", 1, False),
+        ("web-1", "web", 2, True),
+        ("web-1", "web", 2, True),
+        ("web-2", "web", 1, True),
+        ("web-9", "web", 1, False),
+    ]
+    plan = marked._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
