@@ -72,10 +72,10 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
     with per-block key offsets, one direct sort / argsort of a combined
     (block_rank << 33 | value-vmin) key.  The dict plan (the full table,
     or top-k powers of two + escape, as dictionary.plan picks it) is then
-    evaluated once per k over vectors; descending-count prefix sums come from only the counts > 1
-    (few by construction: low-card blocks have few distinct values,
-    high-entropy blocks have few duplicates), with the run of trailing
-    1-counts handled arithmetically.
+    evaluated once per k over vectors; descending-count prefix sums come
+    from only the counts > 1 (few by construction: low-card blocks have
+    few distinct values, high-entropy blocks have few duplicates), with
+    the run of trailing 1-counts handled arithmetically.
 
     Returns (vals_by_class, cnts_by_class, and per-slow-block lists:
     class id, slice start/end into that class's arrays, plan k /

@@ -194,8 +194,8 @@ def _encode_split(
             raise ValueError(f"{name}: {e}") from e
         total += sum(counters.values())  # the input split is the lineage key
         out_batches.append(out)
-    # percent-escaping keeps nested keys distinct as one flat file name
-    # (a flat input's name has nothing to escape and stays as it is)
+    # percent-escaping keeps nested keys distinct as one flat file name;
+    # a plain file name ([A-Za-z0-9_.~-]) has nothing to escape
     rel, rg_tag = name.rsplit(":", 1)
     stem = f"{quote(rel, safe='')}-{rg_tag}"
     table = pa.Table.from_batches(out_batches, schema=PA_ENCODED).sort_by("split_id")
