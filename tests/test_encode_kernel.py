@@ -6,10 +6,11 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from conftest import record_kernel_slices
-from crumble_spark import hashing
+from conftest import kernel_rows, record_kernel_slices
+from crumble_spark import codecs, hashing
+from crumble_spark.codecs import dictionary
 from crumble_spark.decode import decode_blocks, decode_record_batch
-from crumble_spark.encode import encode_record_batch, encode_tokens
+from crumble_spark.encode import encode_flat, encode_record_batch, encode_tokens
 
 
 def _batch(rows):
@@ -138,9 +139,6 @@ def _brute_force_choice(a):
     RAW ties it at 4 bytes), and DICT competes only while its 2-entry
     lower bound is strictly below the cheapest other codec (at an exact
     tie on that bound the cheap codec keeps the block)."""
-    from crumble_spark import codecs
-    from crumble_spark.codecs import dictionary
-
     if a.min() == a.max():
         return codecs.CONSTANT, codecs.encode(codecs.CONSTANT, a)
     cheap = [(cid, codecs.encode(cid, a))
@@ -163,10 +161,6 @@ def test_kernel_choice_matches_brute_force_reference(block_size):
     # standalone encoders — the check on the vectorised sizing and the
     # batch dictionary planner — unless a periodic trial (TILE, FSST)
     # beat that argmin strictly
-    from conftest import kernel_rows
-    from crumble_spark import codecs
-    from crumble_spark.encode import encode_flat
-
     rows = kernel_rows()
     flat = np.concatenate(rows)
     offsets = np.concatenate(([0], np.cumsum([len(r) for r in rows]))).astype(np.int64)

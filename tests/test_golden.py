@@ -5,14 +5,17 @@ tests/golden_seed42.json (see git history for the generator) and bump a
 codec id instead of mutating an existing format.
 """
 
+import hashlib
 import json
 import os
+import struct
 
 import numpy as np
+from conftest import kernel_rows
 
 from crumble_spark import synth
 from crumble_spark.decode import decode_blocks
-from crumble_spark.encode import encode_tokens
+from crumble_spark.encode import encode_flat, encode_tokens
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden_seed42.json")
 
@@ -69,12 +72,6 @@ PRESET_DIGEST = "fb23a1de3c27a7972a8742f442cc0eb6f81cf4980951662c11f9f93943736fa
 
 
 def test_kernel_bytes_pinned_at_preset_block_sizes():
-    import hashlib
-    import struct
-
-    from conftest import kernel_rows
-    from crumble_spark.encode import encode_flat
-
     rows = kernel_rows()
     flat = np.concatenate(rows)
     offsets = np.concatenate(([0], np.cumsum([len(r) for r in rows]))).astype(np.int64)
