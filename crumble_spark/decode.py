@@ -5,13 +5,12 @@ snp_score.c:2021-2026); we hard-error when a row's decoded bytes hash
 differently from the hash taken at encode time — verification as an
 operator, not only a test.
 
-decode_df (via mapInArrow), the direct decode-verify job and the one-row
+decode_df (via mapInArrow), the driver-side point lookup
+(lookup.decode_docs), the direct decode-verify job and the one-row
 decode_blocks all run one zero-copy walker over the Arrow payload buffers.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -71,18 +70,22 @@ def decode_blocks(blocks, verify: bool = False):
     return (values, hashes[0]) if verify else values
 
 
-def decode_df(df: DataFrame, verify: bool = True) -> DataFrame:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            values, offsets = decode_record_batch(batch, verify)
-            yield pa.record_batch(
-                [
-                    batch.column("doc_id").cast(pa.string()),
-                    pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values),
-                    batch.column("n_tok").cast(pa.int32()),
-                    batch.column("source").cast(pa.string()),
-                ],
-                schema=PA_TOKENS,
-            )
+def decode_to_tokens(batch: pa.RecordBatch, verify: bool = True) -> pa.RecordBatch:
+    """Encoded Arrow batch → PA_TOKENS batch (doc_id, tokens, n_tok,
+    source), through decode_record_batch."""
+    values, offsets = decode_record_batch(batch, verify)
+    return pa.record_batch(
+        [
+            batch.column("doc_id").cast(pa.string()),
+            pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values),
+            batch.column("n_tok").cast(pa.int32()),
+            batch.column("source").cast(pa.string()),
+        ],
+        schema=PA_TOKENS,
+    )
 
-    return df.mapInArrow(fn, schema=TOKENS_SCHEMA)
+
+def decode_df(df: DataFrame, verify: bool = True) -> DataFrame:
+    return df.mapInArrow(
+        lambda batches: (decode_to_tokens(b, verify) for b in batches), schema=TOKENS_SCHEMA
+    )

@@ -238,7 +238,8 @@ def encode_flat(
     """
     offsets = np.asarray(offsets, dtype=np.int64)
     base = int(offsets[0])
-    A = np.ascontiguousarray(flat[base : int(offsets[-1])], dtype=np.int32)
+    A = flat[base : int(offsets[-1])]
+    A = np.ascontiguousarray(A if A.dtype == np.int32 else _as_int32(A))
     offs = offsets - base
     n_rows = len(offs) - 1
     row_len = np.diff(offs)
@@ -414,7 +415,7 @@ def encode_tokens(a: np.ndarray, block_size: int = DEFAULT_BLOCK_SIZE, force_raw
     low-mqual whole-read preserve (snp_score.c:1443-1463, 1852-1859)
     expressed as a row predicate: every block stored as codec 0.
     """
-    a = np.ascontiguousarray(a, dtype=np.int32)
+    a = np.asarray(a)
     blocks, bytes_out, row_hash = encode_flat(
         a, np.array([0, len(a)], dtype=np.int64), block_size,
         force_raw=np.array([force_raw]),
@@ -422,21 +423,25 @@ def encode_tokens(a: np.ndarray, block_size: int = DEFAULT_BLOCK_SIZE, force_raw
     return blocks[0], int(bytes_out[0]), int(row_hash[0])
 
 
+def _as_int32(a: np.ndarray) -> np.ndarray:
+    """`a` cast to int32, or a ValueError: a float would be truncated by
+    the cast (and row_hash would 'verify' the corruption), and wider
+    integers must fit int32.  Callers skip it for int32 input."""
+    if a.dtype.kind not in "iu":
+        raise ValueError(f"input contract violation: tokens are {a.dtype}, expected int32")
+    if len(a) and (a.min() < -(1 << 31) or a.max() >= 1 << 31):
+        raise ValueError(f"input contract violation: {a.dtype} tokens exceed int32 range")
+    return a.astype(np.int32)
+
+
 def _token_buffers(toks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (int32 values, offsets from 0) of a list<int> column.  A
-    float column would be truncated by the cast (and row_hash would
-    'verify' the corruption), and wider integers must fit int32."""
-    vtype = toks.type.value_type
-    if not pa.types.is_integer(vtype):
-        raise ValueError(f"input contract violation: tokens are {vtype}, expected int32")
+    """Zero-copy (int32 values, offsets from 0) of a list<int> column."""
     offs = toks.offsets.to_numpy().astype(np.int64)
     values = toks.values.slice(offs[0], offs[-1] - offs[0])
     if values.null_count:  # to_numpy would turn them into NaN, then garbage
         raise ValueError("input contract violation: null tokens")
     flat = values.to_numpy(zero_copy_only=False)
-    if vtype != pa.int32() and len(flat) and (flat.min() < -(1 << 31) or flat.max() >= 1 << 31):
-        raise ValueError(f"input contract violation: {vtype} tokens exceed int32 range")
-    return flat.astype(np.int32, copy=False), offs - offs[0]
+    return (flat if flat.dtype == np.int32 else _as_int32(flat)), offs - offs[0]
 
 
 def encode_record_batch(

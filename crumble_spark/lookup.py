@@ -4,11 +4,19 @@ Every parquet writer stores rows sorted by split_id = crc32(doc_id) %
 n_splits (encode.with_split_id) in small row groups (sinks.py), so a
 doc_id lookup knows which splits can hold it before it reads anything,
 and parquet's row-group min/max statistics skip the rest of each file.
-decode_docs reads the whole store through one path, whatever wrote it,
-with the fixed ENCODED_SCHEMA: no footer schema inference.  This is the
-reference's indexed region scan (S2: samtools-style region fetch via the
-BAM index, snp_score.c main loop seeks by region) applied to the
-engine's own output: a compressed store you can point-query.
+This is the reference's indexed region scan (S2: samtools-style region
+fetch via the BAM index, snp_score.c main loop seeks by region) applied
+to the engine's own output: a compressed store you can point-query.
+
+decode_docs serves a lookup on the driver, with no Spark job and no
+Python worker: pyarrow opens only the routed row groups of the store's
+files, keeps the requested doc_ids and decodes them with the shared
+walker (decode.decode_to_tokens); the result is a local relation, which
+collects without a job.  A job's fixed cost (planning, scheduling, a
+Python task per core) is ~0.5 s on 4 cores; the driver path's cost is
+its read.  It falls back to one Spark scan of the store when the routed
+row groups exceed DRIVER_READ_BYTES, or when pyarrow cannot open the
+store's filesystem (an s3a:// or hdfs:// store without libhdfs).
 
 At 10^12 rows with n_splits=4096, a k-doc lookup reads at most the row
 groups of k splits plus each file's footer.
@@ -16,18 +24,121 @@ groups of k splits plus each file's footer.
 
 from __future__ import annotations
 
+import bisect
+import json
 import zlib
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .decode import decode_df
-from .schema import ENCODED_SCHEMA, TOKENS_SCHEMA
+from .decode import decode_df, decode_to_tokens
+from .schema import ENCODED_SCHEMA, PA_TOKENS, TOKENS_SCHEMA
+
+# Compressed bytes of the routed row groups above which a lookup is one
+# Spark scan instead of a driver read.  The driver reads on one thread and
+# holds what it reads: 64 MiB of row groups read and filter in ~0.12 s on
+# one core from the page cache, a quarter of a Spark job's fixed cost on
+# 4 cores, so up to here the driver wins even from a cold disk; past it
+# the job's parallel tasks and the executors' memory do.  It is a property
+# of the driver, not of a store or a call: a constant, not a parameter.
+DRIVER_READ_BYTES = 64 << 20
+
+_READ_COLUMNS = ["doc_id", "source", "n_tok", "blocks", "row_hash"]
 
 
 def split_of(doc_id: str, n_splits: int) -> int:
     """Python twin of encode.with_split_id's crc32 assignment."""
     return zlib.crc32(doc_id.encode()) % n_splits
+
+
+def _arrow_fs(enc_dir: str):
+    """(pyarrow filesystem, path) of enc_dir as Spark resolves it (the
+    session's default filesystem for a path without a scheme), or None
+    when pyarrow cannot open that filesystem."""
+    from .sinks import _hadoop_fs
+
+    fs, path_cls = _hadoop_fs(enc_dir)
+    uri = fs.makeQualified(path_cls(enc_dir)).toUri().toString()
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except (pa.ArrowException, OSError):  # unknown scheme, no libhdfs
+        return None
+
+
+def _read_meta(fs: pafs.FileSystem, root: str) -> dict | None:
+    try:
+        with fs.open_input_stream(f"{root}/_crumble_meta.json") as f:
+            return json.loads(f.read())
+    except FileNotFoundError:
+        return None
+
+
+def _visible(name: str) -> bool:
+    """Spark's rule for the files a directory read sees: no name starting
+    with `.` or with `_` (but `_k=v` partition dirs), no `._COPYING_`."""
+    return not (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_files(fs: pafs.FileSystem, root: str) -> list[str]:
+    """Every file Spark's read of `root` sees; `_temporary/` and other
+    hidden dirs are not entered."""
+    out = []
+    for info in fs.get_file_info(pafs.FileSelector(root)):
+        if not _visible(info.base_name):
+            continue
+        if info.type == pafs.FileType.Directory:
+            out += _data_files(fs, info.path)
+        elif info.type == pafs.FileType.File:
+            out.append(info.path)
+    return sorted(out)
+
+
+def _routed_row_groups(fs: pafs.FileSystem, files: list[str], splits: list[int]):
+    """[(path, footer, row group indexes)] of the row groups whose
+    split_id min/max covers one of the sorted `splits`, or None once their
+    compressed size passes DRIVER_READ_BYTES."""
+    plan, nbytes = [], 0
+    for path in files:
+        md = pq.read_metadata(path, filesystem=fs)
+        cols = [md.schema.column(c).path for c in range(md.num_columns)]
+        if "split_id" not in cols:  # Spark reads its split_id as null: no row matches
+            continue
+        col, rgs = cols.index("split_id"), []
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            st = rg.column(col).statistics
+            if st is not None and st.has_min_max:
+                j = bisect.bisect_left(splits, st.min)
+                if j == len(splits) or splits[j] > st.max:
+                    continue
+            rgs.append(i)
+            nbytes += sum(rg.column(c).total_compressed_size for c in range(rg.num_columns))
+            if nbytes > DRIVER_READ_BYTES:
+                return None
+        if rgs:
+            plan.append((path, md, rgs))
+    return plan
+
+
+def _driver_read(fs, plan, doc_ids: list[str], verify: bool) -> pa.Table:
+    """The rows of `doc_ids` in the planned row groups, decoded."""
+    ids = pa.array(doc_ids, pa.string())
+    out = []
+    for path, md, rgs in plan:
+        with pq.ParquetFile(path, metadata=md, filesystem=fs) as pf:
+            t = pf.read_row_groups(rgs, columns=_READ_COLUMNS)
+        t = t.filter(pc.is_in(t["doc_id"], value_set=ids))
+        out += [decode_to_tokens(b, verify) for b in t.to_batches() if b.num_rows]
+    # a table of zero batches has no chunks, which createDataFrame refuses
+    return pa.Table.from_batches(out, PA_TOKENS) if out else PA_TOKENS.empty_table()
 
 
 def decode_docs(
@@ -41,11 +152,17 @@ def decode_docs(
 
     The split set is computed driver-side from the same crc32 the encoder
     used and, when the store's sidecar lists the splits it holds,
-    intersected with them: when nothing is left the result is empty and
-    no job runs.  Otherwise one scan of enc_dir with ENCODED_SCHEMA
-    carries the split_id and doc_id IN-filters down to parquet, whose
-    row-group statistics skip every row group whose split_id range misses
-    the routed splits (both filters asserted by test_lookup.py).
+    intersected with them.  The driver then lists the store's files as
+    Spark's read would (hidden names such as `_temporary/` skipped), reads
+    their footers, and opens only the row groups whose split_id range
+    covers a routed split.  It keeps the rows of `doc_ids` and decodes
+    them (with verify, a row_hash mismatch raises ValueError naming the
+    doc); the result is a local relation: no job runs, here or at
+    collect.  When the routed row groups pass DRIVER_READ_BYTES, or
+    pyarrow cannot open the store's filesystem, the lookup is one Spark
+    scan of enc_dir with ENCODED_SCHEMA that carries the split_id and
+    doc_id IN-filters down to parquet's row-group statistics (both
+    filters asserted by test_lookup.py).
 
     n_splits defaults to the store's own `_crumble_meta.json` sidecar
     (written by every writer) — a hand-passed mismatch would silently
@@ -53,7 +170,8 @@ def decode_docs(
     """
     from .sinks import read_store_meta
 
-    meta = read_store_meta(enc_dir) or {}
+    fs_root = _arrow_fs(enc_dir)
+    meta = (_read_meta(*fs_root) if fs_root else read_store_meta(enc_dir)) or {}
     if n_splits is None:
         if "n_splits" not in meta:
             raise ValueError(
@@ -65,10 +183,13 @@ def decode_docs(
     splits = {split_of(d, n_splits) for d in doc_ids}
     if "splits" in meta:
         splits &= set(meta["splits"])
-        if not splits:
-            # limit(0) plans as an empty local relation, which collects
-            # without a job
-            return spark.createDataFrame([], TOKENS_SCHEMA).limit(0)
+    if not splits:
+        return spark.createDataFrame(PA_TOKENS.empty_table(), TOKENS_SCHEMA)
+    if fs_root:
+        fs, root = fs_root
+        plan = _routed_row_groups(fs, _data_files(fs, root), sorted(splits))
+        if plan is not None:
+            return spark.createDataFrame(_driver_read(fs, plan, doc_ids, verify), TOKENS_SCHEMA)
     enc = (
         spark.read.schema(ENCODED_SCHEMA)
         .parquet(enc_dir)

@@ -90,6 +90,33 @@ def test_encode_record_batch_rejects_contract_violations(tokens, why):
         encode_record_batch(batch)
 
 
+@pytest.mark.parametrize(
+    "tokens, why",
+    [
+        (np.array([2**40 + 5, 7], np.int64), "exceed int32 range"),
+        (np.array([-(2**31) - 1, 7], np.int64), "exceed int32 range"),
+        (np.array([1.0, 2.5]), "expected int32"),
+    ],
+)
+@pytest.mark.parametrize("entry", ["encode_tokens", "cost.choose"])
+def test_numpy_entries_reject_tokens_outside_int32(tokens, why, entry):
+    # the one-array entries share the batch path's contract: no silent
+    # truncating cast (2**40 + 5 would store and then "verify" as 5)
+    from crumble_spark import cost
+
+    fn = encode_tokens if entry == "encode_tokens" else cost.choose
+    with pytest.raises(ValueError, match=f"contract violation.*{why}"):
+        fn(tokens)
+
+
+def test_numpy_entries_accept_wider_ints_in_range():
+    from crumble_spark import cost
+
+    a = np.array([3, -7, 2**31 - 1, -(2**31)] * 50, np.int64)
+    assert encode_tokens(a, 64) == encode_tokens(a.astype(np.int32), 64)
+    assert cost.choose(a) == cost.choose(a.astype(np.int32))
+
+
 def test_decode_record_batch_names_the_tampered_row():
     rows = [(f"d{i}", np.arange(300, dtype=np.int32) * i, "web", 0) for i in range(4)]
     enc, _ = encode_record_batch(_batch(rows), block_size=128)

@@ -1,15 +1,19 @@
-"""Point lookups into the encoded store: correct rows back, only the
-routed splits' row groups read, and both IN-filters pushed to parquet."""
+"""Point lookups into the encoded store: correct rows back with no Spark
+job, only the routed splits' row groups read, and, on the one-scan
+fallback, both IN-filters pushed to parquet."""
 
 import os
+import types
 
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from crumble_spark import lookup, sinks, synth
 from crumble_spark.encode import encode_df, with_split_id
-from crumble_spark.schema import PA_ENCODED
+from crumble_spark.schema import PA_ENCODED, TOKENS_SCHEMA
 
 
 def _encoded_dir(spark, tmp_path, n_splits=16):
@@ -68,9 +72,10 @@ def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
         lookup.decode_docs(spark, out, ["x"])
 
 
-def test_lookup_prunes_partitions(spark, tmp_path):
-    # split_id is a data column: both IN-filters are parquet data filters,
-    # pushed down to the row-group statistics
+def test_lookup_prunes_partitions(spark, tmp_path, monkeypatch):
+    # the Spark fallback: split_id is a data column, so both IN-filters are
+    # parquet data filters, pushed down to the row-group statistics
+    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
     out, src = _encoded_dir(spark, tmp_path)
     ids = [src.select("doc_id").collect()[0]["doc_id"]]
     plan = lookup.decode_docs(spark, out, ids, n_splits=16)._jdf.queryExecution().executedPlan().toString()
@@ -131,6 +136,33 @@ def test_lookup_reads_only_routed_split_dirs(spark, store64):
 
     (df, got), jobs = _jobs_run(spark, "lookup-routed", run)
     _check_docs(got, {d: rows[d] for d in ids})
+    # the driver reads the routed row groups; the result is a local
+    # relation: no job to plan, list or scan, none to collect
+    assert jobs == []
+    assert df.schema == TOKENS_SCHEMA
+
+
+@pytest.mark.parametrize("why", ["budget", "filesystem"])
+def test_lookup_falls_back_to_one_scan(spark, store64, monkeypatch, why):
+    # past the driver's byte budget, or on a filesystem pyarrow cannot
+    # open (s3a://), the lookup is one Spark scan of the store
+    if why == "budget":
+        monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    else:
+        def unknown(uri):
+            raise pa.ArrowInvalid(f"Unrecognized filesystem type in URI: {uri}")
+
+        fs_module = types.SimpleNamespace(FileSystem=types.SimpleNamespace(from_uri=unknown))
+        monkeypatch.setattr(lookup, "pafs", fs_module)
+    out, rows = store64
+    ids = sorted(rows)[:3]
+
+    def run():
+        df = lookup.decode_docs(spark, out, ids)
+        return df, df.collect()
+
+    (df, got), jobs = _jobs_run(spark, f"lookup-fallback-{why}", run)
+    _check_docs(got, {d: rows[d] for d in ids})
     # one scan job: no listing job over the store, no footer-inference job
     assert len(jobs) == 1
     # the store is one run directory of split-sorted files, all scanned
@@ -150,45 +182,87 @@ def _input_bytes(spark, group):
     )
 
 
-def test_lookup_reads_only_routed_row_groups(spark, tmp_path):
-    # a store whose row groups each hold one split: the scan emits only the
-    # routed row groups' rows, and the lookup reads no more than their
-    # bytes plus each file's footer.  The reader fetches a routed group at
-    # most twice (the doc_id dictionary filter, then the data), and the
-    # local filesystem serves a read shorter than its buffer by filling
-    # the whole buffer.
-    import glob
-
-    import pyarrow.parquet as pq
-
+@pytest.fixture(scope="module")
+def one_split_per_group(spark, tmp_path_factory):
+    """A 16-split store of two files whose row groups each hold one split
+    (0..7, then 8..15); returns (dir, {doc_id: row}, 4 ids of splits 3 and
+    12, [(path, row group, rows)] of the routed row groups)."""
     n_splits = 16
     df = with_split_id(synth.synth_table(spark, 300, seed=21, mean_len=3000, parts=4), n_splits)
     table = encode_df(df, block_size=256, n_splits=n_splits).toArrow()
     table = table.cast(PA_ENCODED).sort_by("split_id")
-    out = str(tmp_path / "one_split_per_group")
+    out = str(tmp_path_factory.mktemp("one_split_per_group"))
     sinks.write_store_meta(out, n_splits)
     os.makedirs(f"{out}/run_id=t")
+    routed, split_col = [], PA_ENCODED.get_field_index("split_id")
     for part, splits in enumerate((range(0, 8), range(8, 16))):
-        with pq.ParquetWriter(f"{out}/run_id=t/part-{part}.parquet", PA_ENCODED) as w:
+        path = f"{out}/run_id=t/part-{part}.parquet"
+        with pq.ParquetWriter(path, PA_ENCODED) as w:
             for s in splits:
                 w.write_table(table.filter(pc.equal(table["split_id"], s)))
+        md = pq.ParquetFile(path).metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.column(split_col).statistics.min in (3, 12):
+                routed.append((path, i, rg.num_rows))
     rows = {r["doc_id"]: r for r in df.collect()}
     ids = [d for d in sorted(rows) if rows[d]["split_id"] in (3, 12)][:4]
     assert {rows[d]["split_id"] for d in ids} == {3, 12}
+    return out, rows, ids, routed
 
-    buf = int(spark.sparkContext._jsc.hadoopConfiguration().get("io.file.buffer.size"))
-    budget = routed_rows = store = 0
+
+def test_lookup_reads_only_routed_row_groups(spark, one_split_per_group, monkeypatch):
+    # the driver opens exactly the row groups whose split_id range holds a
+    # routed split, one per file here, and reads only their rows
+    out, rows, ids, routed = one_split_per_group
     split_col = PA_ENCODED.get_field_index("split_id")
+    opened, n_read = [], []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **kw):
+        t = real(self, row_groups, *a, **kw)
+        for i in row_groups:
+            rg = self.metadata.row_group(i)
+            opened.append((rg.column(split_col).statistics.min, rg.num_rows))
+        n_read.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+
+    def run():
+        res = lookup.decode_docs(spark, out, ids)
+        return res, res.collect()
+
+    (res, got), jobs = _jobs_run(spark, "lookup-row-groups", run)
+    _check_docs(got, {d: rows[d] for d in ids})
+    assert jobs == []
+    routed_rows = sum(n for _, _, n in routed)
+    assert sorted(opened) == sorted(zip((3, 12), (n for _, _, n in routed)))
+    assert sum(n_read) == routed_rows
+
+
+def test_lookup_fallback_reads_only_routed_row_groups(spark, one_split_per_group, monkeypatch):
+    # the Spark fallback on the same store: the scan emits only the routed
+    # row groups' rows, and the lookup reads no more than their bytes plus
+    # each file's footer.  The reader fetches a routed group at most twice
+    # (the doc_id dictionary filter, then the data), and the local
+    # filesystem serves a read shorter than its buffer by filling the
+    # whole buffer.
+    import glob
+
+    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    out, rows, ids, routed = one_split_per_group
+    buf = int(spark.sparkContext._jsc.hadoopConfiguration().get("io.file.buffer.size"))
+    budget = store = 0
     for f in glob.glob(f"{out}/run_id=t/*.parquet"):
         md = pq.ParquetFile(f).metadata
         store += os.path.getsize(f)
         budget += md.serialized_size + 16  # footer, and its 8-byte tail read twice
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            if rg.column(split_col).statistics.min in (3, 12):
+        for path, i, _ in routed:
+            if path == f:
+                rg = md.row_group(i)
                 size = sum(rg.column(c).total_compressed_size for c in range(rg.num_columns))
                 budget += 2 * max(size, buf)
-                routed_rows += rg.num_rows
     assert budget < store / 2  # the bound excludes most of the store
 
     def run():
@@ -202,7 +276,7 @@ def test_lookup_reads_only_routed_row_groups(spark, tmp_path):
         n for n in _nodes(res._jdf.queryExecution().executedPlan())
         if n.nodeName().startswith("Scan parquet")
     ]
-    assert scan.metrics().apply("numOutputRows").value() == routed_rows
+    assert scan.metrics().apply("numOutputRows").value() == sum(n for _, _, n in routed)
     read = _input_bytes(spark, "lookup-bytes")
     assert 0 < read <= budget, (read, budget)
 
@@ -223,8 +297,6 @@ def test_lookup_mixed_absent_split_dirs(spark, store64):
 
 
 def test_lookup_all_absent_split_dirs_scans_nothing(spark, store64):
-    from crumble_spark.schema import TOKENS_SCHEMA
-
     out, _ = store64
 
     def run():
@@ -248,6 +320,115 @@ def test_lookup_on_direct_flat_store(spark, tmp_path):
     ids = sorted(rows)[::30]
     got = lookup.decode_docs(spark, str(tmp_path / "out" / "encoded"), ids + ["absent-0"]).collect()
     _check_docs(got, {d: rows[d] for d in ids})
+
+
+def _write_encoded(path, docs, n_splits=16):
+    """Encode {doc_id: tokens} into one split-sorted parquet file."""
+    from crumble_spark.encode import encode_record_batch
+
+    batch = pa.record_batch(
+        [pa.array(list(docs)), pa.array(list(docs.values()), pa.list_(pa.int32())),
+         pa.array(["web"] * len(docs))],
+        names=["doc_id", "tokens", "source"],
+    )
+    enc, _ = encode_record_batch(batch, block_size=128, n_splits=n_splits)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.Table.from_batches([enc]).sort_by("split_id"), path)
+    return enc
+
+
+def test_lookup_tampered_row_hash_raises_on_driver(spark, tmp_path):
+    docs = {f"doc-{i}": list(range(i, i + 300)) for i in range(6)}
+    path = str(tmp_path / "store" / "run_id=t" / "part-0.parquet")
+    enc = _write_encoded(path, docs)
+    rh = enc.column("row_hash").to_pylist()
+    rh[4] += 1
+    bad = enc.set_column(enc.schema.get_field_index("row_hash"), "row_hash", pa.array(rh, pa.int64()))
+    pq.write_table(pa.Table.from_batches([bad]).sort_by("split_id"), path)
+    out = str(tmp_path / "store")
+    sinks.write_store_meta(out, 16)
+    (good,) = lookup.decode_docs(spark, out, ["doc-1"]).collect()
+    assert list(good["tokens"]) == docs["doc-1"]
+    with pytest.raises(ValueError, match="doc_id='doc-4'") as e:
+        lookup.decode_docs(spark, out, ["doc-1", "doc-4"])
+    assert e.type is ValueError  # raised in the driver, not wrapped by a Spark task
+    # verify=False skips the check, as decode_df does
+    (row,) = lookup.decode_docs(spark, out, ["doc-4"], verify=False).collect()
+    assert list(row["tokens"]) == docs["doc-4"]
+
+
+def test_lookup_skips_hidden_files_as_spark_does(spark, tmp_path, monkeypatch):
+    # a task attempt's `_temporary/` output and a `.`-named temp file are
+    # not the store's: Spark's scan never reads them, nor does the driver
+    out, src = _encoded_dir(spark, tmp_path)
+    stray = {"stray-0": list(range(200)), "stray-1": list(range(50, 350))}
+    _write_encoded(f"{out}/run_id=t/_temporary/0/part-00000.parquet", {"stray-0": stray["stray-0"]})
+    _write_encoded(f"{out}/run_id=t/.part-00009.parquet.tmp", {"stray-1": stray["stray-1"]})
+    real = sorted(r["doc_id"] for r in src.select("doc_id").limit(3).collect())
+    ids = real + list(stray)
+
+    def run():
+        return lookup.decode_docs(spark, out, ids, n_splits=16).collect()
+
+    got, jobs = _jobs_run(spark, "lookup-hidden", run)
+    assert jobs == []
+    assert sorted(r["doc_id"] for r in got) == real
+    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    assert sorted(run()) == sorted(got)
+
+
+def test_lookup_repeated_id_returns_doc_once(spark, store64):
+    out, rows = store64
+    d, e = sorted(rows)[5:7]
+    got, jobs = _jobs_run(spark, "lookup-repeat", lambda: lookup.decode_docs(spark, out, [d, d, e, d]).collect())
+    assert jobs == []
+    _check_docs(got, {d: rows[d], e: rows[e]})
+
+
+def test_lookup_absent_ids_of_present_splits_is_empty(spark, store64):
+    # the routed row groups hold none of the ids: the driver reads them and
+    # returns an empty TOKENS_SCHEMA frame (a table of no batches has no
+    # chunks, which createDataFrame refuses)
+    out, rows = store64
+    ids = [d for d in (f"absent-{i}" for i in range(10_000)) if lookup.split_of(d, 64) < 48][:3]
+
+    def run():
+        df = lookup.decode_docs(spark, out, ids)
+        return df, df.collect()
+
+    (df, got), jobs = _jobs_run(spark, "lookup-present-absent", run)
+    assert got == [] and jobs == []
+    assert df.schema == TOKENS_SCHEMA
+
+
+@pytest.mark.parametrize("kind", ["job", "stream", "direct"])
+def test_lookup_on_every_store_kind_runs_no_job(spark, tmp_path, monkeypatch, store64, kind):
+    # a job store (run dirs + lineage), a stream-only store and a direct
+    # flat store: the driver path runs no job and returns the rows the
+    # Spark scan returns, bit for bit
+    from crumble_spark.sources import parquet_direct as direct
+    from crumble_spark.streaming.ingest import encode_stream
+
+    if kind == "job":
+        enc_dir, rows = store64
+    else:
+        tok, out = str(tmp_path / "tokens"), str(tmp_path / "out")
+        synth.synth_table(spark, 60, seed=13, mean_len=300, parts=2).write.parquet(tok)
+        if kind == "stream":
+            encode_stream(spark, tok, out, block_size=128, n_splits=16)
+        else:
+            direct.encode_job_direct(spark, tok, out, block_size=256, n_splits=16)
+        enc_dir, rows = f"{out}/encoded", {r["doc_id"]: r for r in spark.read.parquet(tok).collect()}
+    ids = sorted(rows)[::7] + ["absent-0"]
+
+    def run():
+        return [tuple(r) for r in lookup.decode_docs(spark, enc_dir, ids).collect()]
+
+    got, jobs = _jobs_run(spark, f"lookup-kind-{kind}", run)
+    assert jobs == []
+    _check_docs([dict(zip(TOKENS_SCHEMA.names, r)) for r in got], {d: rows[d] for d in ids[:-1]})
+    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    assert sorted(run()) == sorted(got)
 
 
 def test_decode_docs_table_via_snapshot_property(spark, tmp_path):
