@@ -88,15 +88,15 @@ def _visible(name: str) -> bool:
 
 
 def _data_files(fs: pafs.FileSystem, root: str) -> list[str]:
-    """Every file Spark's read of `root` sees; `_temporary/` and other
-    hidden dirs are not entered."""
+    """Every file Spark's read of `root` reads: visible and not empty;
+    `_temporary/` and other hidden dirs are not entered."""
     out = []
     for info in fs.get_file_info(pafs.FileSelector(root)):
         if not _visible(info.base_name):
             continue
         if info.type == pafs.FileType.Directory:
             out += _data_files(fs, info.path)
-        elif info.type == pafs.FileType.File:
+        elif info.type == pafs.FileType.File and info.size:
             out.append(info.path)
     return sorted(out)
 

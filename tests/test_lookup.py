@@ -359,8 +359,10 @@ def test_lookup_tampered_row_hash_raises_on_driver(spark, tmp_path):
 
 def test_lookup_skips_hidden_files_as_spark_does(spark, tmp_path, monkeypatch):
     # a task attempt's `_temporary/` output and a `.`-named temp file are
-    # not the store's: Spark's scan never reads them, nor does the driver
+    # not the store's, and an empty file holds nothing: Spark's scan never
+    # reads them, nor does the driver
     out, src = _encoded_dir(spark, tmp_path)
+    open(f"{out}/run_id=t/part-99999.parquet", "wb").close()
     stray = {"stray-0": list(range(200)), "stray-1": list(range(50, 350))}
     _write_encoded(f"{out}/run_id=t/_temporary/0/part-00000.parquet", {"stray-0": stray["stray-0"]})
     _write_encoded(f"{out}/run_id=t/.part-00009.parquet.tmp", {"stray-1": stray["stray-1"]})
