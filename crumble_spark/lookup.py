@@ -8,15 +8,17 @@ This is the reference's indexed region scan (S2: samtools-style region
 fetch via the BAM index, snp_score.c main loop seeks by region) applied
 to the engine's own output: a compressed store you can point-query.
 
-decode_docs serves a lookup on the driver, with no Spark job and no
-Python worker: pyarrow opens only the routed row groups of the store's
-files, keeps the requested doc_ids and decodes them with the shared
-walker (decode.decode_to_tokens); the result is a local relation, which
-collects without a job.  A job's fixed cost (planning, scheduling, a
-Python task per core) is ~0.5 s on 4 cores; the driver path's cost is
-its read.  It falls back to one Spark scan of the store when the routed
-row groups exceed DRIVER_READ_BYTES, or when pyarrow cannot open the
-store's filesystem (an s3a:// or hdfs:// store without libhdfs).
+decode_docs serves a lookup of a store on the driver's local filesystem
+with no Spark job and no Python worker: a pyarrow dataset scan of the
+store's files, filtered on split_id and doc_id, opens only the row groups
+whose statistics can hold a routed split and decodes the kept rows with
+the shared walker (decode.decode_to_tokens); the result is a local
+relation, which collects without a job.  A job's fixed cost (planning,
+scheduling, a Python task per core) is ~0.5 s on 4 cores; the driver
+path's cost is its read, which pyarrow spreads over the driver's cores as
+Spark's local tasks would.  A store on any other filesystem (hdfs://,
+s3a://, s3://, viewfs://) is one Spark scan: only Spark's reader sees the
+session's Hadoop configuration and credentials.
 
 At 10^12 rows with n_splits=4096, a k-doc lookup reads at most the row
 groups of k splits plus each file's footer.
@@ -24,29 +26,19 @@ groups of k splits plus each file's footer.
 
 from __future__ import annotations
 
-import bisect
-import json
+import os
 import zlib
 
 import pyarrow as pa
-import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.fs as pafs
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .decode import decode_df, decode_to_tokens
-from .schema import ENCODED_SCHEMA, PA_TOKENS, TOKENS_SCHEMA
+from .schema import ENCODED_SCHEMA, PA_ENCODED, PA_TOKENS, TOKENS_SCHEMA
 
-# Compressed bytes of the routed row groups above which a lookup is one
-# Spark scan instead of a driver read.  The driver reads on one thread and
-# holds what it reads: 64 MiB of row groups read and filter in ~0.12 s on
-# one core from the page cache, a quarter of a Spark job's fixed cost on
-# 4 cores, so up to here the driver wins even from a cold disk; past it
-# the job's parallel tasks and the executors' memory do.  It is a property
-# of the driver, not of a store or a call: a constant, not a parameter.
-DRIVER_READ_BYTES = 64 << 20
-
+_LOCAL = pafs.LocalFileSystem()
 _READ_COLUMNS = ["doc_id", "source", "n_tok", "blocks", "row_hash"]
 
 
@@ -55,88 +47,43 @@ def split_of(doc_id: str, n_splits: int) -> int:
     return zlib.crc32(doc_id.encode()) % n_splits
 
 
-def _arrow_fs(enc_dir: str):
-    """(pyarrow filesystem, path) of enc_dir as Spark resolves it (the
-    session's default filesystem for a path without a scheme), or None
-    when pyarrow cannot open that filesystem."""
+def _local_root(enc_dir: str) -> str | None:
+    """enc_dir's path on the driver's local filesystem, as Spark resolves
+    it (a path without a scheme is on the session's default filesystem),
+    or None when the store lives on another filesystem."""
     from .sinks import _hadoop_fs
 
     fs, path_cls = _hadoop_fs(enc_dir)
-    uri = fs.makeQualified(path_cls(enc_dir)).toUri().toString()
-    try:
-        return pafs.FileSystem.from_uri(uri)
-    except (pa.ArrowException, OSError):  # unknown scheme, no libhdfs
-        return None
+    uri = fs.makeQualified(path_cls(enc_dir)).toUri()
+    return uri.getPath() if uri.getScheme() == "file" else None
 
 
-def _read_meta(fs: pafs.FileSystem, root: str) -> dict | None:
-    try:
-        with fs.open_input_stream(f"{root}/_crumble_meta.json") as f:
-            return json.loads(f.read())
-    except FileNotFoundError:
-        return None
-
-
-def _visible(name: str) -> bool:
-    """Spark's rule for the files a directory read sees: no name starting
-    with `.` or with `_` (but `_k=v` partition dirs), no `._COPYING_`."""
-    return not (
-        name.startswith(".")
-        or (name.startswith("_") and "=" not in name)
-        or name.endswith("._COPYING_")
+def _spark_visible(rel: str) -> bool:
+    """Spark's rule for the files a directory read sees, on a path below
+    the read's root: no component starting with `.`, nor with `_` unless
+    it is a `_k=v` partition dir; no `._COPYING_` upload in progress."""
+    return not rel.endswith("._COPYING_") and not any(
+        c.startswith(".") or (c.startswith("_") and "=" not in c) for c in rel.split(os.sep)
     )
 
 
-def _data_files(fs: pafs.FileSystem, root: str) -> list[str]:
-    """Every file Spark's read of `root` reads: visible and not empty;
-    `_temporary/` and other hidden dirs are not entered."""
-    out = []
-    for info in fs.get_file_info(pafs.FileSelector(root)):
-        if not _visible(info.base_name):
-            continue
-        if info.type == pafs.FileType.Directory:
-            out += _data_files(fs, info.path)
-        elif info.type == pafs.FileType.File and info.size:
-            out.append(info.path)
-    return sorted(out)
-
-
-def _routed_row_groups(fs: pafs.FileSystem, files: list[str], splits: list[int]):
-    """[(path, footer, row group indexes)] of the row groups whose
-    split_id min/max covers one of the sorted `splits`, or None once their
-    compressed size passes DRIVER_READ_BYTES."""
-    plan, nbytes = [], 0
-    for path in files:
-        md = pq.read_metadata(path, filesystem=fs)
-        cols = [md.schema.column(c).path for c in range(md.num_columns)]
-        if "split_id" not in cols:  # Spark reads its split_id as null: no row matches
-            continue
-        col, rgs = cols.index("split_id"), []
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            st = rg.column(col).statistics
-            if st is not None and st.has_min_max:
-                j = bisect.bisect_left(splits, st.min)
-                if j == len(splits) or splits[j] > st.max:
-                    continue
-            rgs.append(i)
-            nbytes += sum(rg.column(c).total_compressed_size for c in range(rg.num_columns))
-            if nbytes > DRIVER_READ_BYTES:
-                return None
-        if rgs:
-            plan.append((path, md, rgs))
-    return plan
-
-
-def _driver_read(fs, plan, doc_ids: list[str], verify: bool) -> pa.Table:
-    """The rows of `doc_ids` in the planned row groups, decoded."""
-    ids = pa.array(doc_ids, pa.string())
-    out = []
-    for path, md, rgs in plan:
-        with pq.ParquetFile(path, metadata=md, filesystem=fs) as pf:
-            t = pf.read_row_groups(rgs, columns=_READ_COLUMNS)
-        t = t.filter(pc.is_in(t["doc_id"], value_set=ids))
-        out += [decode_to_tokens(b, verify) for b in t.to_batches() if b.num_rows]
+def _driver_read(root: str, splits: list[int], doc_ids: list[str], verify: bool) -> pa.Table:
+    """The rows of `doc_ids` in `splits` of the local store at `root`,
+    decoded.  The scan prunes row groups by their split_id and doc_id
+    statistics and streams the rest in batches, so the driver holds one
+    window of the routed row groups at a time, not the store."""
+    files = [
+        f.path
+        for f in _LOCAL.get_file_info(pafs.FileSelector(root, recursive=True))
+        # Spark's scan skips empty files too
+        if f.type == pafs.FileType.File and f.size and _spark_visible(os.path.relpath(f.path, root))
+    ]
+    store = ds.dataset(files, schema=PA_ENCODED, format="parquet", filesystem=_LOCAL)
+    rows = store.to_batches(
+        columns=_READ_COLUMNS,
+        filter=ds.field("split_id").isin(splits) & ds.field("doc_id").isin(doc_ids),
+    )
+    out = [decode_to_tokens(b, verify) for b in rows if b.num_rows]
     # a table of zero batches has no chunks, which createDataFrame refuses
     return pa.Table.from_batches(out, PA_TOKENS) if out else PA_TOKENS.empty_table()
 
@@ -152,17 +99,15 @@ def decode_docs(
 
     The split set is computed driver-side from the same crc32 the encoder
     used and, when the store's sidecar lists the splits it holds,
-    intersected with them.  The driver then lists the store's files as
-    Spark's read would (hidden names such as `_temporary/` skipped), reads
-    their footers, and opens only the row groups whose split_id range
-    covers a routed split.  It keeps the rows of `doc_ids` and decodes
-    them (with verify, a row_hash mismatch raises ValueError naming the
-    doc); the result is a local relation: no job runs, here or at
-    collect.  When the routed row groups pass DRIVER_READ_BYTES, or
-    pyarrow cannot open the store's filesystem, the lookup is one Spark
-    scan of enc_dir with ENCODED_SCHEMA that carries the split_id and
-    doc_id IN-filters down to parquet's row-group statistics (both
-    filters asserted by test_lookup.py).
+    intersected with them.  A store on the driver's local filesystem is
+    read on the driver: its files as Spark's read sees them (hidden names
+    such as `_temporary/` skipped), only the row groups whose split_id and
+    doc_id statistics can match, only the rows that do, decoded (with
+    verify, a row_hash mismatch raises ValueError naming the doc).  The
+    result is a local relation: no job runs, here or at collect.  A store
+    on another filesystem is one Spark scan of enc_dir with ENCODED_SCHEMA
+    that carries the same split_id and doc_id IN-filters down to parquet's
+    row-group statistics (both filters asserted by test_lookup.py).
 
     n_splits defaults to the store's own `_crumble_meta.json` sidecar
     (written by every writer) — a hand-passed mismatch would silently
@@ -170,8 +115,7 @@ def decode_docs(
     """
     from .sinks import read_store_meta
 
-    fs_root = _arrow_fs(enc_dir)
-    meta = (_read_meta(*fs_root) if fs_root else read_store_meta(enc_dir)) or {}
+    meta = read_store_meta(enc_dir) or {}
     if n_splits is None:
         if "n_splits" not in meta:
             raise ValueError(
@@ -185,11 +129,9 @@ def decode_docs(
         splits &= set(meta["splits"])
     if not splits:
         return spark.createDataFrame(PA_TOKENS.empty_table(), TOKENS_SCHEMA)
-    if fs_root:
-        fs, root = fs_root
-        plan = _routed_row_groups(fs, _data_files(fs, root), sorted(splits))
-        if plan is not None:
-            return spark.createDataFrame(_driver_read(fs, plan, doc_ids, verify), TOKENS_SCHEMA)
+    root = _local_root(enc_dir)
+    if root is not None:
+        return spark.createDataFrame(_driver_read(root, sorted(splits), doc_ids, verify), TOKENS_SCHEMA)
     enc = (
         spark.read.schema(ENCODED_SCHEMA)
         .parquet(enc_dir)

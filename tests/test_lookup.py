@@ -1,12 +1,14 @@
 """Point lookups into the encoded store: correct rows back with no Spark
-job, only the routed splits' row groups read, and, on the one-scan
-fallback, both IN-filters pushed to parquet."""
+job, only the routed splits' row groups read, and, for a store off the
+driver's local filesystem, one Spark scan with both IN-filters pushed to
+parquet."""
 
+import io
 import os
-import types
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -72,10 +74,16 @@ def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
         lookup.decode_docs(spark, out, ["x"])
 
 
+def _spark_scan(monkeypatch):
+    """Make every store look off the driver's local filesystem, so each
+    lookup is the Spark scan."""
+    monkeypatch.setattr(lookup, "_local_root", lambda enc_dir: None)
+
+
 def test_lookup_prunes_partitions(spark, tmp_path, monkeypatch):
-    # the Spark fallback: split_id is a data column, so both IN-filters are
+    # the Spark scan: split_id is a data column, so both IN-filters are
     # parquet data filters, pushed down to the row-group statistics
-    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    _spark_scan(monkeypatch)
     out, src = _encoded_dir(spark, tmp_path)
     ids = [src.select("doc_id").collect()[0]["doc_id"]]
     plan = lookup.decode_docs(spark, out, ids, n_splits=16)._jdf.queryExecution().executedPlan().toString()
@@ -142,32 +150,36 @@ def test_lookup_reads_only_routed_split_dirs(spark, store64):
     assert df.schema == TOKENS_SCHEMA
 
 
-@pytest.mark.parametrize("why", ["budget", "filesystem"])
-def test_lookup_falls_back_to_one_scan(spark, store64, monkeypatch, why):
-    # past the driver's byte budget, or on a filesystem pyarrow cannot
-    # open (s3a://), the lookup is one Spark scan of the store
-    if why == "budget":
-        monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
-    else:
-        def unknown(uri):
-            raise pa.ArrowInvalid(f"Unrecognized filesystem type in URI: {uri}")
+def test_local_root_is_the_local_store_path(spark, tmp_path):
+    # a path without a scheme means what it means to Spark: a path on the
+    # session's default (local) filesystem, relative to the JVM's cwd
+    jvm_cwd = spark._jvm.java.lang.System.getProperty("user.dir")
+    assert lookup._local_root("store/encoded") == f"{jvm_cwd}/store/encoded"
+    assert lookup._local_root(f"file://{tmp_path}/enc") == f"{tmp_path}/enc"
 
-        fs_module = types.SimpleNamespace(FileSystem=types.SimpleNamespace(from_uri=unknown))
-        monkeypatch.setattr(lookup, "pafs", fs_module)
+
+def test_lookup_off_local_fs_is_one_scan(spark, store64):
+    # a store on another Hadoop filesystem (here a viewfs:// mount of the
+    # local store) is read by Spark, with the session's Hadoop conf: one
+    # scan job, no listing job, no footer-inference job
     out, rows = store64
+    spark.sparkContext._jsc.hadoopConfiguration().set(
+        "fs.viewfs.mounttable.crumblelookup.link./store", f"file://{os.path.dirname(out)}"
+    )
+    view = "viewfs://crumblelookup/store/encoded"
+    assert lookup._local_root(view) is None
     ids = sorted(rows)[:3]
 
     def run():
-        df = lookup.decode_docs(spark, out, ids)
+        df = lookup.decode_docs(spark, view, ids)
         return df, df.collect()
 
-    (df, got), jobs = _jobs_run(spark, f"lookup-fallback-{why}", run)
+    (df, got), jobs = _jobs_run(spark, "lookup-viewfs", run)
     _check_docs(got, {d: rows[d] for d in ids})
-    # one scan job: no listing job over the store, no footer-inference job
     assert len(jobs) == 1
     # the store is one run directory of split-sorted files, all scanned
     files = df.inputFiles()
-    assert files and all("/run_id=" in f for f in files), files
+    assert files and all(f.startswith("viewfs://") and "/run_id=" in f for f in files), files
 
 
 def _input_bytes(spark, group):
@@ -211,23 +223,53 @@ def one_split_per_group(spark, tmp_path_factory):
     return out, rows, ids, routed
 
 
+class _LoggedFile(io.FileIO):
+    def __init__(self, path, log):
+        super().__init__(path, "rb")
+        self.log = log
+
+    def read(self, n=-1):
+        pos, data = self.tell(), super().read(n)
+        self.log.append((self.name, pos, len(data)))
+        return data
+
+
+class _ReadLog(pafs.FileSystemHandler):
+    """The local filesystem, logging (path, offset, length) of every read
+    from a file opened for random access, as parquet readers open them."""
+
+    def __init__(self):
+        self.fs, self.reads = pafs.LocalFileSystem(), []
+
+    def open_input_file(self, path):
+        return pa.PythonFile(_LoggedFile(path, self.reads), mode="r")
+
+    def get_file_info(self, paths):
+        return self.fs.get_file_info(paths)
+
+    def get_file_info_selector(self, selector):
+        return self.fs.get_file_info(selector)
+
+    def get_type_name(self):
+        return "readlog"
+
+    def normalize_path(self, path):
+        return path
+
+    def _read_only(self, *args):
+        raise NotImplementedError
+
+    copy_file = create_dir = delete_dir = delete_dir_contents = _read_only
+    delete_file = delete_root_dir_contents = move = _read_only
+    open_append_stream = open_input_stream = open_output_stream = _read_only
+
+
 def test_lookup_reads_only_routed_row_groups(spark, one_split_per_group, monkeypatch):
-    # the driver opens exactly the row groups whose split_id range holds a
-    # routed split, one per file here, and reads only their rows
+    # the driver reads each file's footer and the bytes of exactly the row
+    # groups whose split_id range holds a routed split, one per file here
     out, rows, ids, routed = one_split_per_group
-    split_col = PA_ENCODED.get_field_index("split_id")
-    opened, n_read = [], []
-    real = pq.ParquetFile.read_row_groups
-
-    def spy(self, row_groups, *a, **kw):
-        t = real(self, row_groups, *a, **kw)
-        for i in row_groups:
-            rg = self.metadata.row_group(i)
-            opened.append((rg.column(split_col).statistics.min, rg.num_rows))
-        n_read.append(t.num_rows)
-        return t
-
-    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    handler = _ReadLog()
+    monkeypatch.setattr(lookup, "_LOCAL", pafs.PyFileSystem(handler))
 
     def run():
         res = lookup.decode_docs(spark, out, ids)
@@ -236,13 +278,29 @@ def test_lookup_reads_only_routed_row_groups(spark, one_split_per_group, monkeyp
     (res, got), jobs = _jobs_run(spark, "lookup-row-groups", run)
     _check_docs(got, {d: rows[d] for d in ids})
     assert jobs == []
-    routed_rows = sum(n for _, _, n in routed)
-    assert sorted(opened) == sorted(zip((3, 12), (n for _, _, n in routed)))
-    assert sum(n_read) == routed_rows
+    opened = []
+    for path, off, n in handler.reads:
+        if off + n == os.path.getsize(path):
+            continue  # the footer, read from the file's tail
+        # every other read lies inside one row group's bytes
+        (i,) = [i for i, (a, b) in enumerate(_row_group_spans(path)) if a <= off and off + n <= b]
+        opened.append((path, i))
+    assert sorted(opened) == sorted((path, i) for path, i, _ in routed)
 
 
-def test_lookup_fallback_reads_only_routed_row_groups(spark, one_split_per_group, monkeypatch):
-    # the Spark fallback on the same store: the scan emits only the routed
+def _row_group_spans(path):
+    """[start, end) bytes of each row group of a parquet file: from its
+    first column chunk to the next row group's, or to the footer."""
+    md = pq.ParquetFile(path).metadata
+    starts = [
+        min(c.dictionary_page_offset or c.data_page_offset for c in map(rg.column, range(rg.num_columns)))
+        for rg in map(md.row_group, range(md.num_row_groups))
+    ]
+    return list(zip(starts, starts[1:] + [os.path.getsize(path) - 8 - md.serialized_size]))
+
+
+def test_lookup_spark_scan_reads_only_routed_row_groups(spark, one_split_per_group, monkeypatch):
+    # the Spark scan of the same store: it emits only the routed
     # row groups' rows, and the lookup reads no more than their bytes plus
     # each file's footer.  The reader fetches a routed group at most twice
     # (the doc_id dictionary filter, then the data), and the local
@@ -250,7 +308,7 @@ def test_lookup_fallback_reads_only_routed_row_groups(spark, one_split_per_group
     # whole buffer.
     import glob
 
-    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    _spark_scan(monkeypatch)
     out, rows, ids, routed = one_split_per_group
     buf = int(spark.sparkContext._jsc.hadoopConfiguration().get("io.file.buffer.size"))
     budget = store = 0
@@ -375,7 +433,7 @@ def test_lookup_skips_hidden_files_as_spark_does(spark, tmp_path, monkeypatch):
     got, jobs = _jobs_run(spark, "lookup-hidden", run)
     assert jobs == []
     assert sorted(r["doc_id"] for r in got) == real
-    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    _spark_scan(monkeypatch)
     assert sorted(run()) == sorted(got)
 
 
@@ -385,6 +443,38 @@ def test_lookup_repeated_id_returns_doc_once(spark, store64):
     got, jobs = _jobs_run(spark, "lookup-repeat", lambda: lookup.decode_docs(spark, out, [d, d, e, d]).collect())
     assert jobs == []
     _check_docs(got, {d: rows[d], e: rows[e]})
+
+
+def test_lookup_split_filter_matches_spark_on_a_wrong_n_splits(spark, tmp_path, monkeypatch):
+    # a hand-passed n_splits of 8 on a 16-split store routes a doc of split
+    # s + 8 to split s, where it is not stored: both reads apply the same
+    # split_id and doc_id filters, so both miss exactly those docs
+    out, src = _encoded_dir(spark, tmp_path, n_splits=16)
+    rows = {r["doc_id"]: r["split_id"] for r in src.select("doc_id", "split_id").collect()}
+    ids = sorted(rows)[:12]
+    assert {rows[d] < 8 for d in ids} == {True, False}
+
+    def run():
+        return sorted(tuple(r) for r in lookup.decode_docs(spark, out, ids, n_splits=8).collect())
+
+    got = run()
+    assert [r[0] for r in got] == [d for d in ids if rows[d] < 8]
+    _spark_scan(monkeypatch)
+    assert run() == got
+
+
+def test_lookup_on_a_many_file_store(spark, tmp_path):
+    # a store of many small files (as a long-running stream leaves): the
+    # driver reads every file's footer and returns the docs of all of them
+    docs = {f"doc-{i}": list(range(i, i + 40)) for i in range(600)}
+    out, names = str(tmp_path / "store"), sorted(docs)
+    for k in range(300):
+        _write_encoded(f"{out}/run_id=stream-{k}/part-0.parquet", {d: docs[d] for d in names[2 * k: 2 * k + 2]})
+    sinks.write_store_meta(out, 16)
+    ids = names[::37] + ["absent-0"]
+    got, jobs = _jobs_run(spark, "lookup-many-files", lambda: lookup.decode_docs(spark, out, ids).collect())
+    assert jobs == []
+    assert {r["doc_id"]: list(r["tokens"]) for r in got} == {d: docs[d] for d in ids[:-1]}
 
 
 def test_lookup_absent_ids_of_present_splits_is_empty(spark, store64):
@@ -429,7 +519,7 @@ def test_lookup_on_every_store_kind_runs_no_job(spark, tmp_path, monkeypatch, st
     got, jobs = _jobs_run(spark, f"lookup-kind-{kind}", run)
     assert jobs == []
     _check_docs([dict(zip(TOKENS_SCHEMA.names, r)) for r in got], {d: rows[d] for d in ids[:-1]})
-    monkeypatch.setattr(lookup, "DRIVER_READ_BYTES", 0)
+    _spark_scan(monkeypatch)
     assert sorted(run()) == sorted(got)
 
 
