@@ -10,7 +10,11 @@ vectorized Arrow/pandas UDFs.  Nothing here is a port — the reference is a
 single-pass C pileup pipeline; this is a partition-parallel batch engine.
 """
 
+from . import zipcache
+
 __version__ = "0.1.0"
+
+zipcache.install()  # a reused Python worker stops re-reading pyspark.zip per task
 
 # per-block overheads amortize with size while blocks stay capped by row
 # length, so large defaults win on both ratio and throughput (measured:

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .decode import decode_df, decode_to_tokens
 from .schema import ENCODED_SCHEMA, PA_ENCODED, PA_TOKENS, TOKENS_SCHEMA
+from .sinks import spark_visible
 
 _LOCAL = pafs.LocalFileSystem()
 _READ_COLUMNS = ["doc_id", "source", "n_tok", "blocks", "row_hash"]
@@ -58,15 +59,6 @@ def _local_root(enc_dir: str) -> str | None:
     return uri.getPath() if uri.getScheme() == "file" else None
 
 
-def _spark_visible(rel: str) -> bool:
-    """Spark's rule for the files a directory read sees, on a path below
-    the read's root: no component starting with `.`, nor with `_` unless
-    it is a `_k=v` partition dir; no `._COPYING_` upload in progress."""
-    return not rel.endswith("._COPYING_") and not any(
-        c.startswith(".") or (c.startswith("_") and "=" not in c) for c in rel.split(os.sep)
-    )
-
-
 def _driver_read(root: str, splits: list[int], doc_ids: list[str], verify: bool) -> pa.Table:
     """The rows of `doc_ids` in `splits` of the local store at `root`,
     decoded.  The scan prunes row groups by their split_id and doc_id
@@ -76,7 +68,7 @@ def _driver_read(root: str, splits: list[int], doc_ids: list[str], verify: bool)
         f.path
         for f in _LOCAL.get_file_info(pafs.FileSelector(root, recursive=True))
         # Spark's scan skips empty files too
-        if f.type == pafs.FileType.File and f.size and _spark_visible(os.path.relpath(f.path, root))
+        if f.type == pafs.FileType.File and f.size and spark_visible(os.path.relpath(f.path, root))
     ]
     store = ds.dataset(files, schema=PA_ENCODED, format="parquet", filesystem=_LOCAL)
     rows = store.to_batches(

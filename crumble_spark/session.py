@@ -1,7 +1,9 @@
 """SparkSession factory with the configs this engine assumes.
 
-Arrow transfer is mandatory (all kernels are Arrow-batched pandas UDFs);
-AQE stays on as the runtime backstop for skew (see partitioning.py).
+Arrow transfer is mandatory: the codec kernels run in Arrow batches
+through mapInArrow, and synth and the multimodal decoders through
+mapInPandas.  AQE stays on as the runtime backstop for skew (see
+partitioning.py).
 """
 
 from __future__ import annotations

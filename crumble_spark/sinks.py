@@ -21,6 +21,8 @@ iceberg path raises a clear error here; its plumbing is injection-tested
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,6 +30,15 @@ from pyspark.sql import functions as F
 # reads little past its routed splits, large enough that parquet-mr's
 # memory check stays quiet on a giant row
 ROW_GROUP_BYTES = 256 * 1024
+
+
+def spark_visible(rel: str) -> bool:
+    """Spark's rule for the files a directory read sees, on a path below
+    the read's root: no component starting with `.`, nor with `_` unless
+    it is a `_k=v` partition dir; no `._COPYING_` upload in progress."""
+    return not rel.endswith("._COPYING_") and not any(
+        c.startswith(".") or (c.startswith("_") and "=" not in c) for c in rel.split(os.sep)
+    )
 
 
 def write_encoded_parquet(enc: DataFrame, enc_dir: str, run_id: str) -> None:

@@ -18,10 +18,11 @@ discipline), scheduling/retries, and collecting the lineage records
 Each call is one job of at most one Python task per core: the sorted
 split list is an Arrow-built local relation (no job or shuffle to build
 it) that Spark slices into min(splits, defaultParallelism) contiguous
-partitions.  A Python task costs ~0.2 s of fixed worker CPU (pyspark's
-per-task importlib.invalidate_caches), so a second wave for stealing
-loses more than it balances; a retried task re-does its whole
-(idempotent) slice.
+partitions.  crumble_spark.zipcache cut a Python task's fixed cost
+(pyspark's per-task importlib.invalidate_caches re-read pyspark.zip
+for ~0.2 s), and a wave of 4 tasks now adds ~60 ms to a local[4] job;
+a second wave for stealing still loses more than it balances
+(ARCHITECTURE.md).  A retried task re-does its whole (idempotent) slice.
 
 Each task publishes its split's data file, then its lineage record, each
 by atomic rename of a hidden tmp file; resume skips the splits that have
@@ -47,19 +48,30 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
 from ..schema import LINEAGE_SCHEMA, PA_ENCODED, PA_LINEAGE
-from ..sinks import ROW_GROUP_BYTES, check_store_n_splits, delete_path, write_store_meta
+from ..sinks import (
+    ROW_GROUP_BYTES,
+    check_store_n_splits,
+    delete_path,
+    spark_visible,
+    write_store_meta,
+)
 
 
 def list_input_files(in_path: str) -> list[str]:
-    """Parquet file NAMES only — a pure directory listing, no footer
-    opens.  This is the only filesystem metadata work the driver does;
-    an object-store deployment swaps in the pyarrow.fs listing, same
-    shape (one LIST call per 1000 keys, no per-object round trips)."""
+    """The parquet files a Spark read of `in_path` sees: hidden names
+    (`_temporary/`, `.x`, sinks.spark_visible) and empty files are
+    skipped, so a crashed Spark write's leftovers are not encoded.  A
+    pure directory listing, no footer opens.  This is the only filesystem
+    metadata work the driver does; an object-store deployment swaps in
+    the pyarrow.fs listing, same shape (one LIST call per 1000 keys, no
+    per-object round trips)."""
     out = []
-    for root, _, names in os.walk(in_path):
+    for root, dirs, names in os.walk(in_path):
+        dirs[:] = [d for d in dirs if spark_visible(d)]
         for n in sorted(names):
-            if n.endswith(".parquet"):
-                out.append(os.path.join(root, n))
+            path = os.path.join(root, n)
+            if n.endswith(".parquet") and spark_visible(n) and os.path.getsize(path):
+                out.append(path)
     return out
 
 

@@ -596,3 +596,28 @@ def test_direct_keeps_input_files_that_share_a_basename(spark, tmp_path):
     lin2 = direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16).collect()
     key = lambda rows: sorted((r["split"], r["run_id"], r["checksum"]) for r in rows)
     assert key(lin2) == key(lin)
+
+
+def test_direct_reads_only_the_files_spark_reads(spark, tmp_path):
+    # a crashed Spark write's `_temporary/` output, a `.`-named file and an
+    # empty file are not part of the input: Spark's scan skips them, and
+    # so do the direct encode and verify (the explicit schema keeps Spark's
+    # schema inference off the empty file's missing footer)
+    from crumble_spark.schema import TOKENS_SCHEMA
+
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    (inp / "_temporary" / "0").mkdir(parents=True)
+    docs = lambda p: [(f"{p}-{j}", list(range(j, j + 40))) for j in range(10)]
+    _doc_file(inp / "part-0.parquet", docs("part0"))
+    _doc_file(inp / "_temporary" / "0" / "part-1.parquet", docs("temporary"))
+    _doc_file(inp / ".hidden.parquet", docs("hidden"))
+    (inp / "empty.parquet").touch()
+    src = spark.read.schema(TOKENS_SCHEMA).parquet(str(inp))
+    want = sorted(r["doc_id"] for r in src.select("doc_id").collect())
+    assert want == sorted(d for d, _ in docs("part0"))
+    assert direct.list_input_files(str(inp)) == [str(inp / "part-0.parquet")]
+    lin = direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16).collect()
+    assert [r["split"] for r in lin] == ["part-0.parquet:rg0"]
+    got = sorted(r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect())
+    assert got == want
+    assert direct.decode_verify_direct(spark, f"{out}/encoded")["rows"] == len(want)
