@@ -4,10 +4,11 @@ transcode loop (snp_score.c:1336-2029): all decisions are local to a
 bounded block, the transform is verified (row_hash), and a verbatim RAW
 fallback bounds the worst case.
 
-encode_record_batch is the one batch core under the DataFrame path
-(encode_df, via mapInArrow) and the pyarrow-direct path, so both bound
-kernel memory alike and emit the same bytes.  Encoding adds no shuffle:
-scan → (optional salted repartition) → mapInArrow → split-sorted sink.
+encode_record_batch is the one batch core under every writer: a local
+run's tasks (sinks.write_encoded_parquet), encode_df (via mapInArrow,
+for the sinks that write with Spark) and the pyarrow-direct path, so all
+bound kernel memory alike and emit the same bytes.  Encoding adds no
+shuffle: scan → mapInArrow → split-sorted files.
 """
 
 from __future__ import annotations
@@ -469,11 +470,7 @@ def encode_record_batch(
         lo = hi
     n_tok = np.diff(offs)
     doc_id = batch.column("doc_id")
-    split_id = (
-        batch.column("split_id").cast(pa.int32())
-        if "split_id" in names
-        else pa.array([zlib.crc32(d.encode()) % n_splits for d in doc_id.to_pylist()], pa.int32())
-    )
+    split_id = split_ids(batch, n_splits)
     blocks_arr = pa.array(blocks, pa.list_(PA_BLOCK))
     out = pa.record_batch(
         [
@@ -490,6 +487,16 @@ def encode_record_batch(
     )
     counters = lineage.split_counters(split_id.to_numpy(), n_tok, bytes_out, row_hash, blocks_arr)
     return out, counters
+
+
+def split_ids(batch: pa.RecordBatch, n_splits: int) -> pa.Array:
+    """The batch's int32 split_id column, or with_split_id's
+    crc32(doc_id) % n_splits when it has none."""
+    if "split_id" in batch.schema.names:
+        return batch.column("split_id").cast(pa.int32())
+    return pa.array(
+        [zlib.crc32(d.encode()) % n_splits for d in batch.column("doc_id").to_pylist()], pa.int32()
+    )
 
 
 def with_split_id(df: DataFrame, n_splits: int) -> DataFrame:
@@ -512,7 +519,10 @@ def encode_df(
     n_splits: int = 256,
     lineage_acc: Accumulator | None = None,
 ) -> DataFrame:
-    """tokens table → encoded table (blocks of codec-tagged payloads).
+    """tokens table → encoded table (blocks of codec-tagged payloads), for
+    a sink that writes the encoded rows with Spark: a store off the
+    driver's local filesystem, or Iceberg (a local run encodes and writes
+    inside its own tasks, sinks.write_encoded_parquet).
     With `lineage_acc` (a lineage.SplitCounters accumulator) every batch
     also adds its per-split counters to it as the table is written; every
     execution of the plan adds again, so run one action per accumulator."""
@@ -526,3 +536,15 @@ def encode_df(
 
     return df.mapInArrow(fn, schema=ENCODED_SCHEMA)
 
+
+def encode_counted(
+    df: DataFrame, block_size: int, n_splits: int, skip: frozenset[int] = frozenset()
+) -> tuple[DataFrame, Accumulator]:
+    """encode_df of `df` but the rows of the splits in `skip`, and the
+    lineage.SplitCounters accumulator its one write fills: a run for a
+    sink that writes with Spark."""
+    df = with_split_id(df, n_splits)
+    if skip:
+        df = df.filter(~F.col("split_id").isin(sorted(skip)))
+    acc = df.sparkSession.sparkContext.accumulator({}, lineage.SplitCounters())
+    return encode_df(df, block_size=block_size, n_splits=n_splits, lineage_acc=acc), acc

@@ -1,18 +1,23 @@
 """spark-submit entry: read tokens table → encode → write encoded +
 lineage, resumable.  (crumble `main`/`transcode` analogue, minus the CLI
 option zoo — config is the EncodeConfig dataclass, bundled into the
-PRESETS levels.)  The encode itself is one scan → mapInArrow → sink, with
-no shuffle: giant rows stay single rows (encode.encode_record_batch bounds
-their kernel slices).
+PRESETS levels.)  The encode itself is one job with no shuffle: giant
+rows stay single rows (encode.encode_record_batch bounds their kernel
+slices).
 
 One run writer: write_run writes every run of the parquet store, a run
 of this job or a streaming.ingest micro-batch (run id stream-<batch>):
-its data, then the store sidecar, then its lineage rows under
-lineage/run_id=<run>/, which are its commit record (Spark's committer
-publishes all of a run's rows or none; a failed write can leave the
-directory behind without rows).  The direct path (`--direct`) folds the same per-split counters
-per input split and publishes each record right after the split's data
-file: lineage and resume are per split there.
+its data (sinks.write_encoded_parquet), then the store sidecar, then its
+lineage rows under lineage/run_id=<run>/, which are its commit record.
+On a store on the driver's local filesystem the Python task that encodes
+also reads (a bare parquet scan's row groups) and writes; the driver
+renames the run's staging directory into place and writes the lineage
+file, so the run is one job.  A store on another filesystem keeps
+Spark's writer and committer for both (a failed write can leave the
+lineage directory behind without rows).  The direct path (`--direct`)
+folds the same per-split counters per input split and publishes each
+record right after the split's data file: lineage and resume are per
+split there.
 
 Usage:
     spark-submit --py-files crumble_spark.zip -m crumble_spark.job \
@@ -30,10 +35,9 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, lineage
-from .encode import encode_df, with_split_id
+from .encode import encode_counted
 
 
 @dataclass
@@ -60,15 +64,16 @@ STREAM_RUN_PREFIX = "stream-"
 
 
 def write_run(
-    spark: SparkSession, df: DataFrame, out_dir: str, run_id: str, cfg: EncodeConfig
+    spark: SparkSession, df: DataFrame, out_dir: str, run_id: str, cfg: EncodeConfig,
+    skip: frozenset[int] = frozenset(),
 ) -> list[dict]:
     """Write one run of the parquet store at out_dir and return its
-    lineage rows: `df` encoded into {out_dir}/encoded/run_id=<run_id>/,
-    then the store sidecar, then the rows into
-    {out_dir}/lineage/run_id=<run_id>/ (run_id as the directory's
-    partition value).  Both run directories are overwritten whole, so a
-    retried run or replayed batch replaces its own output; a `df` with
-    no row leaves neither (nothing to commit) and returns [].
+    lineage rows: `df` but the rows of the splits in `skip`, encoded into
+    {out_dir}/encoded/run_id=<run_id>/, then the store sidecar, then the
+    rows into {out_dir}/lineage/run_id=<run_id>/ (run_id as the
+    directory's partition value).  Both run directories are replaced
+    whole, so a retried run or replayed batch replaces its own output; a
+    run with no row leaves neither (nothing to commit) and returns [].
 
     The sidecar is read first: a store of another n_splits raises before
     anything is written (sinks.check_store_n_splits).  It is read again
@@ -78,17 +83,15 @@ def write_run(
 
     enc_dir = f"{out_dir}/encoded"
     sinks.check_store_n_splits(enc_dir, cfg.n_splits)
-    acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
-    enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
-    sinks.write_encoded_parquet(enc, enc_dir, run_id)
-    if not acc.value:
-        sinks.delete_path(f"{enc_dir}/run_id={run_id}")
+    counters = sinks.write_encoded_parquet(
+        df, enc_dir, run_id, cfg.block_size, cfg.n_splits, skip
+    )
+    if not counters:
         return []
     held = (sinks.read_store_meta(enc_dir) or {}).get("splits", [])
-    sinks.write_store_meta(enc_dir, cfg.n_splits, splits=set(held) | set(acc.value))
-    rows = lineage.lineage_rows(acc.value, run_id)
-    lin = lineage.lineage_frame(spark, rows).drop("run_id")
-    lin.write.mode("overwrite").parquet(f"{out_dir}/lineage/run_id={run_id}")
+    sinks.write_store_meta(enc_dir, cfg.n_splits, splits=set(held) | set(counters))
+    rows = lineage.lineage_rows(counters, run_id)
+    lineage.publish_rows(spark, rows, f"{out_dir}/lineage", run_id)
     return rows
 
 
@@ -109,9 +112,10 @@ def run_encode_job(
 
     resume=True keeps the store: it raises if encoded/ or lineage/ hold
     anything but run directories or if `run_id` is already committed
-    (has lineage rows), then deletes both run directories of every run
-    without lineage rows (a run that died after its data commit, before
-    or inside its lineage write).  When the done splits cover every
+    (has lineage rows), then deletes both run directories and the
+    staging directory of every run without lineage rows (a run that died
+    inside its encode job, or after its data commit, before or inside its
+    lineage write).  When the done splits cover every
     split id below n_splits, no doc is left to encode: it returns their
     summary and runs no job past the lineage read.  Otherwise it scans
     the input, even when every split that held a doc is done: a doc
@@ -151,6 +155,7 @@ def run_encode_job(
             raise ValueError(f"run_id {run_id!r} is already committed in {lin_dir}")
         for orphan in runs - committed:
             sinks.delete_path(f"{enc_dir}/run_id={orphan}")
+            sinks.delete_path(f"{enc_dir}/{sinks.STAGING_PREFIX}{orphan}")
             sinks.delete_path(f"{lin_dir}/run_id={orphan}")
         # a stream batch's splits hold other input: only a job run marks
         # a split of this input done
@@ -161,19 +166,16 @@ def run_encode_job(
     elif not iceberg:
         sinks.delete_path(enc_dir)
         sinks.delete_path(lin_dir)
-    df = with_split_id(df, cfg.n_splits)
-    if done:
-        df = df.filter(~F.col("split_id").isin([int(r["split"]) for r in done]))
+    skip = frozenset(int(r["split"]) for r in done)
     if not iceberg:
-        rows = write_run(spark, df, out_dir, run_id, cfg)
+        rows = write_run(spark, df, out_dir, run_id, cfg, skip)
         return {**lineage.summarize(done + rows), "run_id": run_id}
 
     def wf(table):
         # sinks take factory(df); bind the table name per call site
         return (lambda d: writer_factory(d, table)) if writer_factory else None
 
-    acc = spark.sparkContext.accumulator({}, lineage.SplitCounters())
-    enc = encode_df(df, block_size=cfg.block_size, n_splits=cfg.n_splits, lineage_acc=acc)
+    enc, acc = encode_counted(df, cfg.block_size, cfg.n_splits, skip)
     sinks.write_encoded_iceberg(
         enc, out_dir, run_id, writer_factory=wf(out_dir), n_splits=cfg.n_splits
     )
@@ -241,14 +243,14 @@ def main() -> None:
             totals = decode_verify_direct(spark, f"{args.output}/encoded")
             print(f"verified: {totals}")
     else:
+        from . import sinks
+
         if args.format == "iceberg":
             # table-in/table-out: the input is an Iceberg catalog table,
             # symmetric with the sink (BASELINE input contract)
-            from . import sinks
-
             df = sinks.read_tokens_iceberg(spark, args.input)
         else:
-            df = spark.read.parquet(args.input)
+            df = sinks.read_tokens_parquet(spark, args.input)
         print(
             run_encode_job(
                 spark, df, args.output, cfg=cfg, resume=not args.no_resume,

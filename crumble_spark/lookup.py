@@ -9,14 +9,14 @@ fetch via the BAM index, snp_score.c main loop seeks by region) applied
 to the engine's own output: a compressed store you can point-query.
 
 decode_docs serves a lookup of a store on the driver's local filesystem
-with no Spark job and no Python worker: a pyarrow dataset scan of the
-store's files, filtered on split_id and doc_id, opens only the row groups
-whose statistics can hold a routed split and decodes the kept rows with
-the shared walker (decode.decode_to_tokens); the result is a local
-relation, which collects without a job.  A job's fixed cost (planning,
-scheduling, a Python task per core) is ~0.5 s on 4 cores; the driver
-path's cost is its read, which pyarrow spreads over the driver's cores as
-Spark's local tasks would.  A store on any other filesystem (hdfs://,
+(sinks.local_root) with no Spark job and no Python worker: a pyarrow
+dataset scan of the store's files, filtered on split_id and doc_id,
+opens only the row groups whose statistics can hold a routed split and
+decodes the kept rows with the shared walker (decode.decode_to_tokens);
+the result is a local relation, which collects without a job.  A job's
+fixed cost (planning, scheduling, a Python task per core) is ~0.5 s on 4
+cores; the driver path's cost is its read, which pyarrow spreads over the
+driver's cores as Spark's local tasks would.  A store on any other filesystem (hdfs://,
 s3a://, s3://, viewfs://) is one Spark scan: only Spark's reader sees the
 session's Hadoop configuration and credentials.
 
@@ -36,8 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .decode import decode_df, decode_to_tokens
+from . import sinks
 from .schema import ENCODED_SCHEMA, PA_ENCODED, PA_TOKENS, TOKENS_SCHEMA
-from .sinks import spark_visible
 
 _LOCAL = pafs.LocalFileSystem()
 _READ_COLUMNS = ["doc_id", "source", "n_tok", "blocks", "row_hash"]
@@ -46,17 +46,6 @@ _READ_COLUMNS = ["doc_id", "source", "n_tok", "blocks", "row_hash"]
 def split_of(doc_id: str, n_splits: int) -> int:
     """Python twin of encode.with_split_id's crc32 assignment."""
     return zlib.crc32(doc_id.encode()) % n_splits
-
-
-def _local_root(enc_dir: str) -> str | None:
-    """enc_dir's path on the driver's local filesystem, as Spark resolves
-    it (a path without a scheme is on the session's default filesystem),
-    or None when the store lives on another filesystem."""
-    from .sinks import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(enc_dir)
-    uri = fs.makeQualified(path_cls(enc_dir)).toUri()
-    return uri.getPath() if uri.getScheme() == "file" else None
 
 
 def _driver_read(root: str, splits: list[int], doc_ids: list[str], verify: bool) -> pa.Table:
@@ -68,7 +57,7 @@ def _driver_read(root: str, splits: list[int], doc_ids: list[str], verify: bool)
         f.path
         for f in _LOCAL.get_file_info(pafs.FileSelector(root, recursive=True))
         # Spark's scan skips empty files too
-        if f.type == pafs.FileType.File and f.size and spark_visible(os.path.relpath(f.path, root))
+        if f.type == pafs.FileType.File and f.size and sinks.spark_visible(os.path.relpath(f.path, root))
     ]
     store = ds.dataset(files, schema=PA_ENCODED, format="parquet", filesystem=_LOCAL)
     rows = store.to_batches(
@@ -105,9 +94,7 @@ def decode_docs(
     (written by every writer) — a hand-passed mismatch would silently
     route lookups to the wrong split and return partial results.
     """
-    from .sinks import read_store_meta
-
-    meta = read_store_meta(enc_dir) or {}
+    meta = sinks.read_store_meta(enc_dir) or {}
     if n_splits is None:
         if "n_splits" not in meta:
             raise ValueError(
@@ -121,7 +108,7 @@ def decode_docs(
         splits &= set(meta["splits"])
     if not splits:
         return spark.createDataFrame(PA_TOKENS.empty_table(), TOKENS_SCHEMA)
-    root = _local_root(enc_dir)
+    root = sinks.local_root(enc_dir)
     if root is not None:
         return spark.createDataFrame(_driver_read(root, sorted(splits), doc_ids, verify), TOKENS_SCHEMA)
     enc = (

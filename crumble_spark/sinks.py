@@ -1,13 +1,22 @@
 """Encoded-table sinks: parquet (this sandbox) and Iceberg (cluster).
 
-* parquet: one store layout for every writer.  Each task writes one file,
+* parquet: one store layout for every writer.  Each task writes one file
+  (a local run's task one more each time its output reaches PART_BYTES),
   its rows sorted by split_id, in row groups of at most ROW_GROUP_BYTES,
   so a lookup's split_id IN-filter prunes whole row groups by their
   min/max statistics.  Each run of job.write_run (the DataFrame job, or
   a streaming micro-batch) writes one run directory, `run_id=<run>/`,
-  overwriting it whole: a retried run or replayed batch replaces its own
-  output and nothing else.
-  The direct path writes the same sorted files flat, one per input split.
+  replacing it whole: a retried run or replayed batch replaces its own
+  output and nothing else.  write_encoded_parquet encodes and writes a
+  run in one job.  On a store on the driver's local filesystem
+  (local_root) each Python task encodes its rows and writes its own file
+  with pyarrow into a hidden staging directory, which the driver renames
+  to the run directory when the job succeeds; a bare parquet scan is
+  read by the tasks themselves, (file, row group) slices as on the
+  direct path.  Any other store (hdfs://, s3a://, viewfs://) keeps
+  Spark's writer: the Arrow batches go back to the JVM and parquet-mr
+  writes them through Spark's committer.  The direct path writes the
+  same sorted files flat, one per input split.
 * iceberg: `overwritePartitions()` on a split_id-partitioned table, with
   run provenance stamped into the snapshot summary via the public
   `snapshot-property.*` write option — the analogue of crumble writing a
@@ -22,14 +31,38 @@ iceberg path raises a clear error here; its plumbing is injection-tested
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from collections.abc import Iterator
+from urllib.parse import unquote, urlparse
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .schema import PA_ENCODED, TOKENS_SCHEMA
 
 # parquet row-group target of every writer: small enough that a lookup
 # reads little past its routed splits, large enough that parquet-mr's
 # memory check stays quiet on a giant row
 ROW_GROUP_BYTES = 256 * 1024
+# the only columns whose min/max statistics a reader uses (a lookup
+# prunes row groups by split_id and doc_id); the pyarrow writers write
+# no others, as a payload's min/max would be stored in full
+STATS_COLUMNS = ["split_id", "doc_id"]
+# a local run's task closes a part file each time the encoded rows it
+# holds reach this many (Arrow) bytes, so its memory stays within about
+# twice this (the rows and their sorted copy) plus one input batch,
+# however large its input slice; Spark's writer streams row groups out
+PART_BYTES = 64 * 1024 * 1024
+# a local run's hidden staging directory: {enc_dir}/.staging-<run>
+STAGING_PREFIX = ".staging-"
+# the input columns encode.encode_record_batch reads
+ENCODE_COLUMNS = ("doc_id", "tokens", "source", "split_id", "force_raw")
 
 
 def spark_visible(rel: str) -> bool:
@@ -41,27 +74,213 @@ def spark_visible(rel: str) -> bool:
     )
 
 
-def write_encoded_parquet(enc: DataFrame, enc_dir: str, run_id: str) -> None:
-    """Write `enc` into {enc_dir}/run_id=<run_id>/, replacing that
-    directory: one file per task, rows sorted by split_id.  parquet-mr
-    checks the row group's size after every row (its default waits 100
-    rows, then estimates), so a group closes on the first row that takes
-    it to ROW_GROUP_BYTES.  Sets no session conf."""
+def local_root(path: str) -> str | None:
+    """`path` on the driver's local filesystem, as Spark resolves it (a
+    path without a scheme is on the session's default filesystem), or
+    None when it lives on another filesystem.  Only a local store is
+    read (lookup.decode_docs) and written (write_encoded_parquet)
+    without Spark's parquet IO: only Spark sees the session's Hadoop
+    configuration and credentials."""
+    fs, path_cls = _hadoop_fs(path)
+    uri = fs.makeQualified(path_cls(path)).toUri()
+    return uri.getPath() if uri.getScheme() == "file" else None
+
+
+def write_encoded_parquet(
+    df: DataFrame, enc_dir: str, run_id: str, block_size: int, n_splits: int,
+    skip: frozenset[int] = frozenset(),
+) -> dict:
+    """Encode the tokens table `df` into {enc_dir}/run_id=<run_id>/ in
+    one job, replacing that directory, and return the run's counters,
+    {split: lineage.split_counters vector}.  Rows of the splits in `skip`
+    are left out; a run without rows leaves no run directory.  One file
+    per task (on a local store, one per PART_BYTES of a task's output),
+    rows sorted by split_id, row groups closed on the first row that
+    takes them to ROW_GROUP_BYTES.  Sets no session conf.
+
+    A local store is written by _write_local_run.  Any other goes through
+    Spark's writer: encode.encode_counted sums the counters in an
+    accumulator and parquet-mr, checking the row group's size after every
+    row (its default waits 100 rows, then estimates), writes the sorted
+    rows."""
+    root = local_root(enc_dir)
+    if root is not None:
+        return _write_local_run(df, root, run_id, block_size, n_splits, skip)
+    from .encode import encode_counted
+
+    enc, acc = encode_counted(df, block_size, n_splits, skip)
+    run_dir = f"{enc_dir}/run_id={run_id}"
     (
         enc.sortWithinPartitions("split_id")
         .write.option("parquet.block.size", ROW_GROUP_BYTES)
         .option("parquet.page.size.row.check.min", 1)
         .option("parquet.page.size.row.check.max", 1)
         .mode("overwrite")
-        .parquet(f"{enc_dir}/run_id={run_id}")
+        .parquet(run_dir)
+    )
+    if not acc.value:
+        delete_path(run_dir)
+    return acc.value
+
+
+def _write_local_run(
+    df: DataFrame, root: str, run_id: str, block_size: int, n_splits: int, skip: frozenset[int]
+) -> dict:
+    """write_encoded_parquet on the local store at `root`: one mapInArrow
+    job whose tasks each write part-<partition>-<k>.parquet files into
+    the run's staging directory and return only their counters; the
+    driver sums them, then renames the staging directory to
+    run_id=<run_id>, so the run is published whole or not at all.  A
+    bare parquet scan's tasks read their own (file, row group) slices
+    with pyarrow; any other `df` feeds its Arrow batches to the same task
+    function.  A failed job leaves no staging directory behind."""
+    from . import lineage
+    from .sources import parquet_direct as direct
+
+    columns = [c for c in df.columns if c in ENCODE_COLUMNS]
+    files = _scanned_files(df)
+    if files is None:
+        tasks, read = df.select(*columns), None
+    else:
+        spark = df.sparkSession
+        tasks = direct._task_frame(spark, direct._splits_of(spark, files))
+        read = columns
+    stage = os.path.join(root, f"{STAGING_PREFIX}{run_id}")
+    final = os.path.join(root, f"run_id={run_id}")
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage)
+    try:
+        task = _encode_task(stage, read, block_size, n_splits, skip, PART_BYTES)
+        counters = lineage.sum_counters(tasks.mapInArrow(task, lineage.COUNTERS_SCHEMA).toArrow())
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    shutil.rmtree(final, ignore_errors=True)
+    if counters:
+        os.rename(stage, final)
+    else:
+        shutil.rmtree(stage)
+    return counters
+
+
+def _scanned_files(df: DataFrame) -> list[str] | None:
+    """The non-empty local files of `df` when it is a bare parquet scan
+    (`spark.read[.schema(s)].parquet(paths)`: its analyzed plan is a
+    LogicalRelation over parquet without partition columns), else None.
+    Spark's scan skips empty files, which inputFiles() lists."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if not (
+        rel.getClass().getSimpleName() == "HadoopFsRelation"
+        and rel.fileFormat().shortName() == "parquet"
+        and rel.partitionSchema().length() == 0
+    ):
+        return None
+    uris = [urlparse(u) for u in df.inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return None
+    return [p for p in (unquote(u.path) for u in uris) if os.path.getsize(p)]
+
+
+def _encode_task(stage: str, columns: list[str] | None, block_size: int, n_splits: int,
+                 skip: frozenset[int], part_bytes: int):
+    """The mapInArrow function of a local run.  Its input batches are the
+    token rows or, with `columns`, (path, rg) rows naming the input
+    slices it reads.  It encodes its rows into split-sorted
+    part-<partition>-<k>.parquet files in `stage`, closing one each time
+    the rows it holds reach `part_bytes`, and yields their counters."""
+    from . import lineage
+    from .encode import encode_record_batch, split_ids
+    from .sources import parquet_direct as direct
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        direct._pin_arrow_single_thread()
+        if columns is not None:
+            batches = (
+                b
+                for t in batches
+                for p, g in zip(t.column("path").to_pylist(), t.column("rg").to_pylist())
+                for b in direct._read_split(p, g, columns)
+            )
+        part = f"part-{TaskContext.get().partitionId():05d}"
+        out, held, k, total = [], 0, 0, {}
+        for batch in batches:
+            if skip:
+                split = split_ids(batch, n_splits)
+                keep = ~np.isin(split.to_numpy(), list(skip))
+                if "split_id" not in batch.schema.names:
+                    batch = batch.append_column("split_id", split)
+                batch = batch.filter(pa.array(keep))
+            if batch.num_rows:
+                enc, counters = encode_record_batch(batch, block_size, n_splits)
+                out.append(enc)
+                held += enc.nbytes
+                lineage.add_counters(total, counters)
+            if out and held >= part_bytes:
+                write_encoded_file(os.path.join(stage, f"{part}-{k:03d}.parquet"), out)
+                out, held, k = [], 0, k + 1
+        if out:
+            write_encoded_file(os.path.join(stage, f"{part}-{k:03d}.parquet"), out)
+        yield lineage.counters_batch(total)
+
+    return run
+
+
+def write_encoded_file(path: str, batches: list[pa.RecordBatch]) -> None:
+    """Publish PA_ENCODED `batches` as one file of the store layout: rows
+    sorted by split_id, row groups cut by _row_group_ends, min/max
+    statistics on STATS_COLUMNS only."""
+    table = pa.Table.from_batches(batches, schema=PA_ENCODED).sort_by("split_id")
+    ends = _row_group_ends(table.column("bytes_out").to_numpy())
+    groups = [table.slice(a, b - a) for a, b in zip(ends, ends[1:])] or [table]
+    publish_file(path, PA_ENCODED, groups, write_statistics=STATS_COLUMNS)
+
+
+def _row_group_ends(sizes: np.ndarray) -> list[int]:
+    """[0, end offsets...] of consecutive row groups over rows of `sizes`
+    bytes: a group closes on the first row that takes it to
+    ROW_GROUP_BYTES, as parquet-mr's does in Spark's writer."""
+    cum, ends = np.cumsum(sizes), [0]
+    while ends[-1] < len(cum):
+        base = cum[ends[-1] - 1] if ends[-1] else 0
+        ends.append(min(len(cum), int(np.searchsorted(cum, base + ROW_GROUP_BYTES)) + 1))
+    return ends
+
+
+def publish_file(path: str, schema: pa.Schema, groups: list[pa.Table], **writer_opts) -> None:
+    """Write `groups`, one row group each, to a hidden temp name, then
+    rename it into place: a reader never sees a partial file (Spark and
+    pyarrow skip names with a leading '.'), and a retried task replaces
+    its own output.  The temp name is this attempt's (temp_name), so two
+    attempts of one task never write the same temp file."""
+    tmp = temp_name(path)
+    with pq.ParquetWriter(tmp, schema, **writer_opts) as w:
+        for g in groups:
+            w.write_table(g)
+    os.replace(tmp, path)
+
+
+def temp_name(path: str) -> str:
+    """A hidden temp name beside `path` of this task attempt: its task
+    attempt id (unique in the application; `driver` outside a task) and
+    a random tag (unique across applications), so speculative attempts,
+    or a retry racing a zombie on a shared mount, never share it."""
+    tc = TaskContext.get()
+    attempt = tc.taskAttemptId() if tc is not None else "driver"
+    return os.path.join(
+        os.path.dirname(path), f".{os.path.basename(path)}.{attempt}-{uuid.uuid4().hex[:8]}.tmp"
     )
 
 
 def store_runs(enc_dir: str) -> set[str]:
-    """Run ids of enc_dir's `run_id=` directories (none when it is absent).
-    Raises on any other entry but hidden (`_`/`.`) ones: a file or
-    directory of another layout beside the run directories makes every
-    read of the store fail on conflicting partition columns."""
+    """Run ids of enc_dir's `run_id=` directories and of its staging
+    directories, which a local run that died leaves behind (none when
+    enc_dir is absent).  Raises on any other entry but hidden (`_`/`.`)
+    ones: a file or directory of another layout beside the run
+    directories makes every read of the store fail on conflicting
+    partition columns."""
     fs, path_cls = _hadoop_fs(enc_dir)
     if not fs.exists(path_cls(enc_dir)):
         return set()
@@ -70,6 +289,8 @@ def store_runs(enc_dir: str) -> set[str]:
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith("run_id="):
             out.add(name[len("run_id="):])
+        elif st.isDirectory() and name.startswith(STAGING_PREFIX):
+            out.add(name[len(STAGING_PREFIX):])
         elif not name.startswith(("_", ".")):
             raise ValueError(
                 f"{enc_dir} holds {name!r}, which is not a run_id= directory "
@@ -269,6 +490,24 @@ def read_tokens_iceberg(spark, table: str, reader=None) -> DataFrame:
         if _is_missing_runtime(e):
             _raise_runtime_hint(e)
         raise
+
+
+def read_tokens_parquet(spark, path: str) -> DataFrame:
+    """Read the input tokens table from parquet at `path`: TOKENS_SCHEMA
+    plus the optional columns encode_record_batch honours (split_id,
+    force_raw) when the input's first non-empty file carries them.  Only
+    that file's schema is read: inference over the whole input fails on
+    a zero-byte file, which the scan itself skips."""
+    fs, path_cls = _hadoop_fs(path)
+    root = fs.makeQualified(path_cls(path)).toUri().getPath()
+    files, extra = fs.listFiles(path_cls(path), True), []
+    while files.hasNext():
+        st = files.next()
+        if st.getLen() and spark_visible(st.getPath().toUri().getPath()[len(root):].lstrip("/")):
+            found = spark.read.parquet(st.getPath().toString()).schema
+            extra = [f for f in found.fields if f.name in ("split_id", "force_raw")]
+            break
+    return spark.read.schema(T.StructType(TOKENS_SCHEMA.fields + extra)).parquet(path)
 
 
 def append_lineage_iceberg(lin: DataFrame, table: str, writer_factory=None) -> None:

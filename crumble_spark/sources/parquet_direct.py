@@ -25,12 +25,20 @@ a second wave for stealing still loses more than it balances
 (ARCHITECTURE.md).  A retried task re-does its whole (idempotent) slice.
 
 Each task publishes its split's data file, then its lineage record, each
-by atomic rename of a hidden tmp file; resume skips the splits that have
-a record.  Output files are deterministically named per input split, so a
-retried or resumed task overwrites its own partial output — idempotent by
-construction.  Each data file has the layout of every writer (sinks.py):
-rows sorted by split_id, row groups cut at sinks.ROW_GROUP_BYTES, so a
-lookup prunes it by row-group statistics.
+by atomic rename of a hidden temp file of its task attempt
+(sinks.publish_file); resume skips the splits that have a record.
+Output files are deterministically named per input split, so a retried
+or resumed task replaces its own output — idempotent by construction.
+Each data file has the layout of every writer (sinks.write_encoded_file):
+rows sorted by split_id, row groups cut at sinks.ROW_GROUP_BYTES, min/max
+statistics on split_id and doc_id only, so a lookup prunes it by
+row-group statistics.
+
+The DataFrame job's run on a local store reuses this module's footer
+listing (_splits_of), task frame and split reader (_task_frame,
+_read_split) for a bare parquet scan: its tasks read, encode and write
+as these do, but write one file per task (one per sinks.PART_BYTES of
+its output) into a run directory (sinks.py).
 """
 
 from __future__ import annotations
@@ -47,12 +55,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
-from ..schema import LINEAGE_SCHEMA, PA_ENCODED, PA_LINEAGE
+from ..schema import LINEAGE_SCHEMA, PA_LINEAGE
 from ..sinks import (
-    ROW_GROUP_BYTES,
     check_store_n_splits,
     delete_path,
+    publish_file,
     spark_visible,
+    write_encoded_file,
     write_store_meta,
 )
 
@@ -111,7 +120,11 @@ def list_input_splits_distributed(
     per file, so the crossover sits around 10^3 files; above it the
     distributed path wins and at 10^5-10^6 files it is the difference
     between seconds and driver-serial hours."""
-    files = list_input_files(in_path)
+    return _splits_of(spark, list_input_files(in_path))
+
+
+def _splits_of(spark: SparkSession, files: list[str]) -> list[tuple[str, int]]:
+    """list_input_splits_distributed of a listed set of `files`."""
     if len(files) <= DISTRIBUTED_LISTING_MIN_FILES:
         return _footer_splits(files)
 
@@ -164,29 +177,6 @@ def _read_split(path: str, rg: int, columns: list[str]):
     )
 
 
-def _publish(path: str, schema: pa.Schema, groups: list[pa.Table]) -> None:
-    """Write `groups`, one row group each, to a hidden tmp name, then
-    rename it into place: a reader never sees a partial file (Spark and
-    pyarrow skip names with a leading '.'), and a retried task overwrites
-    its own output."""
-    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
-    with pq.ParquetWriter(tmp, schema) as w:
-        for g in groups:
-            w.write_table(g)
-    os.replace(tmp, path)
-
-
-def _row_group_ends(sizes: np.ndarray) -> list[int]:
-    """[0, end offsets...] of consecutive row groups over rows of `sizes`
-    bytes: a group closes on the first row that takes it to
-    ROW_GROUP_BYTES, as parquet-mr's does in the DataFrame sink."""
-    cum, ends = np.cumsum(sizes), [0]
-    while ends[-1] < len(cum):
-        base = cum[ends[-1] - 1] if ends[-1] else 0
-        ends.append(min(len(cum), int(np.searchsorted(cum, base + ROW_GROUP_BYTES)) + 1))
-    return ends
-
-
 def _encode_split(
     path: str, rg: int, out_dir: str, block_size: int, n_splits: int, run_id: str,
     in_path: str,
@@ -210,13 +200,10 @@ def _encode_split(
     # a plain file name ([A-Za-z0-9_.~-]) has nothing to escape
     rel, rg_tag = name.rsplit(":", 1)
     stem = f"{quote(rel, safe='')}-{rg_tag}"
-    table = pa.Table.from_batches(out_batches, schema=PA_ENCODED).sort_by("split_id")
-    ends = _row_group_ends(table.column("bytes_out").to_numpy())
-    _publish(os.path.join(out_dir, "encoded", f"enc-{stem}.parquet"), PA_ENCODED,
-             [table.slice(a, b - a) for a, b in zip(ends, ends[1:])] or [table])
+    write_encoded_file(os.path.join(out_dir, "encoded", f"enc-{stem}.parquet"), out_batches)
     (record,) = lineage.lineage_rows({name: total}, run_id)
-    _publish(os.path.join(out_dir, "lineage_direct", f"{stem}.parquet"), PA_LINEAGE,
-             [pa.Table.from_pylist([record], schema=PA_LINEAGE)])
+    publish_file(os.path.join(out_dir, "lineage_direct", f"{stem}.parquet"), PA_LINEAGE,
+                 [pa.Table.from_pylist([record], schema=PA_LINEAGE)])
     return record
 
 

@@ -17,6 +17,16 @@ def spark():
     s.stop()
 
 
+def viewfs_store(spark, name, local_dir):
+    """A viewfs:// path that mounts `local_dir`: a store Spark writes and
+    reads through Hadoop's filesystem, not on the driver's local one.
+    `name` is the mount table's, one per store."""
+    spark.sparkContext._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{name}.link./store", f"file://{local_dir}"
+    )
+    return f"viewfs://{name}/store"
+
+
 def write_docs_fixture(tmp_path, rows):
     """Minimal documents.parquet with the real table's columns, from
     (doc_id, text, source) rows — THE schema contract for synthetic

@@ -89,8 +89,9 @@ def test_direct_verify_of_an_empty_store_is_zero(spark, tmp_path):
 
 
 def test_direct_survives_stale_tmp_from_crashed_attempt(spark, tok_dir, tmp_path):
-    # a task that died mid-write leaves .enc-*.parquet.tmp; the retry must
-    # overwrite it and publish atomically — output identical to a clean run
+    # a task that died mid-write leaves a hidden .enc-*.parquet.tmp; the
+    # retry writes its own temp file and publishes atomically — output
+    # identical to a clean run
     import os
 
     out = str(tmp_path / "crashy")

@@ -1,6 +1,8 @@
 """Checkpoint/resume: kill-and-rerun yields identical output (FIXTURES.md
 assertion 4); lineage accounting is exact."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -337,39 +339,77 @@ def _files(root):
     }
 
 
-def test_crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypatch):
+def _crash_store(spark, tmp_path, name, store):
+    """(out, its local directory) of a store "local" or on "viewfs", a
+    viewfs:// mount of a local directory that Spark's writer writes;
+    `name` is one mount's, unique per test."""
+    from conftest import viewfs_store
+
+    if store == "local":
+        return str(tmp_path / name), str(tmp_path / name)
+    return f"{viewfs_store(spark, name, str(tmp_path))}/{name}", str(tmp_path / name)
+
+
+@contextlib.contextmanager
+def _lineage_write_fails(monkeypatch, out, run_id, fault):
+    """Inside the block the lineage write of `run_id` into the store at
+    `out` calls fault(), which raises: at the publish of the pyarrow
+    lineage file on a local store, at Spark's writer on any other."""
+    from pyspark.sql import DataFrameWriter
+
+    from crumble_spark import sinks
+
+    run_dir = f"{out}/lineage/run_id={run_id}"
+    if sinks.local_root(out) is not None:
+        owner, name = sinks, "publish_file"
+        real = sinks.publish_file
+
+        def dies(path, *a, **kw):
+            if path.startswith(f"{run_dir}/"):
+                fault()
+            return real(path, *a, **kw)
+    else:
+        owner, name = DataFrameWriter, "parquet"
+        real = DataFrameWriter.parquet
+
+        def dies(self, path, *a, **kw):
+            if path == run_dir:
+                fault()
+            return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(owner, name, dies)
+    try:
+        yield
+    finally:
+        monkeypatch.setattr(owner, name, real)
+
+
+def _crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypatch, store):
     # the run's data and sidecar are committed, then the driver dies before
     # the lineage append: the run directory is an orphan.  The resume
     # deletes it and re-encodes its splits, so every doc is stored once
     import os
 
-    import pytest
-    from pyspark.sql import DataFrameWriter
-
     from crumble_spark import sinks
 
-    out, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    out, out_fs = _crash_store(spark, tmp_path, "crumblecommit", store)
+    clean = str(tmp_path / "clean")
     cfg = EncodeConfig(block_size=256, n_splits=16)
     df = _table(spark)
     first = with_split_id(df, cfg.n_splits).filter(F.col("split_id") < 8)
     run_encode_job(spark, first, out, run_id="r1", cfg=cfg, resume=False)
 
-    real = DataFrameWriter.parquet
+    def fault():
+        raise RuntimeError("driver died before the lineage append")
 
-    def dies_at_lineage(self, path, *a, **kw):
-        if path == f"{out}/lineage/run_id=r2":
-            raise RuntimeError("driver died before the lineage append")
-        return real(self, path, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", dies_at_lineage)
-    with pytest.raises(RuntimeError, match="driver died"):
-        run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
-    monkeypatch.setattr(DataFrameWriter, "parquet", real)
-    assert os.path.isdir(f"{out}/encoded/run_id=r2")
+    with _lineage_write_fails(monkeypatch, out, "r2", fault):
+        with pytest.raises(RuntimeError, match="driver died"):
+            run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
+    assert os.path.isdir(f"{out_fs}/encoded/run_id=r2")
 
     s = run_encode_job(spark, df, out, run_id="r3", cfg=cfg)
     assert (s["rows"], s["splits"]) == (200, 16)
-    runs = sorted(d for d in os.listdir(f"{out}/encoded") if not d.startswith(("_", ".")))
+    runs = sorted(d for d in os.listdir(f"{out_fs}/encoded") if not d.startswith(("_", ".")))
     assert runs == ["run_id=r1", "run_id=r3"]
     stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
     assert len(stored) == len(set(stored)) == 200
@@ -384,43 +424,61 @@ def test_crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypat
     assert set(sinks.read_store_meta(f"{out}/encoded")["splits"]) >= lin_splits
 
 
-@pytest.mark.parametrize("left", ["", "_temporary/0"])
-def test_crash_inside_the_lineage_write(spark, tmp_path, monkeypatch, left):
-    # the lineage write dies after the committer made the run's lineage
-    # directory: aborted ("", _temporary deleted) or with the driver
-    # ("_temporary/0" left).  A directory without rows is no commit: the
-    # resume deletes the run and re-encodes its splits, every doc once
+def test_crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypatch):
+    _crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypatch, "local")
+
+
+def test_crash_between_data_commit_and_lineage_append_on_a_spark_store(
+    spark, tmp_path, monkeypatch
+):
+    _crash_between_data_commit_and_lineage_append(spark, tmp_path, monkeypatch, "viewfs")
+
+
+def _crash_inside_the_lineage_write(spark, tmp_path, monkeypatch, store, left):
+    # the lineage write dies after the run's lineage directory was made:
+    # empty (""), holding what a Spark writer's crash leaves
+    # ("_temporary/0"), or holding a half-written temp file of the
+    # pyarrow publish.  A directory without rows is no commit: the resume
+    # deletes the run and re-encodes its splits, every doc once
     import os
 
-    from pyspark.sql import DataFrameWriter
-
-    out = str(tmp_path / "torn")
+    out, out_fs = _crash_store(spark, tmp_path, f"crumbletorn{len(left)}", store)
     cfg = EncodeConfig(block_size=256, n_splits=16)
     df = _table(spark)
     first = with_split_id(df, cfg.n_splits).filter(F.col("split_id") < 8)
     run_encode_job(spark, first, out, run_id="r1", cfg=cfg, resume=False)
 
-    real = DataFrameWriter.parquet
+    def fault():
+        run_dir = f"{out_fs}/lineage/run_id=r2"
+        if left.endswith(".tmp"):
+            with open(os.path.join(run_dir, left), "wb") as fh:
+                fh.write(b"PAR1 torn")
+        else:
+            os.makedirs(os.path.join(run_dir, left), exist_ok=True)
+        raise RuntimeError("lineage write failed")
 
-    def dies_in_lineage(self, path, *a, **kw):
-        if path == f"{out}/lineage/run_id=r2":
-            os.makedirs(os.path.join(path, left))
-            raise RuntimeError("lineage write failed")
-        return real(self, path, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", dies_in_lineage)
-    with pytest.raises(RuntimeError, match="lineage write failed"):
-        run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
-    monkeypatch.setattr(DataFrameWriter, "parquet", real)
-    assert os.path.isdir(f"{out}/lineage/run_id=r2")
+    with _lineage_write_fails(monkeypatch, out, "r2", fault):
+        with pytest.raises(RuntimeError, match="lineage write failed"):
+            run_encode_job(spark, df, out, run_id="r2", cfg=cfg)
+    assert os.path.isdir(f"{out_fs}/lineage/run_id=r2")
 
     s = run_encode_job(spark, df, out, run_id="r3", cfg=cfg)
     assert (s["rows"], s["splits"]) == (200, 16)
     for d in ("encoded", "lineage"):
-        runs = sorted(r for r in os.listdir(f"{out}/{d}") if not r.startswith(("_", ".")))
+        runs = sorted(r for r in os.listdir(f"{out_fs}/{d}") if not r.startswith(("_", ".")))
         assert runs == ["run_id=r1", "run_id=r3"]
     stored = [r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect()]
     assert len(stored) == len(set(stored)) == 200
+
+
+@pytest.mark.parametrize("left", ["", "_temporary/0", ".part-0.parquet.driver-0.tmp"])
+def test_crash_inside_the_lineage_write(spark, tmp_path, monkeypatch, left):
+    _crash_inside_the_lineage_write(spark, tmp_path, monkeypatch, "local", left)
+
+
+@pytest.mark.parametrize("left", ["", "_temporary/0"])
+def test_crash_inside_the_lineage_write_on_a_spark_store(spark, tmp_path, monkeypatch, left):
+    _crash_inside_the_lineage_write(spark, tmp_path, monkeypatch, "viewfs", left)
 
 
 def test_sidecar_keeps_the_splits_of_an_overlapping_run(spark, tmp_path, monkeypatch):
@@ -434,9 +492,10 @@ def test_sidecar_keeps_the_splits_of_an_overlapping_run(spark, tmp_path, monkeyp
     df = with_split_id(_table(spark), cfg.n_splits).filter(F.col("split_id") < 8)
     real = sinks.write_encoded_parquet
 
-    def overlapped(enc, enc_dir, run_id):
-        real(enc, enc_dir, run_id)
+    def overlapped(df, enc_dir, *a, **kw):
+        counters = real(df, enc_dir, *a, **kw)
         sinks.write_store_meta(enc_dir, cfg.n_splits, splits={15})
+        return counters
 
     monkeypatch.setattr(sinks, "write_encoded_parquet", overlapped)
     run_encode_job(spark, df.drop("split_id"), out, run_id="r1", cfg=cfg)

@@ -22,7 +22,7 @@ def _encoded_dir(spark, tmp_path, n_splits=16):
     """A store written by the sink alone: one run directory, no sidecar."""
     out = str(tmp_path / "enc")
     df = with_split_id(synth.synth_table(spark, 300, seed=21, mean_len=300, parts=4), n_splits)
-    sinks.write_encoded_parquet(encode_df(df, block_size=256, n_splits=n_splits), out, "t")
+    sinks.write_encoded_parquet(df, out, "t", block_size=256, n_splits=n_splits)
     return out, df
 
 
@@ -77,7 +77,7 @@ def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
 def _spark_scan(monkeypatch):
     """Make every store look off the driver's local filesystem, so each
     lookup is the Spark scan."""
-    monkeypatch.setattr(lookup, "_local_root", lambda enc_dir: None)
+    monkeypatch.setattr(sinks, "local_root", lambda path: None)
 
 
 def test_lookup_prunes_partitions(spark, tmp_path, monkeypatch):
@@ -154,8 +154,8 @@ def test_local_root_is_the_local_store_path(spark, tmp_path):
     # a path without a scheme means what it means to Spark: a path on the
     # session's default (local) filesystem, relative to the JVM's cwd
     jvm_cwd = spark._jvm.java.lang.System.getProperty("user.dir")
-    assert lookup._local_root("store/encoded") == f"{jvm_cwd}/store/encoded"
-    assert lookup._local_root(f"file://{tmp_path}/enc") == f"{tmp_path}/enc"
+    assert sinks.local_root("store/encoded") == f"{jvm_cwd}/store/encoded"
+    assert sinks.local_root(f"file://{tmp_path}/enc") == f"{tmp_path}/enc"
 
 
 def test_lookup_off_local_fs_is_one_scan(spark, store64):
@@ -167,7 +167,7 @@ def test_lookup_off_local_fs_is_one_scan(spark, store64):
         "fs.viewfs.mounttable.crumblelookup.link./store", f"file://{os.path.dirname(out)}"
     )
     view = "viewfs://crumblelookup/store/encoded"
-    assert lookup._local_root(view) is None
+    assert sinks.local_root(view) is None
     ids = sorted(rows)[:3]
 
     def run():
@@ -381,7 +381,8 @@ def test_lookup_on_direct_flat_store(spark, tmp_path):
 
 
 def _write_encoded(path, docs, n_splits=16):
-    """Encode {doc_id: tokens} into one split-sorted parquet file."""
+    """Encode {doc_id: tokens} into one file of the store layout, written
+    as every pyarrow writer of the store writes it."""
     from crumble_spark.encode import encode_record_batch
 
     batch = pa.record_batch(
@@ -391,7 +392,7 @@ def _write_encoded(path, docs, n_splits=16):
     )
     enc, _ = encode_record_batch(batch, block_size=128, n_splits=n_splits)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(pa.Table.from_batches([enc]).sort_by("split_id"), path)
+    sinks.write_encoded_file(path, [enc])
     return enc
 
 
@@ -402,7 +403,7 @@ def test_lookup_tampered_row_hash_raises_on_driver(spark, tmp_path):
     rh = enc.column("row_hash").to_pylist()
     rh[4] += 1
     bad = enc.set_column(enc.schema.get_field_index("row_hash"), "row_hash", pa.array(rh, pa.int64()))
-    pq.write_table(pa.Table.from_batches([bad]).sort_by("split_id"), path)
+    sinks.write_encoded_file(path, [bad])
     out = str(tmp_path / "store")
     sinks.write_store_meta(out, 16)
     (good,) = lookup.decode_docs(spark, out, ["doc-1"]).collect()

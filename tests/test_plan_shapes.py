@@ -228,39 +228,77 @@ def test_encode_scan_prunes_and_pushes(spark):
     assert "text" in read_schema and "ts" not in read_schema
 
 
-def test_encode_job_is_one_scan_and_no_shuffle(spark, tmp_path, monkeypatch):
-    # the DataFrame encode job is scan → mapInArrow → sink: giant rows
-    # stay single rows, so no Exchange moves raw tokens or encoded blocks,
-    # the input is scanned once, and the sink write is one single-stage job
+def _encode_sink_plan(spark, tmp_path, monkeypatch, store):
+    """(executed plan, stage count) of the one job the DataFrame encode
+    job's sink call runs, on a `store` of "local" or "viewfs" (a
+    viewfs:// mount of a local directory, written by Spark's writer)."""
+    from conftest import viewfs_store
+    from pyspark.sql import DataFrameWriter
+
     from crumble_spark import job, sinks, synth
 
     sc = spark.sparkContext
-    real = sinks.write_encoded_parquet
+    group = f"encode-sink-{store}"
+    DataFrame = type(spark.range(1))
+    real, real_to_arrow, real_write = (
+        sinks.write_encoded_parquet, DataFrame.toArrow, DataFrameWriter.parquet
+    )
     plans = []
 
-    def spy(enc, *a, **kw):
-        plans.append(_plan(enc))
-        sc.setJobGroup("encode-sink", "encoded data to the sink")
+    def to_arrow(self):
+        plans.append(_plan(self))
+        return real_to_arrow(self)
+
+    def write(self, path, *a, **kw):
+        plans.append(_plan(self._df))
+        return real_write(self, path, *a, **kw)
+
+    def spy(*a, **kw):
+        sc.setJobGroup(group, "encoded data to the sink")
+        monkeypatch.setattr(DataFrame, "toArrow", to_arrow)
+        monkeypatch.setattr(DataFrameWriter, "parquet", write)
         try:
-            real(enc, *a, **kw)
+            return real(*a, **kw)
         finally:
+            monkeypatch.setattr(DataFrame, "toArrow", real_to_arrow)
+            monkeypatch.setattr(DataFrameWriter, "parquet", real_write)
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setJobDescription(None)
 
     monkeypatch.setattr(sinks, "write_encoded_parquet", spy)
     inp = str(tmp_path / "tokens")
     synth.synth_table(spark, 64, seed=3, mean_len=300, parts=2).write.parquet(inp)
+    out = str(tmp_path / "out")
+    if store == "viewfs":
+        out = f"{viewfs_store(spark, 'crumbleplan', str(tmp_path))}/out"
     cfg = job.EncodeConfig(block_size=256, n_splits=16)
-    job.run_encode_job(spark, spark.read.parquet(inp), str(tmp_path / "out"), cfg=cfg,
-                       resume=False)
+    job.run_encode_job(spark, spark.read.parquet(inp), out, cfg=cfg, resume=False)
 
     (plan,) = plans
+    tracker = sc.statusTracker()
+    (job_id,) = tracker.getJobIdsForGroup(group)
+    return plan, len(tracker.getJobInfo(job_id).stageIds)
+
+
+def test_encode_job_is_one_scan_and_no_shuffle(spark, tmp_path, monkeypatch):
+    # the DataFrame encode job on a local store: its tasks read the
+    # input's row groups themselves, encode and write, so the job is one
+    # single-stage job over a local relation of input slices: no
+    # Exchange moves raw tokens or encoded blocks, and Spark scans no
+    # tokens (giant rows stay single rows)
+    plan, stages = _encode_sink_plan(spark, tmp_path, monkeypatch, "local")
+    assert "Exchange" not in plan, plan[:2000]
+    assert "Scan parquet" not in plan and "LocalTableScan" in plan, plan[:2000]
+    assert stages == 1
+
+
+def test_encode_job_on_a_spark_store_is_one_scan_and_no_shuffle(spark, tmp_path, monkeypatch):
+    # on any other store the job is scan → mapInArrow → Spark's writer:
+    # the input is scanned once, no Exchange, one single-stage job
+    plan, stages = _encode_sink_plan(spark, tmp_path, monkeypatch, "viewfs")
     assert "Exchange" not in plan, plan[:2000]
     assert plan.count("Scan parquet") == 1, plan[:2000]
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup("encode-sink")
-    assert len(jobs) == 1
-    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    assert stages == 1
 
 
 def test_ann_scaled_recall_floor(spark):
