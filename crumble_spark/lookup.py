@@ -16,9 +16,13 @@ decodes the kept rows with the shared walker (decode.decode_to_tokens);
 the result is a local relation, which collects without a job.  A job's
 fixed cost (planning, scheduling, a Python task per core) is ~0.5 s on 4
 cores; the driver path's cost is its read, which pyarrow spreads over the
-driver's cores as Spark's local tasks would.  A store on any other filesystem (hdfs://,
-s3a://, s3://, viewfs://) is one Spark scan: only Spark's reader sees the
-session's Hadoop configuration and credentials.
+driver's cores as Spark's local tasks would, and its Py4J round trips:
+the store's locality is resolved once (one Hadoop FileSystem), the
+sidecar is read without the JVM, and the remaining crossings are
+pyspark's createDataFrame and collect of the result (~40 round trips in
+all).  A store on any other filesystem (hdfs://, s3a://, s3://,
+viewfs://) is one Spark scan: only Spark's reader sees the session's
+Hadoop configuration and credentials.
 
 At 10^12 rows with n_splits=4096, a k-doc lookup reads at most the row
 groups of k splits plus each file's footer.
@@ -80,8 +84,13 @@ def decode_docs(
 
     The split set is computed driver-side from the same crc32 the encoder
     used and, when the store's sidecar lists the splits it holds,
-    intersected with them.  A store on the driver's local filesystem is
-    read on the driver: its files as Spark's read sees them (hidden names
+    intersected with them.  The store's locality (sinks.local_root, one
+    Hadoop FileSystem) is resolved once; a local store's sidecar is read
+    with plain Python, checked against Hadoop's `.crc` file
+    (sinks.read_store_meta).  Past that, a local lookup's only JVM
+    crossings are createDataFrame and collect of its result.  A store on
+    the driver's local filesystem is read on the driver: its files as
+    Spark's read sees them (hidden names
     such as `_temporary/` skipped), only the row groups whose split_id and
     doc_id statistics can match, only the rows that do, decoded (with
     verify, a row_hash mismatch raises ValueError naming the doc).  The
@@ -94,7 +103,8 @@ def decode_docs(
     (written by every writer) — a hand-passed mismatch would silently
     route lookups to the wrong split and return partial results.
     """
-    meta = sinks.read_store_meta(enc_dir) or {}
+    root = sinks.local_root(enc_dir)
+    meta = sinks.read_store_meta(enc_dir, root) or {}
     if n_splits is None:
         if "n_splits" not in meta:
             raise ValueError(
@@ -108,7 +118,6 @@ def decode_docs(
         splits &= set(meta["splits"])
     if not splits:
         return spark.createDataFrame(PA_TOKENS.empty_table(), TOKENS_SCHEMA)
-    root = sinks.local_root(enc_dir)
     if root is not None:
         return spark.createDataFrame(_driver_read(root, sorted(splits), doc_ids, verify), TOKENS_SCHEMA)
     enc = (

@@ -30,9 +30,12 @@ iceberg path raises a clear error here; its plumbing is injection-tested
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
 import uuid
+import zlib
 from collections.abc import Iterator
 from urllib.parse import unquote, urlparse
 
@@ -63,6 +66,8 @@ PART_BYTES = 64 * 1024 * 1024
 STAGING_PREFIX = ".staging-"
 # the input columns encode.encode_record_batch reads
 ENCODE_COLUMNS = ("doc_id", "tokens", "source", "split_id", "force_raw")
+# the store's sidecar (write_store_meta), beside its data
+META_NAME = "_crumble_meta.json"
 
 
 def spark_visible(rel: str) -> bool:
@@ -314,8 +319,17 @@ def _hadoop_fs(path: str):
     from pyspark.sql import SparkSession
 
     spark = SparkSession.active()
-    path_cls = spark._jvm.org.apache.hadoop.fs.Path
+    path_cls = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")
     return path_cls(path).getFileSystem(spark._jsc.hadoopConfiguration()), path_cls
+
+
+@functools.cache
+def _jclass(jvm, name: str):
+    """The Py4J handle of JVM class `name` (dotted, an inner class too),
+    resolved once per gateway (`jvm`, its JVM view): each step of a
+    `spark._jvm.org.apache...` walk is a round trip.  A new session in
+    the same process keeps the gateway, so a handle stays valid."""
+    return functools.reduce(getattr, name.split("."), jvm)
 
 
 def _rename_overwrite(tmp, final) -> bool:
@@ -330,10 +344,11 @@ def _rename_overwrite(tmp, final) -> bool:
         jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()
         uri = final.toUri()
-        fc_cls = jvm.org.apache.hadoop.fs.FileContext
+        fc_cls = _jclass(jvm, "org.apache.hadoop.fs.FileContext")
         fc = fc_cls.getFileContext(uri, conf) if uri.getScheme() else fc_cls.getFileContext(conf)
-        opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        rename = _jclass(jvm, "org.apache.hadoop.fs.Options.Rename")
+        opts = spark.sparkContext._gateway.new_array(rename, 1)
+        opts[0] = rename.OVERWRITE
         fc.rename(tmp, final, opts)
         return True
     except Exception as e:
@@ -358,19 +373,18 @@ def write_store_meta(enc_dir: str, n_splits: int, splits=None) -> None:
     splits are all outside `splits` runs no job; the writer publishes
     the sidecar after its data and before its lineage, so `splits` is
     always a superset of the committed splits.  Written through the
-    Hadoop FileSystem API, so it lands next to the data on any scheme."""
-    import json
-
+    Hadoop FileSystem API, so it lands next to the data on any scheme
+    (on the local filesystem with a `.crc` checksum file beside it)."""
     meta = {"n_splits": n_splits, "split_fn": "crc32(doc_id) % n_splits"}
     if splits is not None:
         meta["splits"] = sorted(splits)
     fs, path_cls = _hadoop_fs(enc_dir)
     fs.mkdirs(path_cls(enc_dir))
-    tmp = path_cls(f"{enc_dir}/_crumble_meta.json.tmp")
+    tmp = path_cls(f"{enc_dir}/{META_NAME}.tmp")
     out = fs.create(tmp, True)
     out.write(bytearray(json.dumps(meta).encode("utf-8")))
     out.close()
-    final = path_cls(f"{enc_dir}/_crumble_meta.json")
+    final = path_cls(f"{enc_dir}/{META_NAME}")
     # an atomic republish: no window where a reader sees no sidecar
     # (ADVICE r3); s3a has no atomic rename, so there the window stays
     if not _rename_overwrite(tmp, final):
@@ -398,22 +412,55 @@ def check_store_n_splits(enc_dir: str, n_splits: int) -> None:
         )
 
 
-def read_store_meta(enc_dir: str) -> dict | None:
-    import json
-
+def read_store_meta(enc_dir: str, root: str | None = None) -> dict | None:
+    """The sidecar of the store at enc_dir (write_store_meta), or None
+    when it has none.  `root` is local_root(enc_dir), resolved here when
+    not given.  A local sidecar is read with plain Python and checked
+    against the `.crc` file Hadoop writes beside it, as Hadoop's
+    LocalFileSystem reader checks it (_check_crc); a sidecar on any other
+    filesystem is read through Hadoop."""
+    if root is None:
+        root = local_root(enc_dir)
+    if root is not None:
+        path = os.path.join(root, META_NAME)
+        try:
+            with open(path, "rb") as f:
+                data = f.read()
+        except FileNotFoundError:
+            return None
+        _check_crc(path, data)
+        return json.loads(data)
     from pyspark.sql import SparkSession
 
     fs, path_cls = _hadoop_fs(enc_dir)
-    p = path_cls(f"{enc_dir}/_crumble_meta.json")
+    p = path_cls(f"{enc_dir}/{META_NAME}")
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
         # commons-io ships with Spark; reads the stream fully
-        io_utils = SparkSession.active()._jvm.org.apache.commons.io.IOUtils
+        io_utils = _jclass(SparkSession.active()._jvm, "org.apache.commons.io.IOUtils")
         return json.loads(io_utils.toString(stream, "UTF-8"))
     finally:
         stream.close()
+
+
+def _check_crc(path: str, data: bytes) -> None:
+    """Raise OSError, naming `path`, unless `data` read from it matches
+    the `.<name>.crc` file beside it: `crc\\0`, a big-endian int32
+    bytesPerSum, then the big-endian CRC32 of each chunk of that many
+    bytes.  No `.crc` file, no check, as in Hadoop."""
+    crc_path = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    try:
+        with open(crc_path, "rb") as f:
+            sums = f.read()
+    except FileNotFoundError:
+        return
+    step = int.from_bytes(sums[4:8], "big")
+    if sums[:4] != b"crc\0" or step <= 0 or sums[8:] != b"".join(
+        zlib.crc32(data[i : i + step]).to_bytes(4, "big") for i in range(0, len(data), step)
+    ):
+        raise OSError(f"checksum error: {path} does not match {crc_path}")
 
 
 def write_encoded_iceberg(

@@ -57,6 +57,7 @@ from .. import DEFAULT_BLOCK_SIZE, encode, lineage
 from ..decode import decode_record_batch
 from ..schema import LINEAGE_SCHEMA, PA_LINEAGE
 from ..sinks import (
+    ENCODE_COLUMNS,
     check_store_n_splits,
     delete_path,
     publish_file,
@@ -172,8 +173,12 @@ def _pin_arrow_single_thread() -> None:
 
 
 def _read_split(path: str, rg: int, columns: list[str]):
-    return pq.ParquetFile(path).iter_batches(
-        batch_size=1024, row_groups=[rg], columns=columns, use_threads=False
+    """Batches of row group `rg` of `path`: those of `columns` the file has."""
+    f = pq.ParquetFile(path)
+    names = f.schema_arrow.names
+    return f.iter_batches(
+        batch_size=1024, row_groups=[rg], columns=[c for c in columns if c in names],
+        use_threads=False,
     )
 
 
@@ -189,7 +194,7 @@ def _encode_split(
     name = _split_name(path, rg, in_path)
     total = np.zeros(lineage.N_COUNTERS, np.int64)
     out_batches = []
-    for batch in _read_split(path, rg, ["doc_id", "tokens", "source"]):
+    for batch in _read_split(path, rg, list(ENCODE_COLUMNS)):
         try:
             out, counters = encode.encode_record_batch(batch, block_size, n_splits)
         except ValueError as e:

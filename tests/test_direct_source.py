@@ -622,3 +622,33 @@ def test_direct_reads_only_the_files_spark_reads(spark, tmp_path):
     got = sorted(r["doc_id"] for r in spark.read.parquet(f"{out}/encoded").select("doc_id").collect())
     assert got == want
     assert direct.decode_verify_direct(spark, f"{out}/encoded")["rows"] == len(want)
+
+
+def test_direct_honours_force_raw(spark, tmp_path):
+    # an input that carries force_raw (and a precomputed split_id) is read
+    # with those columns, as the DataFrame job reads it: the marked docs
+    # are stored RAW (codec 0), the others compressed
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crumble_spark.lookup import split_of
+
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    inp.mkdir()
+    ids = [f"doc-{j}" for j in range(4)]
+    pq.write_table(pa.table({
+        "doc_id": ids,
+        "tokens": pa.array([[j] * 500 for j in range(4)], pa.list_(pa.int32())),
+        "n_tok": pa.array([500] * 4, pa.int32()),
+        "source": ["web"] * 4,
+        "split_id": pa.array([split_of(d, 16) for d in ids], pa.int32()),
+        "force_raw": [True, False, True, False],
+    }), str(inp / "part-0.parquet"))
+    direct.encode_job_direct(spark, str(inp), out, block_size=256, n_splits=16)
+    codecs = {
+        r["doc_id"]: {b[1] for b in r["blocks"]}
+        for r in spark.read.parquet(f"{out}/encoded").collect()
+    }
+    assert codecs["doc-0"] == codecs["doc-2"] == {0}
+    assert 0 not in codecs["doc-1"] | codecs["doc-3"]
+    assert direct.decode_verify_direct(spark, f"{out}/encoded")["rows"] == 4

@@ -68,6 +68,48 @@ def test_sidecar_republish_is_atomic_overwrite(spark, tmp_path):
     assert sinks.read_store_meta(out)["n_splits"] == 32
 
 
+def _sidecar_stores(spark, tmp_path, name):
+    """(local dir, the same dir through a viewfs:// mount) of a store
+    holding only a sidecar, written through Hadoop as every writer does."""
+    from conftest import viewfs_store
+
+    local = str(tmp_path / "enc")
+    sinks.write_store_meta(local, 64, splits=range(48))
+    return local, f"{viewfs_store(spark, name, str(tmp_path))}/enc"
+
+
+def test_sidecar_local_read_matches_hadoop_read(spark, tmp_path):
+    # the driver's plain read of a local sidecar returns what Hadoop's
+    # read of the same file returns; a store without the `.crc` file
+    # Hadoop writes beside it reads unchecked, as in Hadoop
+    local, view = _sidecar_stores(spark, tmp_path, "crumblemeta")
+    assert sinks.local_root(view) is None
+    meta = sinks.read_store_meta(local)
+    assert meta == sinks.read_store_meta(view)
+    assert meta == {"n_splits": 64, "split_fn": "crc32(doc_id) % n_splits", "splits": list(range(48))}
+    os.remove(f"{local}/._crumble_meta.json.crc")
+    assert sinks.read_store_meta(local) == meta == sinks.read_store_meta(view)
+
+
+def test_corrupt_sidecar_raises_on_both_readers(spark, tmp_path):
+    # one digit changed, the JSON still valid: the `.crc` file catches it
+    # on the local read as Hadoop's checksummed read does
+    from py4j.protocol import Py4JJavaError
+
+    local, view = _sidecar_stores(spark, tmp_path, "crumblecorrupt")
+    path = f"{local}/_crumble_meta.json"
+    with open(path) as f:
+        text = f.read()
+    with open(path, "w") as f:
+        f.write(text.replace('"n_splits": 64', '"n_splits": 65'))
+    with pytest.raises(OSError, match="_crumble_meta.json"):
+        sinks.read_store_meta(local)
+    with pytest.raises(OSError, match="_crumble_meta.json"):
+        lookup.decode_docs(spark, local, ["x"])
+    with pytest.raises(Py4JJavaError, match="ChecksumException"):
+        sinks.read_store_meta(view)
+
+
 def test_lookup_refuses_sidecarless_store_without_n_splits(spark, tmp_path):
     out, src = _encoded_dir(spark, tmp_path)
     with pytest.raises(ValueError, match="_crumble_meta.json"):
@@ -148,6 +190,32 @@ def test_lookup_reads_only_routed_split_dirs(spark, store64):
     # relation: no job to plan, list or scan, none to collect
     assert jobs == []
     assert df.schema == TOKENS_SCHEMA
+
+
+def test_lookup_round_trips_to_the_jvm(spark, store64, monkeypatch):
+    # a warm lookup of a local store crosses Py4J for the store's locality
+    # (one Hadoop FileSystem), then for createDataFrame and collect of the
+    # local relation; the sidecar is read without the JVM.  Counted on
+    # the calling thread: py4j's finalizer thread sends the deletes of
+    # freed proxies later, in bursts
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    out, rows = store64
+    ids = sorted(rows)[:3]
+    lookup.decode_docs(spark, out, ids).collect()
+    real, me, calls = ClientServerConnection.send_command, threading.get_ident(), []
+
+    def spy(self, command):
+        if threading.get_ident() == me:
+            calls.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", spy)
+    lookup.decode_docs(spark, out, ids).collect()
+    monkeypatch.undo()
+    assert len(calls) <= 45, len(calls)
 
 
 def test_local_root_is_the_local_store_path(spark, tmp_path):
