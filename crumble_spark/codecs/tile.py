@@ -33,18 +33,17 @@ def majority_pattern(a: np.ndarray, p: int) -> np.ndarray:
     snp_score.c:533-797, is exactly this shape).
 
     Vote over the first VOTE_ROWS repetitions with pairwise-equality
-    counting (k^2 vectorized compares) instead of p np.unique sorts —
-    an imperfect mode only shifts a few bytes of exception cost, never
-    correctness (exceptions carry exact values regardless).
+    counting (one k x k x p broadcast compare) instead of p np.unique
+    sorts — an imperfect mode only shifts a few bytes of exception cost,
+    never correctness (exceptions carry exact values regardless).  Ties
+    go to the earliest repetition (argmax).
     """
     n = len(a)
     k = min(VOTE_ROWS, n // p)
     if k <= 1:
         return a[:p].astype(np.int64)
     rows = a[: k * p].reshape(k, p)
-    votes = np.zeros((k, p), dtype=np.int8)
-    for i in range(k):
-        votes[i] = (rows == rows[i]).sum(axis=0, dtype=np.int8)
+    votes = (rows[:, None, :] == rows[None, :, :]).sum(axis=1, dtype=np.int8)
     return rows[np.argmax(votes, axis=0), np.arange(p)].astype(np.int64)
 
 
@@ -77,13 +76,15 @@ def size(n: int, p: int, n_exc: int) -> int:
     return _HDR.size + 4 * p + (n_exc * pos_width + 7) // 8 + 4 * n_exc
 
 
-def encode(arr: np.ndarray, p: int | None = None) -> bytes:
+def encode(arr: np.ndarray, p: int | None = None, pat: np.ndarray | None = None) -> bytes:
+    """`pat`, when given, is majority_pattern(arr, p), already computed."""
     a = np.asarray(arr, dtype=np.int64)
     n = len(a)
     if p is None:
         p, _ = best_period(a)
         p = p or 1
-    pat = majority_pattern(a, p)
+    if pat is None:
+        pat = majority_pattern(a, p)
     tiled = np.tile(pat, n // p + 1)[:n]
     exc_pos = np.flatnonzero(a != tiled)
     pos_width = bitpack.width_for(max(n - 1, 1))

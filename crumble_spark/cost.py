@@ -7,11 +7,15 @@ and take the cheapest by (bytes, codec id), with RAW always in the
 candidate set so the worst case is the input size — the `preserve`
 fallback (snp_score.c:1624-1649).
 
-encode.encode_flat sizes RAW, RLE, FOR_BP and DELTA_BP in closed form for
-every block of a batch, and plans the dictionary for every slow block at
-once; choose_with_stats acts on that verdict for one slow block.  Every
-size but the periodic trials' is exact, so selection never mispredicts;
-TILE and FSST need trial encodes and are gated by a cheap lag scan,
+The choice is size-first: every candidate is sized before any payload is
+encoded, and only the winner is.  encode.encode_flat sizes RAW, RLE,
+FOR_BP and DELTA_BP in closed form for every block of a batch and bounds
+what DICT, TILE and FSST could do (distinct_floor): a block stays on the
+fast path unless one of them can still win.  It plans the dictionary for
+the rest, the slow blocks, at once; choose_with_stats acts on that
+verdict for one slow block.  DICT's size comes from its plan and TILE's
+from tile.size, both exact, so selection never mispredicts; only FSST is
+trial-encoded.  The periodic trials are gated by a cheap lag scan,
 mirroring crumble's -Y work-skipping gate (snp_score.c:1732).
 """
 
@@ -31,20 +35,36 @@ FSST_MIN_PERIODICITY = 0.35
 MAX_LAG = 8  # STR finder searches periods 1..8 (str_finder.h:13)
 
 
-def periodicity_scan(a: np.ndarray, max_lag: int = MAX_LAG) -> tuple[int, float]:
-    """(best_lag, fraction of positions equal to the position `lag` back),
-    over lags 2..max_lag (lag 1 is run structure, already owned by RLE).
+def periodicity_scan(
+    a: np.ndarray, starts: np.ndarray, n: np.ndarray, max_lag: int = MAX_LAG
+) -> tuple[list[int], list[int]]:
+    """For each block a[starts[i] : starts[i] + n[i]] (each longer than
+    max_lag): (best lag, its count of positions equal to the position
+    `lag` back), over lags 2..max_lag (lag 1 is run structure, already
+    owned by RLE).  The best lag has the highest match fraction
+    count / (n - lag), the smallest lag on a tie; 0 with count 0 when no
+    position matches.
 
-    Vectorized np.equal lag comparison — the numeric STR finder
+    One vectorized np.equal pass per lag over the blocks, gathered, and
+    one reduceat to count per block — the numeric STR finder
     (str_finder.c:135-189 does the same via a rolling 2-bit word).
     """
-    n = len(a)
-    best_lag, best = 0, 0.0
-    for lag in range(2, min(max_lag, n - 1) + 1):
-        frac = float(np.count_nonzero(a[lag:] == a[:-lag])) / (n - lag)
-        if frac > best:
-            best_lag, best = lag, frac
-    return best_lag, best
+    if len(n) == 0:
+        return [], []
+    offs = np.concatenate(([0], np.cumsum(n)))
+    g = np.concatenate([a[s : s + k] for s, k in zip(starts.tolist(), n.tolist())])
+    eq = np.empty(len(g), bool)
+    pairs = np.stack((offs[:-1], offs[1:]), 1)
+    lags = np.arange(2, max_lag + 1)
+    counts = np.empty((len(lags), len(n)), np.int64)
+    for i, lag in enumerate(lags.tolist()):
+        np.equal(g[lag:], g[:-lag], out=eq[:-lag])
+        # block j counts eq[offs[j] : offs[j+1] - lag]: no pair across blocks
+        counts[i] = np.add.reduceat(eq, (pairs - (0, lag)).ravel(), dtype=np.int64)[::2]
+    frac = counts / (n - lags[:, None])
+    best = frac.argmax(axis=0)
+    cnt = counts[best, np.arange(len(n))]
+    return np.where(cnt > 0, lags[best], 0).tolist(), cnt.tolist()
 
 
 def chance_match_rate(counts: np.ndarray, n: int) -> float:
@@ -68,57 +88,65 @@ def choose(a: np.ndarray) -> tuple[int, bytes]:
     return block["codec_id"], block["payload"]
 
 
+def distinct_floor(vmin: np.ndarray, vmax: np.ndarray, zzmax: np.ndarray) -> np.ndarray:
+    """Per block, a lower bound on its number of distinct values, from its
+    min, max and largest zig-zagged step: L = ceil((vmax - vmin) / D) + 1
+    with D = (zzmax + 1) // 2, the largest |step|.  The block walks from
+    its min to its max one step at a time, so no gap between two adjacent
+    distinct values is wider than D.  1 for a constant block (D = 0)."""
+    step = (zzmax + 1) // 2
+    return np.where(step > 0, (vmax - vmin + step - 1) // np.maximum(step, 1) + 1, 1)
+
+
 def choose_with_stats(
     a: np.ndarray,
-    cheap_id: int,
-    cheap_size: int,
-    dict_plan: tuple[int, bool, int],
+    best_id: int,
+    best_size: int,
+    dict_plan: tuple[int, bool],
     values: np.ndarray,
     counts: np.ndarray,
-) -> tuple[int, bytes]:
+    scan: tuple[int, int] | None,
+) -> tuple[int, bytes | None]:
     """The choice for one slow block from encode_flat's batch verdict: the
-    cheapest of RAW/RLE/FOR_BP/DELTA_BP (cheap_id, cheap_size), the
-    dictionary plan (k, use_escape, size) and the block's distinct values
-    (ascending) with their counts.  DICT competes by (size, id) only while
-    its 2-entry lower bound beats the cheap size; then the periodic trials
-    may replace the winner.  Accepts int32 or int64 input."""
+    best of the cheap codecs and DICT by (size, id) (best_id, best_size),
+    the dictionary plan (k, use_escape), the block's distinct values
+    (ascending) with their counts, and its periodicity_scan (lag, count),
+    None when the block is out of the periodic trials' reach.  A periodic
+    block is sized as TILE for every divisor of its lag, and trial-encoded
+    as FSST; the winner is encoded once.  Returns (codec_id, payload);
+    payload is None when a cheap codec keeps the block, which the caller
+    encodes from its batch stats.  Accepts int32 or int64 input."""
     n = len(a)
-    best_id, best_size = cheap_id, cheap_size
-    k, use_escape, dict_size = dict_plan
-    dict_wins = (dict_size, codecs.DICT) < (cheap_size, cheap_id)
-    if dictionary.full_size(2, n) < cheap_size and dict_wins:
-        best_id, best_size = codecs.DICT, dict_size
-        payload = dictionary.encode(a, k=k, use_escape=use_escape, values=values, counts=counts)
-    else:
-        payload = codecs.encode(best_id, a)
-    assert len(payload) == best_size, (best_id, len(payload), best_size)
-
+    pattern = None
     # periodic analysis: only when repeats might exist that RLE/dict can't
     # see (cheap gates first — crumble's -Y work-skipping discipline).
     # The lag-match fraction must beat what i.i.d. low-card noise shows by
-    # chance, else every 2-symbol block wastes a trial encode.
-    if n >= FSST_MIN_N and 1 < len(values) <= FSST_MAX_CARD and best_size * 8 > n:
-        # int32 is fine throughout the gate: the lag scan and tile votes
-        # are pure equality/argmax, and tile/fsst encode upcast internally
-        lag, frac = periodicity_scan(a)
-        if frac >= max(FSST_MIN_PERIODICITY, 1.5 * chance_match_rate(counts, n)):
+    # chance, else every 2-symbol block wastes a trial.
+    if scan is not None:
+        lag, cnt = scan
+        frac = float(cnt) / (n - lag) if lag else 0.0
+        if frac >= FSST_MIN_PERIODICITY and frac >= 1.5 * chance_match_rate(counts, n):
             # the scan's best lag is often a multiple of the true period —
             # a mutation inside the tile pattern replicates everywhere, so
-            # try every divisor and keep the exact cheapest
-            best_p, best_tile_sz = 0, best_size
+            # size every divisor exactly and keep the cheapest; int32 is
+            # fine here, the votes are pure equality/argmax
             for p in (d for d in range(1, lag + 1) if lag % d == 0):
-                n_exc = tile.exceptions_for(a, tile.majority_pattern(a, p))
-                sz = tile.size(n, p, n_exc)
-                if sz < best_tile_sz:
-                    best_p, best_tile_sz = p, sz
-            if best_p:
-                trial = tile.encode(a, best_p)
-                if len(trial) < best_size:
-                    best_id, payload, best_size = codecs.TILE, trial, len(trial)
+                pat = tile.majority_pattern(a, p)
+                sz = tile.size(n, p, tile.exceptions_for(a, pat))
+                if sz < best_size:
+                    best_id, best_size, pattern = codecs.TILE, sz, pat
             # gram tables only stand a chance when the tile didn't already
             # collapse the block below ~1 bit/token
             if best_size * 8 > n:
                 trial = codecs.encode(codecs.FSST, a)
                 if len(trial) < best_size:
                     return codecs.FSST, trial
+    if best_id == codecs.TILE:
+        payload = tile.encode(a, len(pattern), pattern)
+    elif best_id == codecs.DICT:
+        k, use_escape = dict_plan
+        payload = dictionary.encode(a, k=k, use_escape=use_escape, values=values, counts=counts)
+    else:
+        return best_id, None
+    assert len(payload) == best_size, (best_id, len(payload), best_size)
     return best_id, payload

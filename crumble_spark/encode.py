@@ -78,7 +78,7 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
     few distinct values, high-entropy blocks have few duplicates), with
     the run of trailing 1-counts handled arithmetically.
 
-    Returns (vals_by_class, cnts_by_class, and per-slow-block lists:
+    Returns (vals_by_class, cnts_by_class, and per-slow-block arrays:
     class id, slice start/end into that class's arrays, plan k /
     use_escape / exact size).
     """
@@ -210,10 +210,7 @@ def _batch_slow_plans(rvals, seg_len, rb, rb_end, blen, vmin, vmax, slow_sel):
         gc = np.add.reduceat(seg_len[sel][order], gstart)
         plan_and_store(2, rest, gv, gc, blk, len(idx))
 
-    return (
-        vals_by_class, cnts_by_class, grp.tolist(), ds.tolist(), de.tolist(),
-        pk.tolist(), pesc.tolist(), psz.tolist(),
-    )
+    return vals_by_class, cnts_by_class, grp, ds, de, pk, pesc, psz
 
 
 def encode_flat(
@@ -236,6 +233,16 @@ def encode_flat(
     This is the one codec chooser: each block gets the cheapest candidate
     by (bytes, codec id), a constant block is CONSTANT, and slow blocks
     finish in cost.choose_with_stats (dictionary, periodic trials).
+
+    The choice is size-first and exact.  A block goes to the slow path
+    only when a bound leaves DICT or a periodic trial a chance: it has at
+    least L = cost.distinct_floor distinct values (its walk from min to
+    max crosses no gap wider than its largest step), every dictionary
+    plan costs at least full_size(2, n) + 4 * (L - 2) bytes, and the
+    periodic trials need L <= FSST_MAX_CARD.  A monotone block fails
+    both and stays on the fast path.  For the slow blocks the batch
+    plans the dictionary, picks DICT or the cheap codec by size, and runs
+    the periodic trials' lag scan; each block's winner is encoded once.
     """
     offsets = np.asarray(offsets, dtype=np.int64)
     base = int(offsets[0])
@@ -264,9 +271,11 @@ def encode_flat(
     # vectorized per-block stats (blocks tile A contiguously)
     vmin = np.minimum.reduceat(A, bstart).astype(np.int64)
     vmax = np.maximum.reduceat(A, bstart).astype(np.int64)
-    d = A[1:] != A[:-1]
-    rs = np.flatnonzero(d) + 1
-    all_starts = np.union1d(bstart, rs)
+    # run starts: every block start and every change of value
+    is_start = np.zeros(len(A), bool)
+    is_start[1:] = A[1:] != A[:-1]
+    is_start[bstart] = True
+    all_starts = np.flatnonzero(is_start)
     seg_len = np.diff(np.concatenate((all_starts, [len(A)])))
     rb = np.searchsorted(all_starts, bstart)
     rvals = A[all_starts].astype(np.int64)
@@ -300,9 +309,21 @@ def encode_flat(
     cheap_ids = np.array([0, 2, 4, 5], dtype=np.int64)[np.argmin(size_matrix, axis=0)]
     best_cheap = size_matrix.min(axis=0)
 
+    # the exact gate: a block goes to the slow path only when DICT or a
+    # periodic trial can still win it.  It has at least L distinct values
+    # (cost.distinct_floor), so every dictionary plan, full or top-k plus
+    # escape, costs at least full_size(2, n) + 4 * (L - 2) bytes (one more
+    # 4-byte table or escape entry per value past two); the periodic
+    # trials need at most FSST_MAX_CARD distinct values and a cheap size
+    # above 1 bit/token
     const_mask = vmin == vmax
+    n_distinct = cost.distinct_floor(vmin, vmax, zzmax)
     dict_lb = dict_mod.full_size(2, 0) + (blen + 7) // 8  # full_size(2, blen)
-    slow_mask = (~const_mask) & ((dict_lb < best_cheap) | (best_cheap * 8 > blen))
+    dict_can = (dict_lb < best_cheap) & (dict_lb + 4 * (n_distinct - 2) <= best_cheap)
+    periodic_can = (
+        (best_cheap * 8 > blen) & (blen >= cost.FSST_MIN_N) & (n_distinct <= cost.FSST_MAX_CARD)
+    )
+    slow_mask = ~const_mask & (dict_can | periodic_can)
 
     rb_end = np.concatenate((rb[1:], [len(all_starts)]))
 
@@ -319,8 +340,32 @@ def encode_flat(
         slow_pos = np.full(total, -1, np.int64)
         slow_pos[slow_sel] = np.arange(len(slow_sel))
         slow_pos_l = slow_pos.tolist()
-        (sb_vals, sb_cnts, sb_grp_l, sb_ds_l, sb_de_l,
-         sb_k_l, sb_esc_l, sb_sz_l) = slow_batch
+        sb_vals, sb_cnts, sb_grp, sb_ds, sb_de, sb_k, sb_esc, sb_sz = slow_batch
+        # each slow block's best of DICT and the cheap codec, by (size,
+        # id), DICT only while its 2-entry lower bound beats the cheap size
+        s_cheap, s_id, s_n = best_cheap[slow_sel], cheap_ids[slow_sel], blen[slow_sel]
+        dict_wins = (dict_lb[slow_sel] < s_cheap) & (
+            (sb_sz < s_cheap) | ((sb_sz == s_cheap) & (codecs_mod.DICT < s_id))
+        )
+        s_best_id = np.where(dict_wins, codecs_mod.DICT, s_id)
+        s_best = np.where(dict_wins, sb_sz, s_cheap)
+        # the periodic trials' gate: enough tokens, 2..FSST_MAX_CARD
+        # distinct values and a best size above 1 bit/token; the lag
+        # scans of the blocks it passes run as one batch
+        card = sb_de - sb_ds
+        scanned = np.flatnonzero(
+            (s_n >= cost.FSST_MIN_N) & (card > 1) & (card <= cost.FSST_MAX_CARD)
+            & (s_best * 8 > s_n)
+        )
+        scan_l = [None] * len(slow_sel)
+        starts = bstart[slow_sel[scanned]]
+        for i, lag, cnt in zip(
+            scanned.tolist(), *cost.periodicity_scan(A, starts, s_n[scanned])
+        ):
+            scan_l[i] = (lag, cnt)
+        sb_grp_l, sb_ds_l, sb_de_l = sb_grp.tolist(), sb_ds.tolist(), sb_de.tolist()
+        sb_k_l, sb_esc_l = sb_k.tolist(), sb_esc.tolist()
+        s_best_id_l, s_best_l = s_best_id.tolist(), s_best.tolist()
 
     # interpreter-cost discipline: at small blocks the per-block Python
     # work dominates, so (a) every per-block scalar is pre-converted to a
@@ -335,7 +380,6 @@ def encode_flat(
         np.where(const_mask, 1, np.where(slow_mask, 3, cheap_ids + 4)),
     ).tolist()
     best_cheap_l = best_cheap.tolist()
-    cheap_ids_l = cheap_ids.tolist()
     bstart_l = bstart.tolist()
     blen_l = blen.tolist()
     block_row_l = block_row.tolist()
@@ -350,7 +394,7 @@ def encode_flat(
     rb_end_l = rb_end.tolist()
     crc32 = hashing.zlib.crc32
     MASK = (1 << 63) - 1
-    RAW, CONSTANT, RLE, DICT = codecs_mod.RAW, codecs_mod.CONSTANT, codecs_mod.RLE, codecs_mod.DICT
+    RAW, CONSTANT, RLE = codecs_mod.RAW, codecs_mod.CONSTANT, codecs_mod.RLE
     FOR_BP, DELTA_BP = codecs_mod.FOR_BP, codecs_mod.DELTA_BP
 
     for b in range(total):
@@ -362,6 +406,15 @@ def encode_flat(
         cb = chunk.tobytes()
         bid = block_id_l[b]
         c = cls[b]
+        if c == 3:  # slow path: dict / tile / fsst candidates in play
+            sp = slow_pos_l[b]
+            g, ds, de = sb_grp_l[sp], sb_ds_l[sp], sb_de_l[sp]
+            cid, payload = cost.choose_with_stats(
+                chunk, s_best_id_l[sp], s_best_l[sp], (sb_k_l[sp], sb_esc_l[sp]),
+                sb_vals[g][ds:de], sb_cnts[g][ds:de], scan_l[sp],
+            )
+            if payload is None:  # the cheap codec keeps it: emitted below
+                c = 4 + cid
         if c == 4 + RAW or c == 0:  # cheap RAW / forced RAW
             cid, payload = RAW, cb
         elif c == 4 + FOR_BP:
@@ -381,14 +434,6 @@ def encode_flat(
             payload = delta_mod.encode_pre(int(chunk[0]), zz[s : e - 1], w_zz[b])
         elif c == 1:
             cid, payload = CONSTANT, constant_mod.encode(chunk)
-        else:  # slow path: dict / fsst / tile candidates in play
-            sp = slow_pos_l[b]
-            g, ds, de = sb_grp_l[sp], sb_ds_l[sp], sb_de_l[sp]
-            cid, payload = cost.choose_with_stats(
-                chunk, cheap_ids_l[b], best_cheap_l[b],
-                (sb_k_l[sp], sb_esc_l[sp], sb_sz_l[sp]),
-                sb_vals[g][ds:de], sb_cnts[g][ds:de],
-            )
         if c >= 4 and len(payload) != best_cheap_l[b]:
             # the vectorized sizing (reduceat stats + _widths) and the
             # emitted encode_pre bytes must never disagree — the cheap-path

@@ -305,22 +305,41 @@ def store_runs(enc_dir: str) -> set[str]:
     return out
 
 
-def delete_path(path: str) -> None:
-    """Recursive delete through the store's Hadoop filesystem; a missing
-    path is a no-op."""
+def delete_path(path: str, root: str | None = None) -> None:
+    """Recursive delete of a directory; a missing path is a no-op.  `root`
+    is local_root(path), resolved here when not given: a local directory
+    is removed with shutil.rmtree, any other through the store's Hadoop
+    filesystem."""
+    if root is None:
+        root = local_root(path)
+    if root is not None:
+        try:
+            shutil.rmtree(root)
+        except FileNotFoundError:
+            pass
+        return
     fs, path_cls = _hadoop_fs(path)
     fs.delete(path_cls(path), True)
 
 
+def _spark_context():
+    """The active SparkContext, held in Python: asking the JVM for the
+    active session (SparkSession.active()) costs round trips."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("no active SparkContext: start a session first")
+    return sc
+
+
 def _hadoop_fs(path: str):
-    """(fs, Path-class) for `path` via the active session's Hadoop conf,
+    """(fs, Path-class) for `path` via the active context's Hadoop conf,
     so the store's listings, deletes and sidecar work on hdfs:// and
     s3a:// alike."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.active()
-    path_cls = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")
-    return path_cls(path).getFileSystem(spark._jsc.hadoopConfiguration()), path_cls
+    sc = _spark_context()
+    path_cls = _jclass(sc._jvm, "org.apache.hadoop.fs.Path")
+    return path_cls(path).getFileSystem(sc._jsc.hadoopConfiguration()), path_cls
 
 
 @functools.cache
@@ -337,17 +356,15 @@ def _rename_overwrite(tmp, final) -> bool:
     False ONLY when the scheme has no FileContext (e.g. s3a), so the
     caller falls back to a non-atomic delete-then-rename; any other rename
     failure propagates rather than degrade to that window (ADVICE r4)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.active()
+    sc = _spark_context()
     try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
+        jvm = sc._jvm
+        conf = sc._jsc.hadoopConfiguration()
         uri = final.toUri()
         fc_cls = _jclass(jvm, "org.apache.hadoop.fs.FileContext")
         fc = fc_cls.getFileContext(uri, conf) if uri.getScheme() else fc_cls.getFileContext(conf)
         rename = _jclass(jvm, "org.apache.hadoop.fs.Options.Rename")
-        opts = spark.sparkContext._gateway.new_array(rename, 1)
+        opts = sc._gateway.new_array(rename, 1)
         opts[0] = rename.OVERWRITE
         fc.rename(tmp, final, opts)
         return True
@@ -363,7 +380,9 @@ def _rename_overwrite(tmp, final) -> bool:
         raise
 
 
-def write_store_meta(enc_dir: str, n_splits: int, splits=None) -> None:
+def write_store_meta(
+    enc_dir: str, n_splits: int, splits=None, root: str | None = None
+) -> None:
     """Sidecar recording the split routing parameter and, when given, the
     sorted ids of the splits the store holds.  Point lookups
     (lookup.decode_docs) need the SAME n_splits the encoder used — a
@@ -372,17 +391,36 @@ def write_store_meta(enc_dir: str, n_splits: int, splits=None) -> None:
     prefix: ignored by Spark's file listing).  A lookup whose routed
     splits are all outside `splits` runs no job; the writer publishes
     the sidecar after its data and before its lineage, so `splits` is
-    always a superset of the committed splits.  Written through the
-    Hadoop FileSystem API, so it lands next to the data on any scheme
-    (on the local filesystem with a `.crc` checksum file beside it)."""
+    always a superset of the committed splits.  `root` is
+    local_root(enc_dir), resolved here when not given.  A local sidecar
+    is written with plain Python, with the `.crc` checksum file Hadoop's
+    LocalFileSystem writes beside it (_crc_file), so Hadoop's checksummed
+    read accepts it; both are published by rename, the file first, as
+    Hadoop's ChecksumFileSystem renames them.  On any other scheme it is
+    written through the Hadoop FileSystem API, so it lands next to the
+    data."""
     meta = {"n_splits": n_splits, "split_fn": "crc32(doc_id) % n_splits"}
     if splits is not None:
         meta["splits"] = sorted(splits)
+    data = json.dumps(meta).encode("utf-8")
+    if root is None:
+        root = local_root(enc_dir)
+    if root is not None:
+        os.makedirs(root, exist_ok=True)
+        final = os.path.join(root, META_NAME)
+        tmp, tmp_crc = temp_name(final), temp_name(_crc_path(final))
+        with open(tmp, "wb") as f:
+            f.write(data)
+        with open(tmp_crc, "wb") as f:
+            f.write(_crc_file(data))
+        os.replace(tmp, final)
+        os.replace(tmp_crc, _crc_path(final))
+        return
     fs, path_cls = _hadoop_fs(enc_dir)
     fs.mkdirs(path_cls(enc_dir))
     tmp = path_cls(f"{enc_dir}/{META_NAME}.tmp")
     out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(meta).encode("utf-8")))
+    out.write(bytearray(data))
     out.close()
     final = path_cls(f"{enc_dir}/{META_NAME}")
     # an atomic republish: no window where a reader sees no sidecar
@@ -398,12 +436,12 @@ def write_store_meta(enc_dir: str, n_splits: int, splits=None) -> None:
             )
 
 
-def check_store_n_splits(enc_dir: str, n_splits: int) -> None:
+def check_store_n_splits(enc_dir: str, n_splits: int, root: str | None = None) -> None:
     """Raise when the store at enc_dir was written with another n_splits:
     a doc routed by this one lands in another split than its stored copy,
     so it would be stored twice and lookups would route to the wrong
-    split."""
-    meta = read_store_meta(enc_dir)
+    split.  `root` is as read_store_meta's."""
+    meta = read_store_meta(enc_dir, root)
     if meta is not None and int(meta["n_splits"]) != n_splits:
         raise ValueError(
             f"{enc_dir} was written with n_splits={meta['n_splits']}, this run has "
@@ -430,8 +468,6 @@ def read_store_meta(enc_dir: str, root: str | None = None) -> dict | None:
             return None
         _check_crc(path, data)
         return json.loads(data)
-    from pyspark.sql import SparkSession
-
     fs, path_cls = _hadoop_fs(enc_dir)
     p = path_cls(f"{enc_dir}/{META_NAME}")
     if not fs.exists(p):
@@ -439,27 +475,38 @@ def read_store_meta(enc_dir: str, root: str | None = None) -> dict | None:
     stream = fs.open(p)
     try:
         # commons-io ships with Spark; reads the stream fully
-        io_utils = _jclass(SparkSession.active()._jvm, "org.apache.commons.io.IOUtils")
+        io_utils = _jclass(_spark_context()._jvm, "org.apache.commons.io.IOUtils")
         return json.loads(io_utils.toString(stream, "UTF-8"))
     finally:
         stream.close()
 
 
+def _crc_path(path: str) -> str:
+    """The `.<name>.crc` file Hadoop's LocalFileSystem keeps beside `path`."""
+    return os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+
+
+def _crc_file(data: bytes, step: int = 512) -> bytes:
+    """The `.crc` file of `data`: `crc\\0`, a big-endian int32 bytesPerSum
+    (Hadoop's default, 512), then the big-endian CRC32 of each chunk of
+    that many bytes."""
+    return b"crc\0" + step.to_bytes(4, "big") + b"".join(
+        zlib.crc32(data[i : i + step]).to_bytes(4, "big") for i in range(0, len(data), step)
+    )
+
+
 def _check_crc(path: str, data: bytes) -> None:
     """Raise OSError, naming `path`, unless `data` read from it matches
-    the `.<name>.crc` file beside it: `crc\\0`, a big-endian int32
-    bytesPerSum, then the big-endian CRC32 of each chunk of that many
-    bytes.  No `.crc` file, no check, as in Hadoop."""
-    crc_path = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    the `.crc` file beside it (_crc_file, with its own bytesPerSum).  No
+    `.crc` file, no check, as in Hadoop."""
+    crc_path = _crc_path(path)
     try:
         with open(crc_path, "rb") as f:
             sums = f.read()
     except FileNotFoundError:
         return
     step = int.from_bytes(sums[4:8], "big")
-    if sums[:4] != b"crc\0" or step <= 0 or sums[8:] != b"".join(
-        zlib.crc32(data[i : i + step]).to_bytes(4, "big") for i in range(0, len(data), step)
-    ):
+    if step <= 0 or sums != _crc_file(data, step):
         raise OSError(f"checksum error: {path} does not match {crc_path}")
 
 

@@ -1,12 +1,13 @@
 """pyarrow-direct encode/decode jobs over parquet (the 100 TB hot path).
 
-Why this exists: the kernel encodes at ~3 M tokens/s/core, but pushing
-token arrays JVM → Arrow socket → Python caps each task pair at ~1.4 M
-tokens/s and couples one JVM producer thread to every Python worker
-(2x thread oversubscription).  Reading the parquet column natively with
-pyarrow inside the worker runs at ~11 M tokens/s/core with zero-copy
-list<int32> → numpy slicing, so the end-to-end rate approaches kernel
-speed and scales with cores alone.  The per-batch work is the same
+Why this exists: the kernel encodes the benchmark's bulk corpus at
+~11 M tokens/s/core (block 4096, serial CPU time on a 4-vCPU x86 host),
+but pushing token arrays JVM → Arrow socket → Python caps each task pair
+at ~1.4 M tokens/s and couples one JVM producer thread to every Python
+worker (2x thread oversubscription).  Reading the parquet column
+natively with pyarrow inside the worker costs ~60 M tokens/s/core on
+the same host, with zero-copy list<int32> → numpy slicing, so the
+end-to-end rate approaches kernel speed and scales with cores alone.  The per-batch work is the same
 encode.encode_record_batch / decode.decode_record_batch the DataFrame
 path runs, so both paths emit identical bytes.
 
@@ -60,6 +61,7 @@ from ..sinks import (
     ENCODE_COLUMNS,
     check_store_n_splits,
     delete_path,
+    local_root,
     publish_file,
     spark_visible,
     write_encoded_file,
@@ -227,7 +229,12 @@ def encode_job_direct(
     raises, before anything is written, on a store of job.write_run's
     layout (its flat files would store the docs twice beside the run
     directories) or of another n_splits.  resume=False replaces the
-    store: it deletes both directories first."""
+    store: it deletes both directories first.  The store is written with
+    pyarrow, so `out_dir` must be on the driver's local filesystem
+    (sinks.local_root, resolved once)."""
+    out_dir = local_root(out_dir)
+    if out_dir is None:
+        raise ValueError("the direct path writes its store on the driver's local filesystem")
     enc_dir = os.path.join(out_dir, "encoded")
     lin_dir = os.path.join(out_dir, "lineage_direct")
     if resume:
@@ -239,16 +246,16 @@ def encode_job_direct(
                 f"{out_dir} holds a job or stream store (run_id= directories, "
                 "lineage/); use a fresh out_dir, or resume=False to replace the store"
             )
-        check_store_n_splits(enc_dir, n_splits)
+        check_store_n_splits(enc_dir, n_splits, root=enc_dir)
     else:
-        delete_path(enc_dir)
-        delete_path(lin_dir)
+        delete_path(enc_dir, root=enc_dir)
+        delete_path(lin_dir, root=lin_dir)
     os.makedirs(enc_dir, exist_ok=True)
     os.makedirs(lin_dir, exist_ok=True)
     run_id = uuid.uuid4().hex[:12]
 
     splits = list_input_splits_distributed(spark, in_path)
-    done = lineage.done_rows(spark, lin_dir) if resume else []
+    done = lineage.done_rows(spark, f"file://{lin_dir}") if resume else []
     names = {r["split"] for r in done}
     splits = [(f, rg) for f, rg in splits if _split_name(f, rg, in_path) not in names]
     rows = []
@@ -257,7 +264,7 @@ def encode_job_direct(
         # lookup.decode_docs needs a hand-passed n_splits (mismatch risk);
         # published before any split, so a resume of a run that died
         # midway is checked against it too
-        write_store_meta(enc_dir, n_splits)
+        write_store_meta(enc_dir, n_splits, root=enc_dir)
         tasks = _task_frame(spark, splits)
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -85,3 +85,35 @@ def kernel_rows():
     rows.append(np.repeat(np.arange(5, dtype=np.int32), 100))
     rows.append(rng.integers(-(2**31), 2**31 - 1, 600).astype(np.int32))
     return [np.asarray(r, np.int32) for r in rows]
+
+
+def gate_rows():
+    """Rows on the edges of encode_flat's distinct-value bound
+    L = ceil((vmax - vmin) / D) + 1, D the block's largest step:
+    random walks (on a lattice of spacing D the bound is exact),
+    sawtooths (large steps, few values), a tiling that ends in a ramp of
+    L = 256 / 257 distinct values (a periodic trial can win at 256), and
+    alternating-then-ramp blocks whose dictionary floor 4 + 4L (+ n/8
+    code bits) lands one below, on, or one above the cheapest closed-form
+    size."""
+    import numpy as np
+
+    rng = np.random.default_rng(1801)
+    rows = [
+        np.cumsum(rng.choice([-5, 5], 9000)),
+        np.cumsum(rng.choice([-5, 0, 5], 9000)),
+        np.cumsum(rng.integers(-3, 4, 9000)),
+        np.cumsum(rng.integers(-40, 41, 6000)),
+        np.tile(np.arange(8) * 1000, 1200),
+        np.tile(np.arange(300) * 3, 30),
+        np.tile([-(2**31), 2**31 - 1], 700),
+        np.cumsum(rng.choice([-(2**22), 2**22], 5000)),
+    ]
+    for k in (255, 256, 257):
+        rows.append(np.concatenate([np.tile([0, 1000], (4096 - k) // 2 + 1)[: 4096 - k],
+                                    1000 * np.arange(k)]))
+    for n, step, m in ((1024, 4, 127), (1024, 4, 128), (1024, 64, 255), (1024, 128, 255),
+                       (4096, 32, 895), (4096, 64, 895), (4096, 64, 896), (4096, 64, 1023)):
+        rows.append(np.concatenate([np.tile([0, step], (n - m) // 2 + 1)[: n - m],
+                                    step * np.arange(1, m + 1)]))
+    return [np.asarray(r, np.int32) for r in rows]
