@@ -236,7 +236,7 @@ def main() -> None:
             spark, args.input, args.output, block_size=cfg.block_size,
             n_splits=cfg.n_splits, resume=not args.no_resume,
         )
-        print(lin.groupBy("status").count().collect())
+        print(lineage.summarize(lin.collect()))  # a local relation: no job
         if args.verify:
             from .sources.parquet_direct import decode_verify_direct
 

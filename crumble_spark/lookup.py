@@ -19,7 +19,7 @@ cores; the driver path's cost is its read, which pyarrow spreads over the
 driver's cores as Spark's local tasks would, and its Py4J round trips:
 the store's locality is resolved once (one Hadoop FileSystem), the
 sidecar is read without the JVM, and the remaining crossings are
-pyspark's createDataFrame and collect of the result (~40 round trips in
+pyspark's createDataFrame and collect of the result (36 round trips in
 all).  A store on any other filesystem (hdfs://, s3a://, s3://,
 viewfs://) is one Spark scan: only Spark's reader sees the session's
 Hadoop configuration and credentials.

@@ -2,8 +2,18 @@
 
 Arrow transfer is mandatory: the codec kernels run in Arrow batches
 through mapInArrow, and synth and the multimodal decoders through
-mapInPandas.  AQE stays on as the runtime backstop for skew (see
-partitioning.py).
+mapInPandas.  AQE stays on as the runtime backstop for skew; the
+engine's own skew handling is the token-bounded kernel slice
+(encode.MAX_TOKENS_PER_SLICE).
+
+Under spark-submit the launcher's master and spark.task.cpus are kept
+(a job submitted to a cluster runs there, not on the driver); a plain
+`python` start runs local[SPARK_GRAFT_CPUS] (default: the host's CPU
+count).  For the DataFrame path's Arrow UDF stages over bulk rows on
+Spark's writer, a task is a JVM producer thread plus a Python kernel
+process: submit those jobs with `--conf spark.task.cpus=2`, or task
+slots oversubscribe the machine 2x (measured 10x collapse at 64 threads
+on 32 cores).
 """
 
 from __future__ import annotations
@@ -13,31 +23,17 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app: str = "crumble-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app: str = "crumble-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
-    master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
-    shuffle = shuffle_partitions
-    # For DataFrame-path Arrow UDF stages over BULK data, a task is a JVM
-    # producer thread + a Python kernel process running concurrently —
-    # schedule those jobs with SPARK_GRAFT_TASK_CPUS=2 or task slots 2x
-    # oversubscribe the machine and the synchronous Arrow ping-pong
-    # becomes scheduling-latency-bound (measured 10x collapse at 64
-    # threads on 32 cores).  The default stays 1: the throughput encode
-    # path (sources/parquet_direct) does its I/O inside the Python worker
-    # and leaves the JVM thread idle, and JVM-only pipeline queries want
-    # full slot count.
-    task_cpus = os.environ.get("SPARK_GRAFT_TASK_CPUS", "1")
+    b = SparkSession.builder.appName(app)
+    # a launcher (spark-submit, the pyspark shell) starts the JVM with its
+    # own master and confs and hands Python the gateway's port
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(f"local[{cpus}]")
     b = (
-        SparkSession.builder.appName(app)
-        .master(master)
-        .config("spark.task.cpus", task_cpus)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # rows carry KB-to-MB token arrays: batch sizes sized for ~4 MB
         # typical batches so N concurrent tasks can't blow the heap even

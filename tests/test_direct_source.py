@@ -652,3 +652,41 @@ def test_direct_honours_force_raw(spark, tmp_path):
     assert codecs["doc-0"] == codecs["doc-2"] == {0}
     assert 0 not in codecs["doc-1"] | codecs["doc-3"]
     assert direct.decode_verify_direct(spark, f"{out}/encoded")["rows"] == 4
+
+
+def test_cli_direct_verify_prints_the_run_and_resumes(
+    spark, tok_dir, tmp_path, monkeypatch, capsys
+):
+    # `job --direct --verify` prints the run summary and the verified
+    # totals, both the input's rows and tokens; a second run finds every
+    # split done and rewrites no file
+    import ast
+    import os
+    import sys
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from crumble_spark import job
+
+    t = ds.dataset(tok_dir).to_table(columns=["tokens"])
+    want = {"rows": t.num_rows, "tokens": pc.sum(pc.list_value_length(t["tokens"])).as_py()}
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(sys, "argv", [
+        "job", "--input", tok_dir, "--output", out, "--preset", "1", "--direct", "--verify",
+    ])
+
+    def run():
+        job.main()
+        summary, verified = capsys.readouterr().out.splitlines()
+        files = {
+            os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+            for d, _, names in os.walk(out) for n in names
+        }
+        return ast.literal_eval(summary), verified, files
+
+    summary, verified, files = run()
+    assert summary["splits"] == len(direct.list_input_splits(tok_dir))
+    assert {k: summary[k] for k in want} == want
+    assert verified == f"verified: {want}"
+    assert run() == (summary, verified, files)

@@ -65,3 +65,81 @@ def test_a_second_task_reads_no_zip_directory(spark):
     rows = frame.collect()
     assert all(r["zips"] > 0 for r in rows)  # the workers import from zips
     assert [r["reads"] for r in rows] == [0] * par
+
+
+_SUBMITTED = '''
+import json
+import sys
+
+import pyarrow as pa
+
+import crumble_spark
+from crumble_spark.session import get_spark
+from crumble_spark.sources import parquet_direct as direct
+
+
+def where(batches):
+    import crumble_spark
+
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pydict({"file": [crumble_spark.__file__]})
+
+
+inp, out = sys.argv[1:]
+spark = get_spark()
+sc = spark.sparkContext
+workers = spark.range(2, numPartitions=2).mapInArrow(where, "file string").collect()
+direct.encode_job_direct(spark, inp, out, block_size=256, n_splits=8)
+print(json.dumps({
+    "master": sc.master,
+    "task_cpus": sc.getConf().get("spark.task.cpus"),
+    "driver": crumble_spark.__file__,
+    "workers": sorted({r["file"] for r in workers}),
+    "verified": direct.decode_verify_direct(spark, f"{out}/encoded"),
+}))
+spark.stop()
+'''
+
+
+def test_spark_submit_keeps_the_launchers_master_and_ships_the_zip(spark, tmp_path):
+    # under spark-submit, get_spark keeps the launcher's master and
+    # spark.task.cpus, and the engine runs from the --py-files zip alone:
+    # the checkout is on neither the driver's nor the workers' path
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    from pyspark.find_spark_home import _find_spark_home
+
+    from crumble_spark import synth
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zip_path = str(tmp_path / "crumble_spark.zip")
+    subprocess.run(["bash", os.path.join(root, "scripts", "package.sh"), zip_path], check=True,
+                   capture_output=True)
+    inp = str(tmp_path / "tokens")
+    synth.synth_table(spark, 60, seed=5, mean_len=300, parts=3).write.parquet(inp)
+    t = ds.dataset(inp).to_table(columns=["tokens"])
+    script = tmp_path / "submitted.py"
+    script.write_text(_SUBMITTED)
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT")}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [os.path.join(_find_spark_home(), "bin", "spark-submit"), "--master", "local[2]",
+         "--conf", "spark.task.cpus=2", "--py-files", zip_path, str(script), inp,
+         str(tmp_path / "out")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert (got["master"], got["task_cpus"]) == ("local[2]", "2")
+    assert got["driver"] == f"{zip_path}/crumble_spark/__init__.py"
+    # the workers import the copy Spark shipped to the executor
+    assert got["workers"]
+    assert all(f.endswith("/crumble_spark.zip/crumble_spark/__init__.py") for f in got["workers"])
+    assert got["verified"] == {
+        "rows": t.num_rows, "tokens": pc.sum(pc.list_value_length(t["tokens"])).as_py(),
+    }
